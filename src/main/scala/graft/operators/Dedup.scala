@@ -175,7 +175,7 @@ object Dedup {
     // verify set shingles in less time than the exchange costs, so the
     // shuffle would be pure fixed overhead there.
     val verifySide = df
-      .join(candIds, col(idCol) === candIds("id"), "left_semi")
+      .join(candIds, df(idCol) === candIds("id"), "left_semi")
       .select(col(idCol).as("id"), col(textCol).as("__text"))
     val spread =
       if (nCand > RepartitionVerifyRows) verifySide.repartition(col("id"))
@@ -302,7 +302,7 @@ object Dedup {
                     keyCol: String, shCol: String): DataFrame = {
       val ids = sizedIdSet(candidates.select(col(keyCol).as("id")).distinct(), big)
       val side = df
-        .join(ids, col(id) === ids("id"), "left_semi")
+        .join(ids, df(id) === ids("id"), "left_semi")
         .select(col(id).as(keyCol), col(text).as("__text"))
       // spread the shingle compute only when the verify set is big
       // enough for the exchange to pay for itself (see minhashPairs)
@@ -610,7 +610,7 @@ object Dedup {
     // the exchange to pay for itself (see minhashPairs)
     val aIds = sizedIdSet(candidates.select(col("a_id").as("id")).distinct(), big)
     val probeSide = newDocs
-      .join(aIds, col(idCol).cast("long") === aIds("id"), "left_semi")
+      .join(aIds, newDocs(idCol).cast("long") === aIds("id"), "left_semi")
       .select(col(idCol).cast("long").as("a_id"), col(textCol).as("__text"))
     val probeSpread =
       if (nCand > RepartitionVerifyRows) probeSide.repartition(col("a_id"))

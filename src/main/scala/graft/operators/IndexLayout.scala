@@ -225,9 +225,7 @@ object IndexLayout {
     * Residual (documented): a same-tick rewrite identical in name,
     * length AND first 4 KiB per file — parquet writes put data pages
     * in the first block, so a content change there is detected. */
-  private def smallComponentSignature(spark: SparkSession,
-                                      dir: String): String = {
-    val (fs, p) = hfs(spark, dir)
+  private[graft] def smallComponentSignature(fs: FileSystem, p: Path): String = {
     if (!fs.exists(p)) return "<absent>"
     fs.listStatus(p).filterNot(_.getPath.getName.startsWith("_"))
       .sortBy(_.getPath.getName)
@@ -235,9 +233,12 @@ object IndexLayout {
         val crc = new java.util.zip.CRC32()
         val in = fs.open(st.getPath)
         try {
+          // one read may return fewer bytes than asked (HDFS, object
+          // stores): IOUtils.read fills the window until it is full or
+          // EOF, so the signature never depends on how reads chunk
           val buf = new Array[Byte](4096)
-          val n = in.read(buf)
-          if (n > 0) crc.update(buf, 0, n)
+          val n = org.apache.commons.io.IOUtils.read(in, buf)
+          crc.update(buf, 0, n)
         } finally in.close()
         s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}:${crc.getValue}"
       }
@@ -246,7 +247,8 @@ object IndexLayout {
 
   private[graft] def collectSmallComponent(
       spark: SparkSession, dir: String): Array[org.apache.spark.sql.Row] = {
-    val sig = smallComponentSignature(spark, dir)
+    val (fs, p) = hfs(spark, dir)
+    val sig = smallComponentSignature(fs, p)
     val cached = smallComponentCache.get(dir)
     if (cached != null && cached._1 == sig) return cached._2
     val rows = readComponent(spark, dir).collect()

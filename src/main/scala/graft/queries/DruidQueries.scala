@@ -60,61 +60,71 @@ object DruidQueries {
           JObject(q.obj.filterNot(_._1 == "dataSource")), catalog)
       case None => ()
     }
-    // accept epoch-millis long time columns (what SegmentStore scans
-    // and DruidSegmentReader emit) alongside native timestamps
-    val df = df0.schema.fields.find(_.name == timeCol) match {
-      case Some(f) if f.dataType == org.apache.spark.sql.types.LongType =>
-        df0.withColumn(timeCol, timestamp_millis(col(timeCol)))
-      case _ => df0
-    }
     val queryType = (q \ "queryType") match {
       case JString(s) => s
       case _ => throw new IllegalArgumentException("queryType missing")
     }
+    // every interval-bearing type gets the UNconverted frame: `prepared`
+    // filters its intervals on the raw time column, then converts it
     queryType match {
-      case "timeseries" => timeseries(df, timeCol, q)
-      case "movingAverage" => movingAverage(df, timeCol, q)
-      case "topN" => topN(df, timeCol, q)
-      case "groupBy" => groupBy(df, timeCol, q)
-      case "scan" | "select" => scan(df, timeCol, q)
-      case "search" => search(df, timeCol, q)
-      case "timeBoundary" => timeBoundary(df, timeCol, q)
-      // dispatched on the UNconverted frame: a ms-long __time stays a
-      // plain max(long) → aggregate-pushdown-eligible on DSv2 sources
+      case "timeseries" => timeseries(df0, timeCol, q)
+      case "movingAverage" => movingAverage(df0, timeCol, q)
+      case "topN" => topN(df0, timeCol, q)
+      case "groupBy" => groupBy(df0, timeCol, q)
+      case "scan" | "select" => scan(df0, timeCol, q)
+      case "search" => search(df0, timeCol, q)
+      case "timeBoundary" => timeBoundary(df0, timeCol, q)
+      // a ms-long __time stays a plain max(long) → aggregate-pushdown-
+      // eligible on DSv2 sources
       case "dataSourceMetadata" => dataSourceMetadata(df0, timeCol)
-      case "segmentMetadata" => segmentMetadata(df, q)
+      // ignores intervals: conversion only
+      case "segmentMetadata" => segmentMetadata(inIntervals(df0, timeCol, Nil), q)
       case other => throw new IllegalArgumentException(s"unsupported queryType $other")
     }
   }
 
   // ---- shared pieces ----
 
-  /** virtualColumns + intervals + filter applied up front so they push
+  /** intervals + virtualColumns + filter applied up front so they push
     * into the scan. Virtual columns use Spark SQL's expression dialect
     * (documented deviation from Druid's native expression language —
     * the common arithmetic/function subset is spelled identically). */
   private def prepared(df0: DataFrame, timeCol: String, q: JObject): DataFrame = {
+    val inIvs = inIntervals(df0, timeCol, intervalBounds(q))
     val df = (q \ "virtualColumns") match {
-      case JArray(vcs) => vcs.foldLeft(df0) { (d, vc) =>
+      case JArray(vcs) => vcs.foldLeft(inIvs) { (d, vc) =>
         (vc \ "name", vc \ "expression") match {
           case (JString(n), JString(e)) => d.withColumn(n, expr(e))
           case _ => d
         }
       }
-      case _ => df0
-    }
-    val afterIntervals = intervalBounds(q) match {
-      case Nil => df
-      case ivs =>
-        val conds = ivs.map { case (lo, hi) =>
-          unix_millis(col(timeCol)) >= lit(lo) && unix_millis(col(timeCol)) < lit(hi)
-        }
-        df.filter(conds.reduce(_ || _))
+      case _ => inIvs
     }
     (q \ "filter") match {
-      case JNothing | JNull => afterIntervals
-      case f => afterIntervals.filter(DimFilter.fromJson(f).compile(afterIntervals.schema))
+      case JNothing | JNull => df
+      case f => df.filter(DimFilter.fromJson(f).compile(df.schema))
     }
+  }
+
+  /** Rows of `df0` inside any of `ivs` (all rows when there are none),
+    * with the time column as a timestamp. An epoch-millis LONG time
+    * column (what SegmentStore scans and DruidSegmentReader emit) is
+    * filtered BEFORE its conversion, as plain comparisons on the raw
+    * column: the envelope `[min lo, max hi)` reaches a DSv2 scan as
+    * exact `__time` bounds, so only the segments it overlaps are
+    * planned. With several intervals the exact OR of them stays above
+    * the scan. */
+  private def inIntervals(df0: DataFrame, timeCol: String,
+                          ivs: Seq[(Long, Long)]): DataFrame = {
+    def within(ms: Column): Column = {
+      val envelope = ms >= lit(ivs.map(_._1).min) && ms < lit(ivs.map(_._2).max)
+      if (ivs.size == 1) envelope
+      else envelope && ivs.map { case (lo, hi) => ms >= lit(lo) && ms < lit(hi) }.reduce(_ || _)
+    }
+    val isMillis = df0.schema.fields.exists(f => f.name == timeCol && f.dataType == LongType)
+    val ms = if (isMillis) col(timeCol) else unix_millis(col(timeCol))
+    val df = if (ivs.isEmpty) df0 else df0.filter(within(ms))
+    if (isMillis) df.withColumn(timeCol, timestamp_millis(col(timeCol))) else df
   }
 
   private def aggCols(df: DataFrame, timeCol: String, q: JObject): Seq[Column] = {

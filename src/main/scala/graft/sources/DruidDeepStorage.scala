@@ -26,21 +26,28 @@ object DruidDeepStorage {
   /** Find every `descriptor.json` under `root` (recursive, via the
     * Hadoop FS API — local/HDFS/s3a alike) and parse it into the
     * engine's SegmentDescriptor. `path` is the segment dir holding
-    * index.zip. */
+    * index.zip.
+    *
+    * The walk is pre-order in listing order — the order
+    * `listFiles(root, true)` yields, which union-schema column order
+    * (first seen) depends on — but it makes one `listStatus` per
+    * directory: `listFiles` wraps every file in a `LocatedFileStatus`,
+    * whose permission load forks a process per file on the local FS.
+    * A missing root throws `FileNotFoundException`. */
   def discover(spark: SparkSession, root: String): Seq[SegmentDescriptor] = {
     val rootPath = new HPath(root)
     val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val found = scala.collection.mutable.ArrayBuffer[SegmentDescriptor]()
-    val it = fs.listFiles(rootPath, true)
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.getPath.getName == "descriptor.json") {
-        val in = fs.open(f.getPath)
+    def walk(dir: HPath): Unit = fs.listStatus(dir).foreach { st =>
+      if (!st.isFile) walk(st.getPath)
+      else if (st.getPath.getName == "descriptor.json") {
+        val in = fs.open(st.getPath)
         val text = try new String(org.apache.commons.io.IOUtils.toByteArray(in),
           StandardCharsets.UTF_8) finally in.close()
-        found += parseDescriptor(text, f.getPath.getParent.toString)
+        found += parseDescriptor(text, st.getPath.getParent.toString)
       }
     }
+    walk(rootPath)
     found.toSeq
   }
 

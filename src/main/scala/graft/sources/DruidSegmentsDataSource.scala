@@ -116,8 +116,8 @@ private[sources] object DruidSegmentsDataSource {
   }
 
   /** Driver-side descriptor discovery + dataSource filter (one
-    * recursive listing — the same O(#segments) planning cost as the
-    * reference's overlord segment-list action). */
+    * listing per directory — the same O(#segments) planning cost as
+    * the reference's overlord segment-list action). */
   def discover(spark: SparkSession, options: CaseInsensitiveStringMap): Seq[SegmentDescriptor] = {
     val root = Option(options.get("path")).getOrElse(
       throw new IllegalArgumentException(

@@ -180,6 +180,28 @@ class DedupSpec extends SparkSpec {
     assert(got(20L) == (20L, 1L)) // singleton keeps itself
   }
 
+  test("an id column named `id` clusters and picks exactly as `doc_id` does") {
+    // the operators' internal id sets carry their own `id` column; the
+    // caller's id column may share that name
+    val df = Seq(
+      (1L, "a b c d e f g h i j", 10L), (2L, "a b c d e f g h i j", 99L),
+      (3L, "a b c d e f g h i k", 99L),
+      (10L, "z y x w v u t s r q", 5L), (11L, "z y x w v u t s r q", 7L),
+      (20L, "totally different words here that share nothing at all ok", 1L))
+      .toDF("doc_id", "text", "score")
+    val asId = df.withColumnRenamed("doc_id", "id")
+    def labels(d: org.apache.spark.sql.DataFrame, idCol: String) =
+      Dedup.clusters(d, idCol, "text", threshold = 0.5)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    def picks(d: org.apache.spark.sql.DataFrame, idCol: String) =
+      Dedup.canonicalPerCluster(d, idCol, "text", "score", threshold = 0.5)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    val want = labels(df, "doc_id")
+    assert(want.size == 6 && want.map(_._2) == Set(1L, 10L, 20L))
+    assert(labels(asId, "id") == want)
+    assert(picks(asId, "id") == picks(df, "doc_id"))
+  }
+
   test("connected components fails loudly if maxIter is too small") {
     // a path graph 1-2-3-4-5 needs >1 round; maxIter=1 must throw,
     // never return partially-contracted labels (driverEdgeLimit=0

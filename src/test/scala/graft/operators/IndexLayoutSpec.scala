@@ -353,4 +353,38 @@ class IndexLayoutSpec extends SparkSpec {
       "same-tick in-place rewrite served stale cached rows")
     rm(dir)
   }
+
+  test("small-component signature is independent of how streams chunk their reads") {
+    val dir = tmp("shortread")
+    val cdir = s"$dir/meta"
+    // a data file well past the 4 KiB CRC window
+    (0 until 2000).map(i => (i.toLong, s"row-$i")).toDF("k", "v").coalesce(1)
+      .write.mode("overwrite").parquet(cdir)
+    val p = new org.apache.hadoop.fs.Path(cdir)
+    val local = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(local.listStatus(p).exists(_.getLen > 4096), "test premise: a file past the window")
+    val oneByte = new OneByteReadsFileSystem(local)
+    val plain = IndexLayout.smallComponentSignature(local, p)
+    assert(IndexLayout.smallComponentSignature(oneByte, p) == plain)
+    rm(dir)
+  }
+}
+
+/** Every stream it opens returns at most one byte per `read` — the
+  * short reads HDFS and object-store clients are allowed to make. */
+private class OneByteReadsFileSystem(fs: org.apache.hadoop.fs.FileSystem)
+    extends org.apache.hadoop.fs.FilterFileSystem(fs) {
+  import org.apache.hadoop.fs.{FSDataInputStream, FSInputStream, Path}
+  override def open(f: Path, bufferSize: Int): FSDataInputStream = {
+    val in = fs.open(f, bufferSize)
+    new FSDataInputStream(new FSInputStream {
+      override def read(): Int = in.read()
+      override def read(b: Array[Byte], off: Int, len: Int): Int =
+        in.read(b, off, math.min(len, 1))
+      override def seek(pos: Long): Unit = in.seek(pos)
+      override def getPos: Long = in.getPos
+      override def seekToNewSource(targetPos: Long): Boolean = in.seekToNewSource(targetPos)
+      override def close(): Unit = in.close()
+    })
+  }
 }

@@ -1,6 +1,12 @@
 package graft.queries
 
 import graft.{SparkSpec, Tables}
+import graft.sources.{DruidSegmentReader, DruidSegmentWriter}
+import graft.sources.DruidSegmentWriter._
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.Or
+import org.apache.spark.sql.execution.FilterExec
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 
 class DruidQueriesSpec extends SparkSpec {
@@ -473,5 +479,112 @@ class DruidQueriesSpec extends SparkSpec {
     val kept = graft.operators.Dedup.dedupByMinhash(df, "doc_id", "text", 0.5)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(kept == Set(5L, 7L))
+  }
+
+  // ---- interval pruning over a multi-segment druid-segments datasource ----
+
+  private val hour = 3600 * 1000L
+  private val h0 = java.time.Instant.parse("2024-03-01T00:00:00Z").toEpochMilli
+  private def iv(fromHour: Int, toHour: Int): String =
+    s""""${java.time.Instant.ofEpochMilli(h0 + fromHour * hour)}/""" +
+      s"""${java.time.Instant.ofEpochMilli(h0 + toHour * hour)}""""
+
+  /** Six hourly segments; hour h holds six rows ten minutes apart.
+    * Scores are multiples of 0.5, so double sums are exact in any
+    * order. */
+  private lazy val hourly: DataFrame = {
+    val root = java.nio.file.Files.createTempDirectory("druid-hourly").toFile
+    for (h <- 0 until 6) {
+      val lo = h0 + h * hour
+      DruidSegmentWriter.write(new java.io.File(root, s"hourly/h$h"), "hourly",
+        (0 until 6).map(i => lo + i * 600000L),
+        Seq(
+          StrDim("host", (0 until 6).map(i => Seq("a", "b", "c")((h + i) % 3))),
+          LongMet("hits", (0 until 6).map(i => (h * 10 + i).toLong)),
+          DoubleMet("score", (0 until 6).map(i => h + i * 0.5))),
+        lo, lo + hour, version = "v1")
+    }
+    spark.read.format("druid-segments").load(root.getAbsolutePath)
+  }
+
+  /** The same rows outside the DSv2 source, time as a timestamp: the
+    * unpruned reference for every answer. */
+  private lazy val hourlyRef: DataFrame = spark.createDataFrame(
+      spark.sparkContext.parallelize(hourly.collect().toSeq), hourly.schema)
+    .withColumn("ts", timestamp_millis($"__time")).drop("__time")
+
+  private def planned(df: DataFrame): Int =
+    df.queryExecution.sparkPlan.collect { case s: BatchScanExec => s.inputPartitions.size }.sum
+
+  /** (sorted rows, segments decoded while collecting them, the query) */
+  private def runDecoded(json: String): (Seq[String], Int, DataFrame) = {
+    val df = DruidQueries.run(hourly, "__time", json)
+    val before = DruidSegmentReader.decodedSegments.get
+    val rows = df.collect().map(_.toString).toSeq.sorted
+    (rows, DruidSegmentReader.decodedSegments.get - before, df)
+  }
+
+  private def reference(json: String): Seq[String] =
+    DruidQueries.run(hourlyRef, "ts", json).collect().map(_.toString).toSeq.sorted
+
+  test("a one-hour query plans and decodes only the segment its interval covers") {
+    assert(planned(hourly) == 6)
+    val topN =
+      s"""{"queryType":"topN","intervals":[${iv(2, 3)}],"granularity":"all",
+         |"dimension":"host","metric":"sc","threshold":3,
+         |"aggregations":[{"type":"doubleSum","name":"sc","fieldName":"score"},
+         |  {"type":"count","name":"n"}]}""".stripMargin
+    val (rows, decoded, df) = runDecoded(topN)
+    assert(planned(df) == 1 && decoded == 1)
+    assert(rows == reference(topN))
+    // hour 2: hosts c,a,b,c,a,b with scores 2.0, 2.5, .., 4.5
+    assert(rows == Seq("[a,6.5,2]", "[b,7.5,2]", "[c,5.5,2]"))
+
+    val ts =
+      s"""{"queryType":"timeseries","intervals":[${iv(3, 4)}],"granularity":"all",
+         |"aggregations":[{"type":"count","name":"n"},
+         |  {"type":"longSum","name":"hits","fieldName":"hits"}]}""".stripMargin
+    val (tsRows, tsDecoded, tsDf) = runDecoded(ts)
+    assert(planned(tsDf) == 1 && tsDecoded <= 1)
+    assert(tsRows == reference(ts) && tsRows == Seq("[6,195]"))
+
+    val tb = s"""{"queryType":"timeBoundary","intervals":[${iv(4, 6)}]}"""
+    val (tbRows, _, tbDf) = runDecoded(tb)
+    assert(planned(tbDf) == 2)
+    assert(tbRows == reference(tb) &&
+      tbRows == Seq(s"[${h0 + 4 * hour},${h0 + 5 * hour + 3000000L}]"))
+  }
+
+  test("two intervals prune to their envelope; the exact OR stays above the scan") {
+    val q =
+      s"""{"queryType":"groupBy","intervals":[${iv(1, 2)},${iv(4, 5)}],"granularity":"hour",
+         |"dimensions":["host"],
+         |"aggregations":[{"type":"count","name":"n"},
+         |  {"type":"longSum","name":"hits","fieldName":"hits"}]}""".stripMargin
+    val (rows, decoded, df) = runDecoded(q)
+    // envelope [h1, h5): hours 1-4 planned, hours 2-3 filtered above
+    assert(planned(df) == 4 && decoded == 4)
+    val residual = df.queryExecution.sparkPlan.collect {
+      case f: FilterExec if f.condition.exists(_.isInstanceOf[Or]) => f
+    }
+    assert(residual.size == 1 && residual.head.collect { case s: BatchScanExec => s }.size == 1)
+    assert(rows == reference(q))
+    // per-interval rows only: hours 1 and 4, three hosts, two rows each
+    assert(rows.size == 6)
+    val hits = df.collect().map(r => r.getAs[Long]("hits")).sum
+    assert(hits == (10L to 15L).sum + (40L to 45L).sum)
+  }
+
+  test("dataSourceMetadata and segmentMetadata ignore intervals, as before") {
+    for (qt <- Seq("dataSourceMetadata", "segmentMetadata")) {
+      val all = s"""{"queryType":"$qt"}"""
+      val withIv = s"""{"queryType":"$qt","intervals":[${iv(2, 3)}]}"""
+      val (allRows, _, allDf) = runDecoded(all)
+      val (ivRows, _, ivDf) = runDecoded(withIv)
+      assert(ivRows == allRows, qt)
+      assert(planned(allDf) == 6 && planned(ivDf) == 6, qt)
+    }
+    val (meta, _, _) = runDecoded("""{"queryType":"dataSourceMetadata","intervals":[""" + iv(0, 1) + "]}")
+    assert(meta == Seq(s"[${h0 + 5 * hour + 3000000L}]"))
   }
 }

@@ -17,10 +17,11 @@ class DruidDeepStorageSpec extends SparkSpec {
   private val t0 = java.time.Instant.parse("2020-06-01T00:00:00Z").toEpochMilli
 
   private def writeSegment(dir: File, version: String = "v1", hosts: Seq[String] = Seq("a", "b", "c", "d", "e"),
-                           intervalStart: Long = t0, intervalEnd: Long = t0 + day): Unit = {
+                           intervalStart: Long = t0, intervalEnd: Long = t0 + day,
+                           dataSource: String = "fixture"): Unit = {
     val n = hosts.size
     val times = (0 until n).map(i => intervalStart + i * ((intervalEnd - intervalStart) / n))
-    DruidSegmentWriter.write(dir, "fixture", times,
+    DruidSegmentWriter.write(dir, dataSource, times,
       Seq(
         StrDim("host", hosts),
         MvDim("tags", (0 until n).map {
@@ -142,5 +143,59 @@ class DruidDeepStorageSpec extends SparkSpec {
       t0 - 10 * day, t0 - 9 * day)
     assert(df.columns.contains("revenue"))
     assert(df.count() == 0)
+  }
+
+  test("discovery walks a nested tree in listFiles order, skipping .crc and stray files") {
+    val root = tmpDir()
+    val fs = new org.apache.hadoop.fs.Path(root.getAbsolutePath)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // two dataSources at different depths, interleaved with stray files
+    writeSegment(new File(root, "fixture/day1/v1/0"))
+    writeSegment(new File(root, "fixture/day1/v1/1"), hosts = Seq("p", "q"))
+    writeSegment(new File(root, "fixture/day2/v2/0"), version = "v2",
+      intervalStart = t0 + day, intervalEnd = t0 + 2 * day)
+    writeSegment(new File(root, "other/a/b/c/v1/0"), dataSource = "other")
+    writeSegment(new File(root, "other/d/v1/0"), dataSource = "other",
+      intervalStart = t0 + day, intervalEnd = t0 + 2 * day)
+    writeSegment(new File(root, "top"), dataSource = "other",
+      intervalStart = t0 + 2 * day, intervalEnd = t0 + 3 * day)
+    // re-write one descriptor through the Hadoop API, so a real
+    // `.descriptor.json.crc` sidecar sits next to it
+    val desc = new org.apache.hadoop.fs.Path(s"$root/fixture/day1/v1/1/descriptor.json")
+    val bytes = Files.readAllBytes(new File(desc.toUri.getPath).toPath)
+    fs.delete(desc, false)
+    val out = fs.create(desc); try out.write(bytes) finally out.close()
+    assert(new File(s"$root/fixture/day1/v1/1/.descriptor.json.crc").isFile)
+    // stray non-descriptor files, dirs without segments, a decoy name
+    for (rel <- Seq("README", "fixture/notes.txt", "fixture/day1/descriptor.json.bak",
+                    "other/a/descriptor.jsonx", "staging/deeper/x.tmp")) {
+      val o = fs.create(new org.apache.hadoop.fs.Path(s"$root/$rel"))
+      try o.write(Array[Byte](1, 2, 3)) finally o.close()
+    }
+    assert(new File(root, "empty").mkdir())
+
+    // the order `listFiles(root, true)` yields is the reference:
+    // union-schema column order is first-seen over it
+    val want = scala.collection.mutable.ArrayBuffer[String]()
+    val it = fs.listFiles(new org.apache.hadoop.fs.Path(root.getAbsolutePath), true)
+    while (it.hasNext) {
+      val f = it.next().getPath
+      if (f.getName == "descriptor.json") want += f.getParent.toString
+    }
+    val got = DruidDeepStorage.discover(spark, root.getAbsolutePath)
+    assert(want.size == 6)
+    assert(got.map(_.path) == want.toSeq)
+    assert(got.map(_.dataSource).groupBy(identity).view.mapValues(_.size).toMap ==
+      Map("fixture" -> 3, "other" -> 3))
+    val byPath = got.map(d => new File(new java.net.URI(d.path).getPath).getAbsolutePath -> d).toMap
+    val d2 = byPath(s"$root/fixture/day2/v2/0")
+    assert(d2.version == "v2" && d2.startMs == t0 + day && d2.endMs == t0 + 2 * day)
+    assert(byPath(s"$root/top").dataSource == "other")
+
+    // a missing root still throws FileNotFoundException (a fresh-root
+    // write's schema inference and the stream's first poll rely on it)
+    intercept[java.io.FileNotFoundException] {
+      DruidDeepStorage.discover(spark, s"$root/no-such-root")
+    }
   }
 }
