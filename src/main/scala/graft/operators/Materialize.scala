@@ -15,7 +15,14 @@ import org.apache.spark.sql.{functions => F}
 private[graft] object Materialize {
   def apply(d: DataFrame): DataFrame =
     if (d.sparkSession.sparkContext.getCheckpointDir.isDefined) d.checkpoint(true)
-    else d.localCheckpoint(true)
+    else local(d)
+
+  /** Always-local materialization for BOUNDED, recompute-cheap frames
+    * on the serving path (top-k lists, re-rank candidates): a reliable
+    * checkpoint per serving request or micro-batch would grow the
+    * checkpoint dir without bound — Spark does not clean checkpoint
+    * files by default. */
+  def local(d: DataFrame): DataFrame = d.localCheckpoint(true)
 
   /** Row count of a just-[[apply]]'d (checkpointed) DataFrame without
     * a full SQL action: counts the checkpointed RDD directly, skipping
@@ -34,10 +41,12 @@ private[graft] object Materialize {
     * through unchanged, and the returned DataFrame is the plain
     * checkpoint scan. Falls back to the explicit RDD count if the
     * checkpoint action did not surface metrics (defensive: the
-    * fallback is the previous behavior, identical result). */
-  def withCount(d: DataFrame): (DataFrame, Long) = {
+    * fallback is the previous behavior, identical result). `bounded`
+    * frames materialize [[local]]ly. */
+  def withCount(d: DataFrame, bounded: Boolean = false): (DataFrame, Long) = {
     val obs = Observation()
-    val m = apply(d.observe(obs, F.count(F.lit(1)).as("n")))
+    val observed = d.observe(obs, F.count(F.lit(1)).as("n"))
+    val m = if (bounded) local(observed) else apply(observed)
     // the metric promise completes on the (async) listener-bus event
     // for the checkpoint action just run — normally already done or
     // milliseconds away; the await cap only bounds the defensive case

@@ -347,7 +347,8 @@ object Similarity {
     * full-precision vectors, emitting the per-query top `k`.
     *
     * Scale shape: candidates are bounded by the upstream ranker
-    * (queries × k₀ rows); they are Materialized and sized on their
+    * (queries × k₀ rows); they are Materialized (locally — a serving
+    * request never writes the checkpoint dir) and sized on their
     * REAL count (the Dedup idiom — a proxy ranker's output estimate
     * is not trustworthy): within the broadcast-safe budget they
     * broadcast into the corpus vector join, so the corpus never
@@ -363,7 +364,7 @@ object Similarity {
     val c = corpus.select(col(idCol).as("n_id"), asDouble(col(vecCol)).as("n_v"))
     val q = queries.select(col("q_id"), col("q_v"))
     val (cand, nCand) = Materialize.withCount(
-      candidates.select(col("q_id"), col("n_id")).distinct())
+      candidates.select(col("q_id"), col("n_id")).distinct(), bounded = true)
     val candSized =
       if (nCand <= Dedup.BroadcastSafeRows) broadcast(cand)
       else cand.hint("merge")

@@ -875,13 +875,12 @@ object EventQueries {
     * (and the two-dim pruning win is spec-measured in ZOrderSpec by
     * touched-file counts). */
   def zorderQ(spark: SparkSession, sfDir: String): DataFrame = synchronized {
-    val sfKey = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = s"${sys.props("java.io.tmpdir")}/graft_zorder_v1_$sfKey"
-    if (!new java.io.File(s"$base/_SUCCESS").isFile)
+    val base = GateFixture.buildOnce("graft_zorder_v2", sfDir) { staging =>
       graft.operators.ZOrder.layout(ev(spark, sfDir),
           Seq("user_id", "value"), bits = 8, partitions = 8)
-        .write.mode("overwrite").parquet(base)
-    spark.read.parquet(base)
+        .write.parquet(staging.getPath)
+    }
+    spark.read.parquet(base.getPath)
       .filter(col("user_id").between(100, 300) && col("value").between(50, 500))
       .groupBy("event_type")
       .agg(count(lit(1)).as("cnt"), dsum(col("value")).as("sum_value"))

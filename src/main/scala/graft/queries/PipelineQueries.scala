@@ -37,22 +37,12 @@ object PipelineQueries {
     * distinct text EXACTLY once across batches; any double-emit or
     * drop breaks the rowcount/hash match vs `SELECT DISTINCT`. */
   def streamDedup(s: SparkSession, d: String): DataFrame = synchronized {
-    val sfKey = d.replaceAll("[^A-Za-z0-9.]", "_")
     // The streaming parquet sink creates _spark_metadata at the FIRST
-    // batch commit, not at stream completion — guarding on it (the old
-    // build-once check) would read a crashed run's partial output as
-    // complete forever. Instead the whole run (staged input, checkpoint,
-    // sink) builds in a fresh staging dir, a _COMPLETE sentinel is
-    // written only after awaitTermination() returns, and the staging
-    // dir is promoted by atomic rename — same protocol as the
-    // deep-store fixture, so a concurrent JVM (Bench ∥ Verify) never
-    // consumes or extends a half-finished stream.
-    val root = new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_streamdedup_v3_$sfKey")
-    val sentinel = new java.io.File(root, "_COMPLETE")
-    if (!sentinel.isFile) {
-      val staging = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_streamdedup_v3_${sfKey}_build_${java.util.UUID.randomUUID}")
+    // batch commit, not at stream completion, so the whole run (staged
+    // input, checkpoint, sink) is one fixture, sealed only after
+    // awaitTermination() returns — a crashed or concurrent run's
+    // partial output is never read as complete.
+    val root = GateFixture.buildOnce("graft_streamdedup_v4", d) { staging =>
       val stage = s"$staging/stage"
       docs(s, d)
         .select(
@@ -75,17 +65,6 @@ object PipelineQueries {
       // complete, so drop the log and read the dir as plain parquet.
       org.apache.commons.io.FileUtils.deleteDirectory(
         new java.io.File(s"$staging/out/_spark_metadata"))
-      require(new java.io.File(staging, "_COMPLETE").createNewFile())
-      if (sentinel.isFile) {
-        // another JVM finished while we built — use theirs
-        org.apache.commons.io.FileUtils.deleteDirectory(staging)
-      } else {
-        if (root.exists()) org.apache.commons.io.FileUtils.deleteDirectory(root)
-        if (!staging.renameTo(root)) {
-          require(sentinel.isFile, s"stream-dedup promote failed: $root")
-          org.apache.commons.io.FileUtils.deleteDirectory(staging)
-        }
-      }
     }
     s.read.parquet(s"$root/out").orderBy("text")
   }
@@ -186,19 +165,21 @@ object PipelineQueries {
     * pinned banding meta), even docs probe it. Same split and
     * threshold as q_dedup_cross, so the SAME string-keyed all-pairs
     * oracle applies — which also makes any shingle-hash collision a
-    * loud gate failure. Deterministic ⇒ the index build is idempotent
-    * (guarded by bands/_SUCCESS like the IVF index). */
+    * loud gate failure. The index is a build-once [[GateFixture]]. */
   def dedupIndexQ(s: SparkSession, d: String): DataFrame = synchronized {
-    val sfKey = d.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = s"${sys.props("java.io.tmpdir")}/graft_mhindex_v1_$sfKey"
-    if (!new java.io.File(s"$base/bands/_SUCCESS").isFile)
-      Dedup.writeMinhashIndex(
-        docs(s, d).filter(col("doc_id") % 2 === 1), "doc_id", "text", base)
-    Dedup.probeMinhashIndex(s, base,
+    Dedup.probeMinhashIndex(s, mhIndex(s, d),
         docs(s, d).filter(col("doc_id") % 2 === 0), "doc_id", "text",
         threshold = 0.8)
       .orderBy("corpus_id", "ref_id")
   }
+
+  /** The odd-docs MinHash index shared by q_dedup_index and
+    * q_stream_index_dedup. */
+  private def mhIndex(s: SparkSession, d: String): String =
+    GateFixture.buildOnce("graft_mhindex_v2", d) { dir =>
+      Dedup.writeMinhashIndex(
+        docs(s, d).filter(col("doc_id") % 2 === 1), "doc_id", "text", dir.getPath)
+    }.getPath
 
   val dedupIndexSql: String = dedupCrossSql
 
@@ -220,34 +201,26 @@ object PipelineQueries {
     * q_dedup_index value-checks every surviving pair and Jaccard
     * bit. */
   def dedupIndexAppend(s: SparkSession, d: String): DataFrame = synchronized {
-    val sfKey = d.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = s"${sys.props("java.io.tmpdir")}/graft_mhindexapp_v1_$sfKey"
-    if (!new java.io.File(s"$base/_APPENDED").isFile) {
-      if (new java.io.File(base).exists())
-        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(base))
+    val root = GateFixture.buildOnce("graft_mhindexapp_v2", d) { dir =>
+      val idx = dir.getPath
       val ref = docs(s, d).filter(col("doc_id") % 2 === 1)
       Dedup.writeMinhashIndex(
-        ref.filter(col("doc_id") % 3 =!= 0), "doc_id", "text", s"$base/idx")
+        ref.filter(col("doc_id") % 3 =!= 0), "doc_id", "text", idx)
       require(Dedup.appendToMinhashIndexGuarded(
-        ref.filter(col("doc_id") % 3 === 0), "doc_id", "text",
-        s"$base/idx", "crawl-1"))
-      val stats = graft.operators.IndexMaintenance
-        .compactMinhashIndex(s, s"$base/idx")
+        ref.filter(col("doc_id") % 3 === 0), "doc_id", "text", idx, "crawl-1"))
+      val stats = graft.operators.IndexMaintenance.compactMinhashIndex(s, idx)
       require(stats.filesAfter < stats.filesBefore,
         s"q_dedup_index_append: compaction did not shrink the index — $stats")
       // vacuum closes the lifecycle: the superseded pre-compact
       // generations (bare bands/shingles, the folded bandrows dir)
       // stop costing storage; the probe below certifies identity
-      def allFiles() = graft.operators.IndexMaintenance
-        .dataFiles(s, s"$base/idx").size
+      def allFiles() = graft.operators.IndexMaintenance.dataFiles(s, idx).size
       val filesBeforeVacuum = allFiles()
-      val vstats = graft.operators.IndexLayout
-        .vacuumIndex(s, s"$base/idx", keepVersions = 1)
+      val vstats = graft.operators.IndexLayout.vacuumIndex(s, idx, keepVersions = 1)
       require(vstats.droppedDirs.nonEmpty && allFiles() < filesBeforeVacuum,
         s"q_dedup_index_append: vacuum reclaimed nothing — $vstats")
-      require(new java.io.File(base, "_APPENDED").createNewFile())
     }
-    Dedup.probeMinhashIndex(s, s"$base/idx",
+    Dedup.probeMinhashIndex(s, root.getPath,
         docs(s, d).filter(col("doc_id") % 2 === 0), "doc_id", "text",
         threshold = 0.8)
       .orderBy("corpus_id", "ref_id")
@@ -261,20 +234,11 @@ object PipelineQueries {
     * the odd-docs index and only no-near-dup rows appended to the
     * sink. Batch independence (the index is fixed) makes the stream
     * output equal the batch anti-join regardless of batch boundaries
-    * — the oracle is the plain set-difference SQL. Same build/staging
-    * sentinel protocol as q_stream_dedup. */
+    * — the oracle is the plain set-difference SQL. The whole run is
+    * one [[GateFixture]], like q_stream_dedup. */
   def streamIndexDedup(s: SparkSession, d: String): DataFrame = synchronized {
-    val sfKey = d.replaceAll("[^A-Za-z0-9.]", "_")
-    val idxBase = s"${sys.props("java.io.tmpdir")}/graft_mhindex_v1_$sfKey"
-    if (!new java.io.File(s"$idxBase/bands/_SUCCESS").isFile)
-      Dedup.writeMinhashIndex(
-        docs(s, d).filter(col("doc_id") % 2 === 1), "doc_id", "text", idxBase)
-    val root = new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_streamidx_v1_$sfKey")
-    val sentinel = new java.io.File(root, "_COMPLETE")
-    if (!sentinel.isFile) {
-      val staging = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_streamidx_v1_${sfKey}_build_${java.util.UUID.randomUUID}")
+    val idxBase = mhIndex(s, d)
+    val root = GateFixture.buildOnce("graft_streamidx_v2", d) { staging =>
       val stage = s"$staging/stage"
       docs(s, d).filter(col("doc_id") % 2 === 0)
         .repartition(4)
@@ -285,16 +249,6 @@ object PipelineQueries {
       graft.streaming.StreamingIndexDedup.run(s, src, idxBase,
         "doc_id", "text", threshold = 0.8,
         sinkPath = s"$staging/out", checkpoint = s"$staging/ckpt")
-      require(new java.io.File(staging, "_COMPLETE").createNewFile())
-      if (sentinel.isFile) {
-        org.apache.commons.io.FileUtils.deleteDirectory(staging)
-      } else {
-        if (root.exists()) org.apache.commons.io.FileUtils.deleteDirectory(root)
-        if (!staging.renameTo(root)) {
-          require(sentinel.isFile, s"stream-index-dedup promote failed: $root")
-          org.apache.commons.io.FileUtils.deleteDirectory(staging)
-        }
-      }
     }
     s.read.parquet(s"$root/out").orderBy("doc_id")
   }
@@ -845,12 +799,10 @@ object PipelineQueries {
     * Same centroid/probe semantics as q_ann_ivf, so the same SQL
     * oracle applies verbatim. */
   def annIvfIndexed(s: SparkSession, d: String): DataFrame = synchronized {
-    val sfKey = d.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = s"${sys.props("java.io.tmpdir")}/graft_ivfindex_v1_$sfKey"
-    val done = new java.io.File(s"$base/cells/_SUCCESS")
-    if (!done.isFile)
-      Similarity.writeIvfIndex(embs(s, d), "vec_id", "embedding", base, cells = 16)
-    Similarity.queryIvfIndex(s, base,
+    val base = GateFixture.buildOnce("graft_ivfindex_v2", d) { dir =>
+      Similarity.writeIvfIndex(embs(s, d), "vec_id", "embedding", dir.getPath, cells = 16)
+    }
+    Similarity.queryIvfIndex(s, base.getPath,
         Similarity.prepareQueries(queriesDf(s, d), "vec_id", "embedding"),
         k = 10, nprobe = 4)
       .orderBy("q_id", "rank")
@@ -867,14 +819,33 @@ object PipelineQueries {
     * with q_ann_quantized's reconstruction CTEs — every routed cell
     * and every ADC score bit is value-checked. */
   def annIvfSq8(s: SparkSession, d: String): DataFrame = synchronized {
-    val sfKey = d.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = s"${sys.props("java.io.tmpdir")}/graft_ivfsq8_v1_$sfKey"
-    if (!new java.io.File(s"$base/meta/_SUCCESS").isFile)
-      Similarity.writeIvfIndexSq8(embs(s, d), "vec_id", "embedding", base, cells = 16)
-    Similarity.queryIvfIndexSq8(s, base,
+    probeSq8(s, d, GateFixture.buildOnce("graft_ivfsq8_v2", d) { dir =>
+      Similarity.writeIvfIndexSq8(embs(s, d), "vec_id", "embedding", dir.getPath, cells = 16)
+    })
+  }
+
+  /** The SQ8 gates' probe: queries 0..4, top-10 over 4 probed cells. */
+  private def probeSq8(s: SparkSession, d: String, idx: java.io.File): DataFrame =
+    Similarity.queryIvfIndexSq8(s, idx.getPath,
         Similarity.prepareQueries(queriesDf(s, d), "vec_id", "embedding"),
         k = 10, nprobe = 4)
       .orderBy("q_id", "rank")
+
+  /** The 3/4-corpus SQ8 build (vec_id % 4 ≠ 0) with centroids and
+    * quantization bounds PINNED from the full corpus — the base that
+    * q_ann_ivf_append, q_stream_ivf_append and q_ann_ivf_compact grow
+    * back to the full-build answer. */
+  private def writePinnedSq8Base(s: SparkSession, d: String, path: String): Unit = {
+    val all = embs(s, d)
+    val prepared = Similarity.prepareQueries(all, "vec_id", "embedding")
+      .select(col("q_id").as("n_id"), col("q_v").as("n_v"))
+    val bounds = graft.operators.Quantization.fitBounds(prepared, "n_v")
+    Similarity.writeIvfIndexSq8(
+      all.filter(col("vec_id") % 4 =!= 0), "vec_id", "embedding", path, cells = 16,
+      centroids0 = Some(
+        prepared.orderBy(col("n_id")).limit(16)
+          .select(col("n_id").as("c_id"), col("n_v").as("c_v"))),
+      bounds0 = Some(bounds))
   }
 
   val annIvfSq8Sql: String = annIvfSq8SqlWhere("")
@@ -938,36 +909,14 @@ object PipelineQueries {
     * Because centroids and bounds are identical to a full build, the
     * probe over (build ∪ append) must equal q_ann_ivf_sq8's full-build
     * answer — the SAME mirror value-checks every routed cell and ADC
-    * score bit of the appended index. Build+append run once behind a
-    * marker (the partial-state hazard is a crash between build and
-    * append, so the marker is written LAST and a missing marker wipes
-    * and redoes the whole sequence). */
+    * score bit of the appended index. Build+append run once as one
+    * [[GateFixture]], so a crash between them is never served. */
   def annIvfAppend(s: SparkSession, d: String): DataFrame = synchronized {
-    val sfKey = d.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = s"${sys.props("java.io.tmpdir")}/graft_ivfsq8app_v1_$sfKey"
-    if (!new java.io.File(s"$base/_APPENDED").isFile) {
-      if (new java.io.File(base).exists())
-        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(base))
-      val all = embs(s, d)
-      val prepared = Similarity.prepareQueries(all, "vec_id", "embedding")
-        .select(col("q_id").as("n_id"), col("q_v").as("n_v"))
-      val bounds = graft.operators.Quantization.fitBounds(prepared, "n_v")
-      Similarity.writeIvfIndexSq8(
-        all.filter(col("vec_id") % 4 =!= 0), "vec_id", "embedding",
-        s"$base/idx", cells = 16,
-        centroids0 = Some(
-          prepared.orderBy(col("n_id")).limit(16)
-            .select(col("n_id").as("c_id"), col("n_v").as("c_v"))),
-        bounds0 = Some(bounds))
+    probeSq8(s, d, GateFixture.buildOnce("graft_ivfsq8app_v2", d) { dir =>
+      writePinnedSq8Base(s, d, dir.getPath)
       Similarity.appendToIvfIndexSq8(
-        all.filter(col("vec_id") % 4 === 0), "vec_id", "embedding",
-        s"$base/idx")
-      require(new java.io.File(base, "_APPENDED").createNewFile())
-    }
-    Similarity.queryIvfIndexSq8(s, s"$base/idx",
-        Similarity.prepareQueries(queriesDf(s, d), "vec_id", "embedding"),
-        k = 10, nprobe = 4)
-      .orderBy("q_id", "rank")
+        embs(s, d).filter(col("vec_id") % 4 === 0), "vec_id", "embedding", dir.getPath)
+    })
   }
 
   val annIvfAppendSql: String = annIvfSq8Sql
@@ -983,36 +932,18 @@ object PipelineQueries {
     * streamed index must STILL equal the full-build answer — the SAME
     * full-corpus SQ8 mirror value-checks it. */
   def streamIvfAppend(s: SparkSession, d: String): DataFrame = synchronized {
-    val sfKey = d.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = s"${sys.props("java.io.tmpdir")}/graft_ivfsq8stream_v1_$sfKey"
-    if (!new java.io.File(s"$base/_STREAMED").isFile) {
-      if (new java.io.File(base).exists())
-        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(base))
-      val all = embs(s, d)
-      val prepared = Similarity.prepareQueries(all, "vec_id", "embedding")
-        .select(col("q_id").as("n_id"), col("q_v").as("n_v"))
-      val bounds = graft.operators.Quantization.fitBounds(prepared, "n_v")
-      Similarity.writeIvfIndexSq8(
-        all.filter(col("vec_id") % 4 =!= 0), "vec_id", "embedding",
-        s"$base/idx", cells = 16,
-        centroids0 = Some(
-          prepared.orderBy(col("n_id")).limit(16)
-            .select(col("n_id").as("c_id"), col("n_v").as("c_v"))),
-        bounds0 = Some(bounds))
-      all.filter(col("vec_id") % 4 === 0)
+    val root = GateFixture.buildOnce("graft_ivfsq8stream_v2", d) { staging =>
+      writePinnedSq8Base(s, d, s"$staging/idx")
+      embs(s, d).filter(col("vec_id") % 4 === 0)
         .repartition(3)
-        .write.mode("overwrite").parquet(s"$base/stage")
-      val schema = s.read.parquet(s"$base/stage").schema
+        .write.mode("overwrite").parquet(s"$staging/stage")
+      val schema = s.read.parquet(s"$staging/stage").schema
       val src = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$base/stage")
-      graft.streaming.StreamingIvfAppend.run(s, src, s"$base/idx",
-        "vec_id", "embedding", s"$base/ckpt")
-      require(new java.io.File(base, "_STREAMED").createNewFile())
+        .option("maxFilesPerTrigger", "1").parquet(s"$staging/stage")
+      graft.streaming.StreamingIvfAppend.run(s, src, s"$staging/idx",
+        "vec_id", "embedding", s"$staging/ckpt")
     }
-    Similarity.queryIvfIndexSq8(s, s"$base/idx",
-        Similarity.prepareQueries(queriesDf(s, d), "vec_id", "embedding"),
-        k = 10, nprobe = 4)
-      .orderBy("q_id", "rank")
+    probeSq8(s, d, new java.io.File(root, "idx"))
   }
 
   val streamIvfAppendSql: String = annIvfSq8Sql
@@ -1030,36 +961,18 @@ object PipelineQueries {
     * full-corpus SQ8 mirror value-checks every routed cell and ADC
     * score bit of the compacted index. */
   def annIvfCompact(s: SparkSession, d: String): DataFrame = synchronized {
-    val sfKey = d.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = s"${sys.props("java.io.tmpdir")}/graft_ivfsq8cmp_v1_$sfKey"
-    if (!new java.io.File(s"$base/_COMPACTED").isFile) {
-      if (new java.io.File(base).exists())
-        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(base))
+    probeSq8(s, d, GateFixture.buildOnce("graft_ivfsq8cmp_v2", d) { dir =>
+      val idx = dir.getPath
+      writePinnedSq8Base(s, d, idx)
       val all = embs(s, d)
-      val prepared = Similarity.prepareQueries(all, "vec_id", "embedding")
-        .select(col("q_id").as("n_id"), col("q_v").as("n_v"))
-      val bounds = graft.operators.Quantization.fitBounds(prepared, "n_v")
-      Similarity.writeIvfIndexSq8(
-        all.filter(col("vec_id") % 4 =!= 0), "vec_id", "embedding",
-        s"$base/idx", cells = 16,
-        centroids0 = Some(
-          prepared.orderBy(col("n_id")).limit(16)
-            .select(col("n_id").as("c_id"), col("n_v").as("c_v"))),
-        bounds0 = Some(bounds))
       Similarity.appendToIvfIndexSq8(
-        all.filter(col("vec_id") % 8 === 0), "vec_id", "embedding", s"$base/idx")
+        all.filter(col("vec_id") % 8 === 0), "vec_id", "embedding", idx)
       Similarity.appendToIvfIndexSq8(
-        all.filter(col("vec_id") % 8 === 4), "vec_id", "embedding", s"$base/idx")
-      val stats = graft.operators.IndexMaintenance
-        .compactIvfIndex(s, s"$base/idx")
+        all.filter(col("vec_id") % 8 === 4), "vec_id", "embedding", idx)
+      val stats = graft.operators.IndexMaintenance.compactIvfIndex(s, idx)
       require(stats.filesAfter < stats.filesBefore && stats.filesAfter <= 16,
         s"q_ann_ivf_compact: compaction did not shrink the index — $stats")
-      require(new java.io.File(base, "_COMPACTED").createNewFile())
-    }
-    Similarity.queryIvfIndexSq8(s, s"$base/idx",
-        Similarity.prepareQueries(queriesDf(s, d), "vec_id", "embedding"),
-        k = 10, nprobe = 4)
-      .orderBy("q_id", "rank")
+    })
   }
 
   val annIvfCompactSql: String = annIvfSq8Sql
@@ -1076,23 +989,12 @@ object PipelineQueries {
     * pins" equivalence — every surviving cell route and ADC score bit
     * is value-checked. */
   def annIvfDelete(s: SparkSession, d: String): DataFrame = synchronized {
-    val sfKey = d.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = s"${sys.props("java.io.tmpdir")}/graft_ivfsq8del_v1_$sfKey"
-    if (!new java.io.File(s"$base/_DELETED").isFile) {
-      if (new java.io.File(base).exists())
-        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(base))
+    probeSq8(s, d, GateFixture.buildOnce("graft_ivfsq8del_v2", d) { dir =>
       val all = embs(s, d)
-      Similarity.writeIvfIndexSq8(all, "vec_id", "embedding",
-        s"$base/idx", cells = 16)
+      Similarity.writeIvfIndexSq8(all, "vec_id", "embedding", dir.getPath, cells = 16)
       graft.operators.IndexMaintenance.deleteFromIvfIndex(
-        all.filter(col("vec_id") % 5 === 2).select("vec_id"),
-        "vec_id", s"$base/idx")
-      require(new java.io.File(base, "_DELETED").createNewFile())
-    }
-    Similarity.queryIvfIndexSq8(s, s"$base/idx",
-        Similarity.prepareQueries(queriesDf(s, d), "vec_id", "embedding"),
-        k = 10, nprobe = 4)
-      .orderBy("q_id", "rank")
+        all.filter(col("vec_id") % 5 === 2).select("vec_id"), "vec_id", dir.getPath)
+    })
   }
 
   val annIvfDeleteSql: String =
@@ -1109,16 +1011,19 @@ object PipelineQueries {
     * argmin encode, reconstructs, and folds the same cosine — every
     * code and every ADC score bit is value-checked. */
   def annPq(s: SparkSession, d: String): DataFrame = synchronized {
-    val sfKey = d.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = s"${sys.props("java.io.tmpdir")}/graft_ivfpq_v1_$sfKey"
-    if (!new java.io.File(s"$base/meta/_SUCCESS").isFile)
-      Similarity.writeIvfIndexPq(embs(s, d), "vec_id", "embedding", base,
-        cells = 16, m = 8, ks = 16)
-    Similarity.queryIvfIndexPq(s, base,
+    Similarity.queryIvfIndexPq(s, pqIndex(s, d),
         Similarity.prepareQueries(queriesDf(s, d), "vec_id", "embedding"),
         k = 10, nprobe = 4)
       .orderBy("q_id", "rank")
   }
+
+  /** The full-corpus PQ index (m=8, ks=16) shared by q_ann_pq,
+    * q_ann_pq_rerank, q_hybrid_served and q_stream_hybrid_serve. */
+  private def pqIndex(s: SparkSession, d: String): String =
+    GateFixture.buildOnce("graft_ivfpq_v2", d) { dir =>
+      Similarity.writeIvfIndexPq(embs(s, d), "vec_id", "embedding", dir.getPath,
+        cells = 16, m = 8, ks = 16)
+    }.getPath
 
   val annPqSql: String = annPqSqlK(10) + "\nORDER BY q_id, rank"
 
@@ -1135,20 +1040,14 @@ object PipelineQueries {
     * restricts cell MEMBERSHIP to the remainder, value-checking every
     * surviving route, code and score bit. */
   def annPqDelete(s: SparkSession, d: String): DataFrame = synchronized {
-    val sfKey = d.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = s"${sys.props("java.io.tmpdir")}/graft_ivfpqdel_v1_$sfKey"
-    if (!new java.io.File(s"$base/_DELETED").isFile) {
-      if (new java.io.File(base).exists())
-        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(base))
+    val idx = GateFixture.buildOnce("graft_ivfpqdel_v2", d) { dir =>
       val all = embs(s, d)
-      Similarity.writeIvfIndexPq(all, "vec_id", "embedding",
-        s"$base/idx", cells = 16, m = 8, ks = 16)
+      Similarity.writeIvfIndexPq(all, "vec_id", "embedding", dir.getPath,
+        cells = 16, m = 8, ks = 16)
       graft.operators.IndexMaintenance.deleteFromIvfIndex(
-        all.filter(col("vec_id") % 5 === 2).select("vec_id"),
-        "vec_id", s"$base/idx")
-      require(new java.io.File(base, "_DELETED").createNewFile())
+        all.filter(col("vec_id") % 5 === 2).select("vec_id"), "vec_id", dir.getPath)
     }
-    Similarity.queryIvfIndexPq(s, s"$base/idx",
+    Similarity.queryIvfIndexPq(s, idx.getPath,
         Similarity.prepareQueries(queriesDf(s, d), "vec_id", "embedding"),
         k = 10, nprobe = 4)
       .orderBy("q_id", "rank")
@@ -1216,13 +1115,8 @@ object PipelineQueries {
     * re-rank over the candidate pairs, so nomination AND re-ranking
     * are value-checked end to end. */
   def annPqRerank(s: SparkSession, d: String): DataFrame = synchronized {
-    val sfKey = d.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = s"${sys.props("java.io.tmpdir")}/graft_ivfpq_v1_$sfKey"
-    if (!new java.io.File(s"$base/meta/_SUCCESS").isFile)
-      Similarity.writeIvfIndexPq(embs(s, d), "vec_id", "embedding", base,
-        cells = 16, m = 8, ks = 16)
     val queries = Similarity.prepareQueries(queriesDf(s, d), "vec_id", "embedding")
-    val cand = Similarity.queryIvfIndexPq(s, base, queries, k = 30, nprobe = 4)
+    val cand = Similarity.queryIvfIndexPq(s, pqIndex(s, d), queries, k = 30, nprobe = 4)
     Similarity.rerankCandidates(embs(s, d), queries, cand,
         "vec_id", "embedding", k = 10)
       .orderBy("q_id", "rank")
@@ -2152,15 +2046,9 @@ object PipelineQueries {
     * past the corpus's 30-day span so no row is watermark-dropped —
     * making streaming output ≡ batch join exactly (production uses
     * the real disorder bound; eviction semantics are Spark's own).
-    * Same staging/sentinel/promote protocol as q_stream_dedup. */
+    * The whole run is one [[GateFixture]], like q_stream_dedup. */
   def streamJoin(s: SparkSession, d: String): DataFrame = synchronized {
-    val sfKey = d.replaceAll("[^A-Za-z0-9.]", "_")
-    val root = new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_streamjoin_v1_$sfKey")
-    val sentinel = new java.io.File(root, "_COMPLETE")
-    if (!sentinel.isFile) {
-      val staging = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_streamjoin_v1_${sfKey}_build_${java.util.UUID.randomUUID}")
+    val root = GateFixture.buildOnce("graft_streamjoin_v2", d) { staging =>
       val stage = s"$staging/stage"
       Tables.events(s, d)
         .select(col("user_id"), col("event_type"), col("ts"))
@@ -2183,16 +2071,6 @@ object PipelineQueries {
         .start().awaitTermination()
       org.apache.commons.io.FileUtils.deleteDirectory(
         new java.io.File(s"$staging/out/_spark_metadata"))
-      require(new java.io.File(staging, "_COMPLETE").createNewFile())
-      if (sentinel.isFile) {
-        org.apache.commons.io.FileUtils.deleteDirectory(staging)
-      } else {
-        if (root.exists()) org.apache.commons.io.FileUtils.deleteDirectory(root)
-        if (!staging.renameTo(root)) {
-          require(sentinel.isFile, s"stream-join promote failed: $root")
-          org.apache.commons.io.FileUtils.deleteDirectory(staging)
-        }
-      }
     }
     s.read.parquet(s"$root/out")
       .select(col("user_id"), unix_millis(col("vts")).as("vt"),
@@ -2806,20 +2684,27 @@ object PipelineQueries {
   }
 
   /** PERSISTED-BM25-INDEX probe under the driver gate: the index is
-    * built ONCE over the full documents corpus (sentinel-guarded, the
-    * same protocol as q_lm_score_indexed), then the q_bm25 query runs
+    * built ONCE over the full documents corpus (a [[GateFixture]], like
+    * q_lm_score_indexed's model), then the q_bm25 query runs
     * as a pure index probe — the corpus is never re-tokenized (the
     * probe plan reads only postings/dl parquet, spec-pinned). The
     * shared scoring tail makes indexed ≡ inline bit-for-bit, so the
     * SAME mirror as q_bm25 gates every score bit. */
   def bm25IndexedQ(s: SparkSession, d: String): DataFrame = synchronized {
-    val sfKey = d.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = s"${sys.props("java.io.tmpdir")}/graft_bm25index_v1_$sfKey"
-    if (!new java.io.File(s"$base/meta/_SUCCESS").isFile)
-      TextAnalysis.writeBm25Index(docs(s, d), "doc_id", "text", base)
-    TextAnalysis.scoreWithBm25Index(s, base,
-      queryTerms = Seq("spark", "window", "agg"), k = 20)
+    probeBm25(s, bm25Index(s, d))
   }
+
+  /** The full-corpus BM25 index shared by q_bm25_indexed,
+    * q_stream_bm25, q_hybrid_served and q_stream_hybrid_serve. */
+  private def bm25Index(s: SparkSession, d: String): String =
+    GateFixture.buildOnce("graft_bm25index_v2", d) { dir =>
+      TextAnalysis.writeBm25Index(docs(s, d), "doc_id", "text", dir.getPath)
+    }.getPath
+
+  /** The q_bm25 query as a pure probe of the index at `idx`. */
+  private def probeBm25(s: SparkSession, idx: String): DataFrame =
+    TextAnalysis.scoreWithBm25Index(s, idx,
+      queryTerms = Seq("spark", "window", "agg"), k = 20)
 
   val bm25IndexedSql: String = bm25Sql
 
@@ -2830,25 +2715,16 @@ object PipelineQueries {
     * stats replaced by the exact integer sums), and the q_bm25 query
     * probes the merged index. Integer stat merging makes the merged
     * index bit-identical to a full build, so the SAME full-corpus
-    * mirror value-checks every score bit. Build+append run once
-    * behind a marker written LAST (a missing marker wipes and redoes
-    * the sequence — the documented append crash window). */
+    * mirror value-checks every score bit. Build+append run once as one
+    * [[GateFixture]] (the documented append crash window is never
+    * served). */
   def bm25Append(s: SparkSession, d: String): DataFrame = synchronized {
-    val sfKey = d.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = s"${sys.props("java.io.tmpdir")}/graft_bm25app_v1_$sfKey"
-    if (!new java.io.File(s"$base/_APPENDED").isFile) {
-      if (new java.io.File(base).exists())
-        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(base))
+    probeBm25(s, GateFixture.buildOnce("graft_bm25app_v2", d) { dir =>
       TextAnalysis.writeBm25Index(
-        docs(s, d).filter(col("doc_id") % 4 =!= 0), "doc_id", "text",
-        s"$base/idx")
+        docs(s, d).filter(col("doc_id") % 4 =!= 0), "doc_id", "text", dir.getPath)
       TextAnalysis.appendToBm25Index(
-        docs(s, d).filter(col("doc_id") % 4 === 0), "doc_id", "text",
-        s"$base/idx")
-      require(new java.io.File(base, "_APPENDED").createNewFile())
-    }
-    TextAnalysis.scoreWithBm25Index(s, s"$base/idx",
-      queryTerms = Seq("spark", "window", "agg"), k = 20)
+        docs(s, d).filter(col("doc_id") % 4 === 0), "doc_id", "text", dir.getPath)
+    }.getPath)
   }
 
   val bm25AppendSql: String = bm25Sql
@@ -2864,28 +2740,18 @@ object PipelineQueries {
     * full-corpus answer — the SAME mirror as q_bm25 value-checks every
     * score bit of the compacted index. */
   def bm25Compact(s: SparkSession, d: String): DataFrame = synchronized {
-    val sfKey = d.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = s"${sys.props("java.io.tmpdir")}/graft_bm25cmp_v1_$sfKey"
-    if (!new java.io.File(s"$base/_COMPACTED").isFile) {
-      if (new java.io.File(base).exists())
-        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(base))
+    probeBm25(s, GateFixture.buildOnce("graft_bm25cmp_v2", d) { dir =>
+      val idx = dir.getPath
       TextAnalysis.writeBm25Index(
-        docs(s, d).filter(col("doc_id") % 4 =!= 0), "doc_id", "text",
-        s"$base/idx")
+        docs(s, d).filter(col("doc_id") % 4 =!= 0), "doc_id", "text", idx)
       TextAnalysis.appendToBm25Index(
-        docs(s, d).filter(col("doc_id") % 8 === 0), "doc_id", "text",
-        s"$base/idx")
+        docs(s, d).filter(col("doc_id") % 8 === 0), "doc_id", "text", idx)
       TextAnalysis.appendToBm25Index(
-        docs(s, d).filter(col("doc_id") % 8 === 4), "doc_id", "text",
-        s"$base/idx")
-      val stats = graft.operators.IndexMaintenance
-        .compactBm25Index(s, s"$base/idx")
+        docs(s, d).filter(col("doc_id") % 8 === 4), "doc_id", "text", idx)
+      val stats = graft.operators.IndexMaintenance.compactBm25Index(s, idx)
       require(stats.filesAfter < stats.filesBefore,
         s"q_bm25_compact: compaction did not shrink the index — $stats")
-      require(new java.io.File(base, "_COMPACTED").createNewFile())
-    }
-    TextAnalysis.scoreWithBm25Index(s, s"$base/idx",
-      queryTerms = Seq("spark", "window", "agg"), k = 20)
+    }.getPath)
   }
 
   val bm25CompactSql: String = bm25Sql
@@ -2901,19 +2767,12 @@ object PipelineQueries {
     * build on the remainder: delete(ids) ∘ build(corpus) ≡
     * build(corpus ∖ ids), every score bit value-checked. */
   def bm25Delete(s: SparkSession, d: String): DataFrame = synchronized {
-    val sfKey = d.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = s"${sys.props("java.io.tmpdir")}/graft_bm25del_v1_$sfKey"
-    if (!new java.io.File(s"$base/_DELETED").isFile) {
-      if (new java.io.File(base).exists())
-        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(base))
-      TextAnalysis.writeBm25Index(docs(s, d), "doc_id", "text", s"$base/idx")
+    probeBm25(s, GateFixture.buildOnce("graft_bm25del_v2", d) { dir =>
+      TextAnalysis.writeBm25Index(docs(s, d), "doc_id", "text", dir.getPath)
       graft.operators.IndexMaintenance.deleteFromBm25Index(
         docs(s, d).filter(col("doc_id") % 4 === 0).select("doc_id"),
-        "doc_id", s"$base/idx")
-      require(new java.io.File(base, "_DELETED").createNewFile())
-    }
-    TextAnalysis.scoreWithBm25Index(s, s"$base/idx",
-      queryTerms = Seq("spark", "window", "agg"), k = 20)
+        "doc_id", dir.getPath)
+    }.getPath)
   }
 
   val bm25DeleteSql: String = bm25SqlK(20, "WHERE NOT (doc_id % 4 = 0)")
@@ -2926,19 +2785,11 @@ object PipelineQueries {
     * the sink. The index is FIXED ⇒ per-query results are
     * batch-boundary-independent ⇒ stream output ≡ the batch
     * multi-query operator — the SAME mirror as q_bm25_multi gates it.
-    * Same build/staging sentinel protocol as q_stream_lm_score. */
+    * The whole run is one [[GateFixture]], like q_stream_lm_score. */
   def streamBm25(s: SparkSession, d: String): DataFrame = synchronized {
     import s.implicits._
-    val sfKey = d.replaceAll("[^A-Za-z0-9.]", "_")
-    val idxBase = s"${sys.props("java.io.tmpdir")}/graft_bm25index_v1_$sfKey"
-    if (!new java.io.File(s"$idxBase/meta/_SUCCESS").isFile)
-      TextAnalysis.writeBm25Index(docs(s, d), "doc_id", "text", idxBase)
-    val root = new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_streambm25_v1_$sfKey")
-    val sentinel = new java.io.File(root, "_COMPLETE")
-    if (!sentinel.isFile) {
-      val staging = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_streambm25_v1_${sfKey}_build_${java.util.UUID.randomUUID}")
+    val idxBase = bm25Index(s, d)
+    val root = GateFixture.buildOnce("graft_streambm25_v2", d) { staging =>
       val stage = s"$staging/stage"
       // one file per query_id = one micro-batch per whole query
       for (qid <- bm25MultiQueries.map(_._1).distinct)
@@ -2950,16 +2801,6 @@ object PipelineQueries {
       graft.streaming.StreamingBm25Score.run(s, src, idxBase,
         "query_id", "term", k = 10,
         sinkPath = s"$staging/out", checkpoint = s"$staging/ckpt")
-      require(new java.io.File(staging, "_COMPLETE").createNewFile())
-      if (sentinel.isFile) {
-        org.apache.commons.io.FileUtils.deleteDirectory(staging)
-      } else {
-        if (root.exists()) org.apache.commons.io.FileUtils.deleteDirectory(root)
-        if (!staging.renameTo(root)) {
-          require(sentinel.isFile, s"stream-bm25 promote failed: $root")
-          org.apache.commons.io.FileUtils.deleteDirectory(staging)
-        }
-      }
     }
     s.read.parquet(s"$root/out/batch-*").orderBy("query_id", "rank")
   }
@@ -2980,13 +2821,7 @@ object PipelineQueries {
     * query's ranking value-checks the whole ingest→tend→serve loop. */
   def streamBm25Ingest(s: SparkSession, d: String): DataFrame = synchronized {
     import s.implicits._
-    val sfKey = d.replaceAll("[^A-Za-z0-9.]", "_")
-    val root = new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_streamingest_v1_$sfKey")
-    val sentinel = new java.io.File(root, "_COMPLETE")
-    if (!sentinel.isFile) {
-      val staging = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_streamingest_v1_${sfKey}_build_${java.util.UUID.randomUUID}")
+    val root = GateFixture.buildOnce("graft_streamingest_v2", d) { staging =>
       TextAnalysis.writeBm25Index(docs(s, d).filter(col("doc_id") % 3 =!= 0),
         "doc_id", "text", s"$staging/idx")
       docs(s, d).filter(col("doc_id") % 3 === 0).repartition(3)
@@ -2999,16 +2834,6 @@ object PipelineQueries {
         ingestId = "gate",
         maintain = Some(graft.operators.IndexMaintenance
           .Bm25MaintenancePolicy(maxFileBloat = 2.0)))
-      require(new java.io.File(staging, "_COMPLETE").createNewFile())
-      if (sentinel.isFile) {
-        org.apache.commons.io.FileUtils.deleteDirectory(staging)
-      } else {
-        if (root.exists()) org.apache.commons.io.FileUtils.deleteDirectory(root)
-        if (!staging.renameTo(root)) {
-          require(sentinel.isFile, s"stream-ingest promote failed: $root")
-          org.apache.commons.io.FileUtils.deleteDirectory(staging)
-        }
-      }
     }
     TextAnalysis.scoreWithBm25IndexMulti(s, s"$root/idx",
         bm25MultiQueries.toDF("query_id", "term"), "query_id", "term", k = 10)
@@ -3142,20 +2967,10 @@ object PipelineQueries {
     * value-checked. */
   def hybridServedQ(s: SparkSession, d: String): DataFrame = synchronized {
     import s.implicits._
-    val sfKey = d.replaceAll("[^A-Za-z0-9.]", "_")
-    // persisted BM25 index (shared with q_bm25_indexed / q_stream_bm25)
-    val bmBase = s"${sys.props("java.io.tmpdir")}/graft_bm25index_v1_$sfKey"
-    if (!new java.io.File(s"$bmBase/meta/_SUCCESS").isFile)
-      TextAnalysis.writeBm25Index(docs(s, d), "doc_id", "text", bmBase)
-    // persisted PQ index (shared with q_ann_pq / q_ann_pq_rerank)
-    val pqBase = s"${sys.props("java.io.tmpdir")}/graft_ivfpq_v1_$sfKey"
-    if (!new java.io.File(s"$pqBase/meta/_SUCCESS").isFile)
-      Similarity.writeIvfIndexPq(embs(s, d), "vec_id", "embedding", pqBase,
-        cells = 16, m = 8, ks = 16)
     val queries = Similarity
       .prepareQueries(queriesDf(s, d), "vec_id", "embedding")
       .filter(col("q_id") <= 2)
-    graft.operators.Retrieval.hybridServe(s, bmBase, pqBase,
+    graft.operators.Retrieval.hybridServe(s, bm25Index(s, d), pqIndex(s, d),
         bm25MultiQueries.toDF("query_id", "term"), "query_id", "term",
         queries, embs(s, d), "vec_id", "embedding",
         kLex = 30, kNominate = 30, kAnn = 10, nprobe = 4,
@@ -3194,20 +3009,8 @@ object PipelineQueries {
     * the whole streaming loop, every fused score value-checked. */
   def streamHybridServe(s: SparkSession, d: String): DataFrame = synchronized {
     import s.implicits._
-    val sfKey = d.replaceAll("[^A-Za-z0-9.]", "_")
-    val bmBase = s"${sys.props("java.io.tmpdir")}/graft_bm25index_v1_$sfKey"
-    if (!new java.io.File(s"$bmBase/meta/_SUCCESS").isFile)
-      TextAnalysis.writeBm25Index(docs(s, d), "doc_id", "text", bmBase)
-    val pqBase = s"${sys.props("java.io.tmpdir")}/graft_ivfpq_v1_$sfKey"
-    if (!new java.io.File(s"$pqBase/meta/_SUCCESS").isFile)
-      Similarity.writeIvfIndexPq(embs(s, d), "vec_id", "embedding", pqBase,
-        cells = 16, m = 8, ks = 16)
-    val root = new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_streamhybrid_v1_$sfKey")
-    val sentinel = new java.io.File(root, "_COMPLETE")
-    if (!sentinel.isFile) {
-      val staging = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_streamhybrid_v1_${sfKey}_build_${java.util.UUID.randomUUID}")
+    val (bmBase, pqBase) = (bm25Index(s, d), pqIndex(s, d))
+    val root = GateFixture.buildOnce("graft_streamhybrid_v2", d) { staging =>
       val stage = s"$staging/stage"
       // whole-row queries: each query's terms AND embedding in one
       // row; one file per query = one micro-batch per query
@@ -3224,16 +3027,6 @@ object PipelineQueries {
       graft.streaming.StreamingHybridServe.run(s, src, bmBase, pqBase,
         "query_id", "terms", "embedding", embs(s, d), "vec_id", "embedding",
         sinkPath = s"$staging/out", checkpoint = s"$staging/ckpt")
-      require(new java.io.File(staging, "_COMPLETE").createNewFile())
-      if (sentinel.isFile) {
-        org.apache.commons.io.FileUtils.deleteDirectory(staging)
-      } else {
-        if (root.exists()) org.apache.commons.io.FileUtils.deleteDirectory(root)
-        if (!staging.renameTo(root)) {
-          require(sentinel.isFile, s"stream-hybrid promote failed: $root")
-          org.apache.commons.io.FileUtils.deleteDirectory(staging)
-        }
-      }
     }
     s.read.parquet(s"$root/out/batch-*").orderBy("query_id", "fused_rank")
   }
@@ -3367,14 +3160,17 @@ object PipelineQueries {
     * indexed ≡ inline bit-for-bit with the reference corpus absent
     * from the scoring plan. */
   def lmScoreIndexedQ(s: SparkSession, d: String): DataFrame = synchronized {
-    val sfKey = d.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = s"${sys.props("java.io.tmpdir")}/graft_lmindex_v1_$sfKey"
-    if (!new java.io.File(s"$base/meta/_SUCCESS").isFile)
-      TextAnalysis.writeLmIndex(
-        docs(s, d).filter(col("doc_id") % 2 === 1), "text", base)
-    TextAnalysis.scoreWithLmIndex(s, base, docs(s, d), "doc_id", "text")
+    TextAnalysis.scoreWithLmIndex(s, lmIndex(s, d), docs(s, d), "doc_id", "text")
       .orderBy("doc_id")
   }
+
+  /** The odd-docs bigram model shared by q_lm_score_indexed and
+    * q_stream_lm_score. */
+  private def lmIndex(s: SparkSession, d: String): String =
+    GateFixture.buildOnce("graft_lmindex_v2", d) { dir =>
+      TextAnalysis.writeLmIndex(
+        docs(s, d).filter(col("doc_id") % 2 === 1), "text", dir.getPath)
+    }.getPath
 
   lazy val lmScoreIndexedSql: String = lmScoreSql
 
@@ -3383,20 +3179,11 @@ object PipelineQueries {
     * micro-batch, each batch scored against the odd-docs model and
     * appended to the sink. The model is FIXED ⇒ batches score
     * independently ⇒ stream output ≡ batch scoring for ANY batch
-    * boundaries — the SAME oracle as q_lm_score gates it. Same
-    * build/staging sentinel protocol as q_stream_index_dedup. */
+    * boundaries — the SAME oracle as q_lm_score gates it. The whole run
+    * is one [[GateFixture]], like q_stream_index_dedup. */
   def streamLmScore(s: SparkSession, d: String): DataFrame = synchronized {
-    val sfKey = d.replaceAll("[^A-Za-z0-9.]", "_")
-    val idxBase = s"${sys.props("java.io.tmpdir")}/graft_lmindex_v1_$sfKey"
-    if (!new java.io.File(s"$idxBase/meta/_SUCCESS").isFile)
-      TextAnalysis.writeLmIndex(
-        docs(s, d).filter(col("doc_id") % 2 === 1), "text", idxBase)
-    val root = new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_streamlm_v1_$sfKey")
-    val sentinel = new java.io.File(root, "_COMPLETE")
-    if (!sentinel.isFile) {
-      val staging = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_streamlm_v1_${sfKey}_build_${java.util.UUID.randomUUID}")
+    val idxBase = lmIndex(s, d)
+    val root = GateFixture.buildOnce("graft_streamlm_v2", d) { staging =>
       val stage = s"$staging/stage"
       docs(s, d).select("doc_id", "text")
         .repartition(4)
@@ -3407,16 +3194,6 @@ object PipelineQueries {
       graft.streaming.StreamingLmScore.run(s, src, idxBase,
         "doc_id", "text", sinkPath = s"$staging/out",
         checkpoint = s"$staging/ckpt")
-      require(new java.io.File(staging, "_COMPLETE").createNewFile())
-      if (sentinel.isFile) {
-        org.apache.commons.io.FileUtils.deleteDirectory(staging)
-      } else {
-        if (root.exists()) org.apache.commons.io.FileUtils.deleteDirectory(root)
-        if (!staging.renameTo(root)) {
-          require(sentinel.isFile, s"stream-lm-score promote failed: $root")
-          org.apache.commons.io.FileUtils.deleteDirectory(staging)
-        }
-      }
     }
     s.read.parquet(s"$root/out").orderBy("doc_id")
   }

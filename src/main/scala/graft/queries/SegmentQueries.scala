@@ -31,18 +31,32 @@ object SegmentQueries {
     queryGranularity = Granularity.Calendar("hour"),
     segmentGranularity = Granularity.Calendar("day"))
 
-  /** Idempotent per-sfDir ingest (driver may call queries repeatedly).
-    * v1 = full range; v2 re-ingests 2024-01-15 with identical data, so
-    * the scan exercises version overshadowing while staying
-    * oracle-equivalent to a raw recompute. */
   /** Bump when the ingest layout/semantics change, so a cached store
     * from an earlier driver round can never serve stale data. */
-  private val StoreFormatVersion = 2
+  private val StoreFormatVersion = 3
 
+  /** Build-once segment store `<fixture>/store` ([[GateFixture]]):
+    * `ingest` fills the staging store, then every descriptor's absolute
+    * path is retargeted from the staging dir to the promoted root. */
+  private def storeFixture(name: String, sfDir: String, dataSource: String)(
+      ingest: String => Unit): String = {
+    val root = GateFixture.buildOnce(s"${name}_v$StoreFormatVersion", sfDir) { staging =>
+      val store = s"$staging/store"
+      ingest(store)
+      val (from, to) = (staging.getAbsolutePath,
+        GateFixture.promotedRoot(staging).getAbsolutePath)
+      SegmentCatalog.mutate(store, dataSource)(
+        _.map(s0 => s0.copy(path = s0.path.replace(from, to))))
+    }
+    s"$root/store"
+  }
+
+  /** Per-sfDir ingest shared by the store gates. v1 = full range; v2
+    * re-ingests 2024-01-15 with identical data, so the scan exercises
+    * version overshadowing while staying oracle-equivalent to a raw
+    * recompute. */
   private def ensureIngested(spark: SparkSession, sfDir: String): String = synchronized {
-    val base = s"${sys.props("java.io.tmpdir")}/graft_segstore_v$StoreFormatVersion" +
-      s"_${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}"
-    if (SegmentCatalog.read(base, "events_rollup").isEmpty) {
+    storeFixture("graft_segstore", sfDir, "events_rollup") { base =>
       val ev = Tables.events(spark, sfDir)
       SegmentStore.ingest(spark, ev, ingestSpec, base, version = "v1")
       val d0 = java.time.Instant.parse("2024-01-15T00:00:00Z").toEpochMilli
@@ -51,7 +65,6 @@ object SegmentQueries {
       if (day.limit(1).count() > 0)
         SegmentStore.ingest(spark, day, ingestSpec, base, version = "v2")
     }
-    base
   }
 
   private val t0 = java.time.Instant.parse("2024-01-10T00:00:00Z").toEpochMilli
@@ -114,9 +127,7 @@ object SegmentQueries {
     * the oracle recomputes from the events table. */
   def segmentCompact(spark: SparkSession, sfDir: String): DataFrame = synchronized {
     val src = ensureIngested(spark, sfDir)
-    val base = s"${sys.props("java.io.tmpdir")}/graft_segcompact_v$StoreFormatVersion" +
-      s"_${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}"
-    if (SegmentCatalog.read(base, "events_rollup").isEmpty) {
+    val base = storeFixture("graft_segcompact", sfDir, "events_rollup") { base =>
       // seed the compaction store with the hourly segments, then compact
       val hourly = SegmentStore.scan(spark, src, SegmentStore.ScanSpec(
         "events_rollup", t0, t1, Seq("event_type"),
@@ -204,11 +215,9 @@ object SegmentQueries {
     * oracle recomputes from raw events with the v2 transform applied
     * inside the overwritten window. */
   def segmentVacuum(spark: SparkSession, sfDir: String): DataFrame = synchronized {
-    val base = s"${sys.props("java.io.tmpdir")}/graft_segvac_v$StoreFormatVersion" +
-      s"_${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}"
     val full0 = java.time.Instant.parse("2024-01-01T00:00:00Z").toEpochMilli
     val full1 = java.time.Instant.parse("2024-02-01T00:00:00Z").toEpochMilli
-    def scanDaily(): DataFrame =
+    def scanDaily(base: String): DataFrame =
       SegmentStore.scan(spark, base, SegmentStore.ScanSpec(
           "events_rollup", full0, full1, Seq("event_type"),
           Seq("cnt", "sum_users", "sum_value")))
@@ -219,7 +228,7 @@ object SegmentQueries {
           sum(col("sum_users")).as("sum_users"),
           graft.queries.Exact.dsum(col("sum_value")).as("sum_value"))
         .orderBy("day", "event_type")
-    if (SegmentCatalog.read(base, "events_rollup").isEmpty) {
+    val base = storeFixture("graft_segvac", sfDir, "events_rollup") { base =>
       val ev = Tables.events(spark, sfDir)
       val numericSpec = ingestSpec.copy(metricsJson =
         """[
@@ -233,7 +242,7 @@ object SegmentQueries {
       val win = ev.filter(unix_millis(col("ts")) >= d0 && unix_millis(col("ts")) < d1)
         .withColumn("value", col("value") * 3)
       SegmentStore.ingest(spark, win, numericSpec, base, version = "v2")
-      val pre = scanDaily().collect().toSeq
+      val pre = scanDaily(base).collect().toSeq
       val killed = SegmentStore.vacuum(base, "events_rollup")
       require(killed.nonEmpty, "vacuum must reclaim the overshadowed v1 chunks")
       require(killed.forall(s => s.version == "v1" && s.startMs >= d0 && s.endMs <= d1),
@@ -245,10 +254,10 @@ object SegmentQueries {
       val killedPaths = killed.map(_.path).toSet
       require(cat.forall(s => !killedPaths.contains(s.path)),
         "catalog must not reference killed segments")
-      val post = scanDaily().collect().toSeq
+      val post = scanDaily(base).collect().toSeq
       require(pre == post, "vacuum changed scan results")
     }
-    scanDaily()
+    scanDaily(base)
   }
 
   val segmentVacuumSql: String =
@@ -304,20 +313,12 @@ object SegmentQueries {
     * by the watermark and the comparison is exact. */
   def streamRollup(spark: SparkSession, sfDir: String): DataFrame = synchronized {
     import graft.streaming.StreamingRollup
-    val sfKey = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
     // A non-empty catalog appears after the FIRST of several
-    // micro-batch publications, so guarding on it (the old build-once
-    // check) reads a crashed run's partial rollup as complete. Build
-    // the whole store (staged input, checkpoint, segments) in a fresh
-    // staging dir, sentinel only after awaitTermination(), promote by
-    // atomic rename — the deep-store fixture protocol.
-    val root = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_streamroll2_v${StoreFormatVersion}_$sfKey")
-    val sentinel = new java.io.File(root, "_COMPLETE")
-    if (!sentinel.isFile) {
-      val staging = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_streamroll2_v${StoreFormatVersion}_${sfKey}_build_${java.util.UUID.randomUUID}")
-      val store = s"$staging/store"
+    // micro-batch publications, so the whole store (staged input,
+    // checkpoint, segments) builds as one fixture, sealed only after
+    // awaitTermination()
+    val base = storeFixture("graft_streamroll", sfDir, "events_stream") { store =>
+      val staging = new java.io.File(store).getParent
       val stage = s"$staging/stage"
       Tables.events(spark, sfDir)
         .select(col("ts"), col("event_type"), col("user_id"), col("value"))
@@ -343,24 +344,7 @@ object SegmentQueries {
           StreamingRollup.rollup(src, spec), spec, store,
           checkpoint = Some(s"$staging/ckpt"))
         .start().awaitTermination()
-      // descriptor paths are absolute and point into the staging dir;
-      // retarget them at the promoted location before the sentinel
-      SegmentCatalog.mutate(store, "events_stream") { all =>
-        all.map(s0 => s0.copy(path =
-          s0.path.replace(staging.getAbsolutePath, root.getAbsolutePath)))
-      }
-      require(new java.io.File(staging, "_COMPLETE").createNewFile())
-      if (sentinel.isFile) {
-        org.apache.commons.io.FileUtils.deleteDirectory(staging)
-      } else {
-        if (root.exists()) org.apache.commons.io.FileUtils.deleteDirectory(root)
-        if (!staging.renameTo(root)) {
-          require(sentinel.isFile, s"stream-rollup promote failed: $root")
-          org.apache.commons.io.FileUtils.deleteDirectory(staging)
-        }
-      }
     }
-    val base = s"$root/store"
     val all0 = java.time.Instant.parse("2024-01-01T00:00:00Z").toEpochMilli
     val all1 = java.time.Instant.parse("2024-02-01T00:00:00Z").toEpochMilli
     SegmentStore.scan(spark, base, SegmentStore.ScanSpec(
@@ -387,22 +371,21 @@ object SegmentQueries {
     * the multi-value dim. Covers the DOUBLE metric and array<string>
     * decode paths under the driver's hash gate; the oracle is the
     * fixture's known contents as a VALUES table. */
-  /** Build-once deep-store fixture tree shared by q_druid_deepstore
-    * and q_druid_agg: a deterministic two-version Druid v9 layout
-    * (v2 half-day overshadows v1's tail). Versioned root (bump on any
-    * layout change — an unversioned dir would keep discovering stale
-    * descriptors from older revisions) + completion sentinel +
-    * build-in-staging-then-rename, so a concurrent JVM (Bench ∥
-    * Verify) never reads a half-written index.zip and a finished tree
-    * is never rebuilt. */
-  private def deepStoreFixture(): java.io.File = {
+  /** Build-once ([[GateFixture]]) Druid v9 tree `name`, versioned by
+    * the segment writer's format so a layout change never serves stale
+    * descriptors. */
+  private def druidFixture(name: String, sfDir: String)(
+      build: java.io.File => Unit): java.io.File =
+    GateFixture.buildOnce(
+      s"${name}_v2_w${graft.sources.DruidSegmentWriter.FormatVersion}", sfDir)(build)
+
+  /** Deep-store fixture tree shared by q_druid_deepstore, q_druid_agg,
+    * q_druid_ds_metadata and q_druid_topn: a deterministic two-version
+    * Druid v9 layout (v2 half-day overshadows v1's tail). */
+  private def deepStoreFixture(sfDir: String): java.io.File = {
     import graft.sources.{DruidSegmentWriter => W}
     val day = 24 * 3600 * 1000L
     val t0 = java.time.Instant.parse("2020-06-01T00:00:00Z").toEpochMilli
-    val root = new java.io.File(
-      sys.props("java.io.tmpdir"),
-      s"graft_druid_deepstore_w${graft.sources.DruidSegmentWriter.FormatVersion}")
-    val sentinel = new java.io.File(root, "_COMPLETE")
     def seg(dir: java.io.File, version: String, hosts: Seq[String],
             tags: Seq[Seq[String]], lo: Long, hi: Long): Unit = {
       val n = hosts.size
@@ -413,37 +396,20 @@ object SegmentQueries {
           W.DoubleMet("revenue", (1 to n).map(_ * 1.25))),
         lo, hi, version = version)
     }
-    if (!sentinel.isFile) {
-      val staging = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_druid_deepstore_w${graft.sources.DruidSegmentWriter.FormatVersion}_build_${java.util.UUID.randomUUID}")
+    druidFixture("graft_druid_deepstore", sfDir) { staging =>
       seg(new java.io.File(staging, "fixture/day/v1/0"), "v1",
         Seq("a", "b", "c", "d", "e"),
         Seq(Seq("x", "y"), Seq(), Seq("y"), Seq("x", "z"), Seq("z")), t0, t0 + day)
       seg(new java.io.File(staging, "fixture/half2/v2/0"), "v2",
         Seq("n1", "n2"), Seq(Seq("x"), Seq()), t0 + day / 2, t0 + day)
-      require(new java.io.File(staging, "_COMPLETE").createNewFile())
-      if (sentinel.isFile) {
-        // another JVM finished while we built — use theirs
-        org.apache.commons.io.FileUtils.deleteDirectory(staging)
-      } else {
-        // clear a stale/unfinished root (old process died mid-build),
-        // then promote atomically; losing the rename race is fine iff
-        // the winner's tree is complete
-        if (root.exists()) org.apache.commons.io.FileUtils.deleteDirectory(root)
-        if (!staging.renameTo(root)) {
-          require(sentinel.isFile, s"deep-store fixture promote failed: $root")
-          org.apache.commons.io.FileUtils.deleteDirectory(staging)
-        }
-      }
     }
-    root
   }
 
   def druidDeepStore(spark: SparkSession, sfDir: String): DataFrame = synchronized {
     import graft.sources.DruidDeepStorage
     val day = 24 * 3600 * 1000L
     val t0 = java.time.Instant.parse("2020-06-01T00:00:00Z").toEpochMilli
-    val root = deepStoreFixture()
+    val root = deepStoreFixture(sfDir)
     DruidDeepStorage.scan(spark, root.getAbsolutePath, "fixture", t0, t0 + day)
       .select(col("__time"), col("host"), col("hits"), col("revenue"),
         explode_outer(col("tags")).as("tag"))
@@ -480,7 +446,7 @@ object SegmentQueries {
     import org.apache.spark.sql.functions.{count, max, min}
     val day = 24 * 3600 * 1000L
     val t0 = java.time.Instant.parse("2020-06-01T00:00:00Z").toEpochMilli
-    val root = deepStoreFixture()
+    val root = deepStoreFixture(sfDir)
     spark.read.format("druid-segments")
       .option("dataSource", "fixture")
       .load(root.getAbsolutePath)
@@ -507,7 +473,7 @@ object SegmentQueries {
     * answer comes from the compressed-longs header, zero row decode
     * (DruidSegmentsDataSourceSpec pins PushedAggregates). */
   def druidDsMetadata(spark: SparkSession, sfDir: String): DataFrame = synchronized {
-    val root = deepStoreFixture()
+    val root = deepStoreFixture(sfDir)
     val ds = spark.read.format("druid-segments")
       .option("dataSource", "fixture")
       .load(root.getAbsolutePath)
@@ -528,7 +494,7 @@ object SegmentQueries {
     * plan + chunk accounting); fixture times are strictly increasing,
     * so the top-3 set is deterministic and hash-checkable. */
   def druidTopN(spark: SparkSession, sfDir: String): DataFrame = synchronized {
-    val root = deepStoreFixture()
+    val root = deepStoreFixture(sfDir)
     spark.read.format("druid-segments")
       .option("dataSource", "fixture")
       .load(root.getAbsolutePath)
@@ -561,13 +527,7 @@ object SegmentQueries {
     import graft.sources.{DruidSegmentWriter => W}
     val day = 24 * 3600 * 1000L
     val t0 = java.time.Instant.parse("2021-03-01T00:00:00Z").toEpochMilli
-    val root = new java.io.File(
-      sys.props("java.io.tmpdir"),
-      s"graft_druid_evolved_w${graft.sources.DruidSegmentWriter.FormatVersion}")
-    val sentinel = new java.io.File(root, "_COMPLETE")
-    if (!sentinel.isFile) {
-      val staging = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_druid_evolved_w${graft.sources.DruidSegmentWriter.FormatVersion}_build_${java.util.UUID.randomUUID}")
+    val root = druidFixture("graft_druid_evolved", sfDir) { staging =>
       W.write(new java.io.File(staging, "evolved/day1/v1/0"), "evolved",
         (0 until 5).map(i => t0 + i * 3600000L),
         Seq(W.StrDim("host", Seq("a", "b", "c", "d", "e")),
@@ -579,16 +539,6 @@ object SegmentQueries {
           W.StrDim("country", Seq("US", "DE", "JP")),
           W.LongMet("clicks", Seq(7L, 8L, 9L))),
         t0 + day, t0 + 2 * day, version = "v1")
-      require(new java.io.File(staging, "_COMPLETE").createNewFile())
-      if (sentinel.isFile) {
-        org.apache.commons.io.FileUtils.deleteDirectory(staging)
-      } else {
-        if (root.exists()) org.apache.commons.io.FileUtils.deleteDirectory(root)
-        if (!staging.renameTo(root)) {
-          require(sentinel.isFile, s"evolved fixture promote failed: $root")
-          org.apache.commons.io.FileUtils.deleteDirectory(staging)
-        }
-      }
     }
     spark.read.format("druid-segments")
       .option("dataSource", "evolved")
@@ -634,13 +584,7 @@ object SegmentQueries {
     val day = 24 * 3600 * 1000L
     val hour = 3600000L
     val t0 = java.time.Instant.parse("2021-04-01T00:00:00Z").toEpochMilli
-    val root = new java.io.File(
-      sys.props("java.io.tmpdir"),
-      s"graft_druid_groupby_w${graft.sources.DruidSegmentWriter.FormatVersion}")
-    val sentinel = new java.io.File(root, "_COMPLETE")
-    if (!sentinel.isFile) {
-      val staging = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_druid_groupby_w${graft.sources.DruidSegmentWriter.FormatVersion}_build_${java.util.UUID.randomUUID}")
+    val root = druidFixture("graft_druid_groupby", sfDir) { staging =>
       W.write(new java.io.File(staging, "gb/day1/v1/0"), "gb",
         (0 until 4).map(i => t0 + i * hour),
         Seq(W.StrDim("host", Seq("a", "a", "b", "c")),
@@ -651,16 +595,6 @@ object SegmentQueries {
         Seq(W.StrDim("host", Seq("a", "b", "b")),
           W.LongMet("hits", Seq(50L, 60L, 70L))),
         t0 + day, t0 + 2 * day, version = "v1")
-      require(new java.io.File(staging, "_COMPLETE").createNewFile())
-      if (sentinel.isFile) {
-        org.apache.commons.io.FileUtils.deleteDirectory(staging)
-      } else {
-        if (root.exists()) org.apache.commons.io.FileUtils.deleteDirectory(root)
-        if (!staging.renameTo(root)) {
-          require(sentinel.isFile, s"groupby fixture promote failed: $root")
-          org.apache.commons.io.FileUtils.deleteDirectory(staging)
-        }
-      }
     }
     spark.read.format("druid-segments")
       .option("dataSource", "gb")
@@ -704,13 +638,7 @@ object SegmentQueries {
     val day = 24 * 3600 * 1000L
     val hour = 3600000L
     val t0 = java.time.Instant.parse("2021-04-01T00:00:00Z").toEpochMilli
-    val root = new java.io.File(
-      sys.props("java.io.tmpdir"),
-      s"graft_druid_groupby2_w${graft.sources.DruidSegmentWriter.FormatVersion}")
-    val sentinel = new java.io.File(root, "_COMPLETE")
-    if (!sentinel.isFile) {
-      val staging = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_druid_groupby2_w${graft.sources.DruidSegmentWriter.FormatVersion}_build_${java.util.UUID.randomUUID}")
+    val root = druidFixture("graft_druid_groupby2", sfDir) { staging =>
       W.write(new java.io.File(staging, "gb2/day1/v1/0"), "gb2",
         (0 until 5).map(i => t0 + i * hour),
         Seq(W.StrDim("host", Seq("a", "a", "b", "b", "c")),
@@ -722,16 +650,6 @@ object SegmentQueries {
         Seq(W.StrDim("host", Seq("a", "b", "a")),
           W.LongMet("hits", Seq(60L, 70L, 80L))),
         t0 + day, t0 + 2 * day, version = "v1")
-      require(new java.io.File(staging, "_COMPLETE").createNewFile())
-      if (sentinel.isFile) {
-        org.apache.commons.io.FileUtils.deleteDirectory(staging)
-      } else {
-        if (root.exists()) org.apache.commons.io.FileUtils.deleteDirectory(root)
-        if (!staging.renameTo(root)) {
-          require(sentinel.isFile, s"groupby2 fixture promote failed: $root")
-          org.apache.commons.io.FileUtils.deleteDirectory(staging)
-        }
-      }
     }
     spark.read.format("druid-segments")
       .option("dataSource", "gb2")
@@ -759,21 +677,15 @@ object SegmentQueries {
 
   /** DSv2 WRITE path under the driver gate: a 3-day slice of `events`
     * is written as REAL Druid v9 DAY segments through
-    * `df.write.format("druid-segments")` (staged to a fresh dir,
-    * `_COMPLETE`-sentineled, atomically promoted — once per sf), read
+    * `df.write.format("druid-segments")` (a [[GateFixture]] built
+    * once per sf), read
     * back through the DSv2 table, and aggregated per event_type. The
     * oracle computes the same aggregate from the ORIGINAL parquet in
     * DuckDB, so the whole write→publish→discover→decode chain gates on
     * value equality: any loss, duplication, or reorder in the writer's
     * chunking/sharding/commit protocol breaks the hash. */
   def druidWrite(spark: SparkSession, sfDir: String): DataFrame = synchronized {
-    val sfKey = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    val root = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_druid_write_w${graft.sources.DruidSegmentWriter.FormatVersion}_$sfKey")
-    val sentinel = new java.io.File(root, "_COMPLETE")
-    if (!sentinel.isFile) {
-      val staging = new java.io.File(sys.props("java.io.tmpdir"),
-        s"${root.getName}_build_${java.util.UUID.randomUUID}")
+    val root = druidFixture("graft_druid_write", sfDir) { staging =>
       Tables.events(spark, sfDir)
         .where(col("ts") >= lit("2024-01-05").cast("timestamp") &&
           col("ts") < lit("2024-01-08").cast("timestamp"))
@@ -784,16 +696,6 @@ object SegmentQueries {
         .option("segmentGranularity", "DAY")
         .option("version", "v1")
         .save(staging.getAbsolutePath)
-      require(new java.io.File(staging, "_COMPLETE").createNewFile())
-      if (sentinel.isFile) {
-        org.apache.commons.io.FileUtils.deleteDirectory(staging)
-      } else {
-        if (root.exists()) org.apache.commons.io.FileUtils.deleteDirectory(root)
-        if (!staging.renameTo(root)) {
-          require(sentinel.isFile, s"druid write fixture promote failed: $root")
-          org.apache.commons.io.FileUtils.deleteDirectory(staging)
-        }
-      }
     }
     spark.read.format("druid-segments")
       .option("dataSource", "events_rt")
@@ -841,14 +743,8 @@ object SegmentQueries {
 
   /** Build-once fixture: the 3-day events slice streamed into a Druid
     * deep store via 4 AvailableNow micro-batches (appendShards). */
-  private def streamDruidFixture(spark: SparkSession, sfDir: String): java.io.File = {
-    val sfKey = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    val root = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_stream_druid_w${graft.sources.DruidSegmentWriter.FormatVersion}_$sfKey")
-    val sentinel = new java.io.File(root, "_COMPLETE")
-    if (!sentinel.isFile) {
-      val staging = new java.io.File(sys.props("java.io.tmpdir"),
-        s"${root.getName}_build_${java.util.UUID.randomUUID}")
+  private def streamDruidFixture(spark: SparkSession, sfDir: String): java.io.File =
+    druidFixture("graft_stream_druid", sfDir) { staging =>
       val stage = s"$staging/stage"
       Tables.events(spark, sfDir)
         .where(col("ts") >= lit("2024-01-05").cast("timestamp") &&
@@ -864,19 +760,7 @@ object SegmentQueries {
         src, root = s"$staging/deep", dataSource = "events_rt_stream",
         checkpoint = s"$staging/ckpt", segmentGranularity = "DAY",
         version = "rt0").awaitTermination()
-      require(new java.io.File(staging, "_COMPLETE").createNewFile())
-      if (sentinel.isFile) {
-        org.apache.commons.io.FileUtils.deleteDirectory(staging)
-      } else {
-        if (root.exists()) org.apache.commons.io.FileUtils.deleteDirectory(root)
-        if (!staging.renameTo(root)) {
-          require(sentinel.isFile, s"stream-druid promote failed: $root")
-          org.apache.commons.io.FileUtils.deleteDirectory(staging)
-        }
-      }
     }
-    root
-  }
 
   /** Identical content to the one-shot write — the stream must land
     * the same rows, so the same parquet oracle applies. */
@@ -892,13 +776,7 @@ object SegmentQueries {
     * back OUT → aggregate. */
   def druidTail(spark: SparkSession, sfDir: String): DataFrame = synchronized {
     val deep = s"${streamDruidFixture(spark, sfDir).getAbsolutePath}/deep"
-    val sfKey = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    val root = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_druid_tail_w${graft.sources.DruidSegmentWriter.FormatVersion}_$sfKey")
-    val sentinel = new java.io.File(root, "_COMPLETE")
-    if (!sentinel.isFile) {
-      val staging = new java.io.File(sys.props("java.io.tmpdir"),
-        s"${root.getName}_build_${java.util.UUID.randomUUID}")
+    val root = druidFixture("graft_druid_tail", sfDir) { staging =>
       spark.readStream.format("druid-segments")
         .option("dataSource", "events_rt_stream").load(deep)
         .writeStream.format("parquet")
@@ -908,16 +786,6 @@ object SegmentQueries {
         .start().awaitTermination()
       org.apache.commons.io.FileUtils.deleteDirectory(
         new java.io.File(s"$staging/out/_spark_metadata"))
-      require(new java.io.File(staging, "_COMPLETE").createNewFile())
-      if (sentinel.isFile) {
-        org.apache.commons.io.FileUtils.deleteDirectory(staging)
-      } else {
-        if (root.exists()) org.apache.commons.io.FileUtils.deleteDirectory(root)
-        if (!staging.renameTo(root)) {
-          require(sentinel.isFile, s"druid tail promote failed: $root")
-          org.apache.commons.io.FileUtils.deleteDirectory(staging)
-        }
-      }
     }
     spark.read.parquet(s"$root/out")
       .groupBy(col("event_type"))
@@ -941,13 +809,7 @@ object SegmentQueries {
     * survivor leak both break the gate). */
   def druidVacuum(spark: SparkSession, sfDir: String): DataFrame = synchronized {
     import graft.sources.DruidDeepStorage
-    val sfKey = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    val root = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_druid_vacuum_w${graft.sources.DruidSegmentWriter.FormatVersion}_$sfKey")
-    val sentinel = new java.io.File(root, "_COMPLETE")
-    if (!sentinel.isFile) {
-      val staging = new java.io.File(sys.props("java.io.tmpdir"),
-        s"${root.getName}_build_${java.util.UUID.randomUUID}")
+    val root = druidFixture("graft_druid_vacuum", sfDir) { staging =>
       val deep = s"$staging/deep"
       def slice(d0: String, d1: String) = Tables.events(spark, sfDir)
         .where(col("ts") >= lit(d0).cast("timestamp") &&
@@ -970,16 +832,6 @@ object SegmentQueries {
         s"vacuum must reclaim exactly the overshadowed v1 day-1 shards, got $killed")
       require(after == before - killed.size,
         s"discovery must lose exactly the killed segments: $before -> $after")
-      require(new java.io.File(staging, "_COMPLETE").createNewFile())
-      if (sentinel.isFile) {
-        org.apache.commons.io.FileUtils.deleteDirectory(staging)
-      } else {
-        if (root.exists()) org.apache.commons.io.FileUtils.deleteDirectory(root)
-        if (!staging.renameTo(root)) {
-          require(sentinel.isFile, s"druid vacuum promote failed: $root")
-          org.apache.commons.io.FileUtils.deleteDirectory(staging)
-        }
-      }
     }
     spark.read.format("druid-segments")
       .option("dataSource", "events_vac")
