@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
+import graft.BoundedCache
 
 /** Generation-pointer (manifest) layout + single-writer lease for the
   * persisted index family (BM25, IVF float/SQ8/PQ, MinHash) — the
@@ -163,21 +164,6 @@ object IndexLayout {
     new java.util.concurrent.ConcurrentHashMap[
       String, (String, org.apache.spark.sql.types.StructType)]()
 
-  /** Size bound for the driver-side component caches: past the cap the
-    * cache clears and re-warms lazily (a leak guard for long-lived
-    * sessions that touch many index generations — correctness never
-    * depends on an entry being present). Gates touch tens of dirs; a
-    * serving session cycling thousands of generations would otherwise
-    * grow these maps without bound. */
-  private val ComponentCacheMaxEntries = 512
-
-  private def boundedPut[V](
-      cache: java.util.concurrent.ConcurrentHashMap[String, V],
-      key: String, v: V): Unit = {
-    if (cache.size() >= ComponentCacheMaxEntries) cache.clear()
-    cache.put(key, v)
-  }
-
   private[graft] def readComponent(
       spark: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
     val sig = componentSignature(spark, dir)
@@ -186,7 +172,7 @@ object IndexLayout {
       if (cached != null && cached._1 == sig) cached._2
       else {
         val s = spark.read.parquet(dir).schema
-        boundedPut(componentSchemaCache, dir, (sig, s))
+        BoundedCache.put(componentSchemaCache, dir, (sig, s))
         s
       }
     spark.read.schema(sch).parquet(dir)
@@ -252,7 +238,7 @@ object IndexLayout {
     val cached = smallComponentCache.get(dir)
     if (cached != null && cached._1 == sig) return cached._2
     val rows = readComponent(spark, dir).collect()
-    boundedPut(smallComponentCache, dir, (sig, rows))
+    BoundedCache.put(smallComponentCache, dir, (sig, rows))
     rows
   }
 

@@ -4,8 +4,12 @@ import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.charset.StandardCharsets
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession, graftbridge}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.SpecificInternalRow
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 import org.roaringbitmap.buffer.{ImmutableRoaringBitmap, MutableRoaringBitmap}
@@ -65,15 +69,21 @@ object DruidSegmentReader {
     * directory), so per-path schema probes cache for the JVM's life —
     * repeated reads of the same datasource stop re-opening index.zip
     * for schema discovery (on the driver AND inside distributed probe
-    * tasks). */
-  private val schemaCache =
+    * tasks). Bounded like the other path-keyed caches
+    * ([[graft.BoundedCache]]): a long-lived session probing many
+    * segments re-warms instead of growing without bound. */
+  private[sources] val schemaCache =
     new java.util.concurrent.ConcurrentHashMap[String, StructType]()
 
-  private[sources] def segmentSchema(conf: Configuration, segmentDir: String): StructType =
-    schemaCache.computeIfAbsent(segmentDir, { dir =>
-      val file = openSegment(conf, dir)
-      StructType(columnsOf(file).map(sparkField))
-    })
+  private[sources] def segmentSchema(conf: Configuration, segmentDir: String): StructType = {
+    val cached = schemaCache.get(segmentDir)
+    if (cached != null) cached
+    else {
+      val schema = StructType(columnsOf(openSegment(conf, segmentDir)).map(sparkField))
+      graft.BoundedCache.put(schemaCache, segmentDir, schema)
+      schema
+    }
+  }
 
   /** Union schema across segments — real Druid datasources EVOLVE
     * their dimension set over time (new dims appear, old ones are
@@ -150,22 +160,23 @@ object DruidSegmentReader {
         val want = ("__time" +: columns.filter(_ != "__time")).distinct
         StructType(want.map(full.apply))
       }
-    val names = schema.fields.map(_.name).toSeq
     val rdd = spark.sparkContext
       .parallelize(windows, windows.size)
       .flatMap { case (dir, lo, hi) =>
-        decodeWindow(confSer.value, dir, lo, hi, names, preds)
+        decodeWindow(confSer.value, dir, lo, hi, schema, preds)
       }
-    spark.createDataFrame(rdd, schema)
+    graftbridge.internalCreateDataFrame(spark, rdd, schema)
   }
 
   /** Decode one windowed segment on an executor: dictionary
-    * short-circuit, then columnar decode of `names` (in the caller's
-    * order; `__time` need not be first or present — it is decoded
-    * internally for the window clip and projected away if unwanted),
-    * then the `[lo, hi)` row clip. The single executor-side entry
-    * point shared by [[readWindowed]] and the DataSource V2 connector
-    * ([[DruidSegmentsDataSource]]).
+    * short-circuit, then the `[lo, hi)` row clip and a typed decode of
+    * `schema`'s columns (in the caller's order; `__time` need not be
+    * among them — the clip reads it regardless) straight into one
+    * reused row, which the caller must `copy()` to keep. The single
+    * executor-side entry point shared by [[readWindowed]], the grouped
+    * aggregate fallback and the DataSource V2 connector
+    * ([[DruidSegmentsDataSource]]); `counts` collects the caller's
+    * share of the decode work.
     *
     * The dictionary short-circuit is Druid-native, generalized from
     * selector/in to ANY dictionary predicate (bound/like/regex/
@@ -175,9 +186,14 @@ object DruidSegmentReader {
     * column's bytes, so the probe never decompresses row ids. */
   private[sources] def decodeWindow(
       conf: Configuration, dir: String, lo: Long, hi: Long,
-      names: Seq[String],
-      preds: Map[String, Seq[DictPred]]): Iterator[Row] = {
-    val file = openSegment(conf, dir)
+      schema: StructType,
+      preds: Map[String, Seq[DictPred]],
+      counts: DecodeCounts = new DecodeCounts): Iterator[InternalRow] =
+    decodeSegment(openSegment(conf, dir), lo, hi, schema, preds, counts)
+
+  private def decodeSegment(file: SegmentFile, lo: Long, hi: Long, schema: StructType,
+                           preds: Map[String, Seq[DictPred]],
+                           counts: DecodeCounts): Iterator[InternalRow] = {
     // a segment that LACKS a conjunctively-constrained column is
     // all-null for it — no non-null value can match, so the segment
     // skips (the schema-evolution analogue of the dictionary
@@ -208,10 +224,7 @@ object DruidSegmentReader {
         }
       if (pruned.exists(_.isEmpty)) Iterator.empty
       else {
-        decodedSegments.incrementAndGet()
-        val withTime =
-          if (names.headOption.contains("__time")) names
-          else "__time" +: names.filter(_ != "__time")
+        counts.segmentDecoded()
         // the time clip runs INSIDE the row walk, before any dim or
         // metric value materializes (decodeRows checks __time first):
         // out-of-window rows touch only the __time column's chunks, so
@@ -219,8 +232,8 @@ object DruidSegmentReader {
         // and a downstream early stop (limit) never forces a full
         // column pass
         val clips = lo != Long.MinValue || hi != Long.MaxValue
-        projectTo(names, withTime, decodeRows(file, withTime, pruned,
-          timeWindow = if (clips) Some((lo, hi)) else None))
+        decodeRows(file, schema, timeColumn(file, counts), pruned,
+          timeWindow = if (clips) Some((lo, hi)) else None, counts)
       }
     }
   }
@@ -249,12 +262,11 @@ object DruidSegmentReader {
     else df1.select(("__time" +: columns.filter(_ != "__time")).map(col): _*)
   }
 
-  /** The `__time` column as a lazily-decoded long view (chunks
-    * decompress on first access). */
-  private def timeValues(file: SegmentFile): IndexedSeq[Long] = {
+  /** The `__time` column (chunks decompress on first access). */
+  private def timeColumn(file: SegmentFile, counts: DecodeCounts): LongColumn = {
     val buf = ByteBuffer.wrap(file("__time"))
     readPrefixedJson(buf)
-    decodeCompressedLongs(buf)
+    compressedLongs(buf, counts)
   }
 
   /** Ids of the `n` earliest (asc) / latest (desc) rows by `__time`
@@ -263,9 +275,8 @@ object DruidSegmentReader {
     * resolve to the lowest row ids (the walk is ascending and replaces
     * only on strictly-better times) — deterministic for a fixed
     * segment. */
-  private[sources] def topNRowIds(file: SegmentFile, lo: Long, hi: Long,
+  private[sources] def topNRowIds(times: LongColumn, lo: Long, hi: Long,
                                   n: Int, desc: Boolean): ImmutableRoaringBitmap = {
-    val times = timeValues(file)
     // head of the queue = the WORST kept row (smallest kept time for
     // desc, largest for asc), so one comparison decides a replace
     val ord: Ordering[(Long, Int)] =
@@ -291,33 +302,24 @@ object DruidSegmentReader {
   }
 
   /** Top-n by `__time` over a window: select winning row ids off the
-    * time column, then decode ONLY those rows' requested columns.
-    * Emission order is row-id order — the caller (Spark's
-    * TakeOrderedAndProject above a partially-pushed TopN) re-sorts. */
+    * time column, then decode ONLY those rows' requested columns (the
+    * winners' `__time` comes from the chunks the selection already
+    * decompressed). Emission order is row-id order — the caller
+    * (Spark's TakeOrderedAndProject above a partially-pushed TopN)
+    * re-sorts. */
   private[sources] def decodeTopN(conf: Configuration, dir: String,
-                                  lo: Long, hi: Long, names: Seq[String],
-                                  n: Int, desc: Boolean): Iterator[Row] = {
+                                  lo: Long, hi: Long, schema: StructType,
+                                  n: Int, desc: Boolean,
+                                  counts: DecodeCounts): Iterator[InternalRow] = {
     val file = openSegment(conf, dir)
-    val withTime =
-      if (names.headOption.contains("__time")) names
-      else "__time" +: names.filter(_ != "__time")
-    val ids = topNRowIds(file, lo, hi, n, desc)
+    val times = timeColumn(file, counts)
+    val ids = topNRowIds(times, lo, hi, n, desc)
     if (ids.isEmpty) Iterator.empty
     else {
-      decodedSegments.incrementAndGet()
-      projectTo(names, withTime, decodeRows(file, withTime, Some(ids)))
+      counts.segmentDecoded()
+      decodeRows(file, schema, times, Some(ids), timeWindow = None, counts)
     }
   }
-
-  /** Reorder decoded rows from the __time-first internal layout back
-    * to the caller's requested column order. */
-  private def projectTo(names: Seq[String], withTime: Seq[String],
-                        rows: Iterator[Row]): Iterator[Row] =
-    if (withTime == names) rows
-    else {
-      val idx = names.map(withTime.indexOf(_)).toIndexedSeq
-      rows.map(r => Row.fromSeq(idx.map(r.get)))
-    }
 
   /** Row count of a segment from the `__time` supplier HEADER alone —
     * the `totalSize` field of the compressed-longs supplier; zero
@@ -327,16 +329,7 @@ object DruidSegmentReader {
   private[sources] def numRows(file: SegmentFile): Int = {
     val buf = ByteBuffer.wrap(file("__time"))
     readPrefixedJson(buf)
-    longsHeader(buf)._1 // totalSize = row count
-  }
-
-  /** CompressedLongsIndexedSupplier v2 header:
-    * (totalSize, sizePer, compression) — the single owner of the
-    * header layout for both the row-count probe and the decoder. */
-  private def longsHeader(buf: ByteBuffer): (Int, Int, Int) = {
-    val version = buf.get()
-    require(version == 2, s"compressed longs version $version")
-    (buf.getInt(), buf.getInt(), buf.get() & 0xff)
+    supplierHeader(buf, "longs")._1 // totalSize = row count
   }
 
   /** Per-metric window partial: modulo-2^64 sum (associative, so
@@ -350,13 +343,14 @@ object DruidSegmentReader {
     * column under a pushed long aggregate is a planner/schema
     * contradiction — loud failure, exactly where the unpushed decode
     * would have failed its Catalyst conversion. */
-  private def longMetricColumn(file: SegmentFile, name: String): Option[IndexedSeq[Long]] =
+  private def longMetricColumn(file: SegmentFile, name: String,
+                               counts: DecodeCounts): Option[LongColumn] =
     if (!file.has(name)) None
     else {
       val buf = ByteBuffer.wrap(file(name))
       val json = readPrefixedJson(buf)
       (json \ "valueType") match {
-        case JString("LONG") => Some(decodeCompressedLongs(buf))
+        case JString("LONG") => Some(compressedLongs(buf, counts))
         case vt => throw new IllegalStateException(
           s"pushed long aggregate over column '$name' of valueType $vt")
       }
@@ -373,19 +367,19 @@ object DruidSegmentReader {
   private[sources] def aggregateWindow(
       conf: Configuration, dir: String, lo: Long, hi: Long,
       fullCoverage: Boolean, needTimeBounds: Boolean,
-      metricCols: Seq[String] = Nil)
+      metricCols: Seq[String], counts: DecodeCounts)
       : (Long, Option[Long], Option[Long], Map[String, Option[MetricAgg]]) = {
     val file = openSegment(conf, dir)
     if (fullCoverage && !needTimeBounds && metricCols.isEmpty)
       (numRows(file).toLong, None, None, Map.empty)
     else {
-      val metrics: Seq[(String, Option[IndexedSeq[Long]])] =
-        metricCols.map(m => m -> longMetricColumn(file, m))
+      val metrics: Seq[(String, Option[LongColumn])] =
+        metricCols.map(m => m -> longMetricColumn(file, m, counts))
       val present = metrics.collect { case (m, Some(vs)) => (m, vs) }.toArray
       val sums = new Array[Long](present.length)
       val mins = Array.fill(present.length)(Long.MaxValue)
       val maxs = Array.fill(present.length)(Long.MinValue)
-      val times = if (!fullCoverage || needTimeBounds) timeValues(file) else null
+      val times = if (!fullCoverage || needTimeBounds) timeColumn(file, counts) else null
       var count = 0L
       var mn = Long.MaxValue
       var mx = Long.MinValue
@@ -461,7 +455,8 @@ object DruidSegmentReader {
       conf: Configuration, dir: String, dims: Seq[String], lo: Long, hi: Long,
       fullCoverage: Boolean, needTimeBounds: Boolean,
       metricCols: Seq[String] = Nil,
-      productCap: Double = 1000000.0): Iterator[GroupPartial] = {
+      productCap: Double = 1000000.0,
+      counts: DecodeCounts = new DecodeCounts): Iterator[GroupPartial] = {
     require(dims.nonEmpty, "at least one group dim")
     val file = openSegment(conf, dir)
 
@@ -469,7 +464,7 @@ object DruidSegmentReader {
     // the window — answered by the global-aggregate metadata path
     if (dims.forall(d => !file.has(d))) {
       val (c, mn, mx, ms) =
-        aggregateWindow(conf, dir, lo, hi, fullCoverage, needTimeBounds, metricCols)
+        aggregateWindow(conf, dir, lo, hi, fullCoverage, needTimeBounds, metricCols, counts)
       return if (c == 0L) Iterator.empty
       else Iterator(GroupPartial(dims.map(_ => null: String), c, mn, mx, ms))
     }
@@ -487,11 +482,11 @@ object DruidSegmentReader {
     val cardProduct = planned.flatten.flatten
       .map(i => i.dict.length + 1.0).product
     if (planned.exists(_.isEmpty) || cardProduct > productCap)
-      return groupByDecode(conf, dir, dims, lo, hi, needTimeBounds, metricCols, file)
+      return groupByDecode(file, dims, lo, hi, needTimeBounds, metricCols, counts)
     val idxs: Seq[Option[DimBitmapIndex]] = planned.map(_.get)
 
     def boundsOf(b: ImmutableRoaringBitmap,
-                 times: IndexedSeq[Long]): (Option[Long], Option[Long]) = {
+                 times: LongColumn): (Option[Long], Option[Long]) = {
       var mn = Long.MaxValue
       var mx = Long.MinValue
       val it = b.getIntIterator
@@ -503,10 +498,10 @@ object DruidSegmentReader {
       if (mn > mx) (None, None) else (Some(mn), Some(mx))
     }
 
-    val metrics: Seq[(String, Option[IndexedSeq[Long]])] =
-      metricCols.map(m => m -> longMetricColumn(file, m))
+    val metrics: Seq[(String, Option[LongColumn])] =
+      metricCols.map(m => m -> longMetricColumn(file, m, counts))
     val needTimes = !fullCoverage || needTimeBounds
-    val times: IndexedSeq[Long] = if (needTimes) timeValues(file) else null
+    val times: LongColumn = if (needTimes) timeColumn(file, counts) else null
     // row ids inside the clipped window; None = every row
     val windowSet: Option[ImmutableRoaringBitmap] =
       if (fullCoverage) None
@@ -602,22 +597,23 @@ object DruidSegmentReader {
     * (dims…, __time, metrics…) rows into a hash of combos. Absent
     * columns contribute null at their position. */
   private def groupByDecode(
-      conf: Configuration, dir: String, dims: Seq[String], lo: Long, hi: Long,
+      file: SegmentFile, dims: Seq[String], lo: Long, hi: Long,
       needTimeBounds: Boolean, metricCols: Seq[String],
-      file: SegmentFile): Iterator[GroupPartial] = {
+      counts: DecodeCounts): Iterator[GroupPartial] = {
     val present = dims.filter(file.has)
     val posOf: Map[String, Int] = present.zipWithIndex.toMap
     val tIdx = present.length
-    val rows = decodeWindow(conf, dir, lo, hi,
-      present ++ Seq("__time") ++ metricCols, Map.empty)
+    val rows = decodeSegment(file, lo, hi, StructType(
+      present.map(StructField(_, StringType)) ++ Seq(StructField("__time", LongType)) ++
+        metricCols.map(StructField(_, LongType))), Map.empty, counts)
     final case class Acc(var c: Long, var mnT: Long, var mxT: Long,
                          sums: Array[Long], mins: Array[Long],
                          maxs: Array[Long], nn: Array[Boolean])
     val k = metricCols.length
     val acc = scala.collection.mutable.HashMap.empty[List[String], Acc]
     rows.foreach { r =>
-      val key: List[String] = dims.map(d =>
-        posOf.get(d).map(i => r.get(i).asInstanceOf[String]).orNull).toList
+      val key: List[String] = dims.map(d => posOf.get(d).map(i =>
+        if (r.isNullAt(i)) null else r.getUTF8String(i).toString).orNull).toList
       val t = r.getLong(tIdx)
       val a = acc.getOrElseUpdate(key, Acc(0L, Long.MaxValue, Long.MinValue,
         new Array[Long](k), Array.fill(k)(Long.MaxValue),
@@ -656,6 +652,16 @@ object DruidSegmentReader {
     * work tracks bitmap/window selectivity (chunks no selected row
     * touches stay compressed). */
   private[graft] val decompressedChunks = new java.util.concurrent.atomic.AtomicInteger(0)
+
+  /** One caller's share of the decode work (a scan task's reader): the
+    * JVM-wide counters above sum every concurrent task, these count
+    * only what this caller decoded — the source's SQL metrics. */
+  private[sources] final class DecodeCounts {
+    var segments = 0L
+    var chunks = 0L
+    def segmentDecoded(): Unit = { decodedSegments.incrementAndGet(); segments += 1 }
+    def chunkDecompressed(): Unit = { decompressedChunks.incrementAndGet(); chunks += 1 }
+  }
 
   // ---- bitmap index ----
 
@@ -941,13 +947,14 @@ object DruidSegmentReader {
     val allCols = readGenericIndexedStrings(buf)
     val dims = readGenericIndexedStrings(buf).toSet
     val ordered = "__time" +: (allCols.filter(dims.contains) ++ allCols.filterNot(dims.contains))
-    ordered.distinct.map { name =>
-      val buf = ByteBuffer.wrap(file(name))
-      val json = readPrefixedJson(buf)
-      val vt = (json \ "valueType") match { case JString(s) => s; case _ => "COMPLEX" }
-      val mv = (json \ "hasMultipleValues") match { case JBool(b) => b; case _ => false }
-      DruidColumn(name, vt, mv)
-    }
+    ordered.distinct.map(name => druidColumn(name, readPrefixedJson(ByteBuffer.wrap(file(name)))))
+  }
+
+  /** A column's type, from the JSON descriptor that prefixes its file. */
+  private def druidColumn(name: String, json: JValue): DruidColumn = {
+    val vt = (json \ "valueType") match { case JString(s) => s; case _ => "COMPLEX" }
+    val mv = (json \ "hasMultipleValues") match { case JBool(b) => b; case _ => false }
+    DruidColumn(name, vt, mv)
   }
 
   private def sparkField(c: DruidColumn): StructField = c.valueType match {
@@ -960,57 +967,60 @@ object DruidSegmentReader {
     case _ => StructField(c.name, BinaryType, nullable = true) // complex → sketch bytes
   }
 
-  /** `timeWindow`: half-open `[lo, hi)` clip on the `__time` column,
-    * which the caller must have placed at `names` position 0. The
-    * check runs BEFORE the other columns' values materialize, so rows
+  /** The row walk: candidate ids (every row, or a bitmap's), the
+    * half-open `[lo, hi)` `timeWindow` clip on `times`, then one typed
+    * reader per `schema` column writing into its ordinal of ONE reused
+    * row. The clip runs BEFORE any other column is read, so rows
     * outside the window cost only their (sequentially-chunked)
-    * `__time` access — the enabler of window-proportional decode. */
-  private def decodeRows(file: SegmentFile, names: Seq[String],
-                         rowIds: Option[ImmutableRoaringBitmap] = None,
-                         timeWindow: Option[(Long, Long)] = None): Iterator[Row] = {
-    // a union-schema column absent from THIS segment decodes as null
-    // (schema evolution across a datasource's segments); `null` marks
-    // the missing column so no per-segment null array materializes
-    val cols: Seq[IndexedSeq[Any]] = names.map { n =>
-      if (!file.has(n)) null
-      else {
-        val buf = ByteBuffer.wrap(file(n))
-        val json = readPrefixedJson(buf)
-        val vt = (json \ "valueType") match { case JString(s) => s; case _ => "COMPLEX" }
-        vt match {
-          case "LONG" => decodeCompressedLongs(buf).asInstanceOf[IndexedSeq[Any]]
-          case "FLOAT" => decodeCompressedFloats(buf).asInstanceOf[IndexedSeq[Any]]
-          case "DOUBLE" => decodeCompressedDoubles(buf).asInstanceOf[IndexedSeq[Any]]
-          case "STRING" => decodeStringColumn(buf, json)
-          case _ => decodeComplex(buf).asInstanceOf[IndexedSeq[Any]]
+    * `__time` access — the enabler of window-proportional decode — and
+    * a `__time` chunk decompresses once for both the clip and the
+    * output. A union-schema column absent from this segment (schema
+    * evolution across a datasource's segments) is null in every row. */
+  private def decodeRows(file: SegmentFile, schema: StructType, times: LongColumn,
+                         rowIds: Option[ImmutableRoaringBitmap],
+                         timeWindow: Option[(Long, Long)],
+                         counts: DecodeCounts): Iterator[InternalRow] = {
+    val readers: Array[ColumnReader] = schema.fields.map { f =>
+      if (f.name == "__time") longReader(times)
+      else if (file.has(f.name)) columnReader(file, f, counts)
+      else null
+    }
+    val n = readers.foldLeft(times.length)((m, r) => if (r eq null) m else math.min(m, r.length))
+    val row = new SpecificInternalRow(schema.fields.map(_.dataType).toSeq)
+    readers.indices.foreach(k => if (readers(k) eq null) row.setNullAt(k))
+    val clip = timeWindow.isDefined
+    val (lo, hi) = timeWindow.getOrElse((Long.MinValue, Long.MaxValue))
+    val ids = rowIds.map(_.getIntIterator).orNull
+    // rows stream out one at a time, so a downstream early stop (limit)
+    // leaves later rows' chunks compressed
+    new Iterator[InternalRow] {
+      private var pending = -1 // next row id to emit; -1 = not found yet
+      private var cursor = 0   // next candidate of a full walk
+      private var done = false
+
+      override def hasNext: Boolean = {
+        while (pending < 0 && !done) {
+          val c =
+            if (ids eq null) { cursor += 1; cursor - 1 }
+            else if (ids.hasNext) ids.next()
+            else n
+          if (c >= n) done = true
+          else if (!clip || { val t = times(c); t >= lo && t < hi }) pending = c
         }
+        pending >= 0
+      }
+
+      override def next(): InternalRow = {
+        if (!hasNext) throw new NoSuchElementException("segment rows exhausted")
+        var k = 0
+        while (k < readers.length) {
+          if (readers(k) ne null) readers(k).write(row, k, pending)
+          k += 1
+        }
+        pending = -1
+        row
       }
     }
-    val present = cols.filter(_ ne null)
-    require(present.nonEmpty, s"segment has none of the requested columns $names")
-    val n = present.map(_.size).min
-    // iterator, not a materialized Seq — row objects stream out, and
-    // column values decode lazily per access (LazyChunks), so a
-    // bitmap-pruned walk touches only the selected rows' chunks
-    val walk0: Iterator[Int] = rowIds match {
-      case Some(b) =>
-        val it = b.getIntIterator
-        Iterator.continually(()).takeWhile(_ => it.hasNext).map(_ => it.next())
-          .takeWhile(_ < n)
-      case None => (0 until n).iterator
-    }
-    val walk = timeWindow match {
-      case Some((lo, hi)) =>
-        require(names.headOption.contains("__time") && (cols.head ne null),
-          s"time window requires __time at position 0 of $names")
-        val times = cols.head
-        walk0.filter { i =>
-          val t = times(i).asInstanceOf[Long]
-          t >= lo && t < hi
-        }
-      case None => walk0
-    }
-    walk.map(i => Row.fromSeq(cols.map(c => if (c eq null) null else c(i))))
   }
 
   // GenericIndexed v1 of UTF-8 strings
@@ -1047,86 +1057,202 @@ object DruidSegmentReader {
     JsonMethods.parse(new String(arr, StandardCharsets.UTF_8))
   }
 
-  /** LZ4 chunks decompressed LAZILY, one-per-first-access, memoized —
-    * the enabler of bitmap-index row pruning: a chunk none of the
-    * selected rows touch is never decompressed, so decode work tracks
-    * filter selectivity instead of segment size. The compressed chunk
-    * bytes are sliced eagerly (cheap — no decompression). */
-  private final class LazyChunks(chunks: IndexedSeq[Array[Byte]],
-                                 compression: Int, chunkByteSize: Int) {
-    private val cache = new Array[Array[Byte]](chunks.size)
+  private val lz4 = net.jpountz.lz4.LZ4Factory.fastestInstance().safeDecompressor()
+
+  /** A compressed supplier's values, one chunk at a time: a chunk is
+    * decompressed at most once, on the first access to one of its
+    * rows, and converted to a primitive array in one little-endian
+    * bulk get. A chunk no selected row touches is never decompressed,
+    * so decode work tracks bitmap/window selectivity instead of
+    * segment size. The compressed chunk bytes are sliced eagerly
+    * (cheap — no decompression); `chunkBytes` is the room one
+    * decompressed chunk may take. */
+  private[sources] abstract class Chunked[A <: AnyRef](
+      val length: Int, sizePer: Int, compression: Int, chunkBytes: Int,
+      buf: ByteBuffer, counts: DecodeCounts) {
+    private val raw = readGenericIndexedBytes(buf)
     compression match {
       case 0x1 | 0xFF => ()
       case other => throw new IllegalArgumentException(
         f"unsupported segment compression id 0x$other%02x (LZ4 and uncompressed only)")
     }
-    def apply(i: Int): Array[Byte] = {
-      var c = cache(i)
-      if (c == null) {
-        c = compression match {
-          case 0xFF => chunks(i)
-          case 0x1 =>
-            val d = net.jpountz.lz4.LZ4Factory.fastestInstance().safeDecompressor()
-            val out = new Array[Byte](chunkByteSize)
-            val n = d.decompress(chunks(i), 0, chunks(i).length, out, 0)
-            if (n == chunkByteSize) out else java.util.Arrays.copyOf(out, n)
-        }
-        cache(i) = c
-        decompressedChunks.incrementAndGet()
+    private val decoded = new Array[AnyRef](raw.length)
+    private var scratch: Array[Byte] = _
+
+    /** The chunk's `count` values from its little-endian bytes. */
+    protected def convert(le: ByteBuffer, count: Int): A
+
+    /** Chunk `c`'s values; row `i` is value `i % sizePer` of chunk
+      * `i / sizePer`. */
+    protected final def chunk(c: Int): A = {
+      val hit = decoded(c)
+      if (hit ne null) hit.asInstanceOf[A]
+      else {
+        val bytes = raw(c)
+        val le =
+          if (compression == 0xFF) ByteBuffer.wrap(bytes)
+          else {
+            if (scratch == null) scratch = new Array[Byte](chunkBytes)
+            ByteBuffer.wrap(scratch, 0, lz4.decompress(bytes, 0, bytes.length, scratch, 0))
+          }
+        val a = convert(le.order(ByteOrder.LITTLE_ENDIAN), math.min(sizePer, length - c * sizePer))
+        decoded(c) = a
+        counts.chunkDecompressed()
+        a
       }
-      c
     }
   }
 
-  private def decompressChunks(buf: ByteBuffer, compression: Int,
-                               chunkByteSize: Int): LazyChunks =
-    new LazyChunks(readGenericIndexedBytes(buf), compression, chunkByteSize)
-
-  /** Lazy row-indexed view over a chunked supplier: values decode on
-    * access, so row pruning (bitmaps, window clip) skips whole chunks. */
-  private def lazyView[T](totalSize: Int, f: Int => T): IndexedSeq[T] =
-    new IndexedSeq[T] {
-      override def length: Int = totalSize
-      override def apply(i: Int): T = f(i)
+  private[sources] final class LongColumn(length: Int, sizePer: Int, compression: Int,
+                                          buf: ByteBuffer, counts: DecodeCounts)
+      extends Chunked[Array[Long]](length, sizePer, compression, sizePer * 8, buf, counts) {
+    protected def convert(le: ByteBuffer, count: Int): Array[Long] = {
+      val a = new Array[Long](count); le.asLongBuffer().get(a); a
     }
+    def apply(i: Int): Long = { val c = i / sizePer; chunk(c)(i - c * sizePer) }
+  }
+
+  private final class FloatColumn(length: Int, sizePer: Int, compression: Int,
+                                  buf: ByteBuffer, counts: DecodeCounts)
+      extends Chunked[Array[Float]](length, sizePer, compression, sizePer * 4, buf, counts) {
+    protected def convert(le: ByteBuffer, count: Int): Array[Float] = {
+      val a = new Array[Float](count); le.asFloatBuffer().get(a); a
+    }
+    def apply(i: Int): Float = { val c = i / sizePer; chunk(c)(i - c * sizePer) }
+  }
+
+  private final class DoubleColumn(length: Int, sizePer: Int, compression: Int,
+                                   buf: ByteBuffer, counts: DecodeCounts)
+      extends Chunked[Array[Double]](length, sizePer, compression, sizePer * 8, buf, counts) {
+    protected def convert(le: ByteBuffer, count: Int): Array[Double] = {
+      val a = new Array[Double](count); le.asDoubleBuffer().get(a); a
+    }
+    def apply(i: Int): Double = { val c = i / sizePer; chunk(c)(i - c * sizePer) }
+  }
+
+  /** Ints of `numBytes` little-endian bytes each: vsize dictionary ids
+    * (1–4 bytes), or full ints (`numBytes = 4`). */
+  private[sources] final class IntColumn(length: Int, sizePer: Int, compression: Int,
+                                         numBytes: Int, chunkBytes: Int,
+                                         buf: ByteBuffer, counts: DecodeCounts)
+      extends Chunked[Array[Int]](length, sizePer, compression, chunkBytes, buf, counts) {
+    protected def convert(le: ByteBuffer, count: Int): Array[Int] = {
+      val a = new Array[Int](count)
+      if (numBytes == 4) le.asIntBuffer().get(a)
+      else {
+        var off = le.position()
+        var i = 0
+        while (i < count) {
+          var v = 0
+          var b = 0
+          while (b < numBytes) { v |= (le.get(off + b) & 0xff) << (8 * b); b += 1 }
+          a(i) = v
+          off += numBytes
+          i += 1
+        }
+      }
+      a
+    }
+    def apply(i: Int): Int = { val c = i / sizePer; chunk(c)(i - c * sizePer) }
+  }
+
+  /** Compressed supplier v2 header of longs/floats/doubles/full ints:
+    * (totalSize, sizePer, compression) — the single owner of the
+    * layout for both the row-count probe and the decoders. */
+  private def supplierHeader(buf: ByteBuffer, what: String): (Int, Int, Int) = {
+    val version = buf.get()
+    require(version == 2, s"compressed $what version $version")
+    (buf.getInt(), buf.getInt(), buf.get() & 0xff)
+  }
 
   /** CompressedLongsIndexedSupplier v2 (little-endian longs). */
-  private def decodeCompressedLongs(buf: ByteBuffer): IndexedSeq[Long] = {
-    val (totalSize, sizePer, compression) = longsHeader(buf)
-    val chunks = decompressChunks(buf, compression, sizePer * 8)
-    lazyView(totalSize, i => ByteBuffer.wrap(chunks(i / sizePer), (i % sizePer) * 8, 8)
-      .order(ByteOrder.LITTLE_ENDIAN).getLong)
+  private def compressedLongs(buf: ByteBuffer, counts: DecodeCounts): LongColumn = {
+    val (totalSize, sizePer, compression) = supplierHeader(buf, "longs")
+    new LongColumn(totalSize, sizePer, compression, buf, counts)
   }
 
-  /** CompressedFloatsIndexedSupplier v2 (little-endian floats). */
-  private def decodeCompressedFloats(buf: ByteBuffer): IndexedSeq[Float] = {
+  /** CompressedColumnarIntsSupplier v2 (full little-endian 4-byte
+    * ints — the offsets column of a V3 multi-value dim). */
+  private def compressedInts(buf: ByteBuffer, counts: DecodeCounts): IntColumn = {
+    val (totalSize, sizePer, compression) = supplierHeader(buf, "ints")
+    new IntColumn(totalSize, sizePer, compression, 4, sizePer * 4, buf, counts)
+  }
+
+  /** CompressedVSizeIntsIndexedSupplier v2. The decompress buffer
+    * carries (4 - numBytes) bytes of slack: real Druid pads each vsize
+    * chunk so its 4-byte-window value reads can't run off the end
+    * (CompressedVSizeColumnarIntsSupplier.bufferPadding), so a FULL
+    * chunk of a real segment decompresses LARGER than sizePer×numBytes
+    * — without the slack the safe decompressor would throw on it.
+    * Unpadded chunks (this repo's writer) decompress smaller; either
+    * way only the chunk's values are read, so both layouts decode. */
+  private[sources] def compressedVSizeInts(buf: ByteBuffer, counts: DecodeCounts): IntColumn = {
     val version = buf.get()
-    require(version == 2, s"compressed floats version $version")
+    require(version == 2, s"compressed vsize ints version $version")
+    val numBytes = buf.get() & 0xff
     val totalSize = buf.getInt()
     val sizePer = buf.getInt()
     val compression = buf.get() & 0xff
-    val chunks = decompressChunks(buf, compression, sizePer * 4)
-    lazyView(totalSize, i => ByteBuffer.wrap(chunks(i / sizePer), (i % sizePer) * 4, 4)
-      .order(ByteOrder.LITTLE_ENDIAN).getFloat)
+    new IntColumn(totalSize, sizePer, compression, numBytes,
+      sizePer * numBytes + (4 - numBytes), buf, counts)
   }
 
-  /** CompressedColumnarDoublesSupplier v2 (little-endian doubles) —
-    * any post-0.13 Druid segment with a doubleSum/doubleMin/doubleMax
-    * metric stores one of these; same supplier layout as longs with
-    * 8-byte IEEE754 values. */
-  private def decodeCompressedDoubles(buf: ByteBuffer): IndexedSeq[Double] = {
-    val version = buf.get()
-    require(version == 2, s"compressed doubles version $version")
-    val totalSize = buf.getInt()
-    val sizePer = buf.getInt()
-    val compression = buf.get() & 0xff
-    val chunks = decompressChunks(buf, compression, sizePer * 8)
-    lazyView(totalSize, i => ByteBuffer.wrap(chunks(i / sizePer), (i % sizePer) * 8, 8)
-      .order(ByteOrder.LITTLE_ENDIAN).getDouble)
+  /** Writes row `i` of one column into `ordinal` of the reused row. */
+  private abstract class ColumnReader {
+    def length: Int
+    def write(row: InternalRow, ordinal: Int, i: Int): Unit
+  }
+
+  private def longReader(c: LongColumn): ColumnReader = new ColumnReader {
+    def length: Int = c.length
+    def write(row: InternalRow, ordinal: Int, i: Int): Unit = row.setLong(ordinal, c(i))
+  }
+
+  /** The typed reader of column `f` of this segment. The segment must
+    * store it as the type the scan reads (the union schema guarantees
+    * this; a segment published after the schema was taken may not). */
+  private def columnReader(file: SegmentFile, f: StructField,
+                           counts: DecodeCounts): ColumnReader = {
+    val buf = ByteBuffer.wrap(file(f.name))
+    val col = druidColumn(f.name, readPrefixedJson(buf))
+    val stored = sparkField(col).dataType
+    require(stored == f.dataType, s"column '${f.name}' is ${stored.simpleString} " +
+      s"in this segment but read as ${f.dataType.simpleString}")
+    col.valueType match {
+      case "LONG" => longReader(compressedLongs(buf, counts))
+      case "FLOAT" =>
+        val (totalSize, sizePer, compression) = supplierHeader(buf, "floats")
+        val c = new FloatColumn(totalSize, sizePer, compression, buf, counts)
+        new ColumnReader {
+          def length: Int = c.length
+          def write(row: InternalRow, ordinal: Int, i: Int): Unit = row.setFloat(ordinal, c(i))
+        }
+      case "DOUBLE" =>
+        // CompressedColumnarDoublesSupplier v2 — any post-0.13 Druid
+        // segment with a doubleSum/doubleMin/doubleMax metric stores one
+        val (totalSize, sizePer, compression) = supplierHeader(buf, "doubles")
+        val c = new DoubleColumn(totalSize, sizePer, compression, buf, counts)
+        new ColumnReader {
+          def length: Int = c.length
+          def write(row: InternalRow, ordinal: Int, i: Int): Unit = row.setDouble(ordinal, c(i))
+        }
+      case "STRING" => stringReader(buf, col.hasMultipleValues, counts)
+      case _ =>
+        // ComplexColumnPartSerde: GenericIndexed of the aggregator's
+        // serialized form — surfaced raw, like the reference's Pig
+        // bytearray metrics
+        val values = readGenericIndexedBytes(buf)
+        new ColumnReader {
+          def length: Int = values.length
+          def write(row: InternalRow, ordinal: Int, i: Int): Unit = row.update(ordinal, values(i))
+        }
+    }
   }
 
   /** Dictionary-encoded string column (bitmap indexes after the row
-    * ids are not needed for scans and are skipped implicitly).
+    * ids are not needed for scans and are skipped implicitly). The
+    * dictionary becomes Spark strings once per segment; rows carry its
+    * entries, never a copy.
     *
     * Single-value: dictionary + compressed vsize int row ids →
     * `string`. Multi-value (the reference maps every dim as a Pig
@@ -1137,16 +1263,22 @@ object DruidSegmentReader {
     * values concatenated — decoded to `array<string>`, matching the
     * engine's own parquet MV-dim representation so explode_outer
     * groupBy semantics apply unchanged to migrated segments. */
-  private def decodeStringColumn(buf: ByteBuffer, desc: JValue): IndexedSeq[Any] = {
-    val mv = (desc \ "hasMultipleValues") match { case JBool(b) => b; case _ => false }
+  private def stringReader(buf: ByteBuffer, multiValue: Boolean,
+                           counts: DecodeCounts): ColumnReader = {
     val version = buf.get()
     require(version == 2, s"dictionary column serde version $version")
     val flags = buf.getInt()
-    val dict = readGenericIndexedBytes(buf).map(b => new String(b, StandardCharsets.UTF_8))
-    def lookup(id: Int): String = if (id >= 0 && id < dict.size) dict(id) else null
-    if (!mv) {
-      val ids = decodeCompressedVSizeInts(buf)
-      lazyView(ids.length, i => lookup(ids(i)))
+    // through java.lang.String, so malformed UTF-8 is replaced exactly
+    // as a String-typed read would replace it
+    val dict: Array[UTF8String] = readGenericIndexedBytes(buf)
+      .map(b => UTF8String.fromString(new String(b, StandardCharsets.UTF_8))).toArray
+    def lookup(id: Int): UTF8String = if (id >= 0 && id < dict.length) dict(id) else null
+    if (!multiValue) {
+      val ids = compressedVSizeInts(buf, counts)
+      new ColumnReader {
+        def length: Int = ids.length
+        def write(row: InternalRow, ordinal: Int, i: Int): Unit = row.update(ordinal, lookup(ids(i)))
+      }
     } else {
       // flags bit 0x1 = legacy V2 multi-value, bit 0x2 = V3 (the
       // layout every Druid ≥ 0.9.2 writes)
@@ -1154,56 +1286,18 @@ object DruidSegmentReader {
         f"unsupported multi-value column layout (flags=0x$flags%x): only V3 compressed multi-ints")
       val v3 = buf.get()
       require(v3 == 3, s"V3 ColumnarMultiInts version $v3 (want 3)")
-      val offsets = decodeCompressedInts(buf) // n+1 end-offsets, offsets(0)=0
-      val ids = decodeCompressedVSizeInts(buf)
-      lazyView(offsets.size - 1,
-        row => (offsets(row) until offsets(row + 1)).map(j => lookup(ids(j))))
+      val offsets = compressedInts(buf, counts) // n+1 end-offsets, offsets(0)=0
+      val ids = compressedVSizeInts(buf, counts)
+      new ColumnReader {
+        def length: Int = offsets.length - 1
+        def write(row: InternalRow, ordinal: Int, i: Int): Unit = {
+          val start = offsets(i)
+          val values = new Array[Any](math.max(0, offsets(i + 1) - start))
+          var j = 0
+          while (j < values.length) { values(j) = lookup(ids(start + j)); j += 1 }
+          row.update(ordinal, new GenericArrayData(values))
+        }
+      }
     }
   }
-
-  /** CompressedColumnarIntsSupplier v2 (full little-endian 4-byte
-    * ints — the offsets column of a V3 multi-value dim). */
-  private def decodeCompressedInts(buf: ByteBuffer): IndexedSeq[Int] = {
-    val version = buf.get()
-    require(version == 2, s"compressed ints version $version")
-    val totalSize = buf.getInt()
-    val sizePer = buf.getInt()
-    val compression = buf.get() & 0xff
-    val chunks = decompressChunks(buf, compression, sizePer * 4)
-    lazyView(totalSize, i => ByteBuffer.wrap(chunks(i / sizePer), (i % sizePer) * 4, 4)
-      .order(ByteOrder.LITTLE_ENDIAN).getInt)
-  }
-
-  /** CompressedVSizeIntsIndexedSupplier v2. The decompress buffer
-    * carries (4 - numBytes) bytes of slack: real Druid pads each vsize
-    * chunk so its 4-byte-window value reads can't run off the end
-    * (CompressedVSizeColumnarIntsSupplier.bufferPadding), so a FULL
-    * chunk of a real segment decompresses LARGER than sizePer×numBytes
-    * — without the slack the safe decompressor would throw on it.
-    * Unpadded chunks (this repo's writer) decompress smaller and are
-    * trimmed, so both layouts decode. */
-  private[sources] def decodeCompressedVSizeInts(buf: ByteBuffer): IndexedSeq[Int] = {
-    val version = buf.get()
-    require(version == 2, s"compressed vsize ints version $version")
-    val numBytes = buf.get() & 0xff
-    val totalSize = buf.getInt()
-    val sizePer = buf.getInt()
-    val compression = buf.get() & 0xff
-    val chunks = decompressChunks(buf, compression, sizePer * numBytes + (4 - numBytes))
-    lazyView(totalSize, { i =>
-      val chunk = chunks(i / sizePer)
-      val off = (i % sizePer) * numBytes
-      var v = 0
-      var b = 0
-      // little-endian packed ints of numBytes bytes
-      while (b < numBytes) { v |= (chunk(off + b) & 0xff) << (8 * b); b += 1 }
-      v
-    })
-  }
-
-  /** Complex column (ComplexColumnPartSerde): GenericIndexed of the
-    * aggregator's serialized form — surfaced raw, like the reference's
-    * Pig bytearray metrics. */
-  private def decodeComplex(buf: ByteBuffer): IndexedSeq[Array[Byte]] =
-    readGenericIndexedBytes(buf)
 }

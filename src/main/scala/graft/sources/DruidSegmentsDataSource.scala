@@ -6,11 +6,12 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, SortDirection, Transform, Expression => V2Expression, SortOrder => V2SortOrder}
 import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, Count, CountStar, Max, Min, Sum}
+import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
@@ -556,6 +557,8 @@ private[sources] class DruidScan(options: CaseInsensitiveStringMap,
 
   override def toBatch: Batch = this
 
+  override def supportedCustomMetrics(): Array[CustomMetric] = DruidScanMetrics.supported
+
   /** Timeline resolution under the pushed interval — overshadowed
     * versions and out-of-interval segments never become partitions. */
   private lazy val windows: Seq[WindowedSegment] = {
@@ -627,8 +630,7 @@ private[sources] class DruidScan(options: CaseInsensitiveStringMap,
         val lo = math.max(w.windowStartMs, eLo)
         val hi = math.min(w.windowEndMs, eHi)
         if (lo >= hi) None // runtime-pruned window: never becomes a task
-        else Some(DruidInputPartition(w.segment.path, lo, hi,
-          readSchema.fieldNames.toSeq, mergedPreds, limit,
+        else Some(DruidInputPartition(w.segment.path, lo, hi, mergedPreds, limit,
           topN = topN.map(_._2).getOrElse(-1),
           topDesc = topN.exists(_._1)): InputPartition)
       }.toArray
@@ -714,8 +716,7 @@ private[sources] class DruidMicroBatchStream(
         val lo = math.max(s.startMs, timeLo)
         val hi = math.min(s.endMs, timeHi)
         if (lo >= hi) None
-        else Some(DruidInputPartition(s.path, lo, hi,
-          schema.fieldNames.toSeq, preds): InputPartition)
+        else Some(DruidInputPartition(s.path, lo, hi, preds): InputPartition)
       }.toArray
   }
 
@@ -727,8 +728,63 @@ private[sources] class DruidMicroBatchStream(
 
 private[sources] final case class DruidInputPartition(
     segmentDir: String, windowLo: Long, windowHi: Long,
-    columns: Seq[String], preds: Map[String, Seq[DictPred]],
+    preds: Map[String, Seq[DictPred]],
     limit: Int = -1, topN: Int = -1, topDesc: Boolean = false) extends InputPartition
+
+/** The source's SQL metrics, shown on its `BatchScanExec`: each reader
+  * reports its own task's decode work ([[DruidSegmentReader.DecodeCounts]]
+  * and the rows it emitted) and Spark sums the tasks. Spark builds the
+  * metric classes by name, so each is a top-level no-arg class. */
+private[sources] object DruidScanMetrics {
+  val SegmentsDecoded = "segmentsDecoded"
+  val ChunksDecompressed = "chunksDecompressed"
+  val RowsEmitted = "rowsEmitted"
+
+  def supported: Array[CustomMetric] = Array(
+    new DruidSegmentsDecodedMetric, new DruidChunksDecompressedMetric, new DruidRowsEmittedMetric)
+
+  /** Live views of one task's counts: built once per reader, read by
+    * Spark at every metrics update. */
+  def task(counts: DruidSegmentReader.DecodeCounts, rows: () => Long): Array[CustomTaskMetric] =
+    Array(taskMetric(SegmentsDecoded, () => counts.segments),
+      taskMetric(ChunksDecompressed, () => counts.chunks), taskMetric(RowsEmitted, rows))
+
+  private def taskMetric(n: String, v: () => Long): CustomTaskMetric = new CustomTaskMetric {
+    override def name(): String = n
+    override def value(): Long = v()
+  }
+}
+
+private[sources] class DruidSegmentsDecodedMetric extends CustomSumMetric {
+  override def name(): String = DruidScanMetrics.SegmentsDecoded
+  override def description(): String = "segments decoded"
+}
+
+private[sources] class DruidChunksDecompressedMetric extends CustomSumMetric {
+  override def name(): String = DruidScanMetrics.ChunksDecompressed
+  override def description(): String = "chunks decompressed"
+}
+
+private[sources] class DruidRowsEmittedMetric extends CustomSumMetric {
+  override def name(): String = DruidScanMetrics.RowsEmitted
+  override def description(): String = "rows emitted"
+}
+
+/** A partition reader over a lazily produced row stream: `next()`
+  * advances, `get()` returns the current row (reused by the row
+  * decoder, so a consumer that keeps it must `copy()`), and the task's
+  * decode work is reported as the source's SQL metrics. */
+private[sources] final class DruidRowReader(rows: Iterator[InternalRow],
+                                            counts: DruidSegmentReader.DecodeCounts)
+    extends PartitionReader[InternalRow] {
+  private var cur: InternalRow = _
+  private var emitted = 0L
+  private val metrics = DruidScanMetrics.task(counts, () => emitted)
+  override def next(): Boolean = rows.hasNext && { cur = rows.next(); emitted += 1; true }
+  override def get(): InternalRow = cur
+  override def currentMetricsValues(): Array[CustomTaskMetric] = metrics
+  override def close(): Unit = ()
+}
 
 /** One timeline window's partial-aggregate task; an empty `segmentDir`
   * is the synthetic zero-row partition of an empty timeline. */
@@ -744,11 +800,12 @@ private[sources] final case class DruidAggReaderFactory(
     val p = partition.asInstanceOf[DruidAggPartition]
     val needBounds = aggs.contains(DruidAgg.MinTime) || aggs.contains(DruidAgg.MaxTime)
     val metricCols = DruidAgg.metricCols(aggs)
+    val counts = new DruidSegmentReader.DecodeCounts
     val (count, mn, mx, metrics) =
       if (p.segmentDir.isEmpty)
         (0L, None, None, metricCols.map(_ -> None).toMap)
       else DruidSegmentReader.aggregateWindow(conf.value, p.segmentDir,
-        p.windowLo, p.windowHi, p.fullCoverage, needBounds, metricCols)
+        p.windowLo, p.windowHi, p.fullCoverage, needBounds, metricCols, counts)
     val row = new GenericInternalRow(aggs.map[Any] {
       case DruidAgg.RowCount => count
       case DruidAgg.MinTime => mn.map(Long.box).orNull
@@ -757,12 +814,7 @@ private[sources] final case class DruidAggReaderFactory(
       case DruidAgg.MinMetric(c) => metrics(c).map(a => Long.box(a.min)).orNull
       case DruidAgg.MaxMetric(c) => metrics(c).map(a => Long.box(a.max)).orNull
     }.toArray)
-    new PartitionReader[InternalRow] {
-      private var emitted = false
-      override def next(): Boolean = !emitted && { emitted = true; true }
-      override def get(): InternalRow = row
-      override def close(): Unit = ()
-    }
+    new DruidRowReader(Iterator.single(row), counts)
   }
 }
 
@@ -777,8 +829,10 @@ private[sources] final case class DruidGroupByReaderFactory(
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[DruidAggPartition]
     val needBounds = aggs.contains(DruidAgg.MinTime) || aggs.contains(DruidAgg.MaxTime)
+    val counts = new DruidSegmentReader.DecodeCounts
     val groups = DruidSegmentReader.aggregateGroupByDims(conf.value, p.segmentDir,
-      dims, p.windowLo, p.windowHi, p.fullCoverage, needBounds, DruidAgg.metricCols(aggs))
+      dims, p.windowLo, p.windowHi, p.fullCoverage, needBounds, DruidAgg.metricCols(aggs),
+      counts = counts)
     val rows = groups.map { g =>
       val cells = g.values.map[Any](v =>
         if (v == null) null else UTF8String.fromString(v)) ++
@@ -792,12 +846,7 @@ private[sources] final case class DruidGroupByReaderFactory(
         }
       new GenericInternalRow(cells.toArray): InternalRow
     }
-    new PartitionReader[InternalRow] {
-      private var cur: InternalRow = _
-      override def next(): Boolean = rows.hasNext && { cur = rows.next(); true }
-      override def get(): InternalRow = cur
-      override def close(): Unit = ()
-    }
+    new DruidRowReader(rows, counts)
   }
 }
 
@@ -807,22 +856,18 @@ private[sources] final case class DruidPartitionReaderFactory(
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[DruidInputPartition]
-    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(schema)
+    val counts = new DruidSegmentReader.DecodeCounts
     val rows =
       if (p.topN >= 0)
         DruidSegmentReader.decodeTopN(conf.value, p.segmentDir,
-          p.windowLo, p.windowHi, p.columns, p.topN, p.topDesc)
+          p.windowLo, p.windowHi, schema, p.topN, p.topDesc, counts)
       else {
         val decoded = DruidSegmentReader.decodeWindow(
-          conf.value, p.segmentDir, p.windowLo, p.windowHi, p.columns, p.preds)
+          conf.value, p.segmentDir, p.windowLo, p.windowHi, schema, p.preds, counts)
         // partial limit: rows stream lazily, so stopping here means
         // later rows' chunks are never decompressed
         if (p.limit >= 0) decoded.take(p.limit) else decoded
       }
-    new PartitionReader[InternalRow] {
-      override def next(): Boolean = rows.hasNext
-      override def get(): InternalRow = toCatalyst(rows.next()).asInstanceOf[InternalRow]
-      override def close(): Unit = ()
-    }
+    new DruidRowReader(rows, counts)
   }
 }

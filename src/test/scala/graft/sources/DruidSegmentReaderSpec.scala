@@ -126,8 +126,9 @@ class DruidSegmentReaderSpec extends SparkSpec {
       .put(0x1.toByte)          // LZ4
       .put(gi.array(), 0, gi.position())
     col.flip()
-    val got = DruidSegmentReader.decodeCompressedVSizeInts(col)
-    assert(got == values.toIndexedSeq)
+    val got = DruidSegmentReader.compressedVSizeInts(col, new DruidSegmentReader.DecodeCounts)
+    assert(got.length == values.length)
+    assert((0 until got.length).map(got(_)) == values.toIndexedSeq)
   }
 
   test("dictionary short-circuit: a no-match selector decodes ZERO segments") {
@@ -299,5 +300,26 @@ class DruidSegmentReaderSpec extends SparkSpec {
     assert(out(0).getAs[String]("host") == "b.example.com")
     assert(out(0).getAs[Long]("visited_sum") == 150L)
     assert(out(0).length == 3) // __time + 2 projected
+  }
+
+  test("segment schema cache stays bounded and keeps answering correctly") {
+    import graft.sources.{DruidSegmentWriter => W}
+    val root = java.nio.file.Files.createTempDirectory("graft-schemacache").toFile
+    val t0 = java.time.Instant.parse("2022-01-01T00:00:00Z").toEpochMilli
+    // two alternating schemas, so an answer served from the wrong
+    // entry shows
+    def want(k: Int): Seq[String] = if (k % 2 == 0) Seq("__time", "host") else Seq("__time", "hits")
+    val dirs = (0 until graft.BoundedCache.MaxEntries + 40).map { k =>
+      val dir = new java.io.File(root, s"seg$k")
+      W.write(dir, "cache", Seq(t0),
+        if (k % 2 == 0) Seq(W.StrDim("host", Seq(s"h$k"))) else Seq(W.LongMet("hits", Seq(k.toLong))),
+        t0, t0 + 1000L)
+      dir.getAbsolutePath
+    }
+    val conf = spark.sparkContext.hadoopConfiguration
+    for (_ <- 1 to 2; (d, k) <- dirs.zipWithIndex) {
+      assert(DruidSegmentReader.segmentSchema(conf, d).fieldNames.toSeq == want(k), d)
+      assert(DruidSegmentReader.schemaCache.size <= graft.BoundedCache.MaxEntries)
+    }
   }
 }

@@ -665,4 +665,75 @@ class DruidSegmentsDataSourceSpec extends SparkSpec {
     assert(stats.sizeInBytes == BigInt(zipLen),
       s"sizeInBytes ${stats.sizeInBytes} must equal index.zip bytes $zipLen")
   }
+
+  test("dsv2 partition reader: next() advances, get() returns the current row") {
+    val root = tmpDir()
+    writeSegment(new File(root, "seg1"))
+    writeSegment(new File(root, "seg2"), hosts = Seq("f", "g", "h"),
+      intervalStart = t0 + day, intervalEnd = t0 + 2 * day)
+    val df = spark.read.format("druid-segments").load(root.getAbsolutePath)
+    val scan = new DruidScan(
+      new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+        java.util.Map.of("path", root.getAbsolutePath)),
+      df.schema, Array.empty, Long.MinValue, Long.MaxValue, Map.empty)
+    val factory = scan.createReaderFactory()
+    val (hostAt, hitsAt) = (df.schema.fieldIndex("host"), df.schema.fieldIndex("hits"))
+    val seen = scan.planInputPartitions().toSeq.flatMap { p =>
+      val reader = factory.createReader(p)
+      val out = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
+      try while (reader.next()) {
+        val first = reader.get()
+        val a = (first.getUTF8String(hostAt).toString, first.getLong(hitsAt))
+        val second = reader.get()
+        val b = (second.getUTF8String(hostAt).toString, second.getLong(hitsAt))
+        assert(a == b, "a second get() must not skip a row")
+        out += a
+      } finally reader.close()
+      out
+    }
+    assert(seen.sorted == Seq(("a", 10L), ("b", 20L), ("c", 30L), ("d", 40L), ("e", 50L),
+      ("f", 10L), ("g", 20L), ("h", 30L)))
+  }
+
+  test("dsv2 SQL metrics: segments decoded, chunks decompressed and rows emitted per scan") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    import org.apache.spark.sql.functions.col
+    object Plans extends AdaptiveSparkPlanHelper
+    val root = tmpDir()
+    // 4 daily segments of 60 rows; SizePer=2 → ~30 chunks per column.
+    // "rare" sits on one row of segment 2 only
+    val n = 60
+    (0 until 4).foreach { s =>
+      val start = t0 + s * day
+      val hosts = (0 until n).map(i => if (s == 2 && i == 7) "rare" else f"h${i % 10}%02d")
+      DruidSegmentWriter.write(new File(root, s"seg$s"), "fixture",
+        (0 until n).map(i => start + i * 1000L),
+        Seq(StrDim("host", hosts), LongMet("hits", (0 until n).map(i => (s * n + i).toLong))),
+        start, start + day)
+    }
+    val df = spark.read.format("druid-segments").load(root.getAbsolutePath)
+    def run(q: org.apache.spark.sql.DataFrame): (Int, Map[String, Long], Int) = {
+      DruidSegmentReader.decompressedChunks.set(0)
+      val rows = q.collect().length
+      val delta = DruidSegmentReader.decompressedChunks.get()
+      val scans = Plans.collect(q.queryExecution.executedPlan) { case s: BatchScanExec => s }
+      assert(scans.size == 1)
+      val m = Seq("segmentsDecoded", "chunksDecompressed", "rowsEmitted")
+        .map(k => k -> scans.head.metrics(k).value).toMap
+      (rows, m, delta)
+    }
+    val (allRows, all, allDelta) = run(df.select("host", "hits"))
+    assert(allRows == 4 * n)
+    assert(all("segmentsDecoded") == 4 && all("rowsEmitted") == 4 * n, all.toString)
+    assert(all("chunksDecompressed") == allDelta, s"$all vs JVM counter delta $allDelta")
+    val (rareRows, rare, rareDelta) = run(df.where(col("host") === "rare").select("host", "hits"))
+    assert(rareRows == 1)
+    // the dictionary skips the 3 segments without "rare"; the bitmap
+    // decodes one row of the fourth
+    assert(rare("segmentsDecoded") == 1 && rare("rowsEmitted") == 1, rare.toString)
+    assert(rare("chunksDecompressed") > 0)
+    assert(rare("chunksDecompressed") < all("chunksDecompressed"), s"$rare vs $all")
+    assert(rare("chunksDecompressed") == rareDelta, s"$rare vs JVM counter delta $rareDelta")
+  }
 }
