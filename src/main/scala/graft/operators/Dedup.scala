@@ -382,7 +382,7 @@ object Dedup {
   /** APPEND new reference documents to a persisted MinHash index —
     * build-once/increment-forever parity with
     * [[graft.operators.TextAnalysis.appendToBm25Index]] /
-    * [[graft.operators.Similarity.appendToIvfIndexSq8]], at true
+    * [[graft.operators.Similarity.appendToIvfIndex]], at true
     * INCREMENT cost: the increment shingles+bands ONCE under the
     * meta-pinned banding parameters (never the stored corpus), its
     * shingle rows append additively into `shingles`, and its band rows

@@ -79,7 +79,7 @@ object IndexLayout {
       f"${component}_g${version + 1}%05d-${java.util.UUID.randomUUID().toString.take(8)}"
   }
 
-  private def hfs(spark: SparkSession, p: String): (FileSystem, Path) = {
+  private[graft] def hfs(spark: SparkSession, p: String): (FileSystem, Path) = {
     val path = new Path(p)
     (path.getFileSystem(spark.sparkContext.hadoopConfiguration), path)
   }

@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import IndexLayout.hfs
 
 /** Lifecycle operations for the persisted index family (BM25, IVF
   * float/SQ8/PQ, MinHash) beyond build + append: COMPACTION (rewrite
@@ -14,7 +16,7 @@ import org.apache.spark.sql.functions._
   *
   * Why these exist: every append — batch
   * ([[TextAnalysis.appendToBm25Index]],
-  * [[Similarity.appendToIvfIndexSq8]]) or streaming
+  * [[Similarity.appendToIvfIndex]]) or streaming
   * ([[graft.streaming.StreamingIvfAppend]]) — lands NEW files into the
   * live layout. At seconds-level streaming triggers that is small-files
   * debt (a probe lists and opens every file of its pruned partitions),
@@ -58,11 +60,6 @@ object IndexMaintenance {
   final case class CompactStats(filesBefore: Long, filesAfter: Long)
 
   // ---- filesystem helpers -------------------------------------------
-
-  private def hfs(spark: SparkSession, p: String): (FileSystem, Path) = {
-    val path = new Path(p)
-    (path.getFileSystem(spark.sparkContext.hadoopConfiguration), path)
-  }
 
   /** Data files under `dir` (recursive), relative to it; `_`/`.`
     * names skipped at every level (markers, _SUCCESS, staging). */
@@ -113,9 +110,8 @@ object IndexMaintenance {
 
   // ---- compaction ----------------------------------------------------
 
-  /** COMPACT a persisted IVF index (float [[Similarity.writeIvfIndex]],
-    * SQ8 [[Similarity.writeIvfIndexSq8]] or PQ
-    * [[Similarity.writeIvfIndexPq]] — the `cells/` layout is shared):
+  /** COMPACT a persisted IVF index ([[Similarity.writeIvfIndex]], any
+    * codec — the `cells/` layout is shared):
     * rewrite the LIVE rows (pending delete tombstones materialize and
     * clear here) into ONE file per cell, WITHOUT re-fitting anything —
     * centroids, bounds, codebook and meta are untouched and the rows

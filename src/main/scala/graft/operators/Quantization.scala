@@ -83,8 +83,8 @@ object Quantization {
   }
 
   /** Per-subspace LLOYD REFINEMENT of the deterministic codebook —
-    * the quality path [[Similarity.writeIvfIndexPq]]'s `codebook0`
-    * parameter exists for: init = [[trainPqCodebook]]'s lowest-id
+    * the quality book an `IvfCodec.Pq` for [[Similarity.writeIvfIndex]]
+    * accepts: init = [[trainPqCodebook]]'s lowest-id
     * entries (deterministic seed, the [[Similarity.kmeansCentroids]]
     * stance), then `iters` rounds of (assign every subvector to its
     * nearest entry, move each entry to its assigned subvectors' mean).

@@ -22,7 +22,7 @@ object Retrieval {
     *      postings term-pruned, corpus never re-tokenized).
     *   2. SEMANTIC — the persisted IVF-PQ index at `pqIndexPath`
     *      nominates `kNominate` ANN candidates per query
-    *      ([[Similarity.queryIvfIndexPq]]; partition-pruned ADC scan,
+    *      ([[Similarity.queryIvfIndexWith]]; partition-pruned ADC scan,
     *      ≤ queries × nprobe cells read), re-ranked to an exact-cosine
     *      top `kAnn` over the full-precision `corpus` vectors
     *      ([[Similarity.rerankCandidates]]; only candidate vectors are
@@ -65,14 +65,14 @@ object Retrieval {
     * two indexes are independent structures, so there is no cross-
     * index snapshot to take. */
   final case class HybridServeState(bm25: TextAnalysis.Bm25IndexState,
-                                    pq: Similarity.PqIndexState)
+                                    ivf: Similarity.IvfIndexState)
 
   /** Load [[HybridServeState]]: one bounded meta read per index,
     * readers constructed once. */
   def loadHybridState(spark: SparkSession, bm25IndexPath: String,
                       pqIndexPath: String): HybridServeState =
     HybridServeState(TextAnalysis.loadBm25Index(spark, bm25IndexPath),
-      Similarity.loadPqIndex(spark, pqIndexPath))
+      Similarity.loadIvfIndex(spark, pqIndexPath))
 
   /** [[hybridServe]] over caller-held state — the per-batch body for
     * streaming serving. Identical plan and output (the self-loading
@@ -96,7 +96,7 @@ object Retrieval {
           queryTerms, queryIdCol, termCol, k = kLex)
         .select(col("query_id"), col("doc_id"), col("rank")),
       () => {
-        val cand = Similarity.queryIvfIndexPqWith(state.pq, queryVecs,
+        val cand = Similarity.queryIvfIndexWith(state.ivf, queryVecs,
           k = kNominate, nprobe = nprobe)
         Similarity.rerankCandidates(corpus, queryVecs, cand,
             corpusIdCol, vecCol, k = kAnn)

@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Similarity search over embedding columns (`array<float>`).
   *
@@ -110,16 +110,6 @@ object Similarity {
     centroids
   }
 
-  /** IVF-style ANN: deterministic coarse centroids (by default the
-    * first `cells` corpus vectors — pass `kmeansCentroids(...)` output
-    * via `centroids` for data-adaptive cells), each corpus vector
-    * assigned to its nearest cell; queries probe the `nprobe` nearest
-    * cells and brute-force only within them.
-    *
-    * At 100 TB the assignment is a pure projection (fused per-row
-    * argmax over the collected centroid table — no join, no shuffle)
-    * and the probe scans corpus/cells × nprobe vectors per query.
-    */
   /** Deterministic default centroids: the `cells` lowest-id vectors. */
   private[graft] def defaultCentroids(c: DataFrame, cells: Int): DataFrame =
     c.orderBy(col("n_id")).limit(cells)
@@ -137,7 +127,7 @@ object Similarity {
     * signature-cached small-component read — an unchanged centroid
     * table skips the collect job on every probe after the first. */
   private[graft] def collectCentroidsAt(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       dir: String): Array[(Long, Seq[Double])] =
     IndexLayout.collectSmallComponent(spark, dir)
       .map(r => (r.getAs[Number](r.fieldIndex("c_id")).longValue,
@@ -162,12 +152,22 @@ object Similarity {
     * probe-side broadcast join — avoids re-running the centroid
     * derivation as a second job). */
   private def centroidDf(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       cents: Array[(Long, Seq[Double])]): DataFrame = {
     import spark.implicits._
     cents.toSeq.toDF("c_id", "c_v")
   }
 
+  /** IVF-style ANN: deterministic coarse centroids (by default the
+    * first `cells` corpus vectors — pass `kmeansCentroids(...)` output
+    * via `centroids` for data-adaptive cells), each corpus vector
+    * assigned to its nearest cell; queries probe the `nprobe` nearest
+    * cells and brute-force only within them.
+    *
+    * At 100 TB the assignment is a pure projection (fused per-row
+    * argmax over the collected centroid table — no join, no shuffle)
+    * and the probe scans corpus/cells × nprobe vectors per query.
+    */
   def ivfTopK(
       corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
       k: Int = 10, cells: Int = 0, nprobe: Int = 4,
@@ -199,29 +199,144 @@ object Similarity {
   def prepareQueries(queries: DataFrame, idCol: String, vecCol: String): DataFrame =
     queries.select(col(idCol).as("q_id"), asDouble(col(vecCol)).as("q_v"))
 
+  /** How a persisted IVF index stores and scores its vectors. Cell
+    * routing is the same for every codec (full-precision
+    * nearest-centroid assignment against the stored, unquantized
+    * centroids), so a codec owns only four things: the columns
+    * `cells/` stores per vector, the check an increment must pass
+    * before it is written, the probe-side query prep and score column,
+    * and the meta rows its build writes. Query and append never take a
+    * codec: [[loadIvfIndex]] reads it from what the index stores. */
+  sealed trait IvfCodec {
+    /** `cells/` rows (n_id, stored columns…, cell) from assigned
+      * (n_id, n_v, cell) rows. */
+    private[graft] def encode(assigned: DataFrame): DataFrame
+    /** Refuse vectors (n_v) this codec cannot store faithfully. */
+    private[graft] def checkIncrement(c: DataFrame, who: String): Unit = ()
+    /** Probe rows (q_id, q_v, cell) → the columns [[score]] reads. */
+    private[graft] def prepareProbes(probes: DataFrame): DataFrame = probes
+    /** Name of the score column a probe emits. */
+    private[graft] def scoreCol: String = "qcos"
+    /** Score of a probe row against a stored vector. */
+    private[graft] def score: Column
+    /** Meta components, written after `cells/`. */
+    private[graft] def writeMeta(spark: SparkSession, path: String): Unit = ()
+  }
+
+  object IvfCodec {
+
+    /** Full-precision vectors: `cells/` stores (n_id, n_v) and probes
+      * score the exact cosine. No meta. */
+    case object Float extends IvfCodec {
+      private[graft] def encode(assigned: DataFrame): DataFrame = assigned
+      private[graft] override def scoreCol: String = "cosine"
+      private[graft] def score: Column = cosine(col("q_v"), col("n_v"))
+    }
+
+    /** SQ8 scalar quantization ([[Quantization]]): `cells/` stores one
+      * unsigned BYTE per dimension (n_id, code BINARY) — 8× smaller
+      * than the float index's working form, 4× smaller than float32.
+      * The per-dimension bounds are pinned in `$path/meta` (los, his,
+      * format = "sq8-v1"), so probes never score under drifted bounds,
+      * and a vector outside them is refused (its code would CLAMP and
+      * drift from a rebuild fit on the new data) — at build time too,
+      * so stored codes are never clamped. Probes quantize the query
+      * ONCE per probe row under the same bounds and score the
+      * dequantized (ADC) cosine, exactly-rounded IEEE, so every score
+      * bit is mirrorable cross-engine. Ranking is a proxy; production
+      * re-ranks survivors with full-precision vectors
+      * ([[rerankCandidates]] composes). */
+    final case class Sq8(los: Seq[Double], his: Seq[Double]) extends IvfCodec {
+      private[graft] def encode(assigned: DataFrame): DataFrame =
+        assigned.select(col("n_id"),
+          graft.functions.Quantize.int8(col("n_v"), los, his).as("code"),
+          col("cell"))
+      private[graft] override def checkIncrement(c: DataFrame, who: String): Unit =
+        requireWithinBounds(c, los, his, who)
+      private[graft] override def prepareProbes(probes: DataFrame): DataFrame =
+        probes.select(col("q_id"), col("cell"),
+          graft.functions.Quantize.int8(col("q_v"), los, his).as("q_code"))
+      private[graft] def score: Column =
+        graft.functions.Quantize.dequantCosine(col("q_code"), col("code"), los, his)
+      private[graft] override def writeMeta(spark: SparkSession, path: String): Unit = {
+        import spark.implicits._
+        Seq((los, his, "sq8-v1")).toDF("los", "his", "format")
+          .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+      }
+    }
+
+    object Sq8 {
+      /** SQ8 under `(los, his)` bounds — [[Quantization.fitBounds]] of
+        * the corpus, or wider pinned bounds that later appends fit. */
+      def apply(bounds: (Seq[Double], Seq[Double])): Sq8 = Sq8(bounds._1, bounds._2)
+    }
+
+    /** Product quantization ([[graft.functions.Pq]]): `cells/` stores
+      * `m` BYTES per vector (n_id, code BINARY), one code per
+      * subspace — 32× smaller than float32 at D=64/m=8, the regime
+      * where even the SQ8 index no longer fits its store. Build with
+      * the deterministic [[Quantization.trainPqCodebook]]
+      * (SQL-mirrorable) or a k-means-refined book. The build writes
+      * `$path/codebook` (j, c, sub — m × ks rows) and `$path/meta`
+      * (m, ks, sub_dim, format = "pq-m<m>-v1"). Probes score the
+      * ASYMMETRIC distance of the PQ paper: the full-precision query
+      * against each candidate's codebook reconstruction, exactly-rounded
+      * IEEE. PQ has no bounds to drift — codebook coverage degrades
+      * smoothly as the distribution moves, a recall concern for the
+      * rebuild cadence, not a refusal. */
+    final case class Pq(codebook: Seq[Seq[Seq[Double]]]) extends IvfCodec {
+      private[graft] def encode(assigned: DataFrame): DataFrame =
+        assigned.select(col("n_id"),
+          graft.functions.Pq.encode(col("n_v"), codebook).as("code"),
+          col("cell"))
+      private[graft] def score: Column =
+        graft.functions.Pq.adcCosine(col("q_v"), col("code"), codebook)
+      private[graft] override def writeMeta(spark: SparkSession, path: String): Unit = {
+        import spark.implicits._
+        val m = codebook.length
+        codebook.zipWithIndex
+          .flatMap { case (entries, j) =>
+            entries.zipWithIndex.map { case (sub, cc) => (j, cc, sub) } }
+          .toDF("j", "c", "sub")
+          .coalesce(1).write.mode("overwrite").parquet(s"$path/codebook")
+        Seq((m, codebook.head.length, codebook.head.head.length, s"pq-m$m-v1"))
+          .toDF("m", "ks", "sub_dim", "format")
+          .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+      }
+    }
+  }
+
   /** Build and PERSIST an IVF index: every corpus vector assigned to
-    * its nearest centroid cell, written `partitionBy(cell)`, plus the
-    * (tiny) centroid table — the 100 TB ANN path: the assignment pass
-    * runs ONCE, and every later query batch scans only its probed
-    * cells via partition pruning instead of re-deriving centroids and
-    * re-assigning the corpus per query (what `ivfTopK` does inline).
+    * its nearest centroid cell, stored in `codec`'s form and written
+    * `partitionBy(cell)`, plus the (tiny, full-precision) centroid
+    * table — the 100 TB ANN path: the assignment pass runs ONCE, and
+    * every later query batch scans only its probed cells via partition
+    * pruning instead of re-deriving centroids and re-assigning the
+    * corpus per query (what `ivfTopK` does inline).
     *
-    * Layout: `$path/cells/cell=<c_id>/…` (n_id, n_v) and
-    * `$path/centroids` (c_id, c_v). Deterministic for a given corpus
-    * and centroid choice, so rebuilding is idempotent. Maintenance
-    * (compact/delete/guarded append) versions these components behind
-    * the [[IndexLayout]] manifest; probes resolve it at plan time. */
+    * Layout: `$path/cells/cell=<c_id>/…` (n_id + the codec's stored
+    * columns), `$path/centroids` (c_id, c_v) and the codec's meta
+    * components ([[IvfCodec]]). Meta is written LAST: its _SUCCESS is
+    * the build-complete sentinel. Deterministic for a given corpus,
+    * centroid choice and codec, so rebuilding is idempotent.
+    * Maintenance (compact/delete/guarded append) versions these
+    * components behind the [[IndexLayout]] manifest; probes resolve it
+    * at plan time. */
   def writeIvfIndex(
       corpus: DataFrame, idCol: String, vecCol: String, path: String,
-      cells: Int = 0, centroids0: Option[DataFrame] = None): Unit = {
+      cells: Int = 0, centroids0: Option[DataFrame] = None,
+      codec: IvfCodec = IvfCodec.Float): Unit = {
+    val spark = corpus.sparkSession
     val c = corpus.select(col(idCol).as("n_id"), asDouble(col(vecCol)).as("n_v"))
     val nCells = if (cells > 0) cells else autoCells(c.count())
     val cents = collectCentroids(centroids0.getOrElse(defaultCentroids(c, nCells)))
-    centroidDf(corpus.sparkSession, cents)
+    codec.checkIncrement(c, "writeIvfIndex")
+    centroidDf(spark, cents)
       .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-    assignToCells(c, cents)
+    codec.encode(assignToCells(c, cents))
       .write.mode("overwrite").partitionBy("cell").parquet(s"$path/cells")
-    IndexLayout.resetToBare(corpus.sparkSession, path)
+    codec.writeMeta(spark, path)
+    IndexLayout.resetToBare(spark, path)
   }
 
   /** An id-set side of a semi/anti join (tombstones, takedown sets),
@@ -248,7 +363,7 @@ object Similarity {
     * disk ⇒ the default 10 MB threshold passes ≫ the row budget the
     * count-based guard uses; both paths return identical rows. */
   private[graft] def sizedIdSideFromDir(
-      spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
+      spark: SparkSession, dir: String): DataFrame = {
     val df = IndexLayout.readComponent(spark, dir).select(col("n_id"))
     val bytes = IndexMaintenance.componentBytes(spark, dir)
     if (bytes <= spark.sessionState.conf.autoBroadcastJoinThreshold)
@@ -264,7 +379,7 @@ object Similarity {
     * Every probe and every maintenance rewrite reads through here so
     * deletes take effect atomically at the manifest flip. */
   private[graft] def readIvfCellsLive(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       snap: IndexLayout.Snapshot): DataFrame = {
     val cells = IndexLayout.readComponent(spark, snap.dir("cells"))
     if (snap.names("tombstones"))
@@ -280,7 +395,7 @@ object Similarity {
     * composition is delete → [[IndexMaintenance.compactIvfIndex]]
     * (materializes deletes, clears tombstones) → append. */
   private def refuseTombstoned(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       snap: IndexLayout.Snapshot, c: DataFrame, who: String): Unit =
     if (snap.names("tombstones")) {
       val n = c.select("n_id")
@@ -294,19 +409,107 @@ object Similarity {
           "and then append")
     }
 
-  /** Probe a persisted IVF index: nearest `nprobe` cells per query
-    * (against the broadcast centroid table), then brute-force cosine
-    * only inside those cells. The cell join is on the PARTITION column
-    * of the index, so the scan prunes to the probed cells — at most
-    * queries×nprobe of `cells` directories, independent of corpus
-    * size (spec-asserted on the plan's partition count). */
-  def queryIvfIndex(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      queries: DataFrame, k: Int = 10, nprobe: Int = 4): DataFrame = {
-    val snap = IndexLayout.snapshot(spark, path)
-    val centroids = IndexLayout.readComponent(spark, snap.dir("centroids"))
-    val index = readIvfCellsLive(spark, snap)
+  /** Driver-side state of a persisted IVF index, resolved from ONE
+    * [[IndexLayout]] snapshot: its codec (read from what the index
+    * stores), the collected centroid table (bounded: `cells` rows) and
+    * the LIVE cells reader (tombstone anti-join already applied).
+    * Serving and streaming callers ([[Retrieval.hybridServeWith]],
+    * [[graft.streaming.StreamingIvfAppend]]) load it once and probe or
+    * append per batch through the `…With` forms — zero per-batch
+    * meta/codebook/centroid reads (the
+    * [[graft.operators.TextAnalysis.loadBm25Index]] hoist, uniformly).
+    * Appends re-resolve the live `cells` generation per call (a
+    * compaction between batches re-points it); the codec and centroids
+    * are immutable pins, safe to hold. */
+  final case class IvfIndexState(path: String, codec: IvfCodec,
+                                 cents: Array[(Long, Seq[Double])],
+                                 cells: DataFrame) {
+    /** Dimension of the stored vectors (the centroids'). */
+    private[graft] def dim: Option[Int] = cents.headOption.map(_._2.length)
+  }
 
+  /** Load [[IvfIndexState]]. The codec is what the index stores:
+    * `cells` holding `n_v` is a float index; `cells` holding `code`
+    * needs its `meta`, whose format tag picks SQ8 (`sq8-v1`: the
+    * pinned bounds) or PQ (`pq-m<m>-v1`: the codebook, checked against
+    * the meta geometry). A code index with no readable meta, or with a
+    * tag this build does not know, refuses here — before anything is
+    * probed or written. Bounded: one 1-row meta read, m × ks codebook
+    * rows, `cells` centroid rows. */
+  def loadIvfIndex(spark: SparkSession, path: String): IvfIndexState = {
+    val snap = IndexLayout.snapshot(spark, path)
+    val cells = readIvfCellsLive(spark, snap)
+    val codec =
+      if (cells.columns.contains("n_v")) IvfCodec.Float
+      else {
+        require(cells.columns.contains("code"),
+          s"index at $path: cells hold neither n_v nor code — not an IVF index")
+        storedCodec(spark, snap)
+      }
+    IvfIndexState(path, codec, collectCentroidsAt(spark, snap.dir("centroids")), cells)
+  }
+
+  /** The codec a `code` index's meta (format FIRST, then the geometry
+    * it implies) declares. */
+  private def storedCodec(spark: SparkSession, snap: IndexLayout.Snapshot): IvfCodec = {
+    val path = snap.path
+    val meta =
+      try IndexLayout.collectSmallComponent(spark, snap.dir("meta")).head
+      catch {
+        case scala.util.control.NonFatal(e) =>
+          throw new IllegalArgumentException(
+            s"index at $path stores codes but has no readable meta — its codec " +
+              "(format tag, bounds or codebook geometry) is unknown; rebuild it " +
+              "with writeIvfIndex", e)
+      }
+    val format = meta.getAs[String]("format")
+    if (format == "sq8-v1")
+      IvfCodec.Sq8(meta.getSeq[Double](meta.fieldIndex("los")),
+        meta.getSeq[Double](meta.fieldIndex("his")))
+    else {
+      require(format.matches("pq-m\\d+-v1"),
+        s"index at $path has format '$format'; this build reads 'sq8-v1' " +
+          "and 'pq-m<m>-v1'")
+      val m = meta.getAs[Int]("m")
+      val ks = meta.getAs[Int]("ks")
+      val subDim = meta.getAs[Int]("sub_dim")
+      require(format == s"pq-m$m-v1",
+        s"index at $path has format '$format'; its meta says m = $m — " +
+          "corrupt or cross-version index")
+      val codebook = IndexLayout.collectSmallComponent(spark, snap.dir("codebook"))
+        .map(r => (r.getAs[Int]("j"), r.getAs[Int]("c"),
+          r.getSeq[Double](r.fieldIndex("sub"))))
+        .sortBy(t => (t._1, t._2))
+        .groupBy(_._1).toSeq.sortBy(_._1)
+        .map(_._2.sortBy(_._2).map(_._3).toSeq)
+      require(codebook.length == m &&
+          codebook.forall(e => e.length == ks && e.forall(_.length == subDim)),
+        s"index at $path: codebook shape does not match its meta " +
+          s"(expected $m x $ks x $subDim)")
+      IvfCodec.Pq(codebook)
+    }
+  }
+
+  /** Probe a persisted IVF index: nearest `nprobe` cells per query
+    * (full-precision cosine against the centroid table), then score
+    * only the vectors inside those cells with the index's codec
+    * ([[IvfCodec]]: `cosine` for float, the ADC `qcos` for SQ8 and
+    * PQ). The cell join is on the PARTITION column of the index, so
+    * the scan prunes to the probed cells — at most queries×nprobe of
+    * `cells` directories, independent of corpus size (spec-asserted
+    * on the plan's partition count). A query whose dimension differs
+    * from the index's refuses instead of scoring a prefix. */
+  def queryIvfIndex(
+      spark: SparkSession, path: String,
+      queries: DataFrame, k: Int = 10, nprobe: Int = 4): DataFrame =
+    queryIvfIndexWith(loadIvfIndex(spark, path), queries, k, nprobe)
+
+  /** [[queryIvfIndex]] over caller-held state — the per-batch body for
+    * serving and streaming probes. Identical plan and output (the
+    * self-loading form delegates here). */
+  def queryIvfIndexWith(st: IvfIndexState, queries: DataFrame,
+                        k: Int = 10, nprobe: Int = 4): DataFrame = {
+    val spark = queries.sparkSession
     val probeW = Window.partitionBy("q_id").orderBy(col("c_cos").desc, col("c_id").asc)
     // computed ONCE and collected: probe rows are at most queries ×
     // nprobe (tiny by construction — queries are a probe batch, not a
@@ -316,35 +519,42 @@ object Similarity {
     // (b) a local relation to broadcast-join, instead of re-running
     // the centroid-cosine window a second time as the join side.
     val probeRows = queries.select(col("q_id"), col("q_v"))
-      .join(broadcast(centroids), lit(true))
+      .join(broadcast(centroidDf(spark, st.cents)), lit(true))
       .withColumn("c_cos", cosine(col("q_v"), col("c_v")))
       .withColumn("r", row_number().over(probeW))
       .filter(col("r") <= nprobe)
       .select(col("q_id"), col("q_v"), col("c_id").as("cell"))
       .collect()
+    for (d <- st.dim; r <- probeRows if !r.isNullAt(1)) {
+      val n = r.getSeq[Double](1).length
+      require(n == d, s"queryIvfIndex: query ${r.get(0)} has $n dims, the " +
+        s"index at ${st.path} stores $d-d vectors")
+    }
     val probeSchema = StructType(Seq(
       StructField("q_id", queries.schema("q_id").dataType),
       StructField("q_v", queries.schema("q_v").dataType),
-      StructField("cell", centroids.schema("c_id").dataType)))
-    val probes = spark.createDataFrame(
-      java.util.Arrays.asList(probeRows: _*), probeSchema)
+      StructField("cell", LongType)))
+    val probes = st.codec.prepareProbes(spark.createDataFrame(
+      java.util.Arrays.asList(probeRows: _*), probeSchema))
     val probedCells = probeRows.map(_.getLong(2)).distinct.toSeq
-    val w = Window.partitionBy("q_id").orderBy(col("cosine").desc, col("n_id").asc)
-    index.filter(col("cell").isin(probedCells: _*))
+    val score = st.codec.scoreCol
+    val w = Window.partitionBy("q_id").orderBy(col(score).desc, col("n_id").asc)
+    st.cells.filter(col("cell").isin(probedCells: _*))
       .join(broadcast(probes), Seq("cell"))
       .filter(col("q_id") =!= col("n_id"))
-      .withColumn("cosine", cosine(col("q_v"), col("n_v")))
+      .withColumn(score, st.codec.score)
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
-      .select("q_id", "n_id", "rank", "cosine")
+      .select("q_id", "n_id", "rank", score)
   }
 
   /** Full-precision RE-RANK of a bounded candidate list — the second
     * stage of every quantized/ANN retrieval stack: a cheap proxy
-    * ranker ([[Quantization.quantizedTopK]], [[queryIvfIndexSq8]],
-    * an inverted index) nominates `candidates` (q_id, n_id) pairs,
-    * and this re-scores ONLY those pairs with exact cosine over the
-    * full-precision vectors, emitting the per-query top `k`.
+    * ranker ([[Quantization.quantizedTopK]], an SQ8/PQ
+    * [[queryIvfIndex]], an inverted index) nominates `candidates`
+    * (q_id, n_id) pairs, and this re-scores ONLY those pairs with exact
+    * cosine over the full-precision vectors, emitting the per-query
+    * top `k`.
     *
     * Scale shape: candidates are bounded by the upstream ranker
     * (queries × k₀ rows); they are Materialized (locally — a serving
@@ -379,52 +589,6 @@ object Similarity {
       .select("q_id", "n_id", "rank", "cosine")
   }
 
-  /** Build and PERSIST an SQ8-QUANTIZED IVF index — [[writeIvfIndex]]
-    * composed with [[Quantization]]: cell routing is identical
-    * (full-precision nearest-centroid assignment, so the index is
-    * drop-in for the float one), but `cells/` stores one unsigned
-    * BYTE per dimension instead of a double array — 8× smaller than
-    * the float index's working form, 4× smaller than float32. At
-    * 100 TB that is the difference between an index that fits its
-    * store and one that doesn't. Per-dimension bounds fit on the
-    * corpus in ONE pass (dim-bounded collect) and are pinned in
-    * `$path/meta` with a format tag, so probes can never score under
-    * drifted bounds.
-    *
-    * Layout: `$path/cells/cell=<c_id>/…` (n_id, code BINARY),
-    * `$path/centroids` (c_id, c_v — full precision, tiny),
-    * `$path/meta` (los, his, format). Meta is written LAST: its
-    * _SUCCESS is the build-complete sentinel. */
-  def writeIvfIndexSq8(
-      corpus: DataFrame, idCol: String, vecCol: String, path: String,
-      cells: Int = 0, centroids0: Option[DataFrame] = None,
-      bounds0: Option[(Seq[Double], Seq[Double])] = None): Unit = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val c = corpus.select(col(idCol).as("n_id"), asDouble(col(vecCol)).as("n_v"))
-    val nCells = if (cells > 0) cells else autoCells(c.count())
-    val cents = collectCentroids(centroids0.getOrElse(defaultCentroids(c, nCells)))
-    // bounds0 = PINNED quantization bounds (the production build: pin
-    // bounds known to cover current AND expected future data, so
-    // appendToIvfIndexSq8 increments fit under them). A pinned build
-    // keeps the invariant "stored codes are never clamped": a corpus
-    // vector outside the pinned bounds would quantize lossier than a
-    // fit-bounds rebuild — refused loudly, same as at append time.
-    val (los, his) = bounds0.getOrElse(Quantization.fitBounds(c, "n_v"))
-    if (bounds0.isDefined)
-      requireWithinBounds(c, los, his, "writeIvfIndexSq8(bounds0)")
-    centroidDf(spark, cents)
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-    assignToCells(c, cents)
-      .select(col("n_id"),
-        graft.functions.Quantize.int8(col("n_v"), los, his).as("code"),
-        col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/cells")
-    Seq((los, his, "sq8-v1")).toDF("los", "his", "format")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-    IndexLayout.resetToBare(spark, path)
-  }
-
   /** ONE dim-bounded pass asserting every vector of `c` (column n_v)
     * lies inside the per-dimension [los, his] box; refuses loudly
     * with the offending dimensions otherwise. */
@@ -440,29 +604,40 @@ object Similarity {
       s"$who: vectors exceed the pinned SQ8 bounds in dimension(s) " +
         s"${drift.take(8).mkString(", ")} — their codes would CLAMP and " +
         "scores would drift vs a fit-bounds rebuild; rebuild the index " +
-        "(writeIvfIndexSq8) with bounds covering the new data")
+        "(writeIvfIndex with an IvfCodec.Sq8 covering the new data)")
   }
 
-  /** APPEND new vectors to a persisted float IVF index — the write
-    * side of build-once/probe-many: a daily crawl adding vectors pays
-    * one assignment pass over the INCREMENT (routed against the
-    * stored centroids, the same fused per-row argmax as the build)
-    * plus an append into the existing `cells/` partitions, never a
-    * full-corpus re-shuffle ([[writeIvfIndex]] is mode("overwrite") —
-    * a rebuild). Probes are unchanged: partition pruning still reads
-    * ≤ nprobe cell directories; the new files simply join their
-    * cells. Cell balance degrades as the data distribution drifts
-    * from the build-time centroids — rebuild (or re-fit centroids)
-    * on a slower cadence, the standard IVF maintenance split. */
+  /** APPEND new vectors to a persisted IVF index of any codec — the
+    * write side of build-once/probe-many: a daily crawl adding vectors
+    * pays one assignment pass over the INCREMENT (routed against the
+    * stored centroids, the same fused per-row argmax as the build),
+    * stored in the index's codec form (SQ8 under the meta bounds, PQ
+    * under the stored codebook), plus an append into the existing
+    * `cells/` partitions — never a full-corpus re-shuffle
+    * ([[writeIvfIndex]] is mode("overwrite") — a rebuild). Appended
+    * rows are bit-identical to what a rebuild on (build ∪ increment)
+    * under the same centroids and codec would store (spec-pinned), so
+    * probes need no new code path. Refused before anything is written:
+    * vectors of another dimension than the index's, SQ8 vectors
+    * outside the pinned bounds, tombstoned ids. Meta is untouched.
+    * Cell balance degrades as the data distribution drifts from the
+    * build-time centroids — rebuild (or re-fit centroids) on a slower
+    * cadence, the standard IVF maintenance split. */
   def appendToIvfIndex(newVecs: DataFrame, idCol: String, vecCol: String,
-                       path: String): Unit = {
+                       path: String): Unit =
+    appendToIvfIndexWith(loadIvfIndex(newVecs.sparkSession, path),
+      newVecs, idCol, vecCol)
+
+  /** [[appendToIvfIndex]] over caller-held state — the per-batch body
+    * for streaming appends: zero per-batch index-side driver work
+    * beyond the codec's own increment check and the per-batch lease +
+    * manifest resolution. */
+  def appendToIvfIndexWith(st: IvfIndexState, newVecs: DataFrame,
+                           idCol: String, vecCol: String): Unit = {
     val spark = newVecs.sparkSession
-    IndexLayout.withIndexLock(spark, path, "append-ivf") {
-      val snap = IndexLayout.snapshot(spark, path)
-      val c = newVecs.select(col(idCol).as("n_id"), asDouble(col(vecCol)).as("n_v"))
-      refuseTombstoned(spark, snap, c, "appendToIvfIndex")
-      val cents = collectCentroidsAt(spark, snap.dir("centroids"))
-      assignToCells(c, cents)
+    IndexLayout.withIndexLock(spark, st.path, "append-ivf") {
+      val snap = IndexLayout.snapshot(spark, st.path)
+      encodedIncrement(st, snap, newVecs, idCol, vecCol, "appendToIvfIndex")
         .write.mode("append").partitionBy("cell").parquet(snap.dir("cells"))
       // manifest FENCE: appends mutate the live generation without
       // re-pointing any component, so bump the version from the
@@ -474,388 +649,49 @@ object Similarity {
     }
   }
 
-  /** APPEND new vectors to a persisted SQ8 IVF index
-    * ([[writeIvfIndexSq8]] layout): the increment routes against the
-    * stored full-precision centroids and quantizes under the META
-    * bounds — so an appended vector's code is bit-identical to what a
-    * from-scratch rebuild on (build ∪ increment) under the same
-    * centroids and bounds would store (spec-pinned), and probes need
-    * no new code path. Vectors OUTSIDE the pinned bounds are refused
-    * loudly (their codes would clamp and drift vs a rebuild) — bounds
-    * drift means the quantization config no longer covers the data,
-    * which is a rebuild, not an append. Meta is untouched: bounds,
-    * format tag and centroids stay the build's, which is exactly what
-    * makes the probe ≡ rebuild equivalence hold. */
-  def appendToIvfIndexSq8(newVecs: DataFrame, idCol: String, vecCol: String,
-                          path: String): Unit =
-    appendToIvfIndexSq8With(
-      loadIvfSq8AppendState(newVecs.sparkSession, path),
-      newVecs, idCol, vecCol, path)
-
-  /** Driver-side SQ8 append state: the meta-pinned bounds + the
-    * collected centroid table, read ONCE — streaming appenders
-    * ([[graft.streaming.StreamingIvfAppend]]) keep it across
-    * micro-batches instead of re-reading meta/centroids per batch
-    * (the same hoist discipline as every other streaming index
-    * consumer here). */
-  final case class IvfSq8AppendState(los: Seq[Double], his: Seq[Double],
-                                     cents: Array[(Long, Seq[Double])])
-
-  def loadIvfSq8AppendState(spark: org.apache.spark.sql.SparkSession,
-                            path: String): IvfSq8AppendState = {
-    val snap = IndexLayout.snapshot(spark, path)
-    val meta = IndexLayout.collectSmallComponent(spark, snap.dir("meta"))(0)
-    val format = meta.getAs[String]("format")
-    require(format == "sq8-v1",
-      s"index at $path has format '$format'; this build appends 'sq8-v1'")
-    IvfSq8AppendState(
-      meta.getSeq[Double](meta.fieldIndex("los")),
-      meta.getSeq[Double](meta.fieldIndex("his")),
-      collectCentroidsAt(spark, snap.dir("centroids")))
-  }
-
-  /** [[appendToIvfIndexSq8]] over caller-held state — the per-batch
-    * body for streaming appends: zero per-batch index-side driver
-    * work beyond the increment's own bounded drift check and the
-    * per-batch lease + manifest resolution (a compaction between
-    * micro-batches re-points `cells`; bounds/centroids are immutable
-    * pins, safe to hold). */
-  def appendToIvfIndexSq8With(state: IvfSq8AppendState, newVecs: DataFrame,
-                              idCol: String, vecCol: String,
-                              path: String): Unit = {
-    val spark = newVecs.sparkSession
-    IndexLayout.withIndexLock(spark, path, "append-ivf-sq8") {
-      val snap = IndexLayout.snapshot(spark, path)
-      val c = newVecs.select(col(idCol).as("n_id"), asDouble(col(vecCol)).as("n_v"))
-      requireWithinBounds(c, state.los, state.his, "appendToIvfIndexSq8")
-      refuseTombstoned(spark, snap, c, "appendToIvfIndexSq8")
-      assignToCells(c, state.cents)
-        .select(col("n_id"),
-          graft.functions.Quantize.int8(col("n_v"), state.los, state.his).as("code"),
-          col("cell"))
-        .write.mode("append").partitionBy("cell").parquet(snap.dir("cells"))
-      IndexLayout.commit(spark, snap, Map.empty) // manifest fence (see appendToIvfIndex)
-      spark.catalog.refreshByPath(snap.dir("cells"))
+  /** The increment's `cells/` rows, after its refusals: the codec's
+    * check, tombstoned ids, and — inside the projection that writes
+    * the rows, so no extra job — any vector whose dimension differs
+    * from the stored centroids' (it would route and score on a
+    * prefix). */
+  private def encodedIncrement(st: IvfIndexState, snap: IndexLayout.Snapshot,
+                               newVecs: DataFrame, idCol: String, vecCol: String,
+                               who: String): DataFrame = {
+    val c = newVecs.select(col(idCol).as("n_id"), asDouble(col(vecCol)).as("n_v"))
+    st.codec.checkIncrement(c, who)
+    refuseTombstoned(newVecs.sparkSession, snap, c, who)
+    val checked = st.dim.fold(c) { d =>
+      c.withColumn("n_v", when(size(col("n_v")) =!= d, raise_error(concat(
+          lit(s"$who: vector "), col("n_id").cast("string"), lit(" has "),
+          size(col("n_v")).cast("string"),
+          lit(s" dims, the index at ${st.path} stores $d-d vectors"))))
+        .otherwise(col("n_v")))
     }
+    st.codec.encode(assignToCells(checked, st.cents))
   }
 
-  /** Guarded (marker-fenced, resumable) IVF cell append — the shared
-    * tail of the three guarded append forms: stage the projected
-    * increment partitioned by cell, move the staged files into the
-    * live `cells/` partitions with atomic deterministic renames,
-    * commit. A batch ingest job that crashed mid-append and retried
-    * with the same `appendId` converges to exactly-once
+  /** [[appendToIvfIndex]] under the guarded (marker-fenced, resumable)
+    * protocol — the form a retried batch ingest should call: stage the
+    * encoded increment partitioned by cell, move the staged files into
+    * the live `cells/` partitions with atomic deterministic renames,
+    * commit. A job that crashed mid-append and retried with the same
+    * `appendId` converges to exactly-once
     * ([[graft.operators.IndexMaintenance.runGuardedAppend]]); there is
-    * no finalize step — IVF appends have no global stats to repair. */
-  private def guardedCellAppend(spark: org.apache.spark.sql.SparkSession,
-                                projected: IndexLayout.Snapshot => DataFrame,
-                                path: String, appendId: String): Boolean =
-    graft.operators.IndexMaintenance.runGuardedAppend(spark, path, appendId) {
-      stageDir =>
-        projected(IndexLayout.snapshot(spark, path))
-          .write.partitionBy("cell").parquet(s"$stageDir/cells")
-    } { () =>
-      spark.catalog.refreshByPath(
-        IndexLayout.snapshot(spark, path).dir("cells"))
-    }
-
-  /** [[appendToIvfIndexSq8]] under the guarded protocol — the form a
-    * retried batch ingest should call. Validations (format tag, the
-    * pinned-bounds drift refusal, the tombstone refusal) run at stage
-    * time; a committed appendId replays as a no-op (returns false). */
-  def appendToIvfIndexSq8Guarded(newVecs: DataFrame, idCol: String,
-                                 vecCol: String, path: String,
-                                 appendId: String): Boolean = {
-    val spark = newVecs.sparkSession
-    lazy val state = loadIvfSq8AppendState(spark, path)
-    guardedCellAppend(spark, { snap =>
-      val c = newVecs.select(col(idCol).as("n_id"), asDouble(col(vecCol)).as("n_v"))
-      requireWithinBounds(c, state.los, state.his, "appendToIvfIndexSq8Guarded")
-      refuseTombstoned(spark, snap, c, "appendToIvfIndexSq8Guarded")
-      assignToCells(c, state.cents)
-        .select(col("n_id"),
-          graft.functions.Quantize.int8(col("n_v"), state.los, state.his).as("code"),
-          col("cell"))
-    }, path, appendId)
-  }
-
-  /** [[appendToIvfIndex]] (float) under the guarded protocol. */
+    * no finalize step — IVF appends have no global stats to repair.
+    * Every refusal runs at stage time; a committed appendId replays as
+    * a no-op (returns false) without reading the index. */
   def appendToIvfIndexGuarded(newVecs: DataFrame, idCol: String,
                               vecCol: String, path: String,
                               appendId: String): Boolean = {
     val spark = newVecs.sparkSession
-    guardedCellAppend(spark, { snap =>
-      val c = newVecs.select(col(idCol).as("n_id"), asDouble(col(vecCol)).as("n_v"))
-      refuseTombstoned(spark, snap, c, "appendToIvfIndexGuarded")
-      assignToCells(c, collectCentroidsAt(spark, snap.dir("centroids")))
-    }, path, appendId)
-  }
-
-  /** [[appendToIvfIndexPq]] under the guarded protocol. */
-  def appendToIvfIndexPqGuarded(newVecs: DataFrame, idCol: String,
-                                vecCol: String, path: String,
-                                appendId: String): Boolean = {
-    val spark = newVecs.sparkSession
-    guardedCellAppend(spark, { snap =>
-      val codebook = readPqIndexState(spark, path)
-      val c = newVecs.select(col(idCol).as("n_id"), asDouble(col(vecCol)).as("n_v"))
-      refuseTombstoned(spark, snap, c, "appendToIvfIndexPqGuarded")
-      assignToCells(c, collectCentroidsAt(spark, snap.dir("centroids")))
-        .select(col("n_id"),
-          graft.functions.Pq.encode(col("n_v"), codebook).as("code"),
-          col("cell"))
-    }, path, appendId)
-  }
-
-  /** Build and PERSIST a PRODUCT-QUANTIZED IVF index —
-    * [[writeIvfIndexSq8]]'s layout with PQ codes in place of SQ8:
-    * cell routing identical (full-precision nearest-centroid
-    * assignment against stored unquantized centroids), but `cells/`
-    * stores `m` BYTES per vector (one code per subspace —
-    * [[graft.functions.Pq]]), 32× smaller than float32 at D=64/m=8
-    * where SQ8 gives 4×: the regime where even the SQ8 index no
-    * longer fits its store. The codebook defaults to the
-    * deterministic [[Quantization.trainPqCodebook]] (SQL-mirrorable);
-    * pass a k-means-refined `codebook0` for data-adaptive quality.
-    *
-    * Layout: `$path/cells/cell=<c_id>/…` (n_id, code BINARY),
-    * `$path/centroids` (c_id, c_v — full precision, tiny),
-    * `$path/codebook` (j, c, sub) — m × ks rows,
-    * `$path/meta` (m, ks, sub_dim, format = "pq-m<m>-v1"). Meta is
-    * written LAST: its _SUCCESS is the build-complete sentinel, and
-    * the format tag refuses probes from a build with different PQ
-    * geometry. */
-  def writeIvfIndexPq(
-      corpus: DataFrame, idCol: String, vecCol: String, path: String,
-      cells: Int = 0, m: Int = 8, ks: Int = 256,
-      centroids0: Option[DataFrame] = None,
-      codebook0: Option[Seq[Seq[Seq[Double]]]] = None): Unit = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val c = corpus.select(col(idCol).as("n_id"), asDouble(col(vecCol)).as("n_v"))
-    val nCells = if (cells > 0) cells else autoCells(c.count())
-    val cents = collectCentroids(centroids0.getOrElse(defaultCentroids(c, nCells)))
-    val codebook = codebook0.getOrElse(
-      Quantization.trainPqCodebook(corpus, idCol, vecCol, m, ks))
-    require(codebook.length == m,
-      s"writeIvfIndexPq: codebook has ${codebook.length} subspaces, m = $m")
-    centroidDf(spark, cents)
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-    assignToCells(c, cents)
-      .select(col("n_id"),
-        graft.functions.Pq.encode(col("n_v"), codebook).as("code"),
-        col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/cells")
-    codebook.zipWithIndex
-      .flatMap { case (entries, j) =>
-        entries.zipWithIndex.map { case (sub, cc) => (j, cc, sub) } }
-      .toDF("j", "c", "sub")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/codebook")
-    Seq((m, codebook.head.length, codebook.head.head.length, s"pq-m$m-v1"))
-      .toDF("m", "ks", "sub_dim", "format")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-    IndexLayout.resetToBare(spark, path)
-  }
-
-  /** Load the persisted PQ meta + codebook, verifying the format tag
-    * and the stored geometry. Bounded: one 1-row meta read + m × ks
-    * codebook rows. */
-  private def readPqIndexState(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String): Seq[Seq[Seq[Double]]] = {
-    val snap0 = IndexLayout.snapshot(spark, path)
-    readPqIndexStateAt(spark, snap0)
-  }
-
-  private def readPqIndexStateAt(
-      spark: org.apache.spark.sql.SparkSession,
-      snap: IndexLayout.Snapshot): Seq[Seq[Seq[Double]]] = {
-    val path = snap.path
-    val meta = IndexLayout.collectSmallComponent(spark, snap.dir("meta"))(0)
-    // format FIRST: probing a non-PQ index (e.g. sq8-v1) must refuse
-    // on the tag, not trip over the missing PQ geometry columns
-    val format = meta.getAs[String]("format")
-    require(format.matches("pq-m\\d+-v1"),
-      s"index at $path has format '$format'; this build probes 'pq-m<m>-v1'")
-    val m = meta.getAs[Int]("m")
-    val ks = meta.getAs[Int]("ks")
-    val subDim = meta.getAs[Int]("sub_dim")
-    require(format == s"pq-m$m-v1",
-      s"index at $path has format '$format'; its meta says m = $m — " +
-        "corrupt or cross-version index")
-    val codebook = IndexLayout.collectSmallComponent(spark, snap.dir("codebook"))
-      .map(r => (r.getAs[Int]("j"), r.getAs[Int]("c"),
-        r.getSeq[Double](r.fieldIndex("sub"))))
-      .sortBy(t => (t._1, t._2))
-      .groupBy(_._1).toSeq.sortBy(_._1)
-      .map(_._2.sortBy(_._2).map(_._3).toSeq)
-    require(codebook.length == m &&
-        codebook.forall(e => e.length == ks && e.forall(_.length == subDim)),
-      s"index at $path: codebook shape does not match its meta " +
-        s"(expected $m x $ks x $subDim)")
-    codebook
-  }
-
-  /** Probe a persisted PQ IVF index: cell routing is FULL-precision
-    * (as in [[queryIvfIndexSq8]] — centroids stored unquantized),
-    * candidate scoring is the ASYMMETRIC distance computation of the
-    * PQ paper: the full-precision query against each candidate's
-    * codebook reconstruction ([[graft.functions.Pq.adcCosine]]),
-    * exactly-rounded IEEE so every score bit is mirrorable
-    * cross-engine. Partition pruning identical to [[queryIvfIndex]] —
-    * at most queries × nprobe cell directories are read. Ranking is a
-    * proxy (coarser than SQ8 — 32× compression buys that); production
-    * re-ranks survivors with full-precision vectors
-    * ([[rerankCandidates]] composes). */
-  def queryIvfIndexPq(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      queries: DataFrame, k: Int = 10, nprobe: Int = 4): DataFrame =
-    queryIvfIndexPqWith(loadPqIndex(spark, path), queries, k, nprobe)
-
-  /** Driver-side state of a persisted PQ IVF index: the collected
-    * codebook (m × ks × subDim doubles — bounded, validated against
-    * meta), the centroid reader and the LIVE cells reader (tombstone
-    * anti-join already applied), all resolved from ONE
-    * [[IndexLayout]] snapshot. Streaming callers
-    * ([[graft.streaming.StreamingHybridServe]]) load this once at
-    * stream start and probe per micro-batch via
-    * [[queryIvfIndexPqWith]] — zero per-batch index-side driver work
-    * (the [[graft.operators.TextAnalysis.loadBm25Index]] hoist,
-    * uniformly). */
-  final case class PqIndexState(codebook: Seq[Seq[Seq[Double]]],
-                                centroids: DataFrame, cells: DataFrame)
-
-  /** Load [[PqIndexState]]: one bounded meta+codebook read (format
-    * tag verified), readers constructed once. */
-  def loadPqIndex(spark: org.apache.spark.sql.SparkSession,
-                  path: String): PqIndexState = {
-    val snap = IndexLayout.snapshot(spark, path)
-    PqIndexState(readPqIndexStateAt(spark, snap),
-      IndexLayout.readComponent(spark, snap.dir("centroids")),
-      readIvfCellsLive(spark, snap))
-  }
-
-  /** [[queryIvfIndexPq]] over caller-held state — the per-batch body
-    * for streaming probes. Identical plan and output (the
-    * self-reading form delegates here). */
-  def queryIvfIndexPqWith(st: PqIndexState, queries: DataFrame,
-                          k: Int = 10, nprobe: Int = 4): DataFrame = {
-    val spark = queries.sparkSession
-    val codebook = st.codebook
-    val centroids = st.centroids
-    val index = st.cells
-
-    // same collected-probe shape as queryIvfIndex: the IN-list literal
-    // gives the scan a STATIC partition filter; the local relation
-    // broadcast-joins instead of re-running the centroid window
-    val probeW = Window.partitionBy("q_id").orderBy(col("c_cos").desc, col("c_id").asc)
-    val probeRows = queries.select(col("q_id"), col("q_v"))
-      .join(broadcast(centroids), lit(true))
-      .withColumn("c_cos", cosine(col("q_v"), col("c_v")))
-      .withColumn("r", row_number().over(probeW))
-      .filter(col("r") <= nprobe)
-      .select(col("q_id"), col("q_v"), col("c_id").as("cell"))
-      .collect()
-    val probeSchema = StructType(Seq(
-      StructField("q_id", queries.schema("q_id").dataType),
-      StructField("q_v", queries.schema("q_v").dataType),
-      StructField("cell", centroids.schema("c_id").dataType)))
-    val probes = spark.createDataFrame(
-      java.util.Arrays.asList(probeRows: _*), probeSchema)
-    val probedCells = probeRows.map(_.getLong(2)).distinct.toSeq
-    val w = Window.partitionBy("q_id").orderBy(col("qcos").desc, col("n_id").asc)
-    index.filter(col("cell").isin(probedCells: _*))
-      .join(broadcast(probes), Seq("cell"))
-      .filter(col("q_id") =!= col("n_id"))
-      .withColumn("qcos",
-        graft.functions.Pq.adcCosine(col("q_v"), col("code"), codebook))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("q_id", "n_id", "rank", "qcos")
-  }
-
-  /** APPEND new vectors to a persisted PQ IVF index — the
-    * [[appendToIvfIndexSq8]] analogue: the increment routes against
-    * the stored centroids and encodes under the STORED codebook (so
-    * appended codes are bit-identical to a rebuild on the union under
-    * the same centroids + codebook; a dimension mismatch refuses
-    * loudly inside the encode). PQ has no bounds to drift — codebook
-    * coverage degrades smoothly as the distribution moves, which is a
-    * recall concern for the periodic rebuild cadence, not a
-    * correctness refusal. */
-  def appendToIvfIndexPq(newVecs: DataFrame, idCol: String, vecCol: String,
-                         path: String): Unit = {
-    val spark = newVecs.sparkSession
-    IndexLayout.withIndexLock(spark, path, "append-ivf-pq") {
-      val snap = IndexLayout.snapshot(spark, path)
-      val codebook = readPqIndexStateAt(spark, snap)
-      val c = newVecs.select(col(idCol).as("n_id"), asDouble(col(vecCol)).as("n_v"))
-      refuseTombstoned(spark, snap, c, "appendToIvfIndexPq")
-      val cents = collectCentroidsAt(spark, snap.dir("centroids"))
-      assignToCells(c, cents)
-        .select(col("n_id"),
-          graft.functions.Pq.encode(col("n_v"), codebook).as("code"),
-          col("cell"))
-        .write.mode("append").partitionBy("cell").parquet(snap.dir("cells"))
-      IndexLayout.commit(spark, snap, Map.empty) // manifest fence (see appendToIvfIndex)
-      spark.catalog.refreshByPath(snap.dir("cells"))
+    IndexMaintenance.runGuardedAppend(spark, path, appendId) { stageDir =>
+      encodedIncrement(loadIvfIndex(spark, path), IndexLayout.snapshot(spark, path),
+        newVecs, idCol, vecCol, "appendToIvfIndexGuarded")
+        .write.partitionBy("cell").parquet(s"$stageDir/cells")
+    } { () =>
+      spark.catalog.refreshByPath(
+        IndexLayout.snapshot(spark, path).dir("cells"))
     }
-  }
-
-  /** Probe a persisted SQ8 IVF index: cell routing is FULL-precision
-    * (query × broadcast centroid cosine — centroids are stored
-    * unquantized, the standard IVF-SQ8 shape), candidate scoring is
-    * the dequantized (ADC) cosine of [[Quantization]]: the query
-    * quantizes under the INDEX bounds from meta, each stored code
-    * reconstructs to its bin center, and the exactly-rounded IEEE
-    * fold makes every score bit mirrorable cross-engine. Partition
-    * pruning is identical to [[queryIvfIndex]] — at most
-    * queries × nprobe cell directories are read (spec-asserted).
-    * Ranking is a proxy (as in any SQ8 index); production re-ranks
-    * survivors with full-precision vectors ([[bruteTopK]] composes). */
-  def queryIvfIndexSq8(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      queries: DataFrame, k: Int = 10, nprobe: Int = 4): DataFrame = {
-    val snap = IndexLayout.snapshot(spark, path)
-    val meta = IndexLayout.collectSmallComponent(spark, snap.dir("meta"))(0)
-    val format = meta.getAs[String]("format")
-    require(format == "sq8-v1",
-      s"index at $path has format '$format'; this build probes 'sq8-v1'")
-    val los = meta.getSeq[Double](meta.fieldIndex("los"))
-    val his = meta.getSeq[Double](meta.fieldIndex("his"))
-    val centroids = IndexLayout.readComponent(spark, snap.dir("centroids"))
-    val index = readIvfCellsLive(spark, snap)
-
-    // same collected-probe shape as queryIvfIndex: the IN-list literal
-    // gives the scan a STATIC partition filter; the local relation
-    // broadcast-joins instead of re-running the centroid window
-    val probeW = Window.partitionBy("q_id").orderBy(col("c_cos").desc, col("c_id").asc)
-    val probeRows = queries.select(col("q_id"), col("q_v"))
-      .join(broadcast(centroids), lit(true))
-      .withColumn("c_cos", cosine(col("q_v"), col("c_v")))
-      .withColumn("r", row_number().over(probeW))
-      .filter(col("r") <= nprobe)
-      .select(col("q_id"), col("q_v"), col("c_id").as("cell"))
-      .collect()
-    val probeSchema = StructType(Seq(
-      StructField("q_id", queries.schema("q_id").dataType),
-      StructField("q_v", queries.schema("q_v").dataType),
-      StructField("cell", centroids.schema("c_id").dataType)))
-    val probes = spark.createDataFrame(
-        java.util.Arrays.asList(probeRows: _*), probeSchema)
-      // the query quantizes ONCE per probe row, under the index bounds
-      .select(col("q_id"), col("cell"),
-        graft.functions.Quantize.int8(col("q_v"), los, his).as("q_code"))
-    val probedCells = probeRows.map(_.getLong(2)).distinct.toSeq
-    val w = Window.partitionBy("q_id").orderBy(col("qcos").desc, col("n_id").asc)
-    index.filter(col("cell").isin(probedCells: _*))
-      .join(broadcast(probes), Seq("cell"))
-      .filter(col("q_id") =!= col("n_id"))
-      .withColumn("qcos",
-        graft.functions.Quantize.dequantCosine(col("q_code"), col("code"), los, his))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("q_id", "n_id", "rank", "qcos")
   }
 
   /** SemDeDup-style semantic deduplication (Abbas et al. 2023,

@@ -692,7 +692,7 @@ object TextAnalysis {
 
   /** Build and PERSIST the BM25 index — build-once/score-many parity
     * with [[writeLmIndex]] / [[graft.operators.Dedup.writeMinhashIndex]]
-    * / [[graft.operators.Similarity.writeIvfIndexSq8]]: the corpus is
+    * / [[graft.operators.Similarity.writeIvfIndex]]: the corpus is
     * tokenized and aggregated ONCE, ever; each later probe (a query, a
     * query batch, a streaming micro-batch of queries) pays only its
     * matched postings. [[bm25TopK]]/[[bm25TopKMulti]] re-tokenize the
@@ -736,7 +736,7 @@ object TextAnalysis {
 
   /** APPEND new documents to a persisted BM25 index — incremental
     * lexical-index maintenance, the [[graft.operators.Similarity
-    * .appendToIvfIndexSq8]] analogue: the increment tokenizes ONCE
+    * .appendToIvfIndex]] analogue: the increment tokenizes ONCE
     * (its own size, never the corpus), its postings and lengths
     * append into the existing layout, and the corpus stats in meta
     * are replaced by the EXACT integer sums (old + increment) — so

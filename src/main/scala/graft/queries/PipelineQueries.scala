@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.operators.{AsofJoin, BloomJoin, Dedup, Funnel, MediaFixtures, Multimodal, Pii, RangeJoin, SaltedJoin, Sampling, Similarity, TextAnalysis}
+import graft.operators.{AsofJoin, BloomJoin, Dedup, Funnel, MediaFixtures, Multimodal, Pii, Quantization, RangeJoin, SaltedJoin, Sampling, Similarity, TextAnalysis}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -820,13 +820,15 @@ object PipelineQueries {
     * and every ADC score bit is value-checked. */
   def annIvfSq8(s: SparkSession, d: String): DataFrame = synchronized {
     probeSq8(s, d, GateFixture.buildOnce("graft_ivfsq8_v2", d) { dir =>
-      Similarity.writeIvfIndexSq8(embs(s, d), "vec_id", "embedding", dir.getPath, cells = 16)
+      val e = embs(s, d)
+      Similarity.writeIvfIndex(e, "vec_id", "embedding", dir.getPath, cells = 16,
+        codec = Similarity.IvfCodec.Sq8(Quantization.fitBounds(e, "embedding")))
     })
   }
 
   /** The SQ8 gates' probe: queries 0..4, top-10 over 4 probed cells. */
   private def probeSq8(s: SparkSession, d: String, idx: java.io.File): DataFrame =
-    Similarity.queryIvfIndexSq8(s, idx.getPath,
+    Similarity.queryIvfIndex(s, idx.getPath,
         Similarity.prepareQueries(queriesDf(s, d), "vec_id", "embedding"),
         k = 10, nprobe = 4)
       .orderBy("q_id", "rank")
@@ -839,13 +841,12 @@ object PipelineQueries {
     val all = embs(s, d)
     val prepared = Similarity.prepareQueries(all, "vec_id", "embedding")
       .select(col("q_id").as("n_id"), col("q_v").as("n_v"))
-    val bounds = graft.operators.Quantization.fitBounds(prepared, "n_v")
-    Similarity.writeIvfIndexSq8(
+    Similarity.writeIvfIndex(
       all.filter(col("vec_id") % 4 =!= 0), "vec_id", "embedding", path, cells = 16,
       centroids0 = Some(
         prepared.orderBy(col("n_id")).limit(16)
           .select(col("n_id").as("c_id"), col("n_v").as("c_v"))),
-      bounds0 = Some(bounds))
+      codec = Similarity.IvfCodec.Sq8(Quantization.fitBounds(prepared, "n_v")))
   }
 
   val annIvfSq8Sql: String = annIvfSq8SqlWhere("")
@@ -903,7 +904,7 @@ object PipelineQueries {
     * (vec_id % 4 ≠ 0) with centroids and bounds PINNED from the full
     * expected distribution (the production stance: quantization
     * config covers current and future data), then the remaining 1/4
-    * arrives as an increment via appendToIvfIndexSq8 — routed against
+    * arrives as an increment via appendToIvfIndex — routed against
     * the STORED centroids, quantized under the META bounds, appended
     * into the existing cells/ partitions with no corpus re-shuffle.
     * Because centroids and bounds are identical to a full build, the
@@ -914,7 +915,7 @@ object PipelineQueries {
   def annIvfAppend(s: SparkSession, d: String): DataFrame = synchronized {
     probeSq8(s, d, GateFixture.buildOnce("graft_ivfsq8app_v2", d) { dir =>
       writePinnedSq8Base(s, d, dir.getPath)
-      Similarity.appendToIvfIndexSq8(
+      Similarity.appendToIvfIndex(
         embs(s, d).filter(col("vec_id") % 4 === 0), "vec_id", "embedding", dir.getPath)
     })
   }
@@ -965,9 +966,9 @@ object PipelineQueries {
       val idx = dir.getPath
       writePinnedSq8Base(s, d, idx)
       val all = embs(s, d)
-      Similarity.appendToIvfIndexSq8(
+      Similarity.appendToIvfIndex(
         all.filter(col("vec_id") % 8 === 0), "vec_id", "embedding", idx)
-      Similarity.appendToIvfIndexSq8(
+      Similarity.appendToIvfIndex(
         all.filter(col("vec_id") % 8 === 4), "vec_id", "embedding", idx)
       val stats = graft.operators.IndexMaintenance.compactIvfIndex(s, idx)
       require(stats.filesAfter < stats.filesBefore && stats.filesAfter <= 16,
@@ -991,7 +992,8 @@ object PipelineQueries {
   def annIvfDelete(s: SparkSession, d: String): DataFrame = synchronized {
     probeSq8(s, d, GateFixture.buildOnce("graft_ivfsq8del_v2", d) { dir =>
       val all = embs(s, d)
-      Similarity.writeIvfIndexSq8(all, "vec_id", "embedding", dir.getPath, cells = 16)
+      Similarity.writeIvfIndex(all, "vec_id", "embedding", dir.getPath, cells = 16,
+        codec = Similarity.IvfCodec.Sq8(Quantization.fitBounds(all, "embedding")))
       graft.operators.IndexMaintenance.deleteFromIvfIndex(
         all.filter(col("vec_id") % 5 === 2).select("vec_id"), "vec_id", dir.getPath)
     })
@@ -1011,7 +1013,7 @@ object PipelineQueries {
     * argmin encode, reconstructs, and folds the same cosine — every
     * code and every ADC score bit is value-checked. */
   def annPq(s: SparkSession, d: String): DataFrame = synchronized {
-    Similarity.queryIvfIndexPq(s, pqIndex(s, d),
+    Similarity.queryIvfIndex(s, pqIndex(s, d),
         Similarity.prepareQueries(queriesDf(s, d), "vec_id", "embedding"),
         k = 10, nprobe = 4)
       .orderBy("q_id", "rank")
@@ -1021,9 +1023,15 @@ object PipelineQueries {
     * q_ann_pq_rerank, q_hybrid_served and q_stream_hybrid_serve. */
   private def pqIndex(s: SparkSession, d: String): String =
     GateFixture.buildOnce("graft_ivfpq_v2", d) { dir =>
-      Similarity.writeIvfIndexPq(embs(s, d), "vec_id", "embedding", dir.getPath,
-        cells = 16, m = 8, ks = 16)
+      writePq(embs(s, d), dir.getPath)
     }.getPath
+
+  /** The PQ gates' build: 16 cells, m=8, ks=16 under the deterministic
+    * lowest-id codebook. */
+  private def writePq(corpus: DataFrame, path: String): Unit =
+    Similarity.writeIvfIndex(corpus, "vec_id", "embedding", path, cells = 16,
+      codec = Similarity.IvfCodec.Pq(
+        Quantization.trainPqCodebook(corpus, "vec_id", "embedding", m = 8, ks = 16)))
 
   val annPqSql: String = annPqSqlK(10) + "\nORDER BY q_id, rank"
 
@@ -1042,12 +1050,11 @@ object PipelineQueries {
   def annPqDelete(s: SparkSession, d: String): DataFrame = synchronized {
     val idx = GateFixture.buildOnce("graft_ivfpqdel_v2", d) { dir =>
       val all = embs(s, d)
-      Similarity.writeIvfIndexPq(all, "vec_id", "embedding", dir.getPath,
-        cells = 16, m = 8, ks = 16)
+      writePq(all, dir.getPath)
       graft.operators.IndexMaintenance.deleteFromIvfIndex(
         all.filter(col("vec_id") % 5 === 2).select("vec_id"), "vec_id", dir.getPath)
     }
-    Similarity.queryIvfIndexPq(s, idx.getPath,
+    Similarity.queryIvfIndex(s, idx.getPath,
         Similarity.prepareQueries(queriesDf(s, d), "vec_id", "embedding"),
         k = 10, nprobe = 4)
       .orderBy("q_id", "rank")
@@ -1116,7 +1123,7 @@ object PipelineQueries {
     * are value-checked end to end. */
   def annPqRerank(s: SparkSession, d: String): DataFrame = synchronized {
     val queries = Similarity.prepareQueries(queriesDf(s, d), "vec_id", "embedding")
-    val cand = Similarity.queryIvfIndexPq(s, pqIndex(s, d), queries, k = 30, nprobe = 4)
+    val cand = Similarity.queryIvfIndex(s, pqIndex(s, d), queries, k = 30, nprobe = 4)
     Similarity.rerankCandidates(embs(s, d), queries, cand,
         "vec_id", "embedding", k = 10)
       .orderBy("q_id", "rank")
@@ -2955,7 +2962,7 @@ object PipelineQueries {
     * the persisted BM25 index serves the lexical top-30
     * (scoreWithBm25IndexMulti — corpus never re-tokenizes), the
     * persisted PQ index nominates top-30 ANN candidates
-    * (queryIvfIndexPq, partition-pruned ADC) which re-rank to an
+    * (queryIvfIndex, partition-pruned ADC) which re-rank to an
     * exact-cosine top-10 (rerankCandidates), and the two lists fuse
     * per query with RRF (rrfGrouped, k=60). All three stages read
     * ONLY persisted indexes. Queries 0..2 carry both a term set (the

@@ -5,27 +5,28 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.operators.{IndexMaintenance, Similarity}
 
 /** STREAMING incremental ANN index maintenance — the write-side
-  * composition of [[graft.operators.Similarity.appendToIvfIndexSq8]]
+  * composition of [[graft.operators.Similarity.appendToIvfIndex]]
   * with a vector stream: a continuous crawl's embedding micro-batches
-  * append into the persisted SQ8 IVF index as they arrive, so the
-  * serving side ([[graft.operators.Similarity.queryIvfIndexSq8]])
+  * append into the persisted IVF index (any codec) as they arrive, so
+  * the serving side ([[graft.operators.Similarity.queryIvfIndex]])
   * always probes the freshest corpus without ever paying a rebuild.
   * This closes the streaming story for the index family: dedup and LM
   * score streams READ a fixed index; this stream WRITES one.
   *
   * Semantics inherited from the batch append, unchanged: increments
-  * route against the STORED centroids and quantize under the META
-  * bounds (appended codes ≡ what a rebuild on the union would store),
-  * and an increment exceeding the pinned bounds fails the batch
-  * loudly — bounds drift is a rebuild, not an append. Because cell
-  * assignment is per-vector, the index state after any prefix of
+  * route against the STORED centroids and encode under the stored
+  * codec (SQ8 meta bounds, PQ codebook — appended codes ≡ what a
+  * rebuild on the union would store), and an increment an SQ8 index's
+  * pinned bounds do not cover, or of another dimension, fails the
+  * batch loudly — bounds drift is a rebuild, not an append. Because
+  * cell assignment is per-vector, the index state after any prefix of
   * batches equals the batch append of those batches' union —
   * batch-boundary-independent by construction (spec-pinned:
   * stream-append ≡ one-shot append ≡ rebuild).
   *
-  * The append state (meta bounds + centroid table) loads ONCE at
-  * stream start ([[Similarity.loadIvfSq8AppendState]]); each
-  * micro-batch pays only its own assignment + quantize projection.
+  * The index state (codec + centroid table) loads ONCE at stream
+  * start ([[Similarity.loadIvfIndex]]); each micro-batch pays only its
+  * own assignment + encode projection.
   *
   * Delivery: replay-safe via [[IdempotentSink.oncePerBatch]] markers
   * under `<index>/_batches/` — a crash-replayed committed batch does
@@ -42,7 +43,7 @@ import graft.operators.{IndexMaintenance, Similarity}
 object StreamingIvfAppend {
 
   /** Append `stream` (a streaming DataFrame of (idCol, vecCol) rows)
-    * into the SQ8 IVF index at `indexPath`. Returns after the stream
+    * into the IVF index at `indexPath`. Returns after the stream
     * terminates (AvailableNow-style callers await inside). `maintain`
     * makes the stream self-tending ([[StreamingIndexIngest]]'s shape
     * for this family): the policy entry runs after every batch's
@@ -55,27 +56,25 @@ object StreamingIvfAppend {
           idCol: String, vecCol: String, checkpoint: String,
           maintain: Option[IndexMaintenance.IvfMaintenancePolicy] = None)
       : Unit =
-    runWithState(Similarity.loadIvfSq8AppendState(spark, indexPath),
-      stream, indexPath, idCol, vecCol, checkpoint, maintain)
+    runWithState(Similarity.loadIvfIndex(spark, indexPath),
+      stream, idCol, vecCol, checkpoint, maintain)
 
   /** [[run]] with the append state already loaded. */
-  def runWithState(state: Similarity.IvfSq8AppendState, stream: DataFrame,
-                   indexPath: String, idCol: String, vecCol: String,
-                   checkpoint: String,
+  def runWithState(state: Similarity.IvfIndexState, stream: DataFrame,
+                   idCol: String, vecCol: String, checkpoint: String,
                    maintain: Option[IndexMaintenance.IvfMaintenancePolicy] =
                      None): Unit = {
     stream.writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         IdempotentSink.oncePerBatch(batch.sparkSession,
-            s"$indexPath/_batches", batchId) {
-          Similarity.appendToIvfIndexSq8With(state, batch.toDF(),
-            idCol, vecCol, indexPath)
+            s"${state.path}/_batches", batchId) {
+          Similarity.appendToIvfIndexWith(state, batch.toDF(), idCol, vecCol)
         }
         // outside the marker: a replayed committed batch skips its
         // append but still gets the maintenance check (idempotent,
         // lease-guarded, probe-identical when it fires)
         maintain.foreach(p => IndexMaintenance
-          .maintainIvfIndex(batch.sparkSession, indexPath, p))
+          .maintainIvfIndex(batch.sparkSession, state.path, p))
         ()
       }
       .option("checkpointLocation", checkpoint)

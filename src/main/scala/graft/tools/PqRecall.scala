@@ -6,7 +6,7 @@ import graft.operators.{Quantization, Similarity}
   * (PQ-nominate k0 + exact re-rank) composition, under BOTH the
   * deterministic lowest-id codebook (the SQL-mirrorable gate book)
   * and the per-subspace k-means refinement (the quality book
-  * writeIvfIndexPq's codebook0 accepts). Recorded output (sf0.001,
+  * a PQ writeIvfIndex's IvfCodec.Pq accepts). Recorded output (sf0.001,
   * m=8, ks=16, the 5-query probe set): lowest-id raw 0.36, two-stage
   * k0=10/30/50/100 → 0.36/0.64/0.74/0.90; kmeans(3) raw 0.30,
   * two-stage → 0.30/0.50/0.66/0.84. The 5-query sample is NOISY —

@@ -54,8 +54,9 @@ class ConcurrentSpec extends SparkSpec {
     val docs = Tables.documents(spark, sf()).select("doc_id", "text")
     val embs = Tables.embeddings(spark, sf())
     TextAnalysis.writeBm25Index(docs, "doc_id", "text", s"$base/bm")
-    Similarity.writeIvfIndexPq(embs, "vec_id", "embedding", s"$base/pq",
-      cells = 8, m = 8, ks = 16)
+    Similarity.writeIvfIndex(embs, "vec_id", "embedding", s"$base/pq",
+      cells = 8, codec = Similarity.IvfCodec.Pq(
+        Quantization.trainPqCodebook(embs, "vec_id", "embedding", 8, 16)))
     val state = Retrieval.loadHybridState(spark, s"$base/bm", s"$base/pq")
     val terms = Seq((0L, "spark"), (0L, "window"), (1L, "hash"), (1L, "join"))
       .toDF("query_id", "term")

@@ -55,18 +55,19 @@ class IndexLayoutSpec extends SparkSpec {
     val q = Similarity.prepareQueries(all.filter($"vec_id" < 5),
       "vec_id", "embedding")
     val dir = tmp("layoutivf")
-    Similarity.writeIvfIndexSq8(all, "vec_id", "embedding", dir, cells = 16)
+    Similarity.writeIvfIndex(all, "vec_id", "embedding", dir, cells = 16,
+      codec = Similarity.IvfCodec.Sq8(Quantization.fitBounds(all, "embedding")))
     val preDelete = rows(
-      Similarity.queryIvfIndexSq8(spark, dir, q, k = 10, nprobe = 4)
+      Similarity.queryIvfIndex(spark, dir, q, k = 10, nprobe = 4)
         .orderBy("q_id", "rank"))
     // plan (but do not execute) probes against the pre-delete snapshot;
     // plannedStale stays unexecuted until after the vacuum (an executed
     // plan legitimately reuses its own shuffle output)
     val plannedBefore = Similarity
-      .queryIvfIndexSq8(spark, dir, q, k = 10, nprobe = 4)
+      .queryIvfIndex(spark, dir, q, k = 10, nprobe = 4)
       .orderBy("q_id", "rank")
     val plannedStale = Similarity
-      .queryIvfIndexSq8(spark, dir, q, k = 10, nprobe = 4)
+      .queryIvfIndex(spark, dir, q, k = 10, nprobe = 4)
       .orderBy("q_id", "rank")
     IndexMaintenance.deleteFromIvfIndex(
       all.filter($"vec_id" % 5 === 2).select("vec_id"), "vec_id", dir)
@@ -94,15 +95,15 @@ class IndexLayoutSpec extends SparkSpec {
     val want = tmp("layoutivfwant")
     val prepared = Similarity.prepareQueries(all, "vec_id", "embedding")
       .select($"q_id".as("n_id"), $"q_v".as("n_v"))
-    Similarity.writeIvfIndexSq8(all.filter($"vec_id" % 5 =!= 2),
+    Similarity.writeIvfIndex(all.filter($"vec_id" % 5 =!= 2),
       "vec_id", "embedding", want, cells = 16,
       centroids0 = Some(prepared.orderBy($"n_id").limit(16)
         .select($"n_id".as("c_id"), $"n_v".as("c_v"))),
-      bounds0 = Some(Quantization.fitBounds(prepared, "n_v")))
+      codec = Similarity.IvfCodec.Sq8(Quantization.fitBounds(prepared, "n_v")))
     assert(
-      rows(Similarity.queryIvfIndexSq8(spark, dir, q, k = 10, nprobe = 4)
+      rows(Similarity.queryIvfIndex(spark, dir, q, k = 10, nprobe = 4)
         .orderBy("q_id", "rank")) ==
-      rows(Similarity.queryIvfIndexSq8(spark, want, q, k = 10, nprobe = 4)
+      rows(Similarity.queryIvfIndex(spark, want, q, k = 10, nprobe = 4)
         .orderBy("q_id", "rank")))
     rm(dir); rm(want)
   }

@@ -75,22 +75,22 @@ class IndexMaintenanceSpec extends SparkSpec {
     val q = Similarity.prepareQueries(all.filter($"vec_id" < 5),
       "vec_id", "embedding")
     val dir = tmp("ivfcompact")
-    Similarity.writeIvfIndexSq8(all.filter($"vec_id" % 4 =!= 0),
+    Similarity.writeIvfIndex(all.filter($"vec_id" % 4 =!= 0),
       "vec_id", "embedding", dir, cells = 16,
-      centroids0 = Some(cents), bounds0 = Some(bounds))
-    Similarity.appendToIvfIndexSq8(all.filter($"vec_id" % 8 === 0),
+      centroids0 = Some(cents), codec = Similarity.IvfCodec.Sq8(bounds))
+    Similarity.appendToIvfIndex(all.filter($"vec_id" % 8 === 0),
       "vec_id", "embedding", dir)
-    Similarity.appendToIvfIndexSq8(all.filter($"vec_id" % 8 === 4),
+    Similarity.appendToIvfIndex(all.filter($"vec_id" % 8 === 4),
       "vec_id", "embedding", dir)
-    val before = rows(Similarity.queryIvfIndexSq8(spark, dir, q, k = 10, nprobe = 4)
+    val before = rows(Similarity.queryIvfIndex(spark, dir, q, k = 10, nprobe = 4)
       .orderBy("q_id", "rank"))
     val stats = IndexMaintenance.compactIvfIndex(spark, dir)
     assert(stats.filesAfter < stats.filesBefore, s"got $stats")
     assert(stats.filesAfter <= 16, s"one file per cell expected, got $stats")
-    val after = Similarity.queryIvfIndexSq8(spark, dir, q, k = 10, nprobe = 4)
+    val after = Similarity.queryIvfIndex(spark, dir, q, k = 10, nprobe = 4)
     assert(rows(after.orderBy("q_id", "rank")) == before)
     // compaction preserved the partition-pruned probe shape
-    val plan = Similarity.queryIvfIndexSq8(spark, dir,
+    val plan = Similarity.queryIvfIndex(spark, dir,
       q.filter($"q_id" === 0), k = 10, nprobe = 4).queryExecution.sparkPlan
     val scans = plan.collect {
       case f: org.apache.spark.sql.execution.FileSourceScanExec
@@ -169,18 +169,18 @@ class IndexMaintenanceSpec extends SparkSpec {
     val q = Similarity.prepareQueries(all.filter($"vec_id" < 5),
       "vec_id", "embedding")
     val dir = tmp("ivfdel")
-    Similarity.writeIvfIndexSq8(all, "vec_id", "embedding", dir, cells = 16,
-      centroids0 = Some(cents), bounds0 = Some(bounds))
+    Similarity.writeIvfIndex(all, "vec_id", "embedding", dir, cells = 16,
+      centroids0 = Some(cents), codec = Similarity.IvfCodec.Sq8(bounds))
     IndexMaintenance.deleteFromIvfIndex(
       all.filter($"vec_id" % 5 === 2).select("vec_id"), "vec_id", dir)
     val want = tmp("ivfdelwant")
-    Similarity.writeIvfIndexSq8(all.filter($"vec_id" % 5 =!= 2),
+    Similarity.writeIvfIndex(all.filter($"vec_id" % 5 =!= 2),
       "vec_id", "embedding", want, cells = 16,
-      centroids0 = Some(cents), bounds0 = Some(bounds))
+      centroids0 = Some(cents), codec = Similarity.IvfCodec.Sq8(bounds))
     assert(
-      rows(Similarity.queryIvfIndexSq8(spark, dir, q, k = 10, nprobe = 4)
+      rows(Similarity.queryIvfIndex(spark, dir, q, k = 10, nprobe = 4)
         .orderBy("q_id", "rank")) ==
-      rows(Similarity.queryIvfIndexSq8(spark, want, q, k = 10, nprobe = 4)
+      rows(Similarity.queryIvfIndex(spark, want, q, k = 10, nprobe = 4)
         .orderBy("q_id", "rank")))
     // the delete is a tombstone write, not a cell rewrite: the cells
     // component is byte-untouched, the manifest names the tombstones
@@ -205,9 +205,9 @@ class IndexMaintenanceSpec extends SparkSpec {
           r.getAs[Number](2).longValue()))
     assert(cellRows(dir) == cellRows(want))
     assert(
-      rows(Similarity.queryIvfIndexSq8(spark, dir, q, k = 10, nprobe = 4)
+      rows(Similarity.queryIvfIndex(spark, dir, q, k = 10, nprobe = 4)
         .orderBy("q_id", "rank")) ==
-      rows(Similarity.queryIvfIndexSq8(spark, want, q, k = 10, nprobe = 4)
+      rows(Similarity.queryIvfIndex(spark, want, q, k = 10, nprobe = 4)
         .orderBy("q_id", "rank")))
     rm(dir); rm(want)
 
@@ -217,7 +217,8 @@ class IndexMaintenanceSpec extends SparkSpec {
       (3L, Array(0.1f, 0.9f)), (4L, Array(0.9f, 0.1f))
     ).toDF("vec_id", "embedding")
     val tdir = tmp("ivfdeltiny")
-    Similarity.writeIvfIndexSq8(tiny, "vec_id", "embedding", tdir, cells = 2)
+    Similarity.writeIvfIndex(tiny, "vec_id", "embedding", tdir, cells = 2,
+      codec = Similarity.IvfCodec.Sq8(Quantization.fitBounds(tiny, "embedding")))
     IndexMaintenance.deleteFromIvfIndex(
       Seq(2L, 3L).toDF("vec_id"), "vec_id", tdir) // the whole "near 1,1" cell
     val left = Similarity.readIvfCellsLive(
@@ -226,7 +227,7 @@ class IndexMaintenanceSpec extends SparkSpec {
     assert(left == Set(1L, 4L))
     val tq = Similarity.prepareQueries(tiny.filter($"vec_id" === 1),
       "vec_id", "embedding")
-    val probed = Similarity.queryIvfIndexSq8(spark, tdir, tq, k = 10, nprobe = 2)
+    val probed = Similarity.queryIvfIndex(spark, tdir, tq, k = 10, nprobe = 2)
       .collect().map(_.getLong(1)).toSet
     assert(probed == Set(4L))
     // deleting EVERYTHING refuses before anything publishes
@@ -252,28 +253,28 @@ class IndexMaintenanceSpec extends SparkSpec {
         when($"vec_id" % 7 === 3 && $"emb2".isNotNull, $"emb2")
           .otherwise($"embedding").as("embedding"))
     val dir = tmp("ivfreingest")
-    Similarity.writeIvfIndexSq8(all, "vec_id", "embedding", dir, cells = 16,
-      centroids0 = Some(cents), bounds0 = Some(bounds))
+    Similarity.writeIvfIndex(all, "vec_id", "embedding", dir, cells = 16,
+      centroids0 = Some(cents), codec = Similarity.IvfCodec.Sq8(bounds))
     IndexMaintenance.deleteFromIvfIndex(
       all.filter($"vec_id" % 7 === 3).select("vec_id"), "vec_id", dir)
     // bare re-append of a tombstoned id refuses loudly — the stored
     // rows still exist physically and would shadow or swallow it
     val e = intercept[IllegalArgumentException] {
-      Similarity.appendToIvfIndexSq8(
+      Similarity.appendToIvfIndex(
         changed.filter($"vec_id" % 7 === 3), "vec_id", "embedding", dir)
     }
     assert(e.getMessage.contains("tombstoned"), e.getMessage)
     // the documented composition: compact (materialize) then append
     IndexMaintenance.compactIvfIndex(spark, dir)
-    Similarity.appendToIvfIndexSq8(
+    Similarity.appendToIvfIndex(
       changed.filter($"vec_id" % 7 === 3), "vec_id", "embedding", dir)
     val want = tmp("ivfreingestwant")
-    Similarity.writeIvfIndexSq8(changed, "vec_id", "embedding", want,
-      cells = 16, centroids0 = Some(cents), bounds0 = Some(bounds))
+    Similarity.writeIvfIndex(changed, "vec_id", "embedding", want,
+      cells = 16, centroids0 = Some(cents), codec = Similarity.IvfCodec.Sq8(bounds))
     assert(
-      rows(Similarity.queryIvfIndexSq8(spark, dir, q, k = 10, nprobe = 4)
+      rows(Similarity.queryIvfIndex(spark, dir, q, k = 10, nprobe = 4)
         .orderBy("q_id", "rank")) ==
-      rows(Similarity.queryIvfIndexSq8(spark, want, q, k = 10, nprobe = 4)
+      rows(Similarity.queryIvfIndex(spark, want, q, k = 10, nprobe = 4)
         .orderBy("q_id", "rank")))
     rm(dir); rm(want)
   }
@@ -508,35 +509,39 @@ class IndexMaintenanceSpec extends SparkSpec {
     val (cents, bounds) = pins(all)
     val q = Similarity.prepareQueries(all.filter($"vec_id" < 5),
       "vec_id", "embedding")
-    val a = tmp("ivfgA"); val b = tmp("ivfgB")
-    for (d <- Seq(a, b))
-      Similarity.writeIvfIndexSq8(all.filter($"vec_id" % 4 =!= 0),
-        "vec_id", "embedding", d, cells = 16,
-        centroids0 = Some(cents), bounds0 = Some(bounds))
-    Similarity.appendToIvfIndexSq8(all.filter($"vec_id" % 4 === 0),
-      "vec_id", "embedding", a)
-    assert(Similarity.appendToIvfIndexSq8Guarded(
-      all.filter($"vec_id" % 4 === 0), "vec_id", "embedding", b, "day-1"))
-    assert(
-      rows(Similarity.queryIvfIndexSq8(spark, b, q, k = 10, nprobe = 4)
-        .orderBy("q_id", "rank")) ==
-      rows(Similarity.queryIvfIndexSq8(spark, a, q, k = 10, nprobe = 4)
-        .orderBy("q_id", "rank")))
-    val n = spark.read.parquet(s"$b/cells").count()
-    assert(!Similarity.appendToIvfIndexSq8Guarded(
-      all.filter($"vec_id" % 4 === 0), "vec_id", "embedding", b, "day-1"))
-    spark.catalog.refreshByPath(s"$b/cells")
-    assert(spark.read.parquet(s"$b/cells").count() == n)
-    rm(a); rm(b)
+    val inc = all.filter($"vec_id" % 4 === 0)
+    // every codec goes through the one guarded form
+    for (codec <- Seq(Similarity.IvfCodec.Float, Similarity.IvfCodec.Sq8(bounds),
+        Similarity.IvfCodec.Pq(
+          Quantization.trainPqCodebook(all, "vec_id", "embedding", 8, 16)))) {
+      val a = tmp("ivfgA"); val b = tmp("ivfgB")
+      for (d <- Seq(a, b))
+        Similarity.writeIvfIndex(all.filter($"vec_id" % 4 =!= 0),
+          "vec_id", "embedding", d, cells = 16,
+          centroids0 = Some(cents), codec = codec)
+      Similarity.appendToIvfIndex(inc, "vec_id", "embedding", a)
+      assert(Similarity.appendToIvfIndexGuarded(inc, "vec_id", "embedding", b, "day-1"))
+      val want = rows(Similarity.queryIvfIndex(spark, a, q, k = 10, nprobe = 4)
+        .orderBy("q_id", "rank"))
+      assert(want.nonEmpty)
+      assert(rows(Similarity.queryIvfIndex(spark, b, q, k = 10, nprobe = 4)
+        .orderBy("q_id", "rank")) == want, codec.productPrefix)
+      val n = spark.read.parquet(s"$b/cells").count()
+      assert(!Similarity.appendToIvfIndexGuarded(inc, "vec_id", "embedding", b, "day-1"))
+      spark.catalog.refreshByPath(s"$b/cells")
+      assert(spark.read.parquet(s"$b/cells").count() == n, codec.productPrefix)
+      rm(a); rm(b)
+    }
 
     // bounds drift refuses at STAGE time — the live index is untouched
     val base = Seq((1L, Array(0.0f, 0.0f)), (2L, Array(1.0f, 1.0f)))
       .toDF("vec_id", "embedding")
     val dir = tmp("ivfgdrift")
-    Similarity.writeIvfIndexSq8(base, "vec_id", "embedding", dir, cells = 2)
+    Similarity.writeIvfIndex(base, "vec_id", "embedding", dir, cells = 2,
+      codec = Similarity.IvfCodec.Sq8(Quantization.fitBounds(base, "embedding")))
     val beforeN = spark.read.parquet(s"$dir/cells").count()
     val e = intercept[IllegalArgumentException] {
-      Similarity.appendToIvfIndexSq8Guarded(
+      Similarity.appendToIvfIndexGuarded(
         Seq((9L, Array(0.5f, 2.0f))).toDF("vec_id", "embedding"),
         "vec_id", "embedding", dir, "bad-1")
     }
@@ -571,19 +576,19 @@ class IndexMaintenanceSpec extends SparkSpec {
     val q = Similarity.prepareQueries(all.filter($"vec_id" < 5),
       "vec_id", "embedding")
     val dir = tmp("ivfbigdel")
-    Similarity.writeIvfIndexSq8(all, "vec_id", "embedding", dir, cells = 16,
-      centroids0 = Some(cents), bounds0 = Some(bounds))
+    Similarity.writeIvfIndex(all, "vec_id", "embedding", dir, cells = 16,
+      centroids0 = Some(cents), codec = Similarity.IvfCodec.Sq8(bounds))
     val bigDel = all.filter($"vec_id" % 5 === 2).select($"vec_id")
       .unionByName(spark.range(10000000L, 10300000L).select($"id".as("vec_id")))
     IndexMaintenance.deleteFromIvfIndex(bigDel, "vec_id", dir)
     val want = tmp("ivfbigdelwant")
-    Similarity.writeIvfIndexSq8(all.filter($"vec_id" % 5 =!= 2),
+    Similarity.writeIvfIndex(all.filter($"vec_id" % 5 =!= 2),
       "vec_id", "embedding", want, cells = 16,
-      centroids0 = Some(cents), bounds0 = Some(bounds))
+      centroids0 = Some(cents), codec = Similarity.IvfCodec.Sq8(bounds))
     assert(
-      rows(Similarity.queryIvfIndexSq8(spark, dir, q, k = 10, nprobe = 4)
+      rows(Similarity.queryIvfIndex(spark, dir, q, k = 10, nprobe = 4)
         .orderBy("q_id", "rank")) ==
-      rows(Similarity.queryIvfIndexSq8(spark, want, q, k = 10, nprobe = 4)
+      rows(Similarity.queryIvfIndex(spark, want, q, k = 10, nprobe = 4)
         .orderBy("q_id", "rank")))
     rm(dir); rm(want)
   }
@@ -594,9 +599,10 @@ class IndexMaintenanceSpec extends SparkSpec {
       (1L, Array(1.0f, 0.0f)), (2L, Array(0.0f, 1.0f))
     ).toDF("vec_id", "embedding")
     val dir = tmp("ivfdupdel")
-    Similarity.writeIvfIndexSq8(tiny, "vec_id", "embedding", dir, cells = 2)
+    Similarity.writeIvfIndex(tiny, "vec_id", "embedding", dir, cells = 2,
+      codec = Similarity.IvfCodec.Sq8(Quantization.fitBounds(tiny, "embedding")))
     // IVF appends never dedup ids — duplicate id 2 physically
-    Similarity.appendToIvfIndexSq8(
+    Similarity.appendToIvfIndex(
       Seq((2L, Array(0.0f, 1.0f))).toDF("vec_id", "embedding"),
       "vec_id", "embedding", dir)
     spark.catalog.refreshByPath(s"$dir/cells")
@@ -620,8 +626,8 @@ class IndexMaintenanceSpec extends SparkSpec {
     val q = Similarity.prepareQueries(all.filter($"vec_id" < 5),
       "vec_id", "embedding")
     val dir = tmp("ivfmaint")
-    Similarity.writeIvfIndexSq8(all, "vec_id", "embedding", dir, cells = 16,
-      centroids0 = Some(cents), bounds0 = Some(bounds))
+    Similarity.writeIvfIndex(all, "vec_id", "embedding", dir, cells = 16,
+      centroids0 = Some(cents), codec = Similarity.IvfCodec.Sq8(bounds))
     val never = IndexMaintenance.IvfMaintenancePolicy(
       maxTombstoneFraction = 2.0, maxFilesPerCell = 1e9)
     assert(IndexMaintenance.maintainIvfIndex(spark, dir, never).isEmpty)
@@ -634,7 +640,7 @@ class IndexMaintenanceSpec extends SparkSpec {
     val nDead = spark.read.parquet(
       IndexLayout.snapshot(spark, dir).dir("tombstones")).count()
     val frac = nDead.toDouble / nIds
-    val before = rows(Similarity.queryIvfIndexSq8(spark, dir, q,
+    val before = rows(Similarity.queryIvfIndex(spark, dir, q,
       k = 10, nprobe = 4).orderBy("q_id", "rank"))
     assert(IndexMaintenance.maintainIvfIndex(spark, dir,
       IndexMaintenance.IvfMaintenancePolicy(
@@ -645,12 +651,12 @@ class IndexMaintenanceSpec extends SparkSpec {
     assert(st.nonEmpty, "policy at the exact threshold must fire")
     // compaction materialized the tombstones; probes identical
     assert(!IndexLayout.snapshot(spark, dir).names("tombstones"))
-    assert(rows(Similarity.queryIvfIndexSq8(spark, dir, q,
+    assert(rows(Similarity.queryIvfIndex(spark, dir, q,
       k = 10, nprobe = 4).orderBy("q_id", "rank")) == before)
 
     // files-per-cell trigger, same exactness: threshold == the real
     // ratio fires, anything above it does not
-    Similarity.appendToIvfIndexSq8( // accumulate small files (a real
+    Similarity.appendToIvfIndex( // accumulate small files (a real
       // corpus vector re-keyed — guaranteed inside the pinned bounds)
       all.filter($"vec_id" === 7)
         .select(lit(10000001L).as("vec_id"), $"embedding"),

@@ -210,11 +210,12 @@ class PqSpec extends SparkSpec {
     val q = Similarity.prepareQueries(all.filter($"vec_id" < 5),
       "vec_id", "embedding")
     val full = java.nio.file.Files.createTempDirectory("ivfpq").toString
-    Similarity.writeIvfIndexPq(all, "vec_id", "embedding", full,
-      cells = 16, m = 8, ks = 16)
+    Similarity.writeIvfIndex(all, "vec_id", "embedding", full,
+      cells = 16, codec = Similarity.IvfCodec.Pq(
+        Quantization.trainPqCodebook(all, "vec_id", "embedding", 8, 16)))
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3))).toSet
-    val fullProbe = rows(Similarity.queryIvfIndexPq(spark, full, q,
+    val fullProbe = rows(Similarity.queryIvfIndex(spark, full, q,
       k = 10, nprobe = 4))
     assert(fullProbe.nonEmpty)
 
@@ -228,27 +229,35 @@ class PqSpec extends SparkSpec {
       .select($"n_id".as("c_id"), $"n_v".as("c_v"))
     val cb = Quantization.trainPqCodebook(all, "vec_id", "embedding", 8, 16)
     val incr = java.nio.file.Files.createTempDirectory("ivfpq2").toString
-    Similarity.writeIvfIndexPq(all.filter($"vec_id" % 4 =!= 0),
-      "vec_id", "embedding", incr, cells = 16, m = 8, ks = 16,
-      centroids0 = Some(cents), codebook0 = Some(cb))
-    Similarity.appendToIvfIndexPq(all.filter($"vec_id" % 4 === 0),
+    Similarity.writeIvfIndex(all.filter($"vec_id" % 4 =!= 0),
+      "vec_id", "embedding", incr, cells = 16,
+      centroids0 = Some(cents), codec = Similarity.IvfCodec.Pq(cb))
+    Similarity.appendToIvfIndex(all.filter($"vec_id" % 4 === 0),
       "vec_id", "embedding", incr)
-    assert(rows(Similarity.queryIvfIndexPq(spark, incr, q,
+    assert(rows(Similarity.queryIvfIndex(spark, incr, q,
       k = 10, nprobe = 4)) == fullProbe)
 
-    // format-tag refusal: an SQ8 probe of a PQ index (and vice versa)
-    // must refuse loudly
-    val e = intercept[IllegalArgumentException] {
-      Similarity.queryIvfIndexSq8(spark, full, q)
-    }
-    assert(e.getMessage.contains("format"), e.getMessage)
+    // the one probe reads each index's codec from what it stores: the
+    // PQ index probes with its codebook, an SQ8 index of the same
+    // corpus with its bounds — each codec's own rows, no argument
     val sq8 = java.nio.file.Files.createTempDirectory("ivfsq8x").toString
-    Similarity.writeIvfIndexSq8(all, "vec_id", "embedding", sq8, cells = 16)
-    val e2 = intercept[Exception] {
-      Similarity.queryIvfIndexPq(spark, sq8, q).collect()
+    val bounds = Quantization.fitBounds(all, "embedding")
+    Similarity.writeIvfIndex(all, "vec_id", "embedding", sq8, cells = 16,
+      codec = Similarity.IvfCodec.Sq8(bounds))
+    assert(Similarity.loadIvfIndex(spark, full).codec ==
+      Similarity.IvfCodec.Pq(Quantization.trainPqCodebook(all, "vec_id", "embedding", 8, 16)))
+    assert(Similarity.loadIvfIndex(spark, sq8).codec == Similarity.IvfCodec.Sq8(bounds))
+    val sq8Probe = Similarity.queryIvfIndex(spark, sq8, q, k = 10, nprobe = 4)
+    assert(sq8Probe.columns.toSeq == Seq("q_id", "n_id", "rank", "qcos"))
+    val sq8Rows = rows(sq8Probe)
+    assert(sq8Rows.nonEmpty && sq8Rows != fullProbe)
+    // a foreign tag still refuses, before the probe reads any cell
+    Seq((8, 16, 8, "pq-m8-v2")).toDF("m", "ks", "sub_dim", "format")
+      .coalesce(1).write.mode("overwrite").parquet(s"$full/meta")
+    val e = intercept[IllegalArgumentException] {
+      Similarity.queryIvfIndex(spark, full, q)
     }
-    assert(e2.getMessage.contains("format") || e2.getMessage.contains("pq"),
-      e2.getMessage)
+    assert(e.getMessage.contains("format 'pq-m8-v2'"), e.getMessage)
     for (p <- Seq(full, incr, sq8))
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(p))
   }

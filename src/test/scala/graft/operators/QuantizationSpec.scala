@@ -102,7 +102,8 @@ class QuantizationSpec extends SparkSpec {
   test("SQ8 IVF index: codes stored (4× smaller), routing == float index, deterministic probes") {
     val dir = java.nio.file.Files.createTempDirectory("ivfsq8").toString
     try {
-      Similarity.writeIvfIndexSq8(embs, "vec_id", "embedding", dir, cells = 16)
+      Similarity.writeIvfIndex(embs, "vec_id", "embedding", dir, cells = 16,
+        codec = Similarity.IvfCodec.Sq8(Quantization.fitBounds(embs, "embedding")))
       // the stored payload IS the code column (BINARY, 1 byte/dim) —
       // the 4×-vs-float32 storage claim is structural
       val idx = spark.read.parquet(s"$dir/cells")
@@ -132,7 +133,7 @@ class QuantizationSpec extends SparkSpec {
       } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dirF))
       // probing twice is bit-identical (deterministic index + ADC)
       val q = Similarity.prepareQueries(embs.filter($"vec_id" < 3), "vec_id", "embedding")
-      def probe() = Similarity.queryIvfIndexSq8(spark, dir, q, k = 10, nprobe = 4)
+      def probe() = Similarity.queryIvfIndex(spark, dir, q, k = 10, nprobe = 4)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3))).toSet
       val p1 = probe()
       assert(p1 == probe() && p1.nonEmpty)
@@ -144,7 +145,8 @@ class QuantizationSpec extends SparkSpec {
   test("SQ8 IVF probe: recall ≥ 7/10 vs full-precision brute force, ≤ nprobe partitions read") {
     val dir = java.nio.file.Files.createTempDirectory("ivfsq8b").toString
     try {
-      Similarity.writeIvfIndexSq8(embs, "vec_id", "embedding", dir, cells = 16)
+      Similarity.writeIvfIndex(embs, "vec_id", "embedding", dir, cells = 16,
+        codec = Similarity.IvfCodec.Sq8(Quantization.fitBounds(embs, "embedding")))
       val all = inMemory
       def cos(a: Array[Double], b: Array[Double]): Double = {
         var d = 0.0; var na = 0.0; var nb = 0.0; var i = 0
@@ -152,7 +154,7 @@ class QuantizationSpec extends SparkSpec {
         d / (math.sqrt(na) * math.sqrt(nb))
       }
       val q = Similarity.prepareQueries(embs.filter($"vec_id" < 3), "vec_id", "embedding")
-      val got = Similarity.queryIvfIndexSq8(spark, dir, q, k = 10, nprobe = 4)
+      val got = Similarity.queryIvfIndex(spark, dir, q, k = 10, nprobe = 4)
         .collect().groupBy(_.getLong(0))
         .view.mapValues(_.map(_.getLong(1)).toSet).toMap
       (0L until 3L).foreach { qid =>
@@ -164,7 +166,7 @@ class QuantizationSpec extends SparkSpec {
       }
       // one query × nprobe=4 → ≤4 of 16 cell partitions scanned
       val q1 = Similarity.prepareQueries(embs.filter($"vec_id" === 0), "vec_id", "embedding")
-      val plan = Similarity.queryIvfIndexSq8(spark, dir, q1, k = 10, nprobe = 4)
+      val plan = Similarity.queryIvfIndex(spark, dir, q1, k = 10, nprobe = 4)
         .queryExecution.sparkPlan
       val scans = plan.collect {
         case f: org.apache.spark.sql.execution.FileSourceScanExec
@@ -181,7 +183,7 @@ class QuantizationSpec extends SparkSpec {
       Seq(("x", "y", "not-sq8")).toDF("los", "his", "format")
         .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
       val e = intercept[IllegalArgumentException] {
-        Similarity.queryIvfIndexSq8(spark, dir, q1, k = 10, nprobe = 4)
+        Similarity.queryIvfIndex(spark, dir, q1, k = 10, nprobe = 4)
       }
       assert(e.getMessage.contains("format"))
     } finally {

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.{SparkSpec, Tables}
-import graft.operators.{Retrieval, Similarity, TextAnalysis}
+import graft.operators.{Quantization, Retrieval, Similarity, TextAnalysis}
 import org.apache.spark.sql.functions._
 
 /** Streaming hybrid serving: whole-row queries make batching
@@ -41,8 +41,9 @@ class StreamingHybridServeSpec extends SparkSpec {
   }
   private lazy val pqIdx: String = {
     val p = tmp("pqidx")
-    Similarity.writeIvfIndexPq(embs, "vec_id", "embedding", p,
-      cells = 8, m = 8, ks = 16)
+    Similarity.writeIvfIndex(embs, "vec_id", "embedding", p,
+      cells = 8, codec = Similarity.IvfCodec.Pq(
+        Quantization.trainPqCodebook(embs, "vec_id", "embedding", 8, 16)))
     p
   }
 

@@ -139,19 +139,21 @@ class StreamingIndexIngestSpec extends SparkSpec {
 
     val idx = java.nio.file.Files.createTempDirectory("ivfing").toString
     val run = java.nio.file.Files.createTempDirectory("ivfingrun").toString
-    graft.operators.Similarity.writeIvfIndexSq8(
+    graft.operators.Similarity.writeIvfIndex(
       embs.filter($"vec_id" % 4 =!= 0), "vec_id", "embedding", idx,
-      cells = 8, centroids0 = Some(cents), bounds0 = Some(bounds))
+      cells = 8, centroids0 = Some(cents),
+      codec = graft.operators.Similarity.IvfCodec.Sq8(bounds))
     StreamingIvfAppend.run(spark,
       stageStream(run, 3, embs.filter($"vec_id" % 4 === 0)), idx,
       "vec_id", "embedding", s"$run/ckpt",
       maintain = Some(IvfMaintenancePolicy(maxFilesPerCell = 1.0)))
 
     val full = java.nio.file.Files.createTempDirectory("ivfingfull").toString
-    graft.operators.Similarity.writeIvfIndexSq8(embs, "vec_id", "embedding",
-      full, cells = 8, centroids0 = Some(cents), bounds0 = Some(bounds))
+    graft.operators.Similarity.writeIvfIndex(embs, "vec_id", "embedding",
+      full, cells = 8, centroids0 = Some(cents),
+      codec = graft.operators.Similarity.IvfCodec.Sq8(bounds))
     def rows(p: String) = graft.operators.Similarity
-      .queryIvfIndexSq8(spark, p, q, k = 10, nprobe = 3)
+      .queryIvfIndex(spark, p, q, k = 10, nprobe = 3)
       .collect().map(_.toSeq).toSet
     assert(rows(idx) == rows(full),
       "self-tending IVF stream diverges from the rebuild on the union")

@@ -28,13 +28,13 @@ class StreamingIvfAppendSpec extends SparkSpec {
       all.filter($"vec_id" < 5), "vec_id", "embedding")
 
     val idx = java.nio.file.Files.createTempDirectory("ivfstream").toString
-    Similarity.writeIvfIndexSq8(all.filter($"vec_id" % 4 =!= 0),
+    Similarity.writeIvfIndex(all.filter($"vec_id" % 4 =!= 0),
       "vec_id", "embedding", idx, cells = 16,
-      centroids0 = Some(cents), bounds0 = Some(bounds))
+      centroids0 = Some(cents), codec = Similarity.IvfCodec.Sq8(bounds))
 
     // hoist the state, then DELETE meta/: micro-batches must run from
     // the hoisted state alone
-    val state = Similarity.loadIvfSq8AppendState(spark, idx)
+    val state = Similarity.loadIvfIndex(spark, idx)
     org.apache.commons.io.FileUtils.deleteDirectory(
       new java.io.File(s"$idx/meta"))
 
@@ -44,7 +44,7 @@ class StreamingIvfAppendSpec extends SparkSpec {
     val schema = spark.read.parquet(s"$run/stage").schema
     val src = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(s"$run/stage")
-    StreamingIvfAppend.runWithState(state, src, idx,
+    StreamingIvfAppend.runWithState(state, src,
       "vec_id", "embedding", s"$run/ckpt")
 
     // restore meta so probes can read the index
@@ -52,23 +52,23 @@ class StreamingIvfAppendSpec extends SparkSpec {
       .coalesce(1).write.mode("overwrite").parquet(s"$idx/meta")
 
     val full = java.nio.file.Files.createTempDirectory("ivffull2").toString
-    Similarity.writeIvfIndexSq8(all, "vec_id", "embedding", full,
-      cells = 16, centroids0 = Some(cents), bounds0 = Some(bounds))
-    val want = rows(Similarity.queryIvfIndexSq8(spark, full, q, k = 10, nprobe = 4))
-    assert(rows(Similarity.queryIvfIndexSq8(spark, idx, q, k = 10, nprobe = 4))
+    Similarity.writeIvfIndex(all, "vec_id", "embedding", full,
+      cells = 16, centroids0 = Some(cents), codec = Similarity.IvfCodec.Sq8(bounds))
+    val want = rows(Similarity.queryIvfIndex(spark, full, q, k = 10, nprobe = 4))
+    assert(rows(Similarity.queryIvfIndex(spark, idx, q, k = 10, nprobe = 4))
       == want)
 
     // replay a committed batch: the marker must make it a no-op —
     // duplicate (n_id, code) rows would distort probe top-k
     val before = spark.read.parquet(s"$idx/cells").count()
     IdempotentSink.oncePerBatch(spark, s"$idx/_batches", 0L) {
-      Similarity.appendToIvfIndexSq8With(state,
-        all.filter($"vec_id" % 4 === 0).limit(5), "vec_id", "embedding", idx)
+      Similarity.appendToIvfIndexWith(state,
+        all.filter($"vec_id" % 4 === 0).limit(5), "vec_id", "embedding")
     }
     spark.catalog.refreshByPath(s"$idx/cells")
     assert(spark.read.parquet(s"$idx/cells").count() == before,
       "replayed committed batch re-appended vectors")
-    assert(rows(Similarity.queryIvfIndexSq8(spark, idx, q, k = 10, nprobe = 4))
+    assert(rows(Similarity.queryIvfIndex(spark, idx, q, k = 10, nprobe = 4))
       == want)
 
     for (p <- Seq(idx, full, run))
