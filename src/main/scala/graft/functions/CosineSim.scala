@@ -15,7 +15,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * The accumulation is sequential in ascending index order, so results
   * are bit-identical to the interpreted fold AND to the DuckDB oracle's
   * `list_sum(list_transform(...))` — swapping this in cannot change
-  * any query result.
+  * any query result. Arrays of different lengths REFUSE (an
+  * IllegalArgumentException naming both lengths, interpreted and
+  * codegen alike) instead of scoring their common prefix: cosine
+  * across dimensions is undefined, and a prefix score of a wrong-size
+  * query reads as a confident match.
   */
 object CosineSim {
   def apply(a: Column, b: Column): Column = toColumn(CosineSimExpr(toExpr(a), toExpr(b)))
@@ -38,7 +42,8 @@ case class CosineSimExpr(left: Expression, right: Expression) extends BinaryExpr
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
+    val n = x.numElements()
+    if (n != y.numElements()) throw CosineSimExpr.lengthMismatch(n, y.numElements())
     var dot = 0.0
     var nx = 0.0
     var ny = 0.0
@@ -64,7 +69,10 @@ case class CosineSimExpr(left: Expression, right: Expression) extends BinaryExpr
       val xi = ctx.freshName("xi")
       val yi = ctx.freshName("yi")
       s"""
-         |int $n = java.lang.Math.min($x.numElements(), $y.numElements());
+         |int $n = $x.numElements();
+         |if ($n != $y.numElements()) {
+         |  throw ${classOf[CosineSimExpr].getName}.lengthMismatch($n, $y.numElements());
+         |}
          |double $dot = 0.0, $nx = 0.0, $ny = 0.0;
          |for (int $i = 0; $i < $n; $i++) {
          |  double $xi = $x.getDouble($i);
@@ -79,4 +87,10 @@ case class CosineSimExpr(left: Expression, right: Expression) extends BinaryExpr
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): CosineSimExpr =
     copy(left = l, right = r)
+}
+
+object CosineSimExpr {
+  def lengthMismatch(a: Int, b: Int): IllegalArgumentException =
+    new IllegalArgumentException(
+      s"cosine_sim: arrays of different lengths ($a vs $b) — cosine across dimensions is undefined")
 }

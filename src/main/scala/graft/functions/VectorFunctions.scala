@@ -159,10 +159,13 @@ case class NearestCell(
     var bestId = 0L
     var bestCos = java.lang.Double.NEGATIVE_INFINITY
     var first = true
+    val n = v.numElements()
     var cIdx = 0
     while (cIdx < vecs.length) {
       val cv = vecs(cIdx)
-      val n = math.min(v.numElements(), cv.length)
+      // a prefix cosine would route a wrong-size vector silently
+      if (n != cv.length) throw new IllegalArgumentException(
+        s"nearest_cell: cannot assign a $n-d vector — the centroid table stores ${cv.length}-d vectors")
       var dot = 0.0; var nx = 0.0; var ny = 0.0
       var i = 0
       while (i < n) {

@@ -341,7 +341,7 @@ object Dedup {
     * probe can never silently run with mismatched banding. Appends
     * ([[appendToMinhashIndex]]) accumulate flat (bucket, id) rows in a
     * `bandrows` side component (absent at build) that probes union in
-    * and [[IndexMaintenance.compactMinhashIndex]] folds away. */
+    * and [[IndexMaintenance.compactIndex]] folds away. */
   def writeMinhashIndex(
       reference: DataFrame, idCol: String, textCol: String, path: String,
       shingleN: Int = 3, numHashes: Int = 64, bandRows: Int = 2,
@@ -399,7 +399,7 @@ object Dedup {
     * Probes union the pending rows in: [[probeMinhashIndexWith]]
     * groups `bandrows` per bucket (an increment-sized group-by) and
     * unions it with the stored buckets before the candidate join.
-    * [[IndexMaintenance.compactMinhashIndex]] folds pending rows back
+    * [[IndexMaintenance.compactIndex]] folds pending rows back
     * into one regrouped `bands` generation on the operator's cadence.
     *
     * Equivalence: probe(build(A) then append(B)) ≡ probe(build(A∪B))
@@ -417,7 +417,7 @@ object Dedup {
     * Doc ids already present in the index REFUSE (one bounded
     * semi-join against the stored shingles): an overlapping id would
     * double its shingle rows and band entries. Re-ingesting a changed
-    * reference doc is [[IndexMaintenance.deleteFromMinhashIndex]]
+    * reference doc is [[IndexMaintenance.deleteFromIndex]]
     * followed by an append (≡ rebuild on the modified reference,
     * spec-pinned). Crash window: shingles land before band rows, so a
     * crash in between leaves orphan shingle rows (unreachable without
@@ -477,7 +477,7 @@ object Dedup {
       s"appendToMinhashIndex: $overlap doc id(s) already exist in the index " +
         s"at ${snap.path} — an overlapping id would double its shingle rows " +
         "and band entries; re-ingesting changed documents is " +
-        "deleteFromMinhashIndex + append, not a bare append")
+        "deleteFromIndex + append, not a bare append")
     if (inc.limit(1).count() == 0) return // empty increment
     val incShingles = inc
       .repartition(col("id"))
@@ -543,7 +543,7 @@ object Dedup {
     * concurrent maintenance flip can never hand a probe mixed
     * generations. `pendingBandRows` is the flat (bucket, id) side
     * component appends accumulate ([[appendToMinhashIndex]]) until the
-    * next [[IndexMaintenance.compactMinhashIndex]] folds it away;
+    * next [[IndexMaintenance.compactIndex]] folds it away;
     * absent (and the probe plan unchanged vs build) when no appends
     * are pending. */
   def loadMinhashIndex(spark: org.apache.spark.sql.SparkSession,

@@ -392,7 +392,7 @@ object Similarity {
     * of a tombstoned id still exist physically, so the anti-join would
     * kill the re-added row too (silent loss) or, after a naive
     * tombstone clear, resurrect the stale stored vector. The honest
-    * composition is delete → [[IndexMaintenance.compactIvfIndex]]
+    * composition is delete → [[IndexMaintenance.compactIndex]]
     * (materializes deletes, clears tombstones) → append. */
   private def refuseTombstoned(
       spark: SparkSession,
@@ -405,7 +405,7 @@ object Similarity {
         s"$who: $n id(s) in this increment are tombstoned in the index at " +
           s"${snap.path} — their deleted rows still exist physically, so a " +
           "bare re-append cannot serve them; run " +
-          "IndexMaintenance.compactIvfIndex (materializes pending deletes) " +
+          "IndexMaintenance.compactIndex (materializes pending deletes) " +
           "and then append")
     }
 
@@ -518,9 +518,13 @@ object Similarity {
     // difference between scanning nprobe cells and all of them — and
     // (b) a local relation to broadcast-join, instead of re-running
     // the centroid-cosine window a second time as the join side.
+    // a wrong-size query scores no centroid (cosine refuses unequal
+    // lengths inside the job); the check below names it instead
+    val cCos = st.dim.fold(cosine(col("q_v"), col("c_v")))(d =>
+      when(size(col("q_v")) === d, cosine(col("q_v"), col("c_v"))))
     val probeRows = queries.select(col("q_id"), col("q_v"))
       .join(broadcast(centroidDf(spark, st.cents)), lit(true))
-      .withColumn("c_cos", cosine(col("q_v"), col("c_v")))
+      .withColumn("c_cos", cCos)
       .withColumn("r", row_number().over(probeW))
       .filter(col("r") <= nprobe)
       .select(col("q_id"), col("q_v"), col("c_id").as("cell"))
@@ -650,24 +654,17 @@ object Similarity {
   }
 
   /** The increment's `cells/` rows, after its refusals: the codec's
-    * check, tombstoned ids, and — inside the projection that writes
-    * the rows, so no extra job — any vector whose dimension differs
-    * from the stored centroids' (it would route and score on a
-    * prefix). */
+    * check and tombstoned ids. A vector whose dimension differs from
+    * the stored centroids' refuses inside the cell assignment that
+    * writes the rows ([[graft.functions.NearestCell]] never routes on
+    * a prefix), so the write job fails before any file lands. */
   private def encodedIncrement(st: IvfIndexState, snap: IndexLayout.Snapshot,
                                newVecs: DataFrame, idCol: String, vecCol: String,
                                who: String): DataFrame = {
     val c = newVecs.select(col(idCol).as("n_id"), asDouble(col(vecCol)).as("n_v"))
     st.codec.checkIncrement(c, who)
     refuseTombstoned(newVecs.sparkSession, snap, c, who)
-    val checked = st.dim.fold(c) { d =>
-      c.withColumn("n_v", when(size(col("n_v")) =!= d, raise_error(concat(
-          lit(s"$who: vector "), col("n_id").cast("string"), lit(" has "),
-          size(col("n_v")).cast("string"),
-          lit(s" dims, the index at ${st.path} stores $d-d vectors"))))
-        .otherwise(col("n_v")))
-    }
-    st.codec.encode(assignToCells(checked, st.cents))
+    st.codec.encode(assignToCells(c, st.cents))
   }
 
   /** [[appendToIvfIndex]] under the guarded (marker-fenced, resumable)

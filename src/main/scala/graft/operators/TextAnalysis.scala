@@ -750,7 +750,7 @@ object TextAnalysis {
     * semi-join against the stored lengths): an overlapping id would
     * double its dl row and postings, silently corrupting every score.
     * Re-ingesting a changed document is
-    * [[graft.operators.IndexMaintenance.deleteFromBm25Index]] followed
+    * [[graft.operators.IndexMaintenance.deleteFromIndex]] followed
     * by an append (≡ rebuild, spec-pinned), not a bare append. Crash
     * window: an append that dies between the postings/dl append and
     * the meta rewrite leaves stats stale and a RETRY would double the
@@ -759,7 +759,7 @@ object TextAnalysis {
     * retried increment converge to exactly-once from any crash point.
     * Maintenance: accumulated append files fold back to the
     * build-shaped layout via
-    * [[graft.operators.IndexMaintenance.compactBm25Index]] (probe ≡
+    * [[graft.operators.IndexMaintenance.compactIndex]] (probe ≡
     * pre-compaction bit-for-bit — unlike a rebuild, nothing
     * re-fits). */
   def appendToBm25Index(newDocs: DataFrame, idCol: String, textCol: String,
@@ -842,7 +842,7 @@ object TextAnalysis {
       require(overlap == 0,
         s"appendToBm25IndexGuarded: $overlap doc id(s) already exist in the " +
           s"index at $path — an overlapping id would double-count its " +
-          "postings; changed documents are deleteFromBm25Index + append")
+          "postings; changed documents are deleteFromIndex + append")
       tf.repartition(col("term")).sortWithinPartitions("term", "__doc")
         .write.parquet(s"$stageDir/postings")
       dlInc.write.parquet(s"$stageDir/dl")
@@ -855,24 +855,32 @@ object TextAnalysis {
     * double-count). k1/b and the tokenization pin are preserved. */
   private[graft] def bm25RecomputeMeta(
       spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    import spark.implicits._
     val snap = IndexLayout.snapshot(spark, path)
     val meta = IndexLayout.collectSmallComponent(spark, snap.dir("meta"))(0)
     spark.catalog.refreshByPath(snap.dir("dl"))
-    val st = IndexLayout.readComponent(spark, snap.dir("dl"))
-      .agg(sum(col("dl")).as("total_len"), count(lit(1)).as("n_docs"))
-      .collect()(0)
-    require(st.getLong(1) > 0,
-      s"bm25RecomputeMeta: index at $path holds no documents")
-    val newMeta = Seq((st.getLong(1), st.getLong(0), meta.getAs[Double]("k1"),
-        meta.getAs[Double]("b"), meta.getAs[String]("tokenization")))
-      .toDF("n_docs", "total_len", "k1", "b", "tokenization")
+    val newMeta = bm25MetaFor(IndexLayout.readComponent(spark, snap.dir("dl")), meta)
     // always a fresh generation + flip (fence; see appendToBm25Index)
     val mRel = snap.nextGenRel("meta")
     newMeta.coalesce(1).write.mode("overwrite").parquet(s"$path/$mRel")
     IndexLayout.commit(spark, snap, Map("meta" -> mRel))
     for (p <- Seq("postings", "dl", "meta"))
       spark.catalog.refreshByPath(snap.dir(p))
+  }
+
+  /** The meta row of an index holding exactly the documents of `dl`:
+    * the corpus stats as exact integer sums over it, `meta`'s k1/b and
+    * tokenization pin. Refuses an empty `dl` (an empty index cannot
+    * score). */
+  private[graft] def bm25MetaFor(dl: DataFrame,
+                                 meta: org.apache.spark.sql.Row): DataFrame = {
+    val spark = dl.sparkSession
+    import spark.implicits._
+    val st = dl.agg(sum(col("dl")).as("total_len"), count(lit(1)).as("n_docs"))
+      .collect()(0)
+    require(st.getLong(1) > 0, "BM25 index holds no documents")
+    Seq((st.getLong(1), st.getLong(0), meta.getAs[Double]("k1"),
+        meta.getAs[Double]("b"), meta.getAs[String]("tokenization")))
+      .toDF("n_docs", "total_len", "k1", "b", "tokenization")
   }
 
   /** Driver-side BM25 index state: the postings/dl READERS (file

@@ -190,7 +190,7 @@ object PipelineQueries {
     * via the GUARDED appendToMinhashIndexGuarded (increment-sized:
     * the stored bands are never read or rewritten — the increment's
     * band rows land in the additive `bandrows` component,
-    * marker-fenced), then compactMinhashIndex folds pending rows and
+    * marker-fenced), then IndexMaintenance.compactIndex folds pending rows and
     * accumulated files back to the build shape (file shrink asserted
     * loudly in-gate), and IndexLayout.vacuumIndex reclaims the
     * superseded generations (file-count drop asserted in-gate) — the
@@ -208,7 +208,7 @@ object PipelineQueries {
         ref.filter(col("doc_id") % 3 =!= 0), "doc_id", "text", idx)
       require(Dedup.appendToMinhashIndexGuarded(
         ref.filter(col("doc_id") % 3 === 0), "doc_id", "text", idx, "crawl-1"))
-      val stats = graft.operators.IndexMaintenance.compactMinhashIndex(s, idx)
+      val stats = graft.operators.IndexMaintenance.compactIndex(s, idx)
       require(stats.filesAfter < stats.filesBefore,
         s"q_dedup_index_append: compaction did not shrink the index — $stats")
       // vacuum closes the lifecycle: the superseded pre-compact
@@ -955,7 +955,7 @@ object PipelineQueries {
     * distribution, as in q_ann_ivf_append), the remaining 1/4 arrives
     * as TWO separate appends (each landing its own files into the
     * touched cell partitions — the accumulating-small-files state),
-    * then compactIvfIndex folds the cells back to one file per cell
+    * then IndexMaintenance.compactIndex folds the cells back to one file per cell
     * WITHOUT re-fitting anything. The file-count shrink is asserted
     * loudly inside the gate; because compaction rewrites bytes only,
     * the probe must STILL equal the full-build answer — the SAME
@@ -970,7 +970,7 @@ object PipelineQueries {
         all.filter(col("vec_id") % 8 === 0), "vec_id", "embedding", idx)
       Similarity.appendToIvfIndex(
         all.filter(col("vec_id") % 8 === 4), "vec_id", "embedding", idx)
-      val stats = graft.operators.IndexMaintenance.compactIvfIndex(s, idx)
+      val stats = graft.operators.IndexMaintenance.compactIndex(s, idx)
       require(stats.filesAfter < stats.filesBefore && stats.filesAfter <= 16,
         s"q_ann_ivf_compact: compaction did not shrink the index — $stats")
     })
@@ -981,9 +981,9 @@ object PipelineQueries {
   /** IVF index DELETE under the driver gate — the takedown path: the
     * index is built on the FULL corpus (default lowest-id centroids,
     * full-corpus bounds — exactly q_ann_ivf_sq8's build), then every
-    * vec_id ≡ 2 (mod 5) is deleted via deleteFromIvfIndex (touched
-    * cells anti-joined and swapped in place; centroids/bounds/meta
-    * untouched — delete never re-fits). The mirror keeps centroids and
+    * vec_id ≡ 2 (mod 5) is deleted via IndexMaintenance.deleteFromIndex
+    * (tombstoned — no cell rewritten; centroids/bounds/meta untouched —
+    * delete never re-fits). The mirror keeps centroids and
     * quantization bounds derived from the FULL corpus but restricts
     * cell membership to the remainder, which is precisely the
     * delete(ids) ∘ build(corpus) ≡ "build(corpus ∖ ids) under the same
@@ -994,7 +994,7 @@ object PipelineQueries {
       val all = embs(s, d)
       Similarity.writeIvfIndex(all, "vec_id", "embedding", dir.getPath, cells = 16,
         codec = Similarity.IvfCodec.Sq8(Quantization.fitBounds(all, "embedding")))
-      graft.operators.IndexMaintenance.deleteFromIvfIndex(
+      graft.operators.IndexMaintenance.deleteFromIndex(
         all.filter(col("vec_id") % 5 === 2).select("vec_id"), "vec_id", dir.getPath)
     })
   }
@@ -1041,7 +1041,7 @@ object PipelineQueries {
     * not just the shared readIvfCellsLive plumbing q_ann_ivf_delete
     * certifies on SQ8): the index is built on the FULL corpus
     * (exactly q_ann_pq's build), then every vec_id ≡ 2 (mod 5) is
-    * tombstoned via deleteFromIvfIndex (no cell rewritten; probes
+    * tombstoned via IndexMaintenance.deleteFromIndex (no cell rewritten; probes
     * anti-join the tombstone set), and the ADC probe must equal a
     * build on the remainder under the SAME centroids + codebook — the
     * mirror keeps the full-corpus centroid/codebook derivation and
@@ -1051,7 +1051,7 @@ object PipelineQueries {
     val idx = GateFixture.buildOnce("graft_ivfpqdel_v2", d) { dir =>
       val all = embs(s, d)
       writePq(all, dir.getPath)
-      graft.operators.IndexMaintenance.deleteFromIvfIndex(
+      graft.operators.IndexMaintenance.deleteFromIndex(
         all.filter(col("vec_id") % 5 === 2).select("vec_id"), "vec_id", dir.getPath)
     }
     Similarity.queryIvfIndex(s, idx.getPath,
@@ -2739,7 +2739,7 @@ object PipelineQueries {
   /** BM25 index COMPACTION under the driver gate: built on 3/4 of the
     * corpus, two separate appends land the remaining 1/4 (each append
     * adds its own postings/dl files, eroding the build's term-clustered
-    * row-group pruning — the accumulating state), then compactBm25Index
+    * row-group pruning — the accumulating state), then IndexMaintenance.compactIndex
     * re-clusters postings on term and folds dl, touching NOTHING else
     * (meta stats/k1/b/tokenization stay the merged index's). The
     * file-count shrink is asserted loudly inside the gate; because
@@ -2755,7 +2755,7 @@ object PipelineQueries {
         docs(s, d).filter(col("doc_id") % 8 === 0), "doc_id", "text", idx)
       TextAnalysis.appendToBm25Index(
         docs(s, d).filter(col("doc_id") % 8 === 4), "doc_id", "text", idx)
-      val stats = graft.operators.IndexMaintenance.compactBm25Index(s, idx)
+      val stats = graft.operators.IndexMaintenance.compactIndex(s, idx)
       require(stats.filesAfter < stats.filesBefore,
         s"q_bm25_compact: compaction did not shrink the index — $stats")
     }.getPath)
@@ -2766,7 +2766,8 @@ object PipelineQueries {
   /** BM25 index DELETE under the driver gate — the takedown path the
     * append's refusal message promises: the index is built on the FULL
     * corpus, then every doc_id ≡ 0 (mod 4) is deleted via
-    * deleteFromBm25Index (postings/dl anti-joined and swapped; corpus
+    * IndexMaintenance.deleteFromIndex (postings/dl anti-joined into fresh
+    * byte-sized generations published with one manifest flip; corpus
     * stats RECOMPUTED from the surviving dl as exact integer sums —
     * recompute converges on retry where a decrement would leave stale
     * stats after a crash). The mirror is q_bm25's pipeline over
@@ -2774,9 +2775,9 @@ object PipelineQueries {
     * build on the remainder: delete(ids) ∘ build(corpus) ≡
     * build(corpus ∖ ids), every score bit value-checked. */
   def bm25Delete(s: SparkSession, d: String): DataFrame = synchronized {
-    probeBm25(s, GateFixture.buildOnce("graft_bm25del_v2", d) { dir =>
+    probeBm25(s, GateFixture.buildOnce("graft_bm25del_v3", d) { dir =>
       TextAnalysis.writeBm25Index(docs(s, d), "doc_id", "text", dir.getPath)
-      graft.operators.IndexMaintenance.deleteFromBm25Index(
+      graft.operators.IndexMaintenance.deleteFromIndex(
         docs(s, d).filter(col("doc_id") % 4 === 0).select("doc_id"),
         "doc_id", dir.getPath)
     }.getPath)
@@ -2819,8 +2820,8 @@ object PipelineQueries {
     * built on 2/3 of the corpus, the remaining third arrives as an
     * AvailableNow document stream in three micro-batches
     * (StreamingIndexIngest.bm25 — each batch a guarded exactly-once
-    * append), the stream SELF-TENDS (the Bm25MaintenancePolicy hook
-    * fires compactBm25Index mid-stream), and the gate output is the
+    * append), the stream SELF-TENDS (the MaintenancePolicy hook
+    * fires IndexMaintenance.compactIndex mid-stream), and the gate output is the
     * multi-query probe of the ingested index. Stream-ingest ∪ build ≡
     * a from-scratch build on the full corpus (appends carry exact
     * integer corpus stats; compaction is probe-identical), so the
@@ -2840,7 +2841,7 @@ object PipelineQueries {
         "doc_id", "text", checkpoint = s"$staging/ckpt",
         ingestId = "gate",
         maintain = Some(graft.operators.IndexMaintenance
-          .Bm25MaintenancePolicy(maxFileBloat = 2.0)))
+          .MaintenancePolicy(maxFileBloat = 2.0)))
     }
     TextAnalysis.scoreWithBm25IndexMulti(s, s"$root/idx",
         bm25MultiQueries.toDF("query_id", "term"), "query_id", "term", k = 10)

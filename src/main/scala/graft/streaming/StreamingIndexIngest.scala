@@ -10,8 +10,8 @@ import graft.operators.{Dedup, IndexMaintenance, TextAnalysis}
   * asymmetry [[StreamingIvfAppend]] left: a continuous crawl's
   * document micro-batches append into the persisted index as they
   * arrive, and the index self-tends on the same cadence (the
-  * [[graft.operators.IndexMaintenance]] policy entries run after
-  * every batch), so the serving side always probes the freshest
+  * [[graft.operators.IndexMaintenance.maintainIndex]] policy entry
+  * runs after every batch), so the serving side always probes the freshest
   * corpus without a rebuild ever being scheduled — the full
   * production loop ingest → tend → serve as one call.
   *
@@ -38,7 +38,7 @@ import graft.operators.{Dedup, IndexMaintenance, TextAnalysis}
   * doc the lost lineage already ingested is REFUSED loudly by the
   * appends' overlap check (never silently skipped or double-counted).
   *
-  * Maintenance composes safely mid-stream: the policy entries take
+  * Maintenance composes safely mid-stream: the policy entry takes
   * the index lease after the batch's append releases it, compactions
   * publish with one manifest flip, and appends re-resolve the live
   * generation per batch — a concurrent reader's probes are
@@ -56,13 +56,12 @@ object StreamingIndexIngest {
     * the stream terminates (callers await inside). */
   def bm25(stream: DataFrame, indexPath: String, idCol: String,
            textCol: String, checkpoint: String, ingestId: String,
-           maintain: Option[IndexMaintenance.Bm25MaintenancePolicy] = None)
-      : Unit =
+           maintain: Option[IndexMaintenance.MaintenancePolicy] = None): Unit =
     runBatches(stream, checkpoint) { (batch, batchId) =>
       TextAnalysis.appendToBm25IndexGuarded(batch, idCol, textCol,
         indexPath, appendId(ingestId, batchId))
       maintain.foreach(p =>
-        IndexMaintenance.maintainBm25Index(batch.sparkSession, indexPath, p))
+        IndexMaintenance.maintainIndex(batch.sparkSession, indexPath, p))
     }
 
   /** Append a document stream into the persisted MinHash index at
@@ -73,13 +72,12 @@ object StreamingIndexIngest {
     * seconds-level triggers. */
   def minhash(stream: DataFrame, indexPath: String, idCol: String,
               textCol: String, checkpoint: String, ingestId: String,
-              maintain: Option[IndexMaintenance.MinhashMaintenancePolicy] =
-                None): Unit =
+              maintain: Option[IndexMaintenance.MaintenancePolicy] = None): Unit =
     runBatches(stream, checkpoint) { (batch, batchId) =>
       Dedup.appendToMinhashIndexGuarded(batch, idCol, textCol,
         indexPath, appendId(ingestId, batchId))
       maintain.foreach(p =>
-        IndexMaintenance.maintainMinhashIndex(batch.sparkSession, indexPath, p))
+        IndexMaintenance.maintainIndex(batch.sparkSession, indexPath, p))
     }
 
   /** The guarded appendId a micro-batch ingests under — deterministic

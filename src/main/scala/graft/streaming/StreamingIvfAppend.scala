@@ -35,7 +35,7 @@ import graft.operators.{IndexMaintenance, Similarity}
   * other sinks (crash exactly between append and marker). Operational
   * note: every micro-batch adds files to its touched cell partitions
   * — at seconds-level triggers schedule
-  * [[graft.operators.IndexMaintenance.compactIvfIndex]] as the
+  * [[graft.operators.IndexMaintenance.compactIndex]] as the
   * maintenance cadence: it folds the accumulated files back to one
   * per cell WITHOUT re-fitting (probe ≡ pre-compaction bit-for-bit,
   * spec-pinned), unlike the full rebuild, which re-fits
@@ -54,16 +54,14 @@ object StreamingIvfAppend {
     * mid-stream compaction is safe by construction. */
   def run(spark: SparkSession, stream: DataFrame, indexPath: String,
           idCol: String, vecCol: String, checkpoint: String,
-          maintain: Option[IndexMaintenance.IvfMaintenancePolicy] = None)
-      : Unit =
+          maintain: Option[IndexMaintenance.MaintenancePolicy] = None): Unit =
     runWithState(Similarity.loadIvfIndex(spark, indexPath),
       stream, idCol, vecCol, checkpoint, maintain)
 
   /** [[run]] with the append state already loaded. */
   def runWithState(state: Similarity.IvfIndexState, stream: DataFrame,
                    idCol: String, vecCol: String, checkpoint: String,
-                   maintain: Option[IndexMaintenance.IvfMaintenancePolicy] =
-                     None): Unit = {
+                   maintain: Option[IndexMaintenance.MaintenancePolicy] = None): Unit = {
     stream.writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         IdempotentSink.oncePerBatch(batch.sparkSession,
@@ -73,8 +71,8 @@ object StreamingIvfAppend {
         // outside the marker: a replayed committed batch skips its
         // append but still gets the maintenance check (idempotent,
         // lease-guarded, probe-identical when it fires)
-        maintain.foreach(p => IndexMaintenance
-          .maintainIvfIndex(batch.sparkSession, state.path, p))
+        maintain.foreach(p =>
+          IndexMaintenance.maintainIndex(batch.sparkSession, state.path, p))
         ()
       }
       .option("checkpointLocation", checkpoint)

@@ -33,7 +33,7 @@ class IndexLayoutSpec extends SparkSpec {
     def oldProbe() = rows(TextAnalysis.scoreWithBm25State(
       oldState, Seq("spark", "window", "agg"), k = 20))
     val preDelete = oldProbe()
-    IndexMaintenance.deleteFromBm25Index(
+    IndexMaintenance.deleteFromIndex(
       docs.filter($"doc_id" % 4 === 0).select("doc_id"), "doc_id", dir)
     // the old reader's whole generation set survived the flip: it
     // scores EXACTLY the pre-delete index — old postings under old
@@ -69,13 +69,13 @@ class IndexLayoutSpec extends SparkSpec {
     val plannedStale = Similarity
       .queryIvfIndex(spark, dir, q, k = 10, nprobe = 4)
       .orderBy("q_id", "rank")
-    IndexMaintenance.deleteFromIvfIndex(
+    IndexMaintenance.deleteFromIndex(
       all.filter($"vec_id" % 5 === 2).select("vec_id"), "vec_id", dir)
     assert(rows(plannedBefore) == preDelete)
     // compaction flips cells to a new generation; the old bare cells
     // dir must survive (implicit version-0 generation) under the
     // default retention so the planned-before reader still executes
-    IndexMaintenance.compactIvfIndex(spark, dir)
+    IndexMaintenance.compactIndex(spark, dir)
     val st2 = IndexLayout.vacuumIndex(spark, dir) // keepVersions = 2
     assert(new java.io.File(s"$dir/cells").isDirectory,
       s"default vacuum must retain the previous generation, dropped ${st2.droppedDirs}")
@@ -112,7 +112,7 @@ class IndexLayoutSpec extends SparkSpec {
     val dir = tmp("layoutreset")
     TextAnalysis.writeBm25Index(docs.filter($"doc_id" % 2 === 1),
       "doc_id", "text", dir)
-    IndexMaintenance.deleteFromBm25Index(
+    IndexMaintenance.deleteFromIndex(
       docs.filter($"doc_id" % 4 === 1).select("doc_id"), "doc_id", dir)
     assert(IndexLayout.snapshot(spark, dir).mapping.nonEmpty)
     TextAnalysis.writeBm25Index(docs, "doc_id", "text", dir) // full rebuild
@@ -136,7 +136,7 @@ class IndexLayoutSpec extends SparkSpec {
       val other = new Thread {
         var error: Throwable = _
         override def run(): Unit =
-          try IndexMaintenance.deleteFromBm25Index(
+          try IndexMaintenance.deleteFromIndex(
             docs.filter($"doc_id" % 8 === 1).select("doc_id"), "doc_id", dir)
           catch { case t: Throwable => error = t }
       }
@@ -147,7 +147,7 @@ class IndexLayoutSpec extends SparkSpec {
       assert(other.error.getMessage.contains("breakIndexLock"))
     }
     // lease released on exit: the same mutation now runs
-    IndexMaintenance.deleteFromBm25Index(
+    IndexMaintenance.deleteFromIndex(
       docs.filter($"doc_id" % 8 === 1).select("doc_id"), "doc_id", dir)
     // a crashed holder's lock blocks until broken
     val fs = org.apache.hadoop.fs.FileSystem.getLocal(
@@ -157,11 +157,11 @@ class IndexLayoutSpec extends SparkSpec {
     out.write("op=compact-bm25\nowner=dead-job\nacquiredMs=0\n".getBytes("UTF-8"))
     out.close()
     val e = intercept[IllegalStateException] {
-      IndexMaintenance.compactBm25Index(spark, dir)
+      IndexMaintenance.compactIndex(spark, dir)
     }
     assert(e.getMessage.contains("dead-job"), e.getMessage)
     assert(IndexLayout.breakIndexLock(spark, dir))
-    IndexMaintenance.compactBm25Index(spark, dir)
+    IndexMaintenance.compactIndex(spark, dir)
     // a guarded append whose predecessor crashed holding ITS OWN lease
     // (owner = append:<id>) reclaims it instead of refusing — the
     // retry-converges contract
@@ -179,7 +179,7 @@ class IndexLayoutSpec extends SparkSpec {
     val dir = tmp("layoutrace")
     TextAnalysis.writeBm25Index(docs, "doc_id", "text", dir)
     // make the index managed so the race happens on a real manifest
-    IndexMaintenance.compactBm25Index(spark, dir)
+    IndexMaintenance.compactIndex(spark, dir)
     val snap = IndexLayout.snapshot(spark, dir)
     // the scenario the lease exists to prevent, forced deliberately:
     // two mutations resolved the SAME snapshot (exclusive-create is
@@ -267,7 +267,7 @@ class IndexLayoutSpec extends SparkSpec {
   test("vacuum is fenced: it bumps the version with the mapping unchanged, and never deletes a generation staged above its fence") {
     val dir = tmp("layoutvacfence")
     TextAnalysis.writeBm25Index(docs, "doc_id", "text", dir)
-    IndexMaintenance.compactBm25Index(spark, dir)
+    IndexMaintenance.compactIndex(spark, dir)
     val before = IndexLayout.snapshot(spark, dir)
     // a racer that snapshotted AFTER the fence stages generations
     // numbered above it — simulate its in-progress staging dir: the
@@ -297,7 +297,7 @@ class IndexLayoutSpec extends SparkSpec {
     TextAnalysis.writeBm25Index(docs.filter($"doc_id" % 2 === 1),
       "doc_id", "text", dir)
     // one real flip (bare -> compacted generations)...
-    IndexMaintenance.compactBm25Index(spark, dir)
+    IndexMaintenance.compactIndex(spark, dir)
     // ...then two pure fences — the manifest bump IVF/MinHash appends
     // publish (re-points nothing, exists only to collide a lost-lease
     // racer)

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** Index lifecycle beyond build+append: COMPACTION rewrites bytes only
   * (probe ≡ pre-compaction bit-for-bit; files fold to the cluster
@@ -47,6 +48,27 @@ class IndexMaintenanceSpec extends SparkSpec {
      Quantization.fitBounds(prepared, "n_v"))
   }
 
+  test("compactIndex / maintainIndex / deleteFromIndex refuse a dir holding no index, or a bare meta, and leave nothing behind") {
+    def listing(dir: String): Set[String] = {
+      val root = java.nio.file.Paths.get(dir)
+      val w = java.nio.file.Files.walk(root)
+      try w.iterator().asScala.map(root.relativize(_).toString).toSet finally w.close()
+    }
+    val empty = tmp("noindex")
+    val metaOnly = tmp("metaonly")
+    Seq((1L, 2L)).toDF("n_docs", "total_len").write.parquet(s"$metaOnly/meta")
+    for (dir <- Seq(empty, metaOnly)) {
+      val before = listing(dir)
+      intercept[IllegalArgumentException](IndexMaintenance.compactIndex(spark, dir))
+      intercept[IllegalArgumentException](IndexMaintenance.maintainIndex(spark, dir))
+      intercept[IllegalArgumentException](IndexMaintenance.deleteFromIndex(
+        Seq(1L).toDF("doc_id"), "doc_id", dir))
+      // no lease, manifest or generation was left behind
+      assert(listing(dir) == before, dir)
+      rm(dir)
+    }
+  }
+
   test("BM25 compaction: probe bit-identical; appended files fold to the cluster count") {
     val dir = tmp("bm25compact")
     TextAnalysis.writeBm25Index(docs.filter($"doc_id" % 4 =!= 0),
@@ -57,7 +79,7 @@ class IndexMaintenanceSpec extends SparkSpec {
       "doc_id", "text", dir)
     val before = rows(bm25Probe(dir))
     val metaBefore = metaRow(dir)
-    val stats = IndexMaintenance.compactBm25Index(spark, dir)
+    val stats = IndexMaintenance.compactIndex(spark, dir)
     assert(stats.filesAfter < stats.filesBefore,
       s"compaction must shrink the file count, got $stats")
     // postings+dl each fold to ≤ shuffle.partitions files (4 in tests)
@@ -84,7 +106,7 @@ class IndexMaintenanceSpec extends SparkSpec {
       "vec_id", "embedding", dir)
     val before = rows(Similarity.queryIvfIndex(spark, dir, q, k = 10, nprobe = 4)
       .orderBy("q_id", "rank"))
-    val stats = IndexMaintenance.compactIvfIndex(spark, dir)
+    val stats = IndexMaintenance.compactIndex(spark, dir)
     assert(stats.filesAfter < stats.filesBefore, s"got $stats")
     assert(stats.filesAfter <= 16, s"one file per cell expected, got $stats")
     val after = Similarity.queryIvfIndex(spark, dir, q, k = 10, nprobe = 4)
@@ -109,7 +131,7 @@ class IndexMaintenanceSpec extends SparkSpec {
   test("BM25 delete: delete(ids) ∘ build(corpus) == build(corpus ∖ ids) bit-for-bit; absent id is a no-op; emptying refuses") {
     val dir = tmp("bm25del")
     TextAnalysis.writeBm25Index(docs, "doc_id", "text", dir)
-    IndexMaintenance.deleteFromBm25Index(
+    IndexMaintenance.deleteFromIndex(
       docs.filter($"doc_id" % 4 === 0).select("doc_id"), "doc_id", dir)
     val want = tmp("bm25delwant")
     TextAnalysis.writeBm25Index(docs.filter($"doc_id" % 4 =!= 0),
@@ -123,12 +145,12 @@ class IndexMaintenanceSpec extends SparkSpec {
       == rows(spark.read.parquet(comp(want, "dl")).orderBy("__doc")))
     // deleting ids not in the index: takedown semantics, a no-op
     val before = rows(bm25Probe(dir))
-    IndexMaintenance.deleteFromBm25Index(
+    IndexMaintenance.deleteFromIndex(
       Seq(999999999L, -5L).toDF("doc_id"), "doc_id", dir)
     assert(rows(bm25Probe(dir)) == before)
     // deleting everything refuses loudly and leaves the index intact
     val e = intercept[IllegalArgumentException] {
-      IndexMaintenance.deleteFromBm25Index(
+      IndexMaintenance.deleteFromIndex(
         docs.select("doc_id"), "doc_id", dir)
     }
     assert(e.getMessage.contains("empties the index"), e.getMessage)
@@ -152,7 +174,7 @@ class IndexMaintenanceSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("already exist"), e.getMessage)
     // the composition the delete path unlocks
-    IndexMaintenance.deleteFromBm25Index(
+    IndexMaintenance.deleteFromIndex(
       Seq(target).toDF("doc_id"), "doc_id", dir)
     TextAnalysis.appendToBm25Index(changed.filter($"doc_id" === target),
       "doc_id", "text", dir)
@@ -171,7 +193,7 @@ class IndexMaintenanceSpec extends SparkSpec {
     val dir = tmp("ivfdel")
     Similarity.writeIvfIndex(all, "vec_id", "embedding", dir, cells = 16,
       centroids0 = Some(cents), codec = Similarity.IvfCodec.Sq8(bounds))
-    IndexMaintenance.deleteFromIvfIndex(
+    IndexMaintenance.deleteFromIndex(
       all.filter($"vec_id" % 5 === 2).select("vec_id"), "vec_id", dir)
     val want = tmp("ivfdelwant")
     Similarity.writeIvfIndex(all.filter($"vec_id" % 5 =!= 2),
@@ -187,16 +209,16 @@ class IndexMaintenanceSpec extends SparkSpec {
     assert(IndexLayout.snapshot(spark, dir).names("tombstones"))
     // absent ids: no-op — no new manifest version, nothing published
     val vBefore = IndexLayout.snapshot(spark, dir).version
-    IndexMaintenance.deleteFromIvfIndex(
+    IndexMaintenance.deleteFromIndex(
       Seq(999999999L).toDF("vec_id"), "vec_id", dir)
     assert(IndexLayout.snapshot(spark, dir).version == vBefore)
     // already-deleted ids retried (the crash-retry path): also a no-op
-    IndexMaintenance.deleteFromIvfIndex(
+    IndexMaintenance.deleteFromIndex(
       all.filter($"vec_id" % 5 === 2).select("vec_id"), "vec_id", dir)
     assert(IndexLayout.snapshot(spark, dir).version == vBefore)
     // COMPACTION materializes the tombstones: physical rows == a build
     // on the remainder (same pins), tombstones cleared
-    IndexMaintenance.compactIvfIndex(spark, dir)
+    IndexMaintenance.compactIndex(spark, dir)
     val snapAfter = IndexLayout.snapshot(spark, dir)
     assert(!snapAfter.names("tombstones"))
     def cellRows(d: String) =
@@ -219,7 +241,7 @@ class IndexMaintenanceSpec extends SparkSpec {
     val tdir = tmp("ivfdeltiny")
     Similarity.writeIvfIndex(tiny, "vec_id", "embedding", tdir, cells = 2,
       codec = Similarity.IvfCodec.Sq8(Quantization.fitBounds(tiny, "embedding")))
-    IndexMaintenance.deleteFromIvfIndex(
+    IndexMaintenance.deleteFromIndex(
       Seq(2L, 3L).toDF("vec_id"), "vec_id", tdir) // the whole "near 1,1" cell
     val left = Similarity.readIvfCellsLive(
         spark, IndexLayout.snapshot(spark, tdir))
@@ -232,7 +254,7 @@ class IndexMaintenanceSpec extends SparkSpec {
     assert(probed == Set(4L))
     // deleting EVERYTHING refuses before anything publishes
     val ev = intercept[IllegalArgumentException] {
-      IndexMaintenance.deleteFromIvfIndex(
+      IndexMaintenance.deleteFromIndex(
         Seq(1L, 4L).toDF("vec_id"), "vec_id", tdir)
     }
     assert(ev.getMessage.contains("empties the index"), ev.getMessage)
@@ -255,7 +277,7 @@ class IndexMaintenanceSpec extends SparkSpec {
     val dir = tmp("ivfreingest")
     Similarity.writeIvfIndex(all, "vec_id", "embedding", dir, cells = 16,
       centroids0 = Some(cents), codec = Similarity.IvfCodec.Sq8(bounds))
-    IndexMaintenance.deleteFromIvfIndex(
+    IndexMaintenance.deleteFromIndex(
       all.filter($"vec_id" % 7 === 3).select("vec_id"), "vec_id", dir)
     // bare re-append of a tombstoned id refuses loudly — the stored
     // rows still exist physically and would shadow or swallow it
@@ -265,7 +287,7 @@ class IndexMaintenanceSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("tombstoned"), e.getMessage)
     // the documented composition: compact (materialize) then append
-    IndexMaintenance.compactIvfIndex(spark, dir)
+    IndexMaintenance.compactIndex(spark, dir)
     Similarity.appendToIvfIndex(
       changed.filter($"vec_id" % 7 === 3), "vec_id", "embedding", dir)
     val want = tmp("ivfreingestwant")
@@ -294,7 +316,7 @@ class IndexMaintenanceSpec extends SparkSpec {
     val maxList = spark.read.parquet(comp(dir, "bands"))
       .select(max(size($"ids"))).collect()(0).getInt(0)
     assert(maxList < 1000, s"fixture unexpectedly capped ($maxList)")
-    IndexMaintenance.deleteFromMinhashIndex(
+    IndexMaintenance.deleteFromIndex(
       ref.filter($"doc_id" % 3 === 0).select("doc_id"), "doc_id", dir)
     val want = tmp("mhdelwant")
     Dedup.writeMinhashIndex(ref.filter($"doc_id" % 3 =!= 0),
@@ -303,12 +325,12 @@ class IndexMaintenanceSpec extends SparkSpec {
     assert(got == pairs(want))
     assert(!got.exists(_._2 % 3 == 0), "a deleted ref surfaced as a witness")
     // absent ids: no-op
-    IndexMaintenance.deleteFromMinhashIndex(
+    IndexMaintenance.deleteFromIndex(
       Seq(999999999L).toDF("doc_id"), "doc_id", dir)
     assert(pairs(dir) == got)
     // emptying refuses, index intact
     val e = intercept[IllegalArgumentException] {
-      IndexMaintenance.deleteFromMinhashIndex(
+      IndexMaintenance.deleteFromIndex(
         ref.select("doc_id"), "doc_id", dir)
     }
     assert(e.getMessage.contains("empties the index"), e.getMessage)
@@ -359,7 +381,7 @@ class IndexMaintenanceSpec extends SparkSpec {
     assert(bands(dir) == bands(want))
     // compaction folds the pending rows into a single bands generation
     // whose lists equal the union build's exactly (sorted, deduped)
-    IndexMaintenance.compactMinhashIndex(spark, dir)
+    IndexMaintenance.compactIndex(spark, dir)
     assert(IndexMaintenance.dataFiles(spark, comp(dir, "bandrows")).isEmpty)
     def storedBands(d: String) = spark.read.parquet(comp(d, "bands"))
       .collect().map(r => (r.getLong(0), r.getSeq[Long](1))).toMap
@@ -377,7 +399,7 @@ class IndexMaintenanceSpec extends SparkSpec {
     val changed = ref.withColumn("text",
       when($"doc_id" === target, concat($"text", lit(" zz yy xx ww")))
         .otherwise($"text"))
-    IndexMaintenance.deleteFromMinhashIndex(
+    IndexMaintenance.deleteFromIndex(
       Seq(target).toDF("doc_id"), "doc_id", dir)
     Dedup.appendToMinhashIndex(changed.filter($"doc_id" === target),
       "doc_id", "text", dir)
@@ -414,7 +436,7 @@ class IndexMaintenanceSpec extends SparkSpec {
         .withColumn("doc_id", $"doc_id" + 1000000L),
       "doc_id", "text", b) // a second increment to accumulate files
     val before = pairs(b)
-    val stats = IndexMaintenance.compactMinhashIndex(spark, b)
+    val stats = IndexMaintenance.compactIndex(spark, b)
     assert(stats.filesAfter < stats.filesBefore, s"got $stats")
     assert(pairs(b) == before)
     rm(a); rm(b)
@@ -580,7 +602,7 @@ class IndexMaintenanceSpec extends SparkSpec {
       centroids0 = Some(cents), codec = Similarity.IvfCodec.Sq8(bounds))
     val bigDel = all.filter($"vec_id" % 5 === 2).select($"vec_id")
       .unionByName(spark.range(10000000L, 10300000L).select($"id".as("vec_id")))
-    IndexMaintenance.deleteFromIvfIndex(bigDel, "vec_id", dir)
+    IndexMaintenance.deleteFromIndex(bigDel, "vec_id", dir)
     val want = tmp("ivfbigdelwant")
     Similarity.writeIvfIndex(all.filter($"vec_id" % 5 =!= 2),
       "vec_id", "embedding", want, cells = 16,
@@ -611,7 +633,7 @@ class IndexMaintenanceSpec extends SparkSpec {
     // live vectors — must refuse, not publish an index whose probes
     // all return empty
     val e = intercept[IllegalArgumentException] {
-      IndexMaintenance.deleteFromIvfIndex(
+      IndexMaintenance.deleteFromIndex(
         Seq(1L, 2L).toDF("vec_id"), "vec_id", dir)
     }
     assert(e.getMessage.contains("empties the index"), e.getMessage)
@@ -620,7 +642,7 @@ class IndexMaintenanceSpec extends SparkSpec {
     rm(dir)
   }
 
-  test("maintainIvfIndex: the policy fires exactly at its thresholds and compaction preserves probes") {
+  test("maintainIndex (IVF): the policy fires exactly at its thresholds and compaction preserves probes") {
     val all = embs
     val (cents, bounds) = pins(all)
     val q = Similarity.prepareQueries(all.filter($"vec_id" < 5),
@@ -628,27 +650,31 @@ class IndexMaintenanceSpec extends SparkSpec {
     val dir = tmp("ivfmaint")
     Similarity.writeIvfIndex(all, "vec_id", "embedding", dir, cells = 16,
       centroids0 = Some(cents), codec = Similarity.IvfCodec.Sq8(bounds))
-    val never = IndexMaintenance.IvfMaintenancePolicy(
-      maxTombstoneFraction = 2.0, maxFilesPerCell = 1e9)
-    assert(IndexMaintenance.maintainIvfIndex(spark, dir, never).isEmpty)
+    val never = IndexMaintenance.MaintenancePolicy(
+      maxPendingFraction = 2.0, maxFileBloat = 1e9)
+    assert(IndexMaintenance.maintainIndex(spark, dir, never).compacted.isEmpty)
 
     // tombstone-fraction trigger, pinned EXACTLY at the threshold:
     // fraction = dead/distinct; at == it fires, just above it doesn't
     val nIds = all.count()
-    IndexMaintenance.deleteFromIvfIndex(
+    IndexMaintenance.deleteFromIndex(
       all.filter($"vec_id" % 5 === 2).select("vec_id"), "vec_id", dir)
     val nDead = spark.read.parquet(
       IndexLayout.snapshot(spark, dir).dir("tombstones")).count()
     val frac = nDead.toDouble / nIds
     val before = rows(Similarity.queryIvfIndex(spark, dir, q,
       k = 10, nprobe = 4).orderBy("q_id", "rank"))
-    assert(IndexMaintenance.maintainIvfIndex(spark, dir,
-      IndexMaintenance.IvfMaintenancePolicy(
-        maxTombstoneFraction = frac + 1e-9, maxFilesPerCell = 1e9)).isEmpty)
-    val st = IndexMaintenance.maintainIvfIndex(spark, dir,
-      IndexMaintenance.IvfMaintenancePolicy(
-        maxTombstoneFraction = frac, maxFilesPerCell = 1e9))
-    assert(st.nonEmpty, "policy at the exact threshold must fire")
+    val quiet = IndexMaintenance.maintainIndex(spark, dir,
+      IndexMaintenance.MaintenancePolicy(
+        maxPendingFraction = frac + 1e-9, maxFileBloat = 1e9))
+    assert(quiet.compacted.isEmpty)
+    // the decision record carries the measured debt it compared
+    assert(quiet.family == "ivf" && quiet.pendingFraction == frac, quiet)
+    val st = IndexMaintenance.maintainIndex(spark, dir,
+      IndexMaintenance.MaintenancePolicy(
+        maxPendingFraction = frac, maxFileBloat = 1e9))
+    assert(st.compacted.nonEmpty, "policy at the exact threshold must fire")
+    assert(st.pendingFraction == frac, st)
     // compaction materialized the tombstones; probes identical
     assert(!IndexLayout.snapshot(spark, dir).names("tombstones"))
     assert(rows(Similarity.queryIvfIndex(spark, dir, q,
@@ -668,12 +694,14 @@ class IndexMaintenanceSpec extends SparkSpec {
     val cells = fs.listStatus(new org.apache.hadoop.fs.Path(snap.dir("cells")))
       .count(s => s.isDirectory && s.getPath.getName.startsWith("cell="))
     val ratio = files.toDouble / cells
-    assert(IndexMaintenance.maintainIvfIndex(spark, dir,
-      IndexMaintenance.IvfMaintenancePolicy(
-        maxTombstoneFraction = 2.0, maxFilesPerCell = ratio + 1e-9)).isEmpty)
-    assert(IndexMaintenance.maintainIvfIndex(spark, dir,
-      IndexMaintenance.IvfMaintenancePolicy(
-        maxTombstoneFraction = 2.0, maxFilesPerCell = ratio)).nonEmpty)
+    val quietFiles = IndexMaintenance.maintainIndex(spark, dir,
+      IndexMaintenance.MaintenancePolicy(
+        maxPendingFraction = 2.0, maxFileBloat = ratio + 1e-9))
+    assert(quietFiles.compacted.isEmpty)
+    assert(quietFiles.fileBloat == ratio && quietFiles.pendingFraction == 0.0, quietFiles)
+    assert(IndexMaintenance.maintainIndex(spark, dir,
+      IndexMaintenance.MaintenancePolicy(
+        maxPendingFraction = 2.0, maxFileBloat = ratio)).compacted.nonEmpty)
     rm(dir)
   }
 
@@ -690,7 +718,7 @@ class IndexMaintenanceSpec extends SparkSpec {
     math.max(1L, (bytes + maxPB - 1) / maxPB)
   }
 
-  test("maintainBm25Index: the file-bloat policy fires exactly at its threshold and compaction preserves probes") {
+  test("maintainIndex (BM25): the file-bloat policy fires exactly at its threshold and compaction preserves probes") {
     val dir = tmp("bm25maint")
     TextAnalysis.writeBm25Index(docs.filter($"doc_id" % 4 =!= 0),
       "doc_id", "text", dir)
@@ -699,28 +727,32 @@ class IndexMaintenanceSpec extends SparkSpec {
     TextAnalysis.appendToBm25Index(docs.filter($"doc_id" % 8 === 4),
       "doc_id", "text", dir)
     val before = rows(bm25Probe(dir))
-    assert(IndexMaintenance.maintainBm25Index(spark, dir,
-      IndexMaintenance.Bm25MaintenancePolicy(maxFileBloat = 1e9)).isEmpty)
+    assert(IndexMaintenance.maintainIndex(spark, dir,
+      IndexMaintenance.MaintenancePolicy(maxFileBloat = 1e9)).compacted.isEmpty)
     // exact-threshold pin against the recomputed bloat ratio
     val files = IndexMaintenance.dataFileCount(spark, comp(dir, "postings")) +
       IndexMaintenance.dataFileCount(spark, comp(dir, "dl"))
     val ratio = files.toDouble / (byteTarget(compBytes(comp(dir, "postings"))) +
       byteTarget(compBytes(comp(dir, "dl"))))
     assert(ratio > 1.0, s"fixture accumulated no bloat ($ratio)")
-    assert(IndexMaintenance.maintainBm25Index(spark, dir,
-      IndexMaintenance.Bm25MaintenancePolicy(ratio + 1e-9)).isEmpty)
-    val st = IndexMaintenance.maintainBm25Index(spark, dir,
-      IndexMaintenance.Bm25MaintenancePolicy(ratio))
-    assert(st.nonEmpty, "policy at the exact threshold must fire")
-    assert(st.get.filesAfter < st.get.filesBefore, s"got $st")
+    val quiet = IndexMaintenance.maintainIndex(spark, dir,
+      IndexMaintenance.MaintenancePolicy(maxFileBloat = ratio + 1e-9))
+    assert(quiet.compacted.isEmpty)
+    assert(quiet.family == "bm25" && quiet.fileBloat == ratio &&
+      quiet.pendingFraction == 0.0, quiet)
+    val st = IndexMaintenance.maintainIndex(spark, dir,
+      IndexMaintenance.MaintenancePolicy(maxFileBloat = ratio))
+    assert(st.compacted.nonEmpty, "policy at the exact threshold must fire")
+    assert(st.fileBloat == ratio, st)
+    assert(st.compacted.get.filesAfter < st.compacted.get.filesBefore, s"got $st")
     assert(rows(bm25Probe(dir)) == before) // every score bit identical
     // debt folded: the same threshold is quiet now
-    assert(IndexMaintenance.maintainBm25Index(spark, dir,
-      IndexMaintenance.Bm25MaintenancePolicy(ratio)).isEmpty)
+    assert(IndexMaintenance.maintainIndex(spark, dir,
+      IndexMaintenance.MaintenancePolicy(maxFileBloat = ratio)).compacted.isEmpty)
     rm(dir)
   }
 
-  test("maintainMinhashIndex: pending-fraction and file-bloat triggers fire exactly; probes preserved across the fold") {
+  test("maintainIndex (MinHash): pending-fraction and file-bloat triggers fire exactly; probes preserved across the fold") {
     val ref = docs.filter($"doc_id" % 2 === 1)
     val refA = ref.filter($"doc_id" % 3 =!= 0)
     val refB = ref.filter($"doc_id" % 3 === 0)
@@ -731,8 +763,8 @@ class IndexMaintenanceSpec extends SparkSpec {
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     lazy val dir = tmp("mhmaint")
     Dedup.writeMinhashIndex(refA, "doc_id", "text", dir)
-    assert(IndexMaintenance.maintainMinhashIndex(spark, dir,
-      IndexMaintenance.MinhashMaintenancePolicy(2.0, 1e9)).isEmpty)
+    assert(IndexMaintenance.maintainIndex(spark, dir,
+      IndexMaintenance.MaintenancePolicy(2.0, 1e9)).compacted.isEmpty)
     Dedup.appendToMinhashIndex(refB, "doc_id", "text", dir)
     // fixture never trips the skew cap, so probes before and after
     // the fold are the same exact (uncapped) pair set
@@ -744,26 +776,31 @@ class IndexMaintenanceSpec extends SparkSpec {
     val pend = compBytes(comp(dir, "bandrows")).toDouble /
       math.max(compBytes(comp(dir, "bands")), 1L)
     assert(pend > 0.0, "append left no pending bandrows")
-    assert(IndexMaintenance.maintainMinhashIndex(spark, dir,
-      IndexMaintenance.MinhashMaintenancePolicy(pend + 1e-9, 1e9)).isEmpty)
-    val st = IndexMaintenance.maintainMinhashIndex(spark, dir,
-      IndexMaintenance.MinhashMaintenancePolicy(pend, 1e9))
-    assert(st.nonEmpty, "policy at the exact pending threshold must fire")
+    val quiet = IndexMaintenance.maintainIndex(spark, dir,
+      IndexMaintenance.MaintenancePolicy(pend + 1e-9, 1e9))
+    assert(quiet.compacted.isEmpty)
+    assert(quiet.family == "minhash" && quiet.pendingFraction == pend, quiet)
+    val st = IndexMaintenance.maintainIndex(spark, dir,
+      IndexMaintenance.MaintenancePolicy(pend, 1e9))
+    assert(st.compacted.nonEmpty, "policy at the exact pending threshold must fire")
+    assert(st.pendingFraction == pend, st)
     assert(pairs() == got) // the fold changed no probe answer
     // pending debt cleared: the fraction trigger is quiet, and the
     // file-bloat trigger pins exactly against the folded layout
-    assert(IndexMaintenance.maintainMinhashIndex(spark, dir,
-      IndexMaintenance.MinhashMaintenancePolicy(pend, 1e9)).isEmpty)
+    assert(IndexMaintenance.maintainIndex(spark, dir,
+      IndexMaintenance.MaintenancePolicy(pend, 1e9)).compacted.isEmpty)
     val files = Seq("shingles", "bands", "bandrows")
       .map(c => IndexMaintenance.dataFileCount(spark, comp(dir, c))).sum
     val bloat = files.toDouble /
       (byteTarget(compBytes(comp(dir, "shingles"))) +
         byteTarget(compBytes(comp(dir, "bands")) +
           compBytes(comp(dir, "bandrows"))))
-    assert(IndexMaintenance.maintainMinhashIndex(spark, dir,
-      IndexMaintenance.MinhashMaintenancePolicy(2.0, bloat + 1e-9)).isEmpty)
-    assert(IndexMaintenance.maintainMinhashIndex(spark, dir,
-      IndexMaintenance.MinhashMaintenancePolicy(2.0, bloat)).nonEmpty)
+    val quietBloat = IndexMaintenance.maintainIndex(spark, dir,
+      IndexMaintenance.MaintenancePolicy(2.0, bloat + 1e-9))
+    assert(quietBloat.compacted.isEmpty)
+    assert(quietBloat.fileBloat == bloat && quietBloat.pendingFraction == 0.0, quietBloat)
+    assert(IndexMaintenance.maintainIndex(spark, dir,
+      IndexMaintenance.MaintenancePolicy(2.0, bloat)).compacted.nonEmpty)
     assert(pairs() == got)
     rm(dir)
   }

@@ -107,7 +107,7 @@ class MinhashIndexSpec extends SparkSpec {
     Dedup.writeMinhashIndex(docs.filter(col("doc_id") % 4 === 1),
       "doc_id", "text", p4)
     Dedup.appendToMinhashIndex(evenDocs, "doc_id", "text", p4)
-    IndexMaintenance.compactMinhashIndex(spark, p4)
+    IndexMaintenance.compactIndex(spark, p4)
     Dedup.writeMinhashIndex(oddDocs, "doc_id", "text", p4)
     val st2 = Dedup.loadMinhashIndex(spark, p4)
     assert(st2.pendingBandRows.isEmpty ||

@@ -203,6 +203,32 @@ class SimilaritySpec extends SparkSpec {
     assert(a.sameElements(b))
   }
 
+  test("wrong-dimension vectors refuse: a 3-d query over a 2-d corpus throws from bruteTopK and ivfTopK instead of scoring a prefix") {
+    def messages(e: Throwable): String =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+    val corpus = Seq((1L, Array(1.0f, 0.0f)), (2L, Array(0.0f, 1.0f)),
+      (3L, Array(0.6f, 0.8f))).toDF("vec_id", "embedding")
+    // its first two dims equal corpus vector 1: a prefix fold reads cosine 1.0
+    val q3 = Seq((9L, Array(1.0f, 0.0f, 5.0f))).toDF("vec_id", "embedding")
+    val eb = intercept[Exception] {
+      Similarity.bruteTopK(corpus, q3, "vec_id", "embedding", k = 2).collect()
+    }
+    assert(messages(eb).contains("different lengths (3 vs 2)"), messages(eb))
+    val ei = intercept[Exception] {
+      Similarity.ivfTopK(corpus, Similarity.prepareQueries(q3, "vec_id", "embedding"),
+        "vec_id", "embedding", k = 2, cells = 2, nprobe = 2).collect()
+    }
+    assert(messages(ei).contains("different lengths (3 vs 2)"), messages(ei))
+    // the interpreted paths refuse too; equal lengths still evaluate
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    val v3 = Literal.create(Array(1.0, 0.0, 5.0)); val v2 = Literal.create(Array(1.0, 0.0))
+    intercept[IllegalArgumentException](graft.functions.CosineSimExpr(v3, v2).eval())
+    assert(graft.functions.CosineSimExpr(v2, v2).eval() == 1.0)
+    val cell = graft.functions.NearestCell(v3, Seq(1L), Seq(Seq(1.0, 0.0)))
+    val e = intercept[IllegalArgumentException](cell.eval())
+    assert(e.getMessage.contains("3-d") && e.getMessage.contains("2-d"), e.getMessage)
+  }
+
   test("cosine fold is sequential and deterministic") {
     val df = Seq((Seq(1.0f, 2.0f, 3.0f), Seq(4.0f, 5.0f, 6.0f))).toDF("a", "b")
     val c = df.select(Similarity.cosine(

@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.SparkSpec
 import graft.operators.{Dedup, IndexMaintenance, TextAnalysis}
-import graft.operators.IndexMaintenance.{Bm25MaintenancePolicy, IvfMaintenancePolicy, MinhashMaintenancePolicy}
+import graft.operators.IndexMaintenance.MaintenancePolicy
 import org.apache.spark.sql.functions._
 
 /** Streaming index INGEST for the lexical and MinHash families (and
@@ -50,7 +50,7 @@ class StreamingIndexIngestSpec extends SparkSpec {
     StreamingIndexIngest.bm25(
       stageStream(run, 3, docs.filter($"doc_id" % 3 === 0)), idx,
       "doc_id", "text", s"$run/ckpt", ingestId = "crawl",
-      maintain = Some(Bm25MaintenancePolicy(maxFileBloat = 1.0)))
+      maintain = Some(MaintenancePolicy(maxFileBloat = 1.0)))
 
     val full = java.nio.file.Files.createTempDirectory("bm25ingfull").toString
     TextAnalysis.writeBm25Index(docs, "doc_id", "text", full)
@@ -103,7 +103,7 @@ class StreamingIndexIngestSpec extends SparkSpec {
     StreamingIndexIngest.minhash(
       stageStream(run, 3, docs.filter($"doc_id" % 3 === 0)), idx,
       "doc_id", "text", s"$run/ckpt", ingestId = "crawl",
-      maintain = Some(MinhashMaintenancePolicy(maxPendingFraction = 0.05)))
+      maintain = Some(MaintenancePolicy(maxPendingFraction = 0.05)))
 
     val full = java.nio.file.Files.createTempDirectory("mhingfull").toString
     Dedup.writeMinhashIndex(docs, "doc_id", "text", full)
@@ -146,7 +146,7 @@ class StreamingIndexIngestSpec extends SparkSpec {
     StreamingIvfAppend.run(spark,
       stageStream(run, 3, embs.filter($"vec_id" % 4 === 0)), idx,
       "vec_id", "embedding", s"$run/ckpt",
-      maintain = Some(IvfMaintenancePolicy(maxFilesPerCell = 1.0)))
+      maintain = Some(MaintenancePolicy(maxFileBloat = 1.0)))
 
     val full = java.nio.file.Files.createTempDirectory("ivfingfull").toString
     graft.operators.Similarity.writeIvfIndex(embs, "vec_id", "embedding",
