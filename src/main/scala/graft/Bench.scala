@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Per-round benchmark — one JSON line on stdout.
   *
@@ -17,24 +16,9 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "5").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      // size-based AQE coalescing (Spark docs' recommended setting):
-      // reduce-stage task counts follow advisoryPartitionSizeInBytes
-      // instead of defaultParallelism — tiny stages stop paying 32
-      // tasks of pure scheduling overhead locally, and at cluster
-      // scale partitions stay in the advisory byte range either way
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus)
     // warmup: initialize codegen, parquet reader, shuffle machinery so
     // per-query timings reflect steady state rather than JVM startup
     spark.range(1000000).selectExpr("sum(id)").collect()

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,18 +8,8 @@ object Verify {
     // Optional trailing args: restrict to these query names (builder-side
     // single-query iteration; the driver always passes exactly two args).
     val only: Set[String] = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // size-based AQE coalescing — same setting as Bench (see there)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = GraftSession.local(cpus)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }

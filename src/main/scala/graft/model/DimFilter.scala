@@ -24,9 +24,7 @@ sealed trait DimFilter {
   def compile(schema: StructType): Column
 
   /** Column names this filter reads, or None when statically unknown
-    * (the free-form `expression` filter) — lets scan-time column
-    * pruning keep projection ∪ filter columns instead of giving up
-    * whenever a filter is present. */
+    * (the free-form `expression` filter). */
   def referencedDims: Option[Set[String]] = this match {
     case DimFilter.Selector(d, _) => Some(Set(d))
     case DimFilter.In(d, _) => Some(Set(d))
@@ -47,70 +45,6 @@ sealed trait DimFilter {
     case DimFilter.True => Some(Set.empty)
     case DimFilter.Expr(_) => None
   }
-
-  /** Conjunctive positive equality constraints: per dimension, a value
-    * set that must intersect the dim's actual values for ANY row to
-    * match. This is the dictionary-short-circuit surface for segment
-    * readers — Druid's native trick: a selector/in value absent from a
-    * dictionary-encoded column's dictionary proves the whole segment
-    * matches nothing, before any row decode. Null-matching selectors
-    * and non-equality filters contribute nothing; Or/Not subtrees
-    * contribute nothing (sound: constraints may only come from terms
-    * that are conjunctively required). An empty set for a dim means
-    * the conjunction is unsatisfiable. */
-  def requiredValues: Map[String, Set[String]] = this match {
-    case DimFilter.Selector(d, Some(v)) => Map(d -> Set(v))
-    case DimFilter.In(d, vs) if vs.nonEmpty && vs.forall(_ != null) =>
-      Map(d -> vs.toSet)
-    case DimFilter.And(fs) =>
-      fs.map(_.requiredValues).foldLeft(Map.empty[String, Set[String]]) {
-        (acc, m) => m.foldLeft(acc) { case (a, (d, vs)) =>
-          a.updated(d, a.get(d).map(_ intersect vs).getOrElse(vs))
-        }
-      }
-    case _ => Map.empty
-  }
-
-  /** Conjunctive dictionary-evaluable predicates: per dimension, a
-    * list of [[DictPred]]s that every matching row's dim value (or,
-    * for a multi-value dim, SOME value) must satisfy — the bitmap-
-    * index pruning surface for segment readers. Strictly more general
-    * than [[requiredValues]]: bound / like / regex / search conjuncts
-    * contribute here too, so a bound-filtered read of a dictionary-
-    * encoded segment decodes ∝ selectivity instead of every row.
-    * Or/Not subtrees and null-matching selectors contribute nothing
-    * (sound: only conjunctively-required positive terms constrain). */
-  def dictPredicates: Map[String, Seq[DictPred]] = this match {
-    case DimFilter.Selector(d, Some(v)) => Map(d -> Seq(DictPred.Values(Set(v))))
-    case DimFilter.In(d, vs) if vs.nonEmpty && vs.forall(_ != null) =>
-      Map(d -> Seq(DictPred.Values(vs.toSet)))
-    case DimFilter.Bound(d, lo, hi, ls, us, numeric)
-        if lo.nonEmpty || hi.nonEmpty =>
-      val p =
-        if (!numeric) DictPred.LexBound(lo, ls, hi, us)
-        else {
-          def parseD(s: String): Option[Double] =
-            try Some(java.lang.Double.parseDouble(s.trim))
-            catch { case _: NumberFormatException => None }
-          val plo = lo.map(parseD); val phi = hi.map(parseD)
-          // an unparseable numeric bound casts to NULL in the compiled
-          // filter — no row can satisfy it → prune everything
-          if (plo.contains(None) || phi.contains(None))
-            DictPred.Values(Set.empty)
-          else DictPred.NumBound(plo.flatten, ls, phi.flatten, us)
-        }
-      Map(d -> Seq(p))
-    case DimFilter.Like(d, p) => Map(d -> Seq(DictPred.LikePat(p)))
-    case DimFilter.Regex(d, p) => Map(d -> Seq(DictPred.RegexPat(p)))
-    case DimFilter.Search(d, v, cs) => Map(d -> Seq(DictPred.Contains(v, cs)))
-    case DimFilter.And(fs) =>
-      fs.map(_.dictPredicates).foldLeft(Map.empty[String, Seq[DictPred]]) {
-        (acc, m) => m.foldLeft(acc) { case (a, (d, ps)) =>
-          a.updated(d, a.getOrElse(d, Nil) ++ ps)
-        }
-      }
-    case _ => Map.empty
-  }
 }
 
 /** A predicate over DICTIONARY values — the unit of bitmap-index row
@@ -119,9 +53,7 @@ sealed trait DimFilter {
   * could accept on that dimension. OVER-matching is always safe (the
   * extra rows decode and the residual filter drops them);
   * UNDER-matching never is (a bitmap-pruned row is never decoded, so
-  * the residual filter cannot resurrect it). Where Scala-side and
-  * Spark-side semantics could diverge (numeric parses, invalid
-  * patterns), the implementations below err toward `true`. */
+  * the residual filter cannot resurrect it). */
 sealed trait DictPred extends Serializable {
   def matches(value: String): Boolean
 }
@@ -156,67 +88,9 @@ object DictPred {
         upper.forall(u => if (upperStrict) cmp(v, u) < 0 else cmp(v, u) <= 0)
   }
 
-  /** Numeric bound. A dictionary value that fails the Scala parse
-    * CONSERVATIVELY matches: if Spark's string→double cast disagrees
-    * and accepts it, the row must still be decoded for the residual
-    * filter to judge (pruning on a parse disagreement would drop a
-    * kept row). */
-  final case class NumBound(lower: Option[Double], lowerStrict: Boolean,
-                            upper: Option[Double], upperStrict: Boolean)
-      extends DictPred {
-    def matches(v: String): Boolean =
-      try {
-        val d = java.lang.Double.parseDouble(v.trim)
-        lower.forall(l => if (lowerStrict) d > l else d >= l) &&
-          upper.forall(u => if (upperStrict) d < u else d <= u)
-      } catch { case _: NumberFormatException => true }
-  }
-
-  /** SQL LIKE, mirroring Spark's escape semantics (`\` escapes `_`,
-    * `%`, or itself; anything else is invalid → no pruning, the
-    * residual filter surfaces the error). Whole-string match with
-    * DOTALL, as Spark's `escapeLikeRegex` emits. */
-  final case class LikePat(pattern: String) extends DictPred {
-    @transient private lazy val re: Option[java.util.regex.Pattern] = {
-      val out = new StringBuilder("(?s)")
-      val it = pattern.iterator
-      var valid = true
-      while (it.hasNext && valid) it.next() match {
-        case '\\' if it.hasNext => it.next() match {
-          case c @ ('_' | '%' | '\\') =>
-            out ++= java.util.regex.Pattern.quote(c.toString)
-          case _ => valid = false
-        }
-        case '\\' => valid = false
-        case '_' => out += '.'
-        case '%' => out ++= ".*"
-        case c => out ++= java.util.regex.Pattern.quote(c.toString)
-      }
-      if (valid)
-        try Some(java.util.regex.Pattern.compile(out.result()))
-        catch { case scala.util.control.NonFatal(_) => None }
-      else None
-    }
-    def matches(v: String): Boolean = re.fold(true)(_.matcher(v).matches())
-  }
-
-  /** Java regex with FIND semantics (unanchored), matching Spark's
-    * `rlike`. An uncompilable pattern → no pruning. */
-  final case class RegexPat(pattern: String) extends DictPred {
-    @transient private lazy val re: Option[java.util.regex.Pattern] =
-      try Some(java.util.regex.Pattern.compile(pattern))
-      catch { case scala.util.control.NonFatal(_) => None }
-    def matches(v: String): Boolean = re.fold(true)(_.matcher(v).find())
-  }
-
-  /** search filter: substring containment, optionally case-folded
-    * (Locale.ROOT, as Spark's `lower` folds). */
-  final case class Contains(value: String, caseSensitive: Boolean)
-      extends DictPred {
-    def matches(v: String): Boolean =
-      if (caseSensitive) v.contains(value)
-      else v.toLowerCase(java.util.Locale.ROOT)
-        .contains(value.toLowerCase(java.util.Locale.ROOT))
+  /** DSv2 StringContains pushdown. */
+  final case class Contains(value: String) extends DictPred {
+    def matches(v: String): Boolean = v.contains(value)
   }
 
   /** DSv2 StringStartsWith pushdown. */
@@ -274,11 +148,10 @@ object DimFilter {
   /** A value filter whose dimension is transformed by an
     * `extractionFn` first (Druid: selector/in/bound/like/regex all
     * accept one). Per Druid semantics the extraction applies PER
-    * VALUE of a multi-value dim. Contributes nothing to
-    * requiredValues/dictPredicates (sound: extraction changes values,
-    * so no dictionary short-circuit), and the compiled Column is not
-    * parquet-pushable — it filters post-scan, same as Druid evaluates
-    * it post-dictionary. */
+    * VALUE of a multi-value dim. The compiled Column is not
+    * pushable (extraction changes values, so no dictionary
+    * short-circuit either) — it filters post-scan, same as Druid
+    * evaluates it post-dictionary. */
   final case class Extracted(dimension: String, fn: JValue, test: DimFilter)
       extends DimFilter {
     def compile(schema: StructType): Column = {

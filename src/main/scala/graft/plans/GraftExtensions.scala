@@ -9,9 +9,9 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
   * functions, so `spark.sql(...)` users get the full surface:
   *
   * {{{
-  * SparkSession.builder()
-  *   .withExtensions(new GraftExtensions)      // or
-  *   .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+  * builder.withExtensions(new GraftExtensions)   // on a session builder, or
+  * builder.config("spark.sql.extensions", "graft.plans.GraftExtensions")
+  * GraftExtensions.register(spark)               // on a running session
   * ...
   * spark.sql("SELECT theta_estimate(theta_sketch_agg(user_id)) FROM t")
   * }}}

@@ -279,8 +279,9 @@ object SegmentQueries {
     * test-segment), so every decoded cell is value-checked; byte-level
     * decode details are additionally pinned in DruidSegmentReaderSpec. */
   def druidSegmentRead(spark: SparkSession, sfDir: String): DataFrame = {
+    // the segment dir holds its own descriptor.json: a one-segment tree
     val fixture = "/root/reference/druid-mr/src/test/resources/test-segment"
-    graft.sources.DruidSegmentReader.read(spark, Seq(fixture))
+    spark.read.format("druid-segments").load(fixture)
       .withColumn("unique_hosts_est",
         graft.functions.DruidHll.druid_hll_estimate(col("unique_hosts")))
       .drop("unique_hosts")
@@ -364,13 +365,6 @@ object SegmentQueries {
        |GROUP BY 1, 2
        |ORDER BY 1, 2""".stripMargin
 
-  /** Descriptor-driven deep-storage scan, oracle-checked end to end:
-    * writes a deterministic two-version Druid v9 tree (v2 partially
-    * overshadows v1), then scans (dataSource, interval) through
-    * discovery → VersionedTimeline → windowed binary decode, exploding
-    * the multi-value dim. Covers the DOUBLE metric and array<string>
-    * decode paths under the driver's hash gate; the oracle is the
-    * fixture's known contents as a VALUES table. */
   /** Build-once ([[GateFixture]]) Druid v9 tree `name`, versioned by
     * the segment writer's format so a layout change never serves stale
     * descriptors. */
@@ -405,12 +399,23 @@ object SegmentQueries {
     }
   }
 
+  /** Descriptor-driven deep-storage scan, oracle-checked end to end:
+    * reads (dataSource, interval) of the two-version fixture tree (v2
+    * partially overshadows v1) through the `druid-segments` table —
+    * discovery → VersionedTimeline → windowed binary decode — exploding
+    * the multi-value dim. Covers the DOUBLE metric and array<string>
+    * decode paths under the driver's hash gate; the oracle is the
+    * fixture's known contents as a VALUES table. */
   def druidDeepStore(spark: SparkSession, sfDir: String): DataFrame = synchronized {
-    import graft.sources.DruidDeepStorage
     val day = 24 * 3600 * 1000L
     val t0 = java.time.Instant.parse("2020-06-01T00:00:00Z").toEpochMilli
     val root = deepStoreFixture(sfDir)
-    DruidDeepStorage.scan(spark, root.getAbsolutePath, "fixture", t0, t0 + day)
+    // the exact `__time` interval reaches timeline resolution, which
+    // clips each segment to its visible windows at planning
+    spark.read.format("druid-segments")
+      .option("dataSource", "fixture")
+      .load(root.getAbsolutePath)
+      .where(col("__time") >= t0 && col("__time") < t0 + day)
       .select(col("__time"), col("host"), col("hits"), col("revenue"),
         explode_outer(col("tags")).as("tag"))
       .orderBy("__time", "tag")

@@ -2,7 +2,7 @@ package graft.sources
 
 import java.nio.charset.StandardCharsets
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
@@ -19,7 +19,9 @@ import org.json4s.jackson.JsonMethods
   * existing [[VersionedTimeline]]: latest version wins per
   * overlapping time chunk, partial overshadow clips the loser to its
   * still-visible windows, and the clip is applied inside each
-  * per-segment decode task.
+  * per-segment decode task. Reads go through the `druid-segments`
+  * table ([[DruidSegmentsDataSource]]); this object owns discovery
+  * and the storage lifecycle (vacuum, kill).
   */
 object DruidDeepStorage {
 
@@ -120,45 +122,5 @@ object DruidDeepStorage {
     if (!dataSource.contains("/") && !dataSource.contains(".."))
       fs.delete(new HPath(s"$root/$dataSource"), true)
     segs.map(_.path)
-  }
-
-  /** The reference's DatasourceIngestionSpec surface with deep-storage
-    * discovery: scan (dataSource, interval) with optional projection
-    * and Druid DimFilter JSON, reading only the timeline-visible
-    * windows of each segment. */
-  def scan(spark: SparkSession, root: String, dataSource: String,
-           intervalStartMs: Long, intervalEndMs: Long,
-           columns: Seq[String] = Nil,
-           filterJson: Option[String] = None): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val segments = discover(spark, root).filter(_.dataSource == dataSource)
-    require(segments.nonEmpty, s"no segments for dataSource '$dataSource' under $root")
-    val windows = VersionedTimeline.resolve(segments, intervalStartMs, intervalEndMs)
-    // decode-time pruning: projection ∪ the filter's referenced dims.
-    // Only a free-form `expression` filter (referencedDims = None)
-    // forces a full decode — every structured DimFilter names its
-    // columns, so a filtered 2-column scan still skips the other
-    // columns' decompression.
-    val parsedFilter = filterJson.map(graft.model.DimFilter.parse)
-    val pruned =
-      if (columns.isEmpty) Nil
-      else parsedFilter match {
-        case None => columns
-        case Some(f) => f.referencedDims match {
-          case Some(dims) => (columns ++ dims).distinct
-          case None => Nil // unknown references: decode everything
-        }
-      }
-    val df0 =
-      if (windows.isEmpty) // interval misses every segment: empty, correct schema
-        DruidSegmentReader.read(spark, Seq(segments.head.path), pruned).limit(0)
-      else DruidSegmentReader.readWindowed(spark,
-        windows.map(w => (w.segment.path, w.windowStartMs, w.windowEndMs)), pruned)
-    val df1 = parsedFilter match {
-      case Some(f) => df0.filter(f.compile(df0.schema))
-      case None => df0
-    }
-    if (columns.isEmpty) df1
-    else df1.select(("__time" +: columns.filter(_ != "__time")).map(col): _*)
   }
 }

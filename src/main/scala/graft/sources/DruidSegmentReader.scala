@@ -4,7 +4,7 @@ import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.charset.StandardCharsets
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.spark.sql.{DataFrame, SparkSession, graftbridge}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.SpecificInternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -21,9 +21,11 @@ import graft.model.DictPred
   * Druid's own DatasourceInputFormat for decoding, this decodes the
   * segment format directly (smoosh container, GenericIndexed,
   * dictionary-encoded string dims, LZ4-compressed long/float metric
-  * columns, complex metrics as raw bytes) and exposes the rows as a
-  * DataFrame, so a user migrating off Druid can read their existing
-  * deep-storage segments with no Druid runtime at all.
+  * columns, complex metrics as raw bytes) and exposes the rows through
+  * the `druid-segments` DataSource V2 table
+  * ([[DruidSegmentsDataSource]]), so a user migrating off Druid can
+  * read their existing deep-storage segments with no Druid runtime at
+  * all.
   *
   * A segment directory holds `descriptor.json` (identity, interval,
   * version, dimension/metric name lists — the shape the reference's
@@ -129,58 +131,18 @@ object DruidSegmentReader {
       if (everywhere.contains(f.name)) f else f.copy(nullable = true)))
   }
 
-  /** Read one or more segment dirs as a DataFrame. Rows carry __time
-    * (epoch millis), then dimensions, then metrics. The schema is the
-    * UNION over all segments (per-segment schema evolution is the norm
-    * for a long-lived datasource): same-named columns must agree on
-    * type; a column absent from (or nullable in) any segment is
-    * nullable, and segments missing it emit nulls for it.
-    *
-    * `columns` prunes at DECODE time: only the requested internal
-    * files are parsed/decompressed — a 2-column projection of a wide
-    * segment never touches the other columns' bytes. */
-  def read(spark: SparkSession, segmentDirs: Seq[String],
-           columns: Seq[String] = Nil): DataFrame =
-    readWindowed(spark, segmentDirs.map(d => (d, Long.MinValue, Long.MaxValue)), columns)
-
-  /** Read (segmentDir, windowStartMs, windowEndMs) triples — the
-    * timeline's WindowedDataSegment shape (DruidInputFormat.java:
-    * 110-114). The window clip happens inside the per-segment decode
-    * task (one task per segment, one job, no union-of-plans), so a
-    * partially-overshadowed segment only emits its visible rows. */
-  def readWindowed(spark: SparkSession, windows: Seq[(String, Long, Long)],
-                   columns: Seq[String] = Nil,
-                   preds: Map[String, Seq[DictPred]] = Map.empty): DataFrame = {
-    require(windows.nonEmpty, "no segment dirs")
-    val confSer = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
-    val full = unionSchema(spark, windows.map(_._1).distinct)
-    val schema =
-      if (columns.isEmpty) full
-      else {
-        val want = ("__time" +: columns.filter(_ != "__time")).distinct
-        StructType(want.map(full.apply))
-      }
-    val rdd = spark.sparkContext
-      .parallelize(windows, windows.size)
-      .flatMap { case (dir, lo, hi) =>
-        decodeWindow(confSer.value, dir, lo, hi, schema, preds)
-      }
-    graftbridge.internalCreateDataFrame(spark, rdd, schema)
-  }
-
   /** Decode one windowed segment on an executor: dictionary
     * short-circuit, then the `[lo, hi)` row clip and a typed decode of
     * `schema`'s columns (in the caller's order; `__time` need not be
     * among them — the clip reads it regardless) straight into one
-    * reused row, which the caller must `copy()` to keep. The single
-    * executor-side entry point shared by [[readWindowed]], the grouped
-    * aggregate fallback and the DataSource V2 connector
-    * ([[DruidSegmentsDataSource]]); `counts` collects the caller's
-    * share of the decode work.
+    * reused row, which the caller must `copy()` to keep. The
+    * executor-side row decode of the DataSource V2 table
+    * ([[DruidSegmentsDataSource]]), the one read path; `counts`
+    * collects the caller's share of the decode work.
     *
     * The dictionary short-circuit is Druid-native, generalized from
-    * selector/in to ANY dictionary predicate (bound/like/regex/
-    * search): a conjunct with NO matching value in a string dim's
+    * selector/in to ANY dictionary predicate (string ranges, prefix,
+    * suffix, contains): a conjunct with NO matching value in a string dim's
     * dictionary proves zero rows match — the row decode is skipped
     * for the whole segment. The dictionary is a prefix of the
     * column's bytes, so the probe never decompresses row ids. */
@@ -236,30 +198,6 @@ object DruidSegmentReader {
           timeWindow = if (clips) Some((lo, hi)) else None, counts)
       }
     }
-  }
-
-  /** Timeline-style scan over segment dirs: interval clip on __time +
-    * optional projection + Druid DimFilter JSON — the reference's
-    * DatasourceIngestionSpec surface (DruidInputFormat.java:44-57). */
-  def scan(spark: SparkSession, segmentDirs: Seq[String],
-           intervalStartMs: Long, intervalEndMs: Long,
-           columns: Seq[String] = Nil,
-           filterJson: Option[String] = None): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    // decode-time column pruning only when the filter needs no extra
-    // columns (a DimFilter may reference unprojected dims)
-    val pruned = if (filterJson.isEmpty) columns else Nil
-    val parsed = filterJson.map(graft.model.DimFilter.parse)
-    val df0 = readWindowed(spark,
-        segmentDirs.map(d => (d, Long.MinValue, Long.MaxValue)), pruned,
-        parsed.map(_.dictPredicates).getOrElse(Map.empty))
-      .filter(col("__time") >= intervalStartMs && col("__time") < intervalEndMs)
-    val df1 = parsed match {
-      case Some(f) => df0.filter(f.compile(df0.schema))
-      case None => df0
-    }
-    if (columns.isEmpty) df1
-    else df1.select(("__time" +: columns.filter(_ != "__time")).map(col): _*)
   }
 
   /** The `__time` column (chunks decompress on first access). */
@@ -678,7 +616,7 @@ object DruidSegmentReader {
     * ids supplier is SKIPPED by its length header, never decompressed.
     *
     * Selector/in predicates binary-search the sorted dictionary; any
-    * other predicate (bound/like/regex/search) scans it — the
+    * other predicate (range/prefix/suffix/contains) scans it — the
     * dictionary is per-segment value CARDINALITY (tiny next to row
     * count), and a scan makes no assumption about which collation the
     * writer sorted under, which a range binary search would.

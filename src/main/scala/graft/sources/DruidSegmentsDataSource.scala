@@ -33,10 +33,12 @@ import graft.model.DictPred
   *   .select("__time", "hits")                    // pruned at decode
   * }}}
   *
-  * Where the hand-rolled [[DruidDeepStorage.scan]] needs projection
-  * and filter passed as arguments, here Catalyst drives them through
-  * the V2 pushdown hooks, so the same pruning happens for plain SQL
-  * over the table:
+  * It is the one read path over Druid segments: a reference-style
+  * (dataSource, interval, columns, DimFilter) read is `load` +
+  * `.where` + `.select`, with a DimFilter JSON compiled to a `Column`
+  * (`DimFilter.parse(json).compile(df.schema)`). Catalyst drives
+  * projection and filters through the V2 pushdown hooks, so the same
+  * pruning happens for plain SQL over the table:
   *
   *  - '''Column pruning''' (`SupportsPushDownRequiredColumns`) reaches
   *    the binary decoder: unprojected columns' bytes are never
@@ -46,10 +48,10 @@ import graft.model.DictPred
   *    bounds tighten the scan interval BEFORE timeline resolution, so
   *    out-of-interval segments are never planned as partitions (the
   *    reference's interval argument, now inferred from the WHERE
-  *    clause); string-dimension equality/IN conjuncts feed the
-  *    Druid-native dictionary short-circuit — a segment whose
-  *    dictionary provably contains no matching value skips row decode
-  *    entirely. All filters are also left for Spark to re-evaluate
+  *    clause); string-dimension equality/IN/range/substring
+  *    conjuncts feed the Druid-native dictionary short-circuit — a
+  *    segment whose dictionary provably contains no matching value
+  *    skips row decode entirely. All filters are also left for Spark to re-evaluate
   *    above the scan (same contract as the built-in file sources):
   *    the source prunes work, Spark owns exactness.
   *  - '''Statistics''' (`SupportsReportStatistics`): sizeInBytes =
@@ -193,10 +195,9 @@ private[sources] class DruidScanBuilder(fullSchema: StructType,
   private var pushedTopN: Option[(Boolean, Int)] = None // (desc, n)
   private var timeLo: Long = Long.MinValue
   private var timeHi: Long = Long.MaxValue
-  // dim -> conjunctive dictionary predicates (same law as
-  // DimFilter.dictPredicates: every conjunct must find a matching
-  // dictionary value, or the segment skips; each conjunct's bitmap
-  // union intersects into the decoded row set)
+  // dim -> conjunctive dictionary predicates: every conjunct must
+  // find a matching dictionary value, or the segment skips; each
+  // conjunct's bitmap union intersects into the decoded row set
   private var preds: Map[String, Seq[DictPred]] = Map.empty
 
   private def isScalarString(dim: String): Boolean =
@@ -272,7 +273,7 @@ private[sources] class DruidScanBuilder(fullSchema: StructType,
     case StringEndsWith(d, v) if isScalarString(d) =>
       addPred(d, DictPred.Suffix(v)); PushKind.Approx
     case StringContains(d, v) if isScalarString(d) =>
-      addPred(d, DictPred.Contains(v, caseSensitive = true)); PushKind.Approx
+      addPred(d, DictPred.Contains(v)); PushKind.Approx
     case _ => PushKind.No
   }
 

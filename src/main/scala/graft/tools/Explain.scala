@@ -1,20 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Dump formatted plans for the headline queries — the explain-audit
   * loop (PushedFilters / ReadSchema / broadcast / codegen spans). */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local(8)
     spark.sparkContext.setLogLevel("ERROR")
     val names = if (args.nonEmpty) args.toSeq else Seq(
       "q1_pricing", "q3_shipping", "q_timeseries", "q_topn", "q_scan_filtered")

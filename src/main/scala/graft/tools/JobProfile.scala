@@ -1,11 +1,10 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Per-JOB profiler for a declared query: runs the query once warm,
-  * then again with a listener that prints every Spark job's wall time,
-  * stage count and task count — the action-structure view (how many
+  * then again with a listener that prints every Spark job's wall time
+  * and stage count — the action-structure view (how many
   * driver-side barriers a query pays) that per-query totals hide.
   *
   * Usage: runMain graft.tools.JobProfile q_name [q_name2 ...]
@@ -13,23 +12,12 @@ import org.apache.spark.sql.SparkSession
 object JobProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("GRAFT_PARFIRST", "false"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.GraftSession.local(cpus)
     spark.range(1000000).selectExpr("sum(id)").collect()
 
     final class L extends SparkListener {
-      case class J(id: Int, t0: Long, var stages: Int = 0, var tasks: Int = 0)
+      case class J(id: Int, t0: Long, stages: Int)
       val jobs = new java.util.concurrent.ConcurrentHashMap[Int, J]()
       val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
       val descs = new java.util.concurrent.ConcurrentHashMap[Int, String]()
@@ -42,10 +30,6 @@ object JobProfile {
           .getOrElse("")
         descs.put(e.jobId, d.take(90))
       }
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-        jobs.forEach((_, j) => ())
-      }
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = ()
       override def onJobEnd(e: SparkListenerJobEnd): Unit = {
         val j = jobs.remove(e.jobId)
         if (j != null) {

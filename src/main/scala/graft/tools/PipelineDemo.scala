@@ -6,7 +6,6 @@ import graft.operators.{Dedup, Multimodal, Similarity, TextAnalysis}
 import graft.plans.GraftExtensions
 import graft.queries.DruidQueries
 import graft.sources.SegmentStore
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** End-to-end narrative run: the whole engine composed as one
@@ -21,14 +20,7 @@ import org.apache.spark.sql.functions._
 object PipelineDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local(8)
     spark.sparkContext.setLogLevel("ERROR")
     GraftExtensions.register(spark)
 

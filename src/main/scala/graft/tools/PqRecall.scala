@@ -16,8 +16,7 @@ import graft.operators.{Quantization, Similarity}
   * k-means little cluster structure to exploit. */
 object PqRecall {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8").config("spark.ui.enabled","false").getOrCreate()
+    val spark = graft.GraftSession.local(8)
     spark.sparkContext.setLogLevel("ERROR")
     val embs = graft.Tables.embeddings(spark, "/root/testdata/sf0.001").select("vec_id","embedding")
     val queries = embs.filter(col("vec_id") < 5)

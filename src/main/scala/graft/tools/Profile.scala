@@ -2,23 +2,13 @@ package graft.tools
 
 import graft.Tables
 import graft.functions.TextFunctions
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Ad-hoc stage profiler for slow bench queries. */
 object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(32)
     spark.range(1000000).selectExpr("sum(id)").collect()
 
     def time[T](label: String)(f: => T): T = {

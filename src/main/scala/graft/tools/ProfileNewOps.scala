@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
 
 /** Scale-ladder timing for the round-9 operators: min-of-3 wall time
   * per query at the SF dir given by SPARK_GRAFT_SF_DIR (args override
@@ -12,14 +11,7 @@ object ProfileNewOps {
     val names = if (args.nonEmpty) args.toSeq else Seq(
       "q_shuffle_order", "q_token_budget", "q_curriculum",
       "q_ngram_fam", "q_bpe_segment")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local(32)
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1000000).selectExpr("sum(id)").collect()
     names.foreach { n =>

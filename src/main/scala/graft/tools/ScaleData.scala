@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Deterministic N× scale-up of a testdata dir (default 10×) for
@@ -37,20 +37,12 @@ object ScaleData {
         "part", "lineitem", "events", "documents", "embeddings"))
     require(!(only.contains("embeddings") && copies > 64 * 64),
       "two-level embedding shift wraps at 64*64 copies - scale embeddings <= 4096x")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // driver testdata timestamps are TIMESTAMP(NANOS): read as
-      // ns-longs (same setting every graft session uses); the scaled
-      // events copy is REWRITTEN as a true microsecond TIMESTAMP so
-      // both engines read it natively (see the events block below)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    // driver testdata timestamps are TIMESTAMP(NANOS), read as
+    // ns-longs; the scaled events copy is REWRITTEN as a true
+    // microsecond TIMESTAMP so both engines read it natively (see the
+    // events block below)
+    val spark = graft.GraftSession.local(cpus)
 
     val cp = broadcast(spark.range(copies).select(col("id").as("__copy")))
 

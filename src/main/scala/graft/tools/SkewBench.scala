@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Evidence run for SaltedJoin: a deterministic synthetic workload
@@ -32,15 +31,12 @@ import org.apache.spark.sql.functions._
   */
 object SkewBench {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
+    // shuffle joins only, over enough partitions that the hot key's
+    // one partition is the bottleneck
+    spark.conf.set("spark.sql.shuffle.partitions", "32")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
 
     val nBig = sys.env.getOrElse("SKEW_ROWS", "8000000").toLong
     val nKeys = 1000000L

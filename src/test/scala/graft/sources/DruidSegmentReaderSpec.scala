@@ -6,12 +6,38 @@ import graft.SparkSpec
   * (druid-mr/src/test/resources/test-segment: descriptor.json +
   * index.zip) — known contents per its `note` file: three hourly rows
   * on 2014-10-22 with host a/b/c.example.com, visited_sum 100/150/200,
-  * and a cardinality-1 hyperUnique sketch each. */
+  * and a cardinality-1 hyperUnique sketch each. Specs of the reference's
+  * bytes run only where that fixture is present; the read-path specs
+  * run on [[DruidSegmentWriter]] segments of the same contents. Every
+  * read goes through the `druid-segments` table. */
 class DruidSegmentReaderSpec extends SparkSpec {
+  import org.apache.spark.sql.DataFrame
+  import org.apache.spark.sql.functions.col
+  import graft.sources.{DruidSegmentWriter => W}
 
   private val segDir = "/root/reference/druid-mr/src/test/resources/test-segment"
 
   private def available: Boolean = new java.io.File(s"$segDir/index.zip").isFile
+
+  private def load(root: String): DataFrame = spark.read.format("druid-segments").load(root)
+
+  private val t0 = java.time.Instant.parse("2014-10-22T00:00:00Z").toEpochMilli
+  private val hour = 3600 * 1000L
+  private val day = 24 * hour
+
+  /** The reference fixture's rows, written by this repo's writer as
+    * shard `shard` of one day chunk under a fresh root (returned). */
+  private def writeRefLike(root: java.io.File = java.nio.file.Files
+                             .createTempDirectory("graft-reflike").toFile,
+                           shard: Int = 0, numShards: Int = 1): java.io.File = {
+    W.write(new java.io.File(root, s"testds/$shard"), "testds",
+      Seq(t0, t0 + hour, t0 + 2 * hour),
+      Seq(W.StrDim("host", Seq("a.example.com", "b.example.com", "c.example.com")),
+        W.ComplexMet("unique_hosts", "hyperUnique", (1 to 3).map(i => Array.fill(8)(i.toByte))),
+        W.LongMet("visited_sum", Seq(100L, 150L, 200L))),
+      t0, t0 + day, shardNum = shard, numShards = numShards)
+    root
+  }
 
   test("schema derives from the segment's own column metadata") {
     assume(available)
@@ -26,11 +52,8 @@ class DruidSegmentReaderSpec extends SparkSpec {
 
   test("decodes the fixture's rows exactly") {
     assume(available)
-    val rows = DruidSegmentReader.read(spark, Seq(segDir))
-      .orderBy("__time").collect()
+    val rows = load(segDir).orderBy("__time").collect()
     assert(rows.length == 3)
-    val t0 = java.time.Instant.parse("2014-10-22T00:00:00Z").toEpochMilli
-    val hour = 3600 * 1000L
     assert(rows.map(_.getAs[Long]("__time")).toSeq == Seq(t0, t0 + hour, t0 + 2 * hour))
     assert(rows.map(_.getAs[String]("host")).toSeq ==
       Seq("a.example.com", "b.example.com", "c.example.com"))
@@ -41,8 +64,7 @@ class DruidSegmentReaderSpec extends SparkSpec {
 
   test("hyperUnique sketch bytes estimate and merge (Druid HLL format)") {
     assume(available)
-    import org.apache.spark.sql.functions.col
-    val df = DruidSegmentReader.read(spark, Seq(segDir))
+    val df = load(segDir)
     // each row's sketch holds exactly one host
     val perRow = df.select(
       graft.functions.DruidHll.druid_hll_estimate(col("unique_hosts")).as("e"))
@@ -58,17 +80,28 @@ class DruidSegmentReaderSpec extends SparkSpec {
   }
 
   test("column pruning decodes only the requested columns") {
-    assume(available)
-    val out = DruidSegmentReader.read(spark, Seq(segDir), columns = Seq("visited_sum"))
+    val df = load(writeRefLike().getAbsolutePath)
+    DruidSegmentReader.decompressedChunks.set(0)
+    assert(df.collect().length == 3)
+    val fullChunks = DruidSegmentReader.decompressedChunks.get()
+    DruidSegmentReader.decompressedChunks.set(0)
+    val out = df.select("__time", "visited_sum")
     assert(out.columns.toSeq == Seq("__time", "visited_sum"))
-    assert(out.orderBy("__time").collect().map(_.getLong(1)).toSeq == Seq(100L, 150L, 200L))
+    // one scan (an orderBy would sample it first): host's row ids stay
+    // compressed, only __time and visited_sum decode
+    assert(out.collect().sortBy(_.getLong(0)).map(_.getLong(1)).toSeq == Seq(100L, 150L, 200L))
+    val prunedChunks = DruidSegmentReader.decompressedChunks.get()
+    assert(prunedChunks > 0 && prunedChunks < fullChunks,
+      s"pruned read decompressed $prunedChunks chunks vs $fullChunks for all columns")
   }
 
   test("multi-segment read unions rows across segment dirs") {
-    assume(available)
-    // same dir twice stands in for two shards/chunks of one datasource
-    val rows = DruidSegmentReader.read(spark, Seq(segDir, segDir)).collect()
+    // two shards of one day chunk: both are timeline-visible
+    val root = writeRefLike(shard = 0, numShards = 2)
+    writeRefLike(root, shard = 1, numShards = 2)
+    val rows = load(root.getAbsolutePath).collect()
     assert(rows.length == 6)
+    assert(rows.map(_.getAs[Long]("visited_sum")).sum == 2 * 450L)
   }
 
   test("Druid JSON queries run over migrated segment rows") {
@@ -76,8 +109,7 @@ class DruidSegmentReaderSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     // the reference's whole story: read segments, run Druid-style
     // aggregations downstream. __time arrives as epoch millis.
-    val df = DruidSegmentReader.read(spark, Seq(segDir))
-      .withColumn("ts", timestamp_millis(col("__time")))
+    val df = load(segDir).withColumn("ts", timestamp_millis(col("__time")))
     val out = graft.queries.DruidQueries.run(df, "ts",
       """{"queryType":"timeseries","granularity":"day",
         |"aggregations":[
@@ -132,32 +164,26 @@ class DruidSegmentReaderSpec extends SparkSpec {
   }
 
   test("dictionary short-circuit: a no-match selector decodes ZERO segments") {
-    assume(available)
-    val t0 = java.time.Instant.parse("2014-10-22T00:00:00Z").toEpochMilli
-    val day = 24 * 3600 * 1000L
+    val df = load(writeRefLike().getAbsolutePath)
+    def scan(filterJson: String): Array[org.apache.spark.sql.Row] = {
+      DruidSegmentReader.decodedSegments.set(0)
+      df.where(col("__time") >= t0 && col("__time") < t0 + day)
+        .where(graft.model.DimFilter.parse(filterJson).compile(df.schema))
+        .collect()
+    }
     // value absent from the host dictionary → the per-segment task must
     // skip row decode entirely (Druid's dictionary test), not decode
     // and filter
-    DruidSegmentReader.decodedSegments.set(0)
-    val none = DruidSegmentReader.scan(spark, Seq(segDir), t0, t0 + day,
-      filterJson = Some("""{"type":"selector","dimension":"host","value":"zzz.nope"}"""))
-      .collect()
+    val none = scan("""{"type":"selector","dimension":"host","value":"zzz.nope"}""")
     assert(none.isEmpty)
     assert(DruidSegmentReader.decodedSegments.get() == 0,
       "no-match selector must skip row decode")
     // sanity: a matching selector still decodes (and the probe sees it)
-    DruidSegmentReader.decodedSegments.set(0)
-    val some = DruidSegmentReader.scan(spark, Seq(segDir), t0, t0 + day,
-      filterJson = Some("""{"type":"selector","dimension":"host","value":"b.example.com"}"""))
-      .collect()
+    val some = scan("""{"type":"selector","dimension":"host","value":"b.example.com"}""")
     assert(some.length == 1)
     assert(DruidSegmentReader.decodedSegments.get() == 1)
     // and an IN filter with one present value must NOT short-circuit
-    DruidSegmentReader.decodedSegments.set(0)
-    val in = DruidSegmentReader.scan(spark, Seq(segDir), t0, t0 + day,
-      filterJson = Some(
-        """{"type":"in","dimension":"host","values":["zzz.nope","a.example.com"]}"""))
-      .collect()
+    val in = scan("""{"type":"in","dimension":"host","values":["zzz.nope","a.example.com"]}""")
     assert(in.length == 1 && DruidSegmentReader.decodedSegments.get() == 1)
   }
 
@@ -189,8 +215,8 @@ class DruidSegmentReaderSpec extends SparkSpec {
   }
 
   test("window clip prunes dim/metric decode to window selectivity") {
-    import graft.sources.{DruidSegmentWriter => W}
-    val dir = java.nio.file.Files.createTempDirectory("graft-winclip").toFile
+    val root = java.nio.file.Files.createTempDirectory("graft-winclip").toFile
+    val dir = new java.io.File(root, "seg")
     val t0 = java.time.Instant.parse("2022-01-01T00:00:00Z").toEpochMilli
     val n = 200
     // 5 value columns × ~100 chunks each (SizePer=2): chunk
@@ -200,15 +226,15 @@ class DruidSegmentReaderSpec extends SparkSpec {
       Seq(W.StrDim("host", (0 until n).map(i => f"h$i%03d"))) ++
         (1 to 4).map(m => W.LongMet(s"m$m", (0 until n).map(i => (i * m).toLong))),
       t0, t0 + n * 1000L)
-    val win = Seq((dir.getAbsolutePath, Long.MinValue, Long.MaxValue))
+    val df = load(root.getAbsolutePath)
     DruidSegmentReader.decompressedChunks.set(0)
-    assert(DruidSegmentReader.readWindowed(spark, win).collect().length == n)
+    assert(df.collect().length == n)
     val fullChunks = DruidSegmentReader.decompressedChunks.get()
-    // a 2-row window: the __time pre-scan may touch every __time chunk,
-    // but dim/metric chunks decode ONLY for in-window rows
+    // a 2-row window (timeline resolution clips the segment to it): the
+    // __time pre-scan may touch every __time chunk, but dim/metric
+    // chunks decode ONLY for in-window rows
     DruidSegmentReader.decompressedChunks.set(0)
-    val got = DruidSegmentReader.readWindowed(spark,
-      Seq((dir.getAbsolutePath, t0 + 50_000L, t0 + 52_000L))).collect()
+    val got = df.where(col("__time") >= t0 + 50_000L && col("__time") < t0 + 52_000L).collect()
     assert(got.map(_.getAs[String]("host")).sorted.toSeq == Seq("h050", "h051"))
     assert(got.map(_.getAs[Long]("m4")).sorted.toSeq == Seq(200L, 204L))
     val winChunks = DruidSegmentReader.decompressedChunks.get()
@@ -288,13 +314,12 @@ class DruidSegmentReaderSpec extends SparkSpec {
   }
 
   test("scan clips interval, projects, and applies DimFilter JSON") {
-    assume(available)
-    val t0 = java.time.Instant.parse("2014-10-22T00:00:00Z").toEpochMilli
-    val hour = 3600 * 1000L
-    val out = DruidSegmentReader.scan(spark, Seq(segDir),
-      t0, t0 + 2 * hour, // first two hours only
-      columns = Seq("host", "visited_sum"),
-      filterJson = Some("""{"type":"selector","dimension":"host","value":"b.example.com"}"""))
+    val df = load(writeRefLike().getAbsolutePath)
+    val out = df
+      .where(col("__time") >= t0 && col("__time") < t0 + 2 * hour) // first two hours only
+      .where(graft.model.DimFilter.parse(
+        """{"type":"selector","dimension":"host","value":"b.example.com"}""").compile(df.schema))
+      .select("__time", "host", "visited_sum")
       .collect()
     assert(out.length == 1)
     assert(out(0).getAs[String]("host") == "b.example.com")
@@ -303,7 +328,6 @@ class DruidSegmentReaderSpec extends SparkSpec {
   }
 
   test("segment schema cache stays bounded and keeps answering correctly") {
-    import graft.sources.{DruidSegmentWriter => W}
     val root = java.nio.file.Files.createTempDirectory("graft-schemacache").toFile
     val t0 = java.time.Instant.parse("2022-01-01T00:00:00Z").toEpochMilli
     // two alternating schemas, so an answer served from the wrong
