@@ -153,6 +153,21 @@ object TextFunctions {
   def shingleHashes(text: Column, shingleN: Int): Column =
     toColumn(ShingleHashes(toExpr(text), shingleN))
 
+  /** Exact set Jaccard of two array<string> or two array<bigint>
+    * columns, repeats counted once: the value of
+    * `size(array_intersect(a, b)) / size(array_union(a, b))` in one
+    * pass (see [[SetJaccard]]). NULL when both sets are empty. */
+  def setJaccard(a: Column, b: Column): Column =
+    toColumn(SetJaccard(toExpr(a), toExpr(b)))
+
+  /** Generator of one (a_id, b_id) row per i < j of a sorted id list
+    * (see [[IdPairs]]). */
+  def idPairs(ids: Column): Column = toColumn(IdPairs(Seq(toExpr(ids))))
+
+  /** Generator of one (a_id, b_id) row per element of `a` × `b`. */
+  def idPairs(a: Column, b: Column): Column =
+    toColumn(IdPairs(Seq(toExpr(a), toExpr(b))))
+
   /** Per-doc term counts: array<struct<term, tf>> in first-occurrence
     * order — the in-row (doc, term, tf) form (see [[TermCounts]]). */
   def termCounts(text: Column): Column =
@@ -377,6 +392,113 @@ case class ShingleHashes(child: Expression, shingleN: Int)
   }
   override protected def withNewChildInternal(c: Expression): ShingleHashes =
     copy(child = c)
+}
+
+/** Exact set Jaccard |A ∩ B| / |A ∪ B| over the DISTINCT elements of two
+  * arrays of the same element type (string or bigint; a null element
+  * is one more element, as in `array_intersect`/`array_union`). One
+  * hash set per side replaces the composed
+  * `size(array_intersect(a, b)) / size(array_union(a, b))`, whose two
+  * interpreted calls each built their own set and result array per
+  * pair. Same division, so the same double on every non-empty union;
+  * two empty sets give NULL (the non-ANSI 0/0) instead of ANSI mode's
+  * DIVIDE_BY_ZERO, so a `jaccard >= t` filter drops the pair. */
+case class SetJaccard(left: Expression, right: Expression)
+  extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
+  with CodegenFallback {
+  override def dataType: DataType = DoubleType
+  override def nullable: Boolean = true
+
+  override def checkInputDataTypes()
+      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+    (left.dataType, right.dataType) match {
+      case (ArrayType(a, _), ArrayType(b, _))
+          if a == b && (a == StringType || a == LongType) =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+      case (l, r) =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+          s"set_jaccard needs two array<string> or two array<bigint>, got " +
+            s"${l.simpleString} and ${r.simpleString}")
+    }
+
+  private lazy val elementType = left.dataType.asInstanceOf[ArrayType].elementType
+
+  override protected def nullSafeEval(a: Any, b: Any): Any = {
+    val xs = a.asInstanceOf[ArrayData]
+    val ys = b.asInstanceOf[ArrayData]
+    val inA = new java.util.HashSet[Any](xs.numElements() * 2)
+    var i = 0
+    while (i < xs.numElements()) { inA.add(xs.get(i, elementType)); i += 1 }
+    val inB = new java.util.HashSet[Any](ys.numElements() * 2)
+    var inter = 0
+    i = 0
+    while (i < ys.numElements()) {
+      val y = ys.get(i, elementType)
+      if (inB.add(y) && inA.contains(y)) inter += 1
+      i += 1
+    }
+    val union = inA.size + inB.size - inter
+    if (union == 0) null else inter.toDouble / union
+  }
+
+  override protected def withNewChildrenInternal(
+      l: Expression, r: Expression): SetJaccard = copy(left = l, right = r)
+}
+
+/** LSH candidate-pair generator, one row (a_id, b_id) per pair:
+  *  - one child (a sorted id list): (ids(i), ids(j)) for every i < j;
+  *  - two children (a, b): (x, y) for every x in a, y in b, in order.
+  * Exactly the rows the `explode(flatten(transform(ids, (x, i) ->
+  * transform(slice(…), …))))` lambdas emitted, without their
+  * interpreted per-element lambda calls and the per-bucket
+  * array-of-structs they built before the explode. A null list emits
+  * nothing. Rows stream lazily, so a full 1000-id bucket never holds
+  * its ~500k pairs at once. */
+case class IdPairs(children: Seq[Expression])
+  extends org.apache.spark.sql.catalyst.expressions.Generator with CodegenFallback {
+  require(children.size == 1 || children.size == 2,
+    s"IdPairs takes one sorted id list or two id lists, got ${children.size}")
+
+  private def elementOf(e: Expression): ArrayType = e.dataType.asInstanceOf[ArrayType]
+
+  override def checkInputDataTypes()
+      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+    children.find(c => !c.dataType.isInstanceOf[ArrayType]) match {
+      case None => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+      case Some(c) =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+          s"id_pairs needs array inputs, got ${c.dataType.simpleString}")
+    }
+
+  override def elementSchema: StructType = {
+    val a = elementOf(children.head)
+    val b = elementOf(children.last)
+    StructType(Seq(
+      StructField("a_id", a.elementType, a.containsNull),
+      StructField("b_id", b.elementType, b.containsNull)))
+  }
+
+  override def eval(input: org.apache.spark.sql.catalyst.InternalRow)
+      : IterableOnce[org.apache.spark.sql.catalyst.InternalRow] = {
+    def values(e: Expression): Array[AnyRef] = e.eval(input) match {
+      case null => Array.empty
+      case arr: ArrayData => arr.toObjectArray(elementOf(e).elementType)
+    }
+    def pair(x: AnyRef, y: AnyRef) =
+      new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(Array[Any](x, y))
+    val xs = values(children.head)
+    if (children.size == 1)
+      Iterator.range(0, xs.length).flatMap(i =>
+        Iterator.range(i + 1, xs.length).map(j => pair(xs(i), xs(j))))
+    else {
+      val ys = values(children(1))
+      if (ys.isEmpty) Iterator.empty
+      else xs.iterator.flatMap(x => ys.iterator.map(y => pair(x, y)))
+    }
+  }
+
+  override protected def withNewChildrenInternal(
+      c: IndexedSeq[Expression]): IdPairs = copy(children = c)
 }
 
 /** Per-document TERM COUNTS in one expression eval: split on single

@@ -1,8 +1,13 @@
 package graft.operators
 
+import scala.jdk.CollectionConverters._
+
 import graft.functions.TextFunctions
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.InSet
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.{toColumn, toExpr}
 
 /** Deduplication operators for large-scale document pipelines.
   *
@@ -29,13 +34,6 @@ object Dedup {
       .agg(min(col(idCol)).as(idCol), count(lit(1)).as("n_copies"))
       .drop("__h")
 
-  /** Candidate pairs from (id, bucket) rows: ONE shuffle (groupBy
-    * bucket + collect_list), in-bucket pair explosion via higher-order
-    * functions, oversized buckets dropped (skew guard), then pair
-    * dedup. Replaces a bucket self-join (which shuffles both sides and
-    * recomputes the banding pipeline per consumer); the result is
-    * materialized (reliable checkpoint on clusters, localCheckpoint
-    * otherwise) because every caller consumes it several times. */
   /** Test hook: bucketPairs over an explicit (id, bucket) band set. */
   private[graft] def pairsForTest(bands: DataFrame, maxBucketSize: Int): DataFrame =
     bucketPairs(bands, maxBucketSize)._1
@@ -89,6 +87,14 @@ object Dedup {
       if (n <= BroadcastSafeRows) broadcast(m) else m.hint("merge")
     }
 
+  /** Candidate pairs from (id, bucket) rows: ONE shuffle (groupBy
+    * bucket + bounded id list), in-bucket pairs from the
+    * [[graft.functions.IdPairs]] generator, oversized buckets dropped
+    * (skew guard), then pair dedup. Replaces a bucket self-join (which
+    * shuffles both sides and recomputes the banding pipeline per
+    * consumer); the result is materialized (reliable checkpoint on
+    * clusters, localCheckpoint otherwise) and counted, because every
+    * caller consumes it several times and sizes its joins on it. */
   private def bucketPairs(bands: DataFrame, maxBucketSize: Int): (DataFrame, Long) = {
     // long ids take the hard-capped aggregate: buffer memory is O(cap)
     // even for a degenerate bucket holding most of the corpus (see
@@ -108,11 +114,7 @@ object Dedup {
     // the true cardinality rides the checkpoint job (withCount); every
     // consumer keys its broadcast-vs-shuffle choice on it
     val (m, n) = Materialize.withCount(grouped
-      .select(explode(expr(
-        """flatten(transform(ids, (x, i) ->
-          |  transform(slice(ids, i + 2, size(ids) - i - 1),
-          |            y -> struct(x AS a_id, y AS b_id))))""".stripMargin)).as("p"))
-      .select(col("p.a_id"), col("p.b_id"))
+      .select(TextFunctions.idPairs(col("ids")))
       .dropDuplicates("a_id", "b_id"))
     if (n > BroadcastSafeRows)
       org.apache.log4j.Logger.getLogger(getClass).warn(
@@ -135,7 +137,21 @@ object Dedup {
   def minhashPairs(
       df: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, numHashes: Int = 64, bandRows: Int = 2,
-      threshold: Double = 0.8, maxBucketSize: Int = 1000): DataFrame = {
+      threshold: Double = 0.8, maxBucketSize: Int = 1000): DataFrame =
+    minhashPairsCounted(df, idCol, textCol, shingleN, numHashes, bandRows,
+      threshold, maxBucketSize)._1
+
+  /** [[minhashPairs]] plus, on the small-candidate path (at most
+    * `budget` REAL candidate pairs), that count: it bounds the verified
+    * rows (each is one distinct candidate). `None` over budget, whose
+    * callers keep their distributed path; tests pass a negative
+    * budget to force it. */
+  private[graft] def minhashPairsCounted(
+      df: DataFrame, idCol: String, textCol: String,
+      shingleN: Int = 3, numHashes: Int = 64, bandRows: Int = 2,
+      threshold: Double = 0.8, maxBucketSize: Int = 1000,
+      budget: Long = RepartitionVerifyRows): (DataFrame, Option[Long]) = {
+    val spark = df.sparkSession
     // (id, bucket) — bucket keys from the FUSED text→bands expression:
     // one signature computation per row (MinHashBands documents the
     // lambda-inlining trap the fusion avoids). Only (id, bucket) flows
@@ -148,53 +164,93 @@ object Dedup {
       explode(TextFunctions.minhashBands(
         col(textCol), shingleN, numHashes, bandRows)).as("bucket"))
 
-    // bucketPairs materializes its result: candidates are O(pairs),
-    // tiny vs the corpus, and are consumed THREE times downstream (the
-    // candidate-id semi-join feeding shingleSets + each pair-side
-    // join), so the LSH pipeline runs exactly once.
-    val (candidates, nCand) = bucketPairs(bands, maxBucketSize)
-    val big = nCand > BroadcastSafeRows
+    // bucketPairs materializes and counts its result: candidates are
+    // O(pairs), tiny vs the corpus; over budget they are consumed THREE
+    // times downstream (the candidate id set + each pair-side join),
+    // within it collected once — the LSH pipeline runs exactly once.
+    val (candidates, nCand) = described(spark, "dedup.minhash.candidates")(
+      bucketPairs(bands, maxBucketSize))
+    def shingled(d: DataFrame): DataFrame =
+      d.select(col("id"), TextFunctions.wordShingles(col("__text"), shingleN).as("sh"))
 
-    // shingle only the docs that appear in candidate pairs — semi-join
-    // side sized on the REAL candidate count: small (the common case —
-    // quality corpora have few near-dups) broadcasts so the corpus
-    // never shuffles; big falls back to a shuffle semi-join
-    val candIds = sizedIdSet(candidates.select(col("a_id").as("id"))
-      .union(candidates.select(col("b_id").as("id"))).distinct(), big)
-    // materialized: consumed by BOTH pair-side joins below — without
-    // it the semi-join + shingling of candidate docs runs twice.
-    // Repartitioned by id BEFORE the shingle projection when the
-    // candidate set is large: the semi-join inherits the corpus scan's
-    // few input partitions, so computing + checkpointing the shingle
-    // payload there pins 1-2 threads while the rest of the cluster
-    // idles (measured at sf1: tens of seconds serial vs ~1 s parallel)
-    // — the narrow (id, text) shuffle spreads both the shingle compute
-    // and the checkpoint write across all cores, and costs one small
-    // pass over O(candidates) rows. Gated on the REAL candidate count
-    // (the same sized-on-real-count idiom as the joins): a small
-    // verify set shingles in less time than the exchange costs, so the
-    // shuffle would be pure fixed overhead there.
-    val verifySide = df
-      .join(candIds, df(idCol) === candIds("id"), "left_semi")
-      .select(col(idCol).as("id"), col(textCol).as("__text"))
-    val spread =
-      if (nCand > RepartitionVerifyRows) verifySide.repartition(col("id"))
-      else verifySide
-    val shingleSets = Materialize(spread
-      .select(col("id"),
-        TextFunctions.wordShingles(col("__text"), shingleN).as("sh")))
-    // both pair-side joins guarded: a big pair table (and hence the
-    // first join's output, whose estimate inherits the bogus one) must
-    // shuffle, never broadcast-build
-    noStaticBroadcast(noStaticBroadcast(candidates, big)
+    val small = nCand <= budget
+    val (pairs, shingleSets, big) =
+      if (small) {
+        // SMALL candidate set (the common case — quality corpora have
+        // few near-dups): the counted pairs come to the driver once as
+        // a local relation, so the id set is built here (no distinct +
+        // broadcast jobs) and filters the corpus by hash-set lookup.
+        val rows = described(spark, "dedup.minhash.candidates")(candidates.collect())
+        val ids = new java.util.HashSet[Any](rows.length * 2)
+        rows.foreach { r =>
+          ids.add(CatalystTypeConverters.convertToCatalyst(r.get(0)))
+          ids.add(CatalystTypeConverters.convertToCatalyst(r.get(1)))
+        }
+        val verifySide = df
+          .filter(toColumn(InSet(toExpr(col(idCol)), ids.asScala.toSet)))
+          .select(col(idCol).as("id"), col(textCol).as("__text"))
+        // at most 2 × budget docs, but their shingle arrays grow with
+        // document length: the materializing job also measures their
+        // UnsafeArrayData bytes (each element's UTF-8 bytes plus its
+        // 8-byte offset/length slot and at most 8 bytes of word
+        // padding), and the one shared broadcast of both pair sides is
+        // taken only under the session's autoBroadcastJoinThreshold
+        // (-1 = broadcasts off); otherwise the planner picks the joins
+        val shBytes = sum(octet_length(array_join(col("sh"), "")) + size(col("sh")) * 16)
+        val (sh, measured) = described(spark, "dedup.minhash.verify")(
+          Materialize.withMetrics(shingled(verifySide), bounded = true, shBytes.as("bytes"))(
+            _.agg(shBytes).head()))
+        val bytes = if (measured.isNullAt(0)) 0L else measured.getLong(0)
+        val shared =
+          if (bytes <= spark.sessionState.conf.autoBroadcastJoinThreshold) broadcast(sh) else sh
+        (spark.createDataFrame(java.util.Arrays.asList(rows: _*), candidates.schema), shared, false)
+      } else {
+        // OVER budget: shingle only the docs in candidate pairs through
+        // a semi-join on an id set sized on the real count; a big pair
+        // table (and hence the first join's output, whose estimate
+        // inherits the bogus one) must never be a broadcast build side
+        val big = nCand > BroadcastSafeRows
+        val candIds = described(spark, "dedup.minhash.verify")(sizedIdSet(
+          candidates.select(col("a_id").as("id"))
+            .union(candidates.select(col("b_id").as("id"))).distinct(), big))
+        val verifySide = df
+          .join(candIds, df(idCol) === candIds("id"), "left_semi")
+          .select(col(idCol).as("id"), col(textCol).as("__text"))
+        // Repartitioned by id BEFORE the shingle projection when the
+        // candidate set is large: the semi-join inherits the corpus
+        // scan's few input partitions, so computing + checkpointing the
+        // shingle payload there pins 1-2 threads while the rest of the
+        // cluster idles (measured at sf1: tens of seconds serial vs ~1 s
+        // parallel) — the narrow (id, text) shuffle spreads both the
+        // shingle compute and the checkpoint write across all cores, and
+        // costs one small pass over O(candidates) rows. Materialized:
+        // BOTH pair-side joins read it, and without it the shingling
+        // runs twice.
+        val spread =
+          if (nCand > RepartitionVerifyRows) verifySide.repartition(col("id"))
+          else verifySide
+        (candidates, described(spark, "dedup.minhash.verify")(Materialize(shingled(spread))), big)
+      }
+    val verified = noStaticBroadcast(noStaticBroadcast(pairs, big)
       .join(shingleSets.select(col("id").as("a_id"), col("sh").as("a_sh")), Seq("a_id")), big)
       .join(shingleSets.select(col("id").as("b_id"), col("sh").as("b_sh")), Seq("b_id"))
-      .withColumn("jaccard",
-        size(array_intersect(col("a_sh"), col("b_sh"))).cast("double") /
-        size(array_union(col("a_sh"), col("b_sh"))))
+      .withColumn("jaccard", TextFunctions.setJaccard(col("a_sh"), col("b_sh")))
       .filter(col("jaccard") >= threshold)
       .select("a_id", "b_id", "jaccard")
+    (verified, if (small) Some(nCand) else None)
   }
+
+  /** Runs `body`'s Spark jobs under the job description `what` (the
+    * `dedup.*` names in the UI and in listener events), then restores
+    * the caller's description. */
+  private def described[T](spark: SparkSession, what: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val callers = sc.getLocalProperty(JobDescription)
+    sc.setJobDescription(what)
+    try body finally sc.setJobDescription(callers)
+  }
+
+  private val JobDescription = "spark.job.description"
 
   /** Fuzzy dedup with an EXACT edit-distance verify — the
     * "near-duplicates that are genuinely a few edits apart" contract
@@ -291,10 +347,7 @@ object Dedup {
     // broadcast decision — the static estimate under the explode is
     // bogus-small
     val (candidates, nCand) = Materialize.withCount(ga.join(gb, "bucket")
-      .select(explode(expr(
-        """flatten(transform(a_ids, x ->
-          |  transform(b_ids, y -> struct(x AS a_id, y AS b_id))))""".stripMargin)).as("p"))
-      .select(col("p.a_id"), col("p.b_id"))
+      .select(TextFunctions.idPairs(col("a_ids"), col("b_ids")))
       .dropDuplicates("a_id", "b_id"))
     val big = nCand > BroadcastSafeRows
 
@@ -316,9 +369,7 @@ object Dedup {
     noStaticBroadcast(noStaticBroadcast(candidates, big)
       .join(shingleSide(corpus, corpusId, corpusText, "a_id", "a_sh"), Seq("a_id")), big)
       .join(shingleSide(reference, refId, refText, "b_id", "b_sh"), Seq("b_id"))
-      .withColumn("jaccard",
-        size(array_intersect(col("a_sh"), col("b_sh"))).cast("double") /
-        size(array_union(col("a_sh"), col("b_sh"))))
+      .withColumn("jaccard", TextFunctions.setJaccard(col("a_sh"), col("b_sh")))
       .filter(col("jaccard") >= threshold)
       .select(col("a_id").as("corpus_id"), col("b_id").as("ref_id"), col("jaccard"))
   }
@@ -598,10 +649,7 @@ object Dedup {
     }
     val (candidates, nCand) = Materialize.withCount(pg
       .join(bandsIdx.withColumnRenamed("ids", "b_ids"), "bucket")
-      .select(explode(expr(
-        """flatten(transform(a_ids, x ->
-          |  transform(b_ids, y -> struct(x AS a_id, y AS b_id))))""".stripMargin)).as("p"))
-      .select(col("p.a_id"), col("p.b_id"))
+      .select(TextFunctions.idPairs(col("a_ids"), col("b_ids")))
       .dropDuplicates("a_id", "b_id"))
     val big = nCand > BroadcastSafeRows
 
@@ -627,9 +675,7 @@ object Dedup {
     noStaticBroadcast(noStaticBroadcast(candidates, big)
       .join(probeSh, Seq("a_id")), big)
       .join(refSh, Seq("b_id"))
-      .withColumn("jaccard",
-        size(array_intersect(col("a_sh"), col("b_sh"))).cast("double") /
-        size(array_union(col("a_sh"), col("b_sh"))))
+      .withColumn("jaccard", TextFunctions.setJaccard(col("a_sh"), col("b_sh")))
       .filter(col("jaccard") >= threshold)
       .select(col("a_id").as("corpus_id"), col("b_id").as("ref_id"), col("jaccard"))
   }
@@ -640,8 +686,22 @@ object Dedup {
     * dedup = filter id == cluster_id. */
   def clusters(df: DataFrame, idCol: String, textCol: String,
                threshold: Double = 0.8, maxIter: Int = 20): DataFrame =
-    clustersFromPairs(df, idCol,
-      minhashPairs(df, idCol, textCol, threshold = threshold), maxIter)
+    minhashClusters(df, idCol, textCol, threshold, maxIter)
+
+  /** [[clusters]] with the small-candidate path's real candidate count
+    * handed to the components stage, so a candidate set that already
+    * fits `driverEdgeLimit` goes straight to the driver union-find.
+    * `budget` and `driverEdgeLimit` are the test hooks that force the
+    * over-budget pairs and the star rounds. */
+  private[graft] def minhashClusters(
+      df: DataFrame, idCol: String, textCol: String,
+      threshold: Double, maxIter: Int = 20, carry: Seq[String] = Nil,
+      budget: Long = RepartitionVerifyRows,
+      driverEdgeLimit: Long = DriverEdgeLimit): DataFrame = {
+    val (pairs, bound) = minhashPairsCounted(df, idCol, textCol,
+      threshold = threshold, budget = budget)
+    clustersFromBoundedPairs(df, idCol, pairs, bound, maxIter, driverEdgeLimit, carry)
+  }
 
   /** Canonical-document selection per near-dup cluster: within each
     * [[clusters]] component, keep the member maximizing
@@ -657,14 +717,17 @@ object Dedup {
     * no window, no sort. */
   def canonicalPerCluster(df: DataFrame, idCol: String, textCol: String,
                           scoreCol: String, threshold: Double = 0.8): DataFrame =
-    // the score rides the label join (carry), so the corpus is scanned
-    // and label-joined ONCE — the previous clusters()-then-join-df form
-    // paid a second corpus scan and a second id-keyed join for a column
-    // the label join could carry for free
-    clustersFromPairs(df, idCol,
-        minhashPairs(df, idCol, textCol, threshold = threshold),
-        carry = Seq(scoreCol))
-      .groupBy(col("cluster_id"))
+    canonicalOf(minhashClusters(df, idCol, textCol, threshold, carry = Seq(scoreCol)),
+      idCol, scoreCol)
+
+  /** The keep pick over (id, cluster_id, score) labels. The score rides
+    * the label join (carry), so the corpus is scanned and label-joined
+    * ONCE — the previous clusters()-then-join-df form paid a second
+    * corpus scan and a second id-keyed join for a column the label join
+    * could carry for free. */
+  private[graft] def canonicalOf(labels: DataFrame, idCol: String,
+                                 scoreCol: String): DataFrame =
+    labels.groupBy(col("cluster_id"))
       .agg(
         max_by(col(idCol), struct(col(scoreCol), negate(col(idCol)))).as("keep_id"),
         count(lit(1)).as("n_members"))
@@ -717,8 +780,22 @@ object Dedup {
     * Lineage is truncated either way, so per-round plans stay O(1). */
   def clustersFromPairs(df: DataFrame, idCol: String, pairsDf: DataFrame,
                         maxIter: Int = 20,
-                        driverEdgeLimit: Long = 200000L,
-                        carry: Seq[String] = Nil): DataFrame = {
+                        driverEdgeLimit: Long = DriverEdgeLimit,
+                        carry: Seq[String] = Nil): DataFrame =
+    clustersFromBoundedPairs(df, idCol, pairsDf, None, maxIter,
+      driverEdgeLimit, carry)
+
+  /** Edge count up to which [[clustersFromPairs]] labels components
+    * with a driver union-find instead of distributed star rounds. */
+  private[graft] val DriverEdgeLimit = 200000L
+
+  /** [[clustersFromPairs]] over a pair set that may be known to hold
+    * at most `pairsBound` rows. A bound within `driverEdgeLimit` (long ids)
+    * collects the pairs straight into the driver union-find: no edge
+    * dedup shuffle, no checkpoint, no fingerprint. */
+  private def clustersFromBoundedPairs(
+      df: DataFrame, idCol: String, pairsDf: DataFrame, pairsBound: Option[Long],
+      maxIter: Int, driverEdgeLimit: Long, carry: Seq[String]): DataFrame = {
     require(!carry.contains("cluster_id") && !carry.contains(idCol),
       s"carry columns collide with reserved output columns " +
         s"('cluster_id', '$idCol'): ${carry.mkString(", ")}")
@@ -781,10 +858,6 @@ object Dedup {
         .distinct()
     }
 
-    var (edges, fp) = materializeFp(
-      pairsDf.select(col("a_id").as("src"), col("b_id").as("dst"))
-        .filter(col("src") =!= col("dst")).distinct())
-
     // ADAPTIVE: a near-dup edge set is orders smaller than the corpus
     // (it is O(duplicate pairs), already deduped and skew-capped). When
     // it fits the same size budget that justifies collecting a
@@ -794,55 +867,69 @@ object Dedup {
     // Past the bound (or for non-long ids) the distributed star rounds
     // run unchanged, so the operator never depends on the edges
     // fitting anywhere.
+    val spark = df.sparkSession
     val idIsLong = df.schema(idCol).dataType ==
       org.apache.spark.sql.types.LongType
+    // duplicate edges and self-loops are no-ops for the union-find, so
+    // it takes raw pairs as well as the deduped edge set
+    def unionFindLabels(edges: DataFrame): DataFrame = {
+      val parent = new java.util.HashMap[Long, Long]()
+      def find(x: Long): Long = {
+        var r = x
+        while (parent.getOrDefault(r, r) != r) r = parent.getOrDefault(r, r)
+        var c = x // path compression
+        while (parent.getOrDefault(c, c) != r) {
+          val next = parent.getOrDefault(c, c); parent.put(c, r); c = next
+        }
+        r
+      }
+      described(spark, "dedup.cc.unionFind")(edges.collect()).foreach { row =>
+        val (a, b) = (row.getLong(0), row.getLong(1))
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) parent.put(math.max(ra, rb), math.min(ra, rb))
+      }
+      // root chains collapse to the min id per component because
+      // unions always attach the larger root under the smaller
+      val out = new scala.collection.mutable.ArrayBuffer[(Long, Long)](parent.size)
+      parent.keySet().forEach { n => val r = find(n); if (n != r) out += ((n, r)) }
+      import spark.implicits._
+      broadcast(out.toSeq.toDF(idCol, "cluster_id"))
+    }
+
     val labels: DataFrame =
-      if (fp._1 == 0L) edges.select(col("src").as(idCol), col("dst").as("cluster_id"))
-      else if (idIsLong && fp._1 <= driverEdgeLimit) {
-        val parent = new java.util.HashMap[Long, Long]()
-        def find(x: Long): Long = {
-          var r = x
-          while (parent.getOrDefault(r, r) != r) r = parent.getOrDefault(r, r)
-          var c = x // path compression
-          while (parent.getOrDefault(c, c) != r) {
-            val next = parent.getOrDefault(c, c); parent.put(c, r); c = next
+      if (idIsLong && pairsBound.exists(_ <= driverEdgeLimit))
+        unionFindLabels(pairsDf.select(col("a_id"), col("b_id")))
+      else {
+        var (edges, fp) = described(spark, "dedup.cc.edges")(materializeFp(
+          pairsDf.select(col("a_id").as("src"), col("b_id").as("dst"))
+            .filter(col("src") =!= col("dst")).distinct()))
+        if (fp._1 == 0L) edges.select(col("src").as(idCol), col("dst").as("cluster_id"))
+        else if (idIsLong && fp._1 <= driverEdgeLimit) unionFindLabels(edges)
+        else {
+          var converged = false
+          var i = 0
+          while (!converged && i < maxIter) {
+            val (next, nfp) = described(spark, "dedup.cc.starRound")(
+              materializeFp(smallStar(largeStar(edges))))
+            converged = nfp == fp
+            edges = next
+            fp = nfp
+            i += 1
           }
-          r
+          // a silent partial contraction would return WRONG labels —
+          // fail loudly instead (maxIter=20 covers component diameters
+          // ~2^20; non-convergence means something pathological, not
+          // "close enough")
+          if (!converged) throw new IllegalStateException(
+            s"connected components did not converge in $maxIter rounds; raise maxIter")
+          // at the fixed point every edge is (node, component-min root);
+          // the converged edge count is known — above the broadcast-safe
+          // budget the label join must shuffle (the checkpoint's static
+          // estimate can't be trusted to forbid a giant broadcast build)
+          noStaticBroadcast(
+            edges.select(col("src").as(idCol), col("dst").as("cluster_id")),
+            fp._1 > BroadcastSafeRows)
         }
-        edges.collect().foreach { row =>
-          val (a, b) = (row.getLong(0), row.getLong(1))
-          val (ra, rb) = (find(a), find(b))
-          if (ra != rb) parent.put(math.max(ra, rb), math.min(ra, rb))
-        }
-        // root chains collapse to the min id per component because
-        // unions always attach the larger root under the smaller
-        val out = new scala.collection.mutable.ArrayBuffer[(Long, Long)](parent.size)
-        parent.keySet().forEach { n => val r = find(n); if (n != r) out += ((n, r)) }
-        val s = df.sparkSession
-        import s.implicits._
-        broadcast(out.toSeq.toDF(idCol, "cluster_id"))
-      } else {
-        var converged = false
-        var i = 0
-        while (!converged && i < maxIter) {
-          val (next, nfp) = materializeFp(smallStar(largeStar(edges)))
-          converged = nfp == fp
-          edges = next
-          fp = nfp
-          i += 1
-        }
-        // a silent partial contraction would return WRONG labels — fail
-        // loudly instead (maxIter=20 covers component diameters ~2^20;
-        // non-convergence means something pathological, not "close enough")
-        if (!converged) throw new IllegalStateException(
-          s"connected components did not converge in $maxIter rounds; raise maxIter")
-        // at the fixed point every edge is (node, component-min root);
-        // the converged edge count is known — above the broadcast-safe
-        // budget the label join must shuffle (the checkpoint's static
-        // estimate can't be trusted to forbid a giant broadcast build)
-        noStaticBroadcast(
-          edges.select(col("src").as(idCol), col("dst").as("cluster_id")),
-          fp._1 > BroadcastSafeRows)
       }
 
     // roots and singletons label themselves via the left join; `carry`
@@ -969,9 +1056,7 @@ object Dedup {
     val a = docs.select(col("id").as("a_id"), col("sh").as("a_sh"))
     val b = docs.select(col("id").as("b_id"), col("sh").as("b_sh"))
     a.crossJoin(b).filter(col("a_id") < col("b_id"))
-      .withColumn("jaccard",
-        size(array_intersect(col("a_sh"), col("b_sh"))).cast("double") /
-        size(array_union(col("a_sh"), col("b_sh"))))
+      .withColumn("jaccard", TextFunctions.setJaccard(col("a_sh"), col("b_sh")))
       .filter(col("jaccard") >= minJaccard)
       .select("a_id", "b_id", "jaccard")
   }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.{functions => F}
 
 /** Eager materialization with lineage truncation for multi-consumed
@@ -37,34 +37,42 @@ private[graft] object Materialize {
     * materialization action, so the sized-on-real-count idiom stops
     * paying a second (RDD-count) job per decision point — at any data
     * size that job is pure fixed cost (the rows were just computed;
-    * only the count was missing). The CollectMetrics node passes rows
-    * through unchanged, and the returned DataFrame is the plain
-    * checkpoint scan. Falls back to the explicit RDD count if the
-    * checkpoint action did not surface metrics (defensive: the
+    * only the count was missing). Falls back to the explicit RDD count
+    * if the checkpoint action did not surface metrics (defensive: the
     * fallback is the previous behavior, identical result). `bounded`
     * frames materialize [[local]]ly. */
   def withCount(d: DataFrame, bounded: Boolean = false): (DataFrame, Long) = {
+    val (m, r) = withMetrics(d, bounded, F.count(F.lit(1)).as("n"))(m => Row(count(m)))
+    (m, r.getLong(0))
+  }
+
+  /** Materialize `d` and evaluate the aggregate `metrics` over its rows
+    * in the SAME job (see [[withCount]]): the CollectMetrics node passes
+    * rows through unchanged, and the returned DataFrame is the plain
+    * checkpoint scan. `fallback` recomputes the metrics from the
+    * materialized frame if the checkpoint action did not surface them. */
+  def withMetrics(d: DataFrame, bounded: Boolean, metrics: Column*)(
+      fallback: DataFrame => Row): (DataFrame, Row) = {
     val obs = Observation()
-    val observed = d.observe(obs, F.count(F.lit(1)).as("n"))
+    val observed = d.observe(obs, metrics.head, metrics.tail: _*)
     val m = if (bounded) local(observed) else apply(observed)
     // the metric promise completes on the (async) listener-bus event
     // for the checkpoint action just run — normally already done or
     // milliseconds away; the await cap only bounds the defensive case
-    val n = try {
+    val r = try {
       scala.concurrent.Await
         .result(obs.future, scala.concurrent.duration.Duration(10, "s"))
-        .getLong(0)
     } catch {
       case _: java.util.concurrent.TimeoutException =>
         // loud: a dropped SQLExecutionEnd event (AsyncEventQueue under
         // load) would otherwise silently stall EVERY sizing decision
-        // 10s before falling back to the RDD count
+        // 10s before falling back to recomputing the metrics
         org.apache.log4j.Logger.getLogger(getClass).warn(
-          "withCount: observation metric did not arrive within 10s " +
-            "(listener bus dropped the event?) — falling back to an " +
-            "RDD count job")
-        count(m)
+          "withMetrics: observation metric did not arrive within 10s " +
+            "(listener bus dropped the event?) — falling back to " +
+            "recomputing it from the materialized rows")
+        fallback(m)
     }
-    (m, n)
+    (m, r)
   }
 }

@@ -190,7 +190,8 @@ class DruidCatalog extends TableCatalog {
       Option(properties.get(k))
         .orElse(Option(properties.get(s"option.$k")))
         .foreach(v => opts.put(k, v))
-    new DruidSegmentsTable(schema, new CaseInsensitiveStringMap(opts))
+    new DruidSegmentsTable(schema, new CaseInsensitiveStringMap(opts),
+      checkSchemaOnRead = true)
   }
 
   override def alterTable(ident: Identifier, changes: TableChange*): Table =

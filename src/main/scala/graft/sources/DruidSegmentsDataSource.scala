@@ -69,27 +69,27 @@ class DruidSegmentsDataSource extends TableProvider with DataSourceRegister {
 
   override def shortName(): String = "druid-segments"
 
+  // writes hand getTable the query's own schema (the table declares
+  // ACCEPT_ANY_SCHEMA and the WriteBuilder validates it), so the first
+  // write into a fresh deep-storage root never infers anything — and
+  // inference, which only reads reach, can fail loudly on the path
+  override def supportsExternalMetadata(): Boolean = true
+
+  // the schema inferSchema last returned: a plain read hands this very
+  // instance back to getTable; any other schema (a write's query
+  // schema, a read's user-specified one) is checked against the
+  // segments if the table is read
+  @volatile private var inferred: StructType = _
+
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val spark = SparkSession.active
-    // a WRITE to a fresh deep-storage root has no segments to infer
-    // from: return an empty schema (the table declares
-    // ACCEPT_ANY_SCHEMA, and the WriteBuilder validates the query
-    // schema itself); READS over the empty tree still fail loudly in
-    // discover() when the scan builds
-    val segs =
-      try DruidSegmentsDataSource.discover(spark, options)
-      catch {
-        case e: IllegalArgumentException if e.getMessage != null &&
-            e.getMessage.contains("option 'path'") => throw e
-        case _: IllegalArgumentException => return StructType(Nil)
-        case _: java.io.FileNotFoundException => return StructType(Nil)
-      }
-    DruidSegmentsDataSource.visibleSchema(spark, segs)
+    inferred = DruidSegmentsDataSource.discoveredSchema(SparkSession.active, options)
+    inferred
   }
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: util.Map[String, String]): Table =
-    new DruidSegmentsTable(schema, new CaseInsensitiveStringMap(properties))
+    new DruidSegmentsTable(schema, new CaseInsensitiveStringMap(properties),
+      checkSchemaOnRead = !(schema eq inferred))
 }
 
 private[sources] object DruidSegmentsDataSource {
@@ -118,6 +118,34 @@ private[sources] object DruidSegmentsDataSource {
     DruidSegmentReader.unionSchema(spark, visible)
   }
 
+  /** The visible schema of the tree `options` names; a missing root
+    * or segment dir fails with the path. */
+  def discoveredSchema(spark: SparkSession, options: CaseInsensitiveStringMap): StructType = {
+    val segs =
+      try discover(spark, options)
+      catch {
+        case e: java.io.FileNotFoundException =>
+          throw new java.io.FileNotFoundException(
+            s"druid-segments: no deep-storage root or segment dir at " +
+              s"${options.get("path")} (${e.getMessage})")
+      }
+    visibleSchema(spark, segs)
+  }
+
+  /** A declared read schema the segments do not hold would decode
+    * silently wrong: an unknown column as all-null (decode treats a
+    * missing column as schema evolution), a mistyped one into the
+    * wrong reader. Every declared column must exist with its type. */
+  def requireHeld(declared: StructType, segments: StructType, where: String): Unit = {
+    val held = segments.fields.map(f => f.name -> f.dataType).toMap
+    val bad = declared.fields.filterNot(f => held.get(f.name).contains(f.dataType))
+    if (bad.nonEmpty) throw new IllegalArgumentException(
+      s"druid-segments: the read schema declares " +
+        bad.map(f => s"${f.name} ${f.dataType.simpleString}").mkString(", ") +
+        s", which the segments at $where do not hold (they hold " +
+        s"${segments.fields.map(f => s"${f.name} ${f.dataType.simpleString}").mkString(", ")})")
+  }
+
   /** Driver-side descriptor discovery + dataSource filter (one
     * listing per directory — the same O(#segments) planning cost as
     * the reference's overlord segment-list action). */
@@ -142,8 +170,12 @@ private[sources] object DruidSegmentsDataSource {
   }
 }
 
+/** `checkSchemaOnRead`: `tableSchema` did not come from the segments
+  * (a user-specified read schema, a write's query schema), so a scan
+  * first checks it against the discovered one. */
 private[sources] class DruidSegmentsTable(tableSchema: StructType,
-                                          options: CaseInsensitiveStringMap)
+                                          options: CaseInsensitiveStringMap,
+                                          checkSchemaOnRead: Boolean = false)
     extends Table with SupportsRead
     with org.apache.spark.sql.connector.catalog.SupportsWrite {
 
@@ -163,8 +195,12 @@ private[sources] class DruidSegmentsTable(tableSchema: StructType,
     util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
       TableCapability.MICRO_BATCH_READ, TableCapability.ACCEPT_ANY_SCHEMA)
 
-  override def newScanBuilder(caseInsensitiveOptions: CaseInsensitiveStringMap): ScanBuilder =
+  override def newScanBuilder(caseInsensitiveOptions: CaseInsensitiveStringMap): ScanBuilder = {
+    if (checkSchemaOnRead)
+      DruidSegmentsDataSource.requireHeld(tableSchema,
+        DruidSegmentsDataSource.discoveredSchema(SparkSession.active, options), options.get("path"))
     new DruidScanBuilder(tableSchema, options)
+  }
 
   override def newWriteBuilder(
       info: org.apache.spark.sql.connector.write.LogicalWriteInfo)

@@ -150,6 +150,35 @@ class DedupSpec extends SparkSpec {
     assert(out2.count() == 200L * 199L / 2)
   }
 
+  test("short and empty documents are never verified pairs, and never divide 0 by 0") {
+    // docs with fewer than shingleN words all share every band; their
+    // EMPTY shingle sets must drop out of the verify, not raise ANSI
+    // mode's DIVIDE_BY_ZERO
+    val eight = "one two three four five six seven eight"
+    val df = Seq((1L, "hello world"), (2L, "foo bar"), (3L, ""), (4L, eight), (5L, eight))
+      .toDF("doc_id", "text").withColumn("score", length(col("text")))
+    assert(spark.conf.get("spark.sql.ansi.enabled") == "true")
+    def pairSet(d: org.apache.spark.sql.DataFrame) =
+      d.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(pairSet(Dedup.minhashPairs(df, "doc_id", "text").select("a_id", "b_id")) == Set((4L, 5L)))
+    assert(pairSet(Dedup.ngramJaccardPairs(df, "doc_id", "text").select("a_id", "b_id")) ==
+      Set((4L, 5L)))
+    assert(pairSet(Dedup.clusters(df, "doc_id", "text")) ==
+      Set((1L, 1L), (2L, 2L), (3L, 3L), (4L, 4L), (5L, 4L)))
+    assert(Dedup.canonicalPerCluster(df, "doc_id", "text", "score")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet ==
+      Set((1L, 1L, 1L), (2L, 2L, 1L), (3L, 3L, 1L), (4L, 4L, 2L)))
+    val cross = Set((4L, 4L), (4L, 5L), (5L, 4L), (5L, 5L))
+    assert(pairSet(Dedup.minhashPairsAgainst(df, "doc_id", "text", df, "doc_id", "text")
+      .select("corpus_id", "ref_id")) == cross)
+    val index = java.nio.file.Files.createTempDirectory("graft_short_docs").toFile
+    try {
+      Dedup.writeMinhashIndex(df, "doc_id", "text", index.getPath)
+      assert(pairSet(Dedup.probeMinhashIndex(spark, index.getPath, df, "doc_id", "text")
+        .select("corpus_id", "ref_id")) == cross)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(index)
+  }
+
   test("clusters: connected components with min-id labels") {
     // components: {1,2,3} via 1-2, 2-3; {10,11}; singleton 20
     val df = Seq(

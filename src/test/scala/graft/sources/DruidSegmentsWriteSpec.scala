@@ -52,6 +52,43 @@ class DruidSegmentsWriteSpec extends SparkSpec {
     assert(segs.forall(_.version == "v1"))
   }
 
+  test("a read of a missing root fails naming the path; the first write creates it") {
+    val root = s"${freshRoot()}/deep" // does not exist yet
+    def readFailure(path: String): Throwable = intercept[Exception] {
+      spark.read.format("druid-segments").load(path).select("host").collect()
+    }
+    val missing = readFailure(root)
+    assert(missing.isInstanceOf[java.io.FileNotFoundException], missing)
+    assert(missing.getMessage.contains(root), missing.getMessage)
+    val noSegmentDir = readFailure(s"$root/evw/seg-0")
+    assert(noSegmentDir.getMessage.contains(s"$root/evw/seg-0"), noSegmentDir.getMessage)
+    // an existing tree with no segments fails on the path as well
+    val empty = readFailure(freshRoot())
+    assert(empty.getMessage.contains("no segments under"), empty.getMessage)
+    sample.write.format("druid-segments").mode("append")
+      .option("dataSource", "evw").option("segmentGranularity", "DAY")
+      .option("version", "v1").save(root)
+    assert(readBack(root).map(_._1) == sample.collect().map(_.getLong(0)).sorted.toSeq)
+  }
+
+  test("a user-specified read schema must name columns the segments hold, with their types") {
+    val root = freshRoot()
+    sample.write.format("druid-segments").mode("append")
+      .option("dataSource", "evw").option("segmentGranularity", "DAY")
+      .option("version", "v1").save(root)
+    def read(ddl: String) =
+      spark.read.format("druid-segments").schema(ddl).load(root).collect()
+    // a subset of the segments' columns, with their types, reads
+    assert(read("__time BIGINT, hits BIGINT").map(_.getLong(1)).sorted.toSeq == Seq(1L, 2L, 3L, 4L))
+    // a misspelled column would read as all-null; a wrong type would
+    // decode through the wrong reader — both are refused by name
+    for ((ddl, named) <- Seq("__time BIGINT, hots STRING" -> "hots string",
+                             "__time STRING, host STRING" -> "__time string")) {
+      val e = intercept[IllegalArgumentException](read(ddl))
+      assert(e.getMessage.contains(named) && e.getMessage.contains(root), e.getMessage)
+    }
+  }
+
   test("a later version overshadows the written chunk only") {
     val root = freshRoot()
     sample.write.format("druid-segments").mode("append")
