@@ -9,8 +9,10 @@ import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graftbridge.{toColumn, toExpr}
 import org.apache.spark.sql.types._
 
-/** Hard-capped per-group value collection for LSH bucket pair
-  * generation.
+/** Hard-capped per-group value collection for the LSH bucket id lists
+  * that are joined or persisted (cross-corpus MinHash, the persisted
+  * MinHash index's build, probe and compaction); in-corpus bucket
+  * pairs come from sorted runs instead (`Dedup.bucketPairs`).
   *
   * `collect_list` + a post-hoc size filter drops oversized buckets from
   * the PAIR space but only after materializing the full list in the

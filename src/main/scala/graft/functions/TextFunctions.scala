@@ -160,13 +160,53 @@ object TextFunctions {
   def setJaccard(a: Column, b: Column): Column =
     toColumn(SetJaccard(toExpr(a), toExpr(b)))
 
-  /** Generator of one (a_id, b_id) row per i < j of a sorted id list
+  /** Generator of one (a_id, b_id) row per element of `a` × `b`
     * (see [[IdPairs]]). */
-  def idPairs(ids: Column): Column = toColumn(IdPairs(Seq(toExpr(ids))))
+  def idPairs(a: Column, b: Column): Column = toColumn(IdPairs(toExpr(a), toExpr(b)))
 
-  /** Generator of one (a_id, b_id) row per element of `a` × `b`. */
-  def idPairs(a: Column, b: Column): Column =
-    toColumn(IdPairs(Seq(toExpr(a), toExpr(b))))
+  /** The distinct word n-gram shingles of `text` in first-occurrence
+    * order: split on single spaces (Spark `split` semantics — trailing
+    * empty tokens kept), n-grams joined with ' '; empty when the text
+    * has fewer than `n` tokens. The one shingle identity of
+    * [[WordShingles]] and of the MinHash dedup's driver verify. */
+  private[graft] def shingleSet(text: String, n: Int): java.util.LinkedHashSet[String] = {
+    val toks = text.split(" ", -1)
+    val cnt = toks.length - n + 1
+    val seen = new java.util.LinkedHashSet[String](math.max(cnt, 0) * 2)
+    val sb = new java.lang.StringBuilder
+    var i = 0
+    while (i < cnt) {
+      sb.setLength(0)
+      var j = 0
+      while (j < n) {
+        if (j > 0) sb.append(' ')
+        sb.append(toks(i + j))
+        j += 1
+      }
+      seen.add(sb.toString)
+      i += 1
+    }
+    seen
+  }
+
+  /** |A ∩ B| / |A ∪ B| of two sets, NULL when both are empty: the one
+    * division of [[SetJaccard]] and of the MinHash dedup's driver
+    * verify, so both give the same double for every pair. */
+  private[graft] def jaccard[T](a: java.util.Set[T], b: java.util.Set[T]): java.lang.Double = {
+    val (small, large) = if (a.size <= b.size) (a, b) else (b, a)
+    var inter = 0
+    val it = small.iterator()
+    while (it.hasNext) if (large.contains(it.next())) inter += 1
+    val union = a.size + b.size - inter
+    if (union == 0) null else inter.toDouble / union
+  }
+
+  /** Every i < j pair of a sorted run of ids, lazily, in (i, j) order:
+    * one bucket's candidate pairs in the MinHash, SimHash and embedding
+    * dedup, which buffer each bucket's ids sorted. */
+  private[graft] def runPairs[T](ids: scala.collection.IndexedSeq[T]): Iterator[(T, T)] =
+    Iterator.range(0, ids.length).flatMap(i =>
+      Iterator.range(i + 1, ids.length).map(j => (ids(i), ids(j))))
 
   /** Per-doc term counts: array<struct<term, tf>> in first-occurrence
     * order — the in-row (doc, term, tf) form (see [[TermCounts]]). */
@@ -208,33 +248,15 @@ object TextFunctions {
   }
 }
 
-/** Fused word-shingle expression: split ONCE on single spaces (Spark
-  * `split` semantics — trailing empty tokens kept), emit the distinct
-  * n-gram strings joined with ' ' in first-occurrence order — exactly
-  * what the previous `array_distinct(transform(...))` composition
-  * produced, without its per-element re-split. */
+/** Fused word-shingle expression: split ONCE, emit the distinct
+  * n-gram strings of [[TextFunctions.shingleSet]] — exactly what the
+  * previous `array_distinct(transform(...))` composition produced,
+  * without its per-element re-split. */
 case class WordShingles(child: Expression, n: Int)
   extends UnaryExpression with CodegenFallback {
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def nullSafeEval(v: Any): Any = {
-    // limit -1 ≙ Spark's split(text, " "): trailing empties preserved
-    val toks = v.asInstanceOf[UTF8String].toString.split(" ", -1)
-    val cnt = toks.length - n + 1
-    if (cnt < 1) return new GenericArrayData(Array.empty[Any])
-    val seen = new java.util.LinkedHashSet[String](cnt * 2)
-    val sb = new java.lang.StringBuilder
-    var i = 0
-    while (i < cnt) {
-      sb.setLength(0)
-      var j = 0
-      while (j < n) {
-        if (j > 0) sb.append(' ')
-        sb.append(toks(i + j))
-        j += 1
-      }
-      seen.add(sb.toString)
-      i += 1
-    }
+    val seen = TextFunctions.shingleSet(v.asInstanceOf[UTF8String].toString, n)
     val out = new Array[Any](seen.size)
     val it = seen.iterator()
     var k = 0
@@ -400,7 +422,8 @@ case class ShingleHashes(child: Expression, shingleN: Int)
   * hash set per side replaces the composed
   * `size(array_intersect(a, b)) / size(array_union(a, b))`, whose two
   * interpreted calls each built their own set and result array per
-  * pair. Same division, so the same double on every non-empty union;
+  * pair. Same division ([[TextFunctions.jaccard]]), so the same double
+  * on every non-empty union;
   * two empty sets give NULL (the non-ANSI 0/0) instead of ANSI mode's
   * DIVIDE_BY_ZERO, so a `jaccard >= t` filter drops the pair. */
 case class SetJaccard(left: Expression, right: Expression)
@@ -423,41 +446,30 @@ case class SetJaccard(left: Expression, right: Expression)
 
   private lazy val elementType = left.dataType.asInstanceOf[ArrayType].elementType
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val xs = a.asInstanceOf[ArrayData]
-    val ys = b.asInstanceOf[ArrayData]
-    val inA = new java.util.HashSet[Any](xs.numElements() * 2)
+  private def elements(arr: Any): java.util.HashSet[Any] = {
+    val xs = arr.asInstanceOf[ArrayData]
+    val set = new java.util.HashSet[Any](xs.numElements() * 2)
     var i = 0
-    while (i < xs.numElements()) { inA.add(xs.get(i, elementType)); i += 1 }
-    val inB = new java.util.HashSet[Any](ys.numElements() * 2)
-    var inter = 0
-    i = 0
-    while (i < ys.numElements()) {
-      val y = ys.get(i, elementType)
-      if (inB.add(y) && inA.contains(y)) inter += 1
-      i += 1
-    }
-    val union = inA.size + inB.size - inter
-    if (union == 0) null else inter.toDouble / union
+    while (i < xs.numElements()) { set.add(xs.get(i, elementType)); i += 1 }
+    set
   }
+
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    TextFunctions.jaccard(elements(a), elements(b))
 
   override protected def withNewChildrenInternal(
       l: Expression, r: Expression): SetJaccard = copy(left = l, right = r)
 }
 
-/** LSH candidate-pair generator, one row (a_id, b_id) per pair:
-  *  - one child (a sorted id list): (ids(i), ids(j)) for every i < j;
-  *  - two children (a, b): (x, y) for every x in a, y in b, in order.
-  * Exactly the rows the `explode(flatten(transform(ids, (x, i) ->
-  * transform(slice(…), …))))` lambdas emitted, without their
-  * interpreted per-element lambda calls and the per-bucket
-  * array-of-structs they built before the explode. A null list emits
-  * nothing. Rows stream lazily, so a full 1000-id bucket never holds
-  * its ~500k pairs at once. */
-case class IdPairs(children: Seq[Expression])
-  extends org.apache.spark.sql.catalyst.expressions.Generator with CodegenFallback {
-  require(children.size == 1 || children.size == 2,
-    s"IdPairs takes one sorted id list or two id lists, got ${children.size}")
+/** Cross-list LSH candidate-pair generator: one row (a_id, b_id) per
+  * x in `a`, y in `b`, in order — exactly the rows the
+  * `explode(flatten(transform(a, x -> transform(b, …))))` lambdas
+  * emitted, without their interpreted per-element lambda calls and the
+  * per-bucket array-of-structs they built before the explode. A null
+  * list emits nothing. Rows stream lazily. */
+case class IdPairs(left: Expression, right: Expression)
+  extends org.apache.spark.sql.catalyst.expressions.Generator with CodegenFallback
+  with org.apache.spark.sql.catalyst.trees.BinaryLike[Expression] {
 
   private def elementOf(e: Expression): ArrayType = e.dataType.asInstanceOf[ArrayType]
 
@@ -471,8 +483,8 @@ case class IdPairs(children: Seq[Expression])
     }
 
   override def elementSchema: StructType = {
-    val a = elementOf(children.head)
-    val b = elementOf(children.last)
+    val a = elementOf(left)
+    val b = elementOf(right)
     StructType(Seq(
       StructField("a_id", a.elementType, a.containsNull),
       StructField("b_id", b.elementType, b.containsNull)))
@@ -484,21 +496,15 @@ case class IdPairs(children: Seq[Expression])
       case null => Array.empty
       case arr: ArrayData => arr.toObjectArray(elementOf(e).elementType)
     }
-    def pair(x: AnyRef, y: AnyRef) =
-      new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(Array[Any](x, y))
-    val xs = values(children.head)
-    if (children.size == 1)
-      Iterator.range(0, xs.length).flatMap(i =>
-        Iterator.range(i + 1, xs.length).map(j => pair(xs(i), xs(j))))
-    else {
-      val ys = values(children(1))
-      if (ys.isEmpty) Iterator.empty
-      else xs.iterator.flatMap(x => ys.iterator.map(y => pair(x, y)))
-    }
+    val xs = values(left)
+    val ys = values(right)
+    if (ys.isEmpty) Iterator.empty
+    else xs.iterator.flatMap(x => ys.iterator.map(y =>
+      new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(Array[Any](x, y))))
   }
 
   override protected def withNewChildrenInternal(
-      c: IndexedSeq[Expression]): IdPairs = copy(children = c)
+      l: Expression, r: Expression): IdPairs = copy(left = l, right = r)
 }
 
 /** Per-document TERM COUNTS in one expression eval: split on single

@@ -3,23 +3,28 @@ package graft.operators
 import scala.jdk.CollectionConverters._
 
 import graft.functions.TextFunctions
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.{DataFrame, Encoders, Observation, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.InSet
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.{toColumn, toExpr}
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StructField, StructType}
 
 /** Deduplication operators for large-scale document pipelines.
   *
   * Scale design: nothing here ever materializes the O(n²) pair space.
   *  - exact: one shuffle on a 64-bit text hash (tiny keys, not full
   *    documents); `min(id)` keeps a canonical representative.
-  *  - MinHash+LSH: per-band bucket join; only ids sharing a band
-  *    bucket meet, and buckets above `maxBucketSize` are dropped (skew
-  *    guard — a degenerate value, e.g. the empty document, would
-  *    otherwise create a quadratic bucket). Candidates are then
-  *    verified with exact shingle Jaccard, so false positives from
-  *    banding (or bucket-hash collisions) never reach the output.
+  *  - MinHash+LSH: one hash exchange of (bucket, id) rows, each
+  *    bucket's ids paired from a sorted run; only ids sharing a band
+  *    bucket meet, and buckets above `maxBucketSize` are dropped and
+  *    counted (skew guard — a degenerate value, e.g. the empty
+  *    document, would otherwise create a quadratic bucket). Candidates
+  *    are then verified with exact shingle Jaccard, so false positives
+  *    from banding (or bucket-hash collisions) never reach the output:
+  *    on the driver when the candidate set is small and an upper bound
+  *    on its docs' shingle bytes fits `autoBroadcastJoinThreshold`, by
+  *    one distributed verify otherwise.
   *  - SimHash: C(numChunks, numChunks−h) chunk-combination buckets;
   *    hamming ≤ h ⇒ some combination of chunks equal (pigeonhole), so
   *    bucketing is lossless for the verify threshold — exact result,
@@ -36,7 +41,11 @@ object Dedup {
 
   /** Test hook: bucketPairs over an explicit (id, bucket) band set. */
   private[graft] def pairsForTest(bands: DataFrame, maxBucketSize: Int): DataFrame =
-    bucketPairs(bands, maxBucketSize)._1
+    bucketPairs(bands, maxBucketSize).pairs
+
+  /** Test hook: the buckets bucketPairs drops over `maxBucketSize`. */
+  private[graft] def hotBucketsForTest(bands: DataFrame, maxBucketSize: Int): Long =
+    bucketPairs(bands, maxBucketSize).hotBuckets
 
   /** Rows above which a candidate-derived table must never be planned
     * into a STATIC broadcast. Catalyst's size estimate for the pair
@@ -52,7 +61,9 @@ object Dedup {
     * rows are repartitioned before shingling: past this, spreading
     * the shingle compute + checkpoint write across cores beats the
     * exchange it costs; below it the docs shingle in less time than
-    * the shuffle's fixed overhead. */
+    * the shuffle's fixed overhead. It is also the MinHash small path's
+    * budget: at most this many candidate pairs are collected and, when
+    * their docs' shingles fit, verified on the driver. */
   private[graft] val RepartitionVerifyRows = 4096L
 
   /** Pin `d`'s next equi-join to a shuffle (sort-merge) join when its
@@ -87,42 +98,61 @@ object Dedup {
       if (n <= BroadcastSafeRows) broadcast(m) else m.hint("merge")
     }
 
-  /** Candidate pairs from (id, bucket) rows: ONE shuffle (groupBy
-    * bucket + bounded id list), in-bucket pairs from the
-    * [[graft.functions.IdPairs]] generator, oversized buckets dropped
-    * (skew guard), then pair dedup. Replaces a bucket self-join (which
-    * shuffles both sides and recomputes the banding pipeline per
-    * consumer); the result is materialized (reliable checkpoint on
-    * clusters, localCheckpoint otherwise) and counted, because every
-    * caller consumes it several times and sizes its joins on it. */
-  private def bucketPairs(bands: DataFrame, maxBucketSize: Int): (DataFrame, Long) = {
-    // long ids take the hard-capped aggregate: buffer memory is O(cap)
-    // even for a degenerate bucket holding most of the corpus (see
-    // BoundedCollect — collect_list materializes the whole bucket
-    // before the size filter can drop it). Non-long ids keep the
-    // collect_list path (same cap semantics, unbounded buffer).
-    val idIsLong = bands.schema("id").dataType == org.apache.spark.sql.types.LongType
-    val grouped =
-      if (idIsLong)
-        bands.groupBy("bucket")
-          .agg(graft.functions.BoundedCollect.bounded_long_list(col("id"), maxBucketSize).as("ids"))
-          .filter(col("ids").isNotNull && size(col("ids")) >= 2) // already sorted
-      else
-        bands.groupBy("bucket").agg(collect_list(col("id")).as("ids"))
-          .filter(size(col("ids")).between(2, maxBucketSize))
-          .withColumn("ids", array_sort(col("ids")))
+  /** One banding's materialized candidate pairs (a_id < b_id, distinct),
+    * their real count, and the buckets dropped over the size cap. */
+  private final case class Candidates(pairs: DataFrame, count: Long, hotBuckets: Long)
+
+  /** Candidate pairs from (id, bucket) rows, for every id type: ONE hash
+    * exchange of the raw rows, each bucket's ids arriving sorted by
+    * Spark's own ordering (`flatMapSortedGroups`), at most cap + 1 of
+    * them buffered, singleton and over-cap buckets (skew guard) dropped,
+    * i < j pairs emitted ([[TextFunctions.runPairs]]), then pair dedup.
+    * No aggregation buffer per bucket, so no partial aggregate and no
+    * sort fallback; a degenerate bucket holding most of the corpus
+    * still costs O(cap) memory. Null ids are skipped.
+    *
+    * The dropped buckets are counted in the same pass (an accumulator,
+    * so a retried task may count its buckets twice) and logged in one
+    * WARN: their pairs are a silent recall loss otherwise. The pairs
+    * are materialized (reliable checkpoint on clusters, localCheckpoint
+    * otherwise) and counted in the same job, because every caller
+    * consumes them several times and sizes its joins on the count. */
+  private def bucketPairs(bands: DataFrame, maxBucketSize: Int): Candidates = {
+    val spark = bands.sparkSession
+    val rows = bands.select(col("bucket"), col("id"))
+    val idType = rows.schema("id").dataType
+    val pairSchema = StructType(Seq(
+      StructField("a_id", idType, nullable = false),
+      StructField("b_id", idType, nullable = false)))
+    val hot = spark.sparkContext.longAccumulator("dedup.hotBuckets")
+    val cap = maxBucketSize
+    val grouped = rows.groupBy("bucket")
+      .as[Row, Row](Encoders.row(StructType(Seq(rows.schema("bucket")))), Encoders.row(rows.schema))
+      .flatMapSortedGroups(col("id")) { (_, run) =>
+        val ids = new scala.collection.mutable.ArrayBuffer[Any]()
+        var over = false
+        while (!over && run.hasNext) {
+          val id = run.next().get(1)
+          if (id != null) { if (ids.length == cap) over = true else ids += id }
+        }
+        if (over) { hot.add(1); Iterator.empty }
+        else TextFunctions.runPairs(ids).map { case (a, b) => Row(a, b) }
+      }(Encoders.row(pairSchema))
     // the true cardinality rides the checkpoint job (withCount); every
     // consumer keys its broadcast-vs-shuffle choice on it
-    val (m, n) = Materialize.withCount(grouped
-      .select(TextFunctions.idPairs(col("ids")))
-      .dropDuplicates("a_id", "b_id"))
+    val (m, n) = Materialize.withCount(grouped.toDF().dropDuplicates("a_id", "b_id"))
+    val log = org.apache.log4j.Logger.getLogger(getClass)
+    val dropped = hot.value.longValue
+    if (dropped > 0)
+      log.warn(s"bucketPairs: $dropped bucket(s) over maxBucketSize ($cap) dropped — " +
+        "pairs found only there are lost (run exact dedup first, or raise the cap)")
     if (n > BroadcastSafeRows)
-      org.apache.log4j.Logger.getLogger(getClass).warn(
+      log.warn(
         s"bucketPairs: $n candidate pairs exceed the broadcast-safe " +
           s"budget ($BroadcastSafeRows) — downstream joins pinned to " +
           "shuffle (crowded buckets; consider more planes/bands or a " +
           "prior exact-dedup pass if this is unexpected)")
-    (m, n)
+    Candidates(m, n, dropped)
   }
 
   /** MinHash+LSH near-duplicate pairs, exact-verified.
@@ -141,103 +171,170 @@ object Dedup {
     minhashPairsCounted(df, idCol, textCol, shingleN, numHashes, bandRows,
       threshold, maxBucketSize)._1
 
-  /** [[minhashPairs]] plus, on the small-candidate path (at most
-    * `budget` REAL candidate pairs), that count: it bounds the verified
-    * rows (each is one distinct candidate). `None` over budget, whose
-    * callers keep their distributed path; tests pass a negative
-    * budget to force it. */
+  /** [[minhashPairs]] plus, on the small path (at most `budget` REAL
+    * candidate pairs), that count: it bounds the verified rows (each is
+    * one distinct candidate). `None` over budget; tests pass a negative
+    * budget to force the over-budget path. Driver-verified pairs come
+    * back as a local relation. */
   private[graft] def minhashPairsCounted(
       df: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, numHashes: Int = 64, bandRows: Int = 2,
       threshold: Double = 0.8, maxBucketSize: Int = 1000,
       budget: Long = RepartitionVerifyRows): (DataFrame, Option[Long]) = {
+    val v = minhashVerified(df, idCol, textCol, shingleN, numHashes, bandRows,
+      threshold, maxBucketSize, budget)
+    (v.frame, v.bound)
+  }
+
+  /** The verified pairs of one MinHash run. */
+  private sealed trait Verified {
+    /** (a_id, b_id, jaccard). */
+    def frame: DataFrame
+    /** The small path's real candidate count, which bounds the pairs. */
+    def bound: Option[Long]
+  }
+
+  /** Pairs verified on the driver, ids as Catalyst values. */
+  private final case class OnDriver(
+      spark: SparkSession, pairs: Array[(Any, Any, Double)], idType: DataType,
+      candidates: Long) extends Verified {
+    def bound: Option[Long] = Some(candidates)
+    def frame: DataFrame = {
+      val toScala = CatalystTypeConverters.createToScalaConverter(idType)
+      val rows = pairs.map { case (a, b, j) => Row(toScala(a), toScala(b), j) }
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(Seq(
+        StructField("a_id", idType, nullable = false),
+        StructField("b_id", idType, nullable = false),
+        StructField("jaccard", DoubleType))))
+    }
+  }
+
+  private final case class InSpark(frame: DataFrame, bound: Option[Long]) extends Verified
+
+  /** The MinHash pipeline up to verified pairs. Only (id, bucket) flows
+    * through the bucket shuffle; shingles are built per candidate doc
+    * AFTER pair dedup, so the wide payload never crosses it.
+    *
+    * Small path (at most `budget` real candidate pairs — quality
+    * corpora have few near-dups): the pairs are read straight from the
+    * checkpoint's RDD as Catalyst values, and their ids filter the
+    * corpus through a driver-built `InSet` (no distinct, no broadcast).
+    * If an upper bound on the candidate docs' shingle bytes fits
+    * `autoBroadcastJoinThreshold` (-1: never), their (id, text) rows are
+    * collected once and every pair is verified on the driver
+    * ([[verifyOnDriver]]); the bound is `shingleN` × min(total text
+    * bytes, max text bytes × candidate docs), from metrics observed on
+    * the candidate job's own corpus scan, so it costs no job and driver
+    * memory stays proportional to it. Otherwise, and over budget, the
+    * distributed verify runs: candidate docs shingled once
+    * (materialized — both pair-side joins read them) and two id joins,
+    * pinned to shuffle when the bound did not fit or the pair table is
+    * over the broadcast-safe budget. */
+  private def minhashVerified(
+      df: DataFrame, idCol: String, textCol: String,
+      shingleN: Int = 3, numHashes: Int = 64, bandRows: Int = 2,
+      threshold: Double = 0.8, maxBucketSize: Int = 1000,
+      budget: Long = RepartitionVerifyRows): Verified = {
     val spark = df.sparkSession
-    // (id, bucket) — bucket keys from the FUSED text→bands expression:
-    // one signature computation per row (MinHashBands documents the
-    // lambda-inlining trap the fusion avoids). Only (id, bucket) flows
-    // through the self-join: shingle arrays are joined back per-id
-    // AFTER pair dedup, so the wide payload never crosses the bucket
-    // shuffle (at 100 TB the bands shuffle is O(docs × bands × 16
-    // bytes), not O(docs × bands × doc size)).
-    val bands = df.select(
-      col(idCol).as("id"),
-      explode(TextFunctions.minhashBands(
-        col(textCol), shingleN, numHashes, bandRows)).as("bucket"))
+    val textBytes = Observation()
+    // bucket keys from the FUSED text→bands expression: one signature
+    // computation per row (MinHashBands documents the lambda-inlining
+    // trap the fusion avoids)
+    val bands = df.select(col(idCol).as("id"), col(textCol).as("__text"))
+      .observe(textBytes, max(octet_length(col("__text"))), sum(octet_length(col("__text"))))
+      .select(col("id"), explode(TextFunctions.minhashBands(
+        col("__text"), shingleN, numHashes, bandRows)).as("bucket"))
+    val cands = described(spark, "dedup.minhash.candidates")(bucketPairs(bands, maxBucketSize))
+    val idType = cands.pairs.schema("a_id").dataType
+    def texts(d: DataFrame) = d.select(col(idCol).as("id"), col(textCol).as("__text"))
 
-    // bucketPairs materializes and counts its result: candidates are
-    // O(pairs), tiny vs the corpus; over budget they are consumed THREE
-    // times downstream (the candidate id set + each pair-side join),
-    // within it collected once — the LSH pipeline runs exactly once.
-    val (candidates, nCand) = described(spark, "dedup.minhash.candidates")(
-      bucketPairs(bands, maxBucketSize))
-    def shingled(d: DataFrame): DataFrame =
-      d.select(col("id"), TextFunctions.wordShingles(col("__text"), shingleN).as("sh"))
-
-    val small = nCand <= budget
-    val (pairs, shingleSets, big) =
-      if (small) {
-        // SMALL candidate set (the common case — quality corpora have
-        // few near-dups): the counted pairs come to the driver once as
-        // a local relation, so the id set is built here (no distinct +
-        // broadcast jobs) and filters the corpus by hash-set lookup.
-        val rows = described(spark, "dedup.minhash.candidates")(candidates.collect())
-        val ids = new java.util.HashSet[Any](rows.length * 2)
-        rows.foreach { r =>
-          ids.add(CatalystTypeConverters.convertToCatalyst(r.get(0)))
-          ids.add(CatalystTypeConverters.convertToCatalyst(r.get(1)))
-        }
-        val verifySide = df
-          .filter(toColumn(InSet(toExpr(col(idCol)), ids.asScala.toSet)))
-          .select(col(idCol).as("id"), col(textCol).as("__text"))
-        // at most 2 × budget docs, but their shingle arrays grow with
-        // document length: the materializing job also measures their
-        // UnsafeArrayData bytes (each element's UTF-8 bytes plus its
-        // 8-byte offset/length slot and at most 8 bytes of word
-        // padding), and the one shared broadcast of both pair sides is
-        // taken only under the session's autoBroadcastJoinThreshold
-        // (-1 = broadcasts off); otherwise the planner picks the joins
-        val shBytes = sum(octet_length(array_join(col("sh"), "")) + size(col("sh")) * 16)
-        val (sh, measured) = described(spark, "dedup.minhash.verify")(
-          Materialize.withMetrics(shingled(verifySide), bounded = true, shBytes.as("bytes"))(
-            _.agg(shBytes).head()))
-        val bytes = if (measured.isNullAt(0)) 0L else measured.getLong(0)
-        val shared =
-          if (bytes <= spark.sessionState.conf.autoBroadcastJoinThreshold) broadcast(sh) else sh
-        (spark.createDataFrame(java.util.Arrays.asList(rows: _*), candidates.schema), shared, false)
-      } else {
-        // OVER budget: shingle only the docs in candidate pairs through
-        // a semi-join on an id set sized on the real count; a big pair
-        // table (and hence the first join's output, whose estimate
-        // inherits the bogus one) must never be a broadcast build side
-        val big = nCand > BroadcastSafeRows
-        val candIds = described(spark, "dedup.minhash.verify")(sizedIdSet(
-          candidates.select(col("a_id").as("id"))
-            .union(candidates.select(col("b_id").as("id"))).distinct(), big))
-        val verifySide = df
-          .join(candIds, df(idCol) === candIds("id"), "left_semi")
-          .select(col(idCol).as("id"), col(textCol).as("__text"))
-        // Repartitioned by id BEFORE the shingle projection when the
-        // candidate set is large: the semi-join inherits the corpus
-        // scan's few input partitions, so computing + checkpointing the
-        // shingle payload there pins 1-2 threads while the rest of the
-        // cluster idles (measured at sf1: tens of seconds serial vs ~1 s
-        // parallel) — the narrow (id, text) shuffle spreads both the
-        // shingle compute and the checkpoint write across all cores, and
-        // costs one small pass over O(candidates) rows. Materialized:
-        // BOTH pair-side joins read it, and without it the shingling
-        // runs twice.
-        val spread =
-          if (nCand > RepartitionVerifyRows) verifySide.repartition(col("id"))
-          else verifySide
-        (candidates, described(spark, "dedup.minhash.verify")(Materialize(shingled(spread))), big)
+    if (cands.count > budget) {
+      // a big pair table (and hence the first join's output, whose
+      // estimate inherits the bogus one) must never be a broadcast build
+      // side; the candidate id set is sized on the real count
+      val big = cands.count > BroadcastSafeRows
+      val candIds = described(spark, "dedup.minhash.verify")(sizedIdSet(
+        cands.pairs.select(col("a_id").as("id"))
+          .union(cands.pairs.select(col("b_id").as("id"))).distinct(), big))
+      // Repartitioned by id BEFORE the shingle projection when the
+      // candidate set is large: the semi-join inherits the corpus scan's
+      // few input partitions, so shingling + checkpointing there pins
+      // 1-2 threads while the rest idle (measured at sf1: tens of
+      // seconds serial vs ~1 s parallel)
+      val verifySide = texts(df.join(candIds, df(idCol) === candIds("id"), "left_semi"))
+      val spread =
+        if (cands.count > RepartitionVerifyRows) verifySide.repartition(col("id"))
+        else verifySide
+      InSpark(distributedVerify(spark, cands.pairs, spread, shingleN, threshold, big), None)
+    } else if (cands.count == 0) OnDriver(spark, Array.empty, idType, 0L)
+    else {
+      val pairs = described(spark, "dedup.minhash.candidates")(
+        cands.pairs.queryExecution.toRdd.map(r =>
+          (InternalRow.copyValue(r.get(0, idType)), InternalRow.copyValue(r.get(1, idType))))
+          .collect())
+      val ids = new java.util.HashSet[Any](pairs.length * 2)
+      pairs.foreach { case (a, b) => ids.add(a); ids.add(b) }
+      val candDocs = texts(df.filter(toColumn(InSet(toExpr(col(idCol)), ids.asScala.toSet))))
+      // each shingle is at most shingleN words of the text and their
+      // separators, so shingleN × the docs' text bytes bounds the bytes
+      // of their distinct shingles (ids name documents, one row each);
+      // a row without both metrics leaves the bound unknown
+      val limit = spark.sessionState.conf.autoBroadcastJoinThreshold
+      val metrics = Materialize.observed(textBytes, "minhash text bytes").filter(_.length == 2)
+      val fits = limit >= 0 && metrics.exists { r =>
+        val maxBytes = if (r.isNullAt(0)) 0L else r.getInt(0).toLong
+        val total = if (r.isNullAt(1)) 0L else r.getLong(1)
+        shingleN.toLong * math.min(total, maxBytes * ids.size) <= limit
       }
-    val verified = noStaticBroadcast(noStaticBroadcast(pairs, big)
-      .join(shingleSets.select(col("id").as("a_id"), col("sh").as("a_sh")), Seq("a_id")), big)
-      .join(shingleSets.select(col("id").as("b_id"), col("sh").as("b_sh")), Seq("b_id"))
+      if (fits) {
+        val docs = described(spark, "dedup.minhash.verify")(
+          candDocs.queryExecution.toRdd.map(r => (InternalRow.copyValue(r.get(0, idType)),
+            if (r.isNullAt(1)) null else r.getUTF8String(1).toString)).collect())
+        OnDriver(spark, verifyOnDriver(pairs, docs, shingleN, threshold), idType, cands.count)
+      } else
+        InSpark(distributedVerify(spark, cands.pairs, candDocs, shingleN, threshold, big = true),
+          Some(cands.count))
+    }
+  }
+
+  /** Each candidate doc shingled once ([[TextFunctions.shingleSet]]) and
+    * every pair's Jaccard from [[TextFunctions.jaccard]]: the shingle
+    * identity and the division the distributed verify evaluates, so the
+    * same pairs with the same doubles. A pair whose id matches several
+    * rows is checked once per row combination, as the joins do; a NULL
+    * text matches nothing (its shingles, and so its Jaccard, are NULL). */
+  private def verifyOnDriver(
+      pairs: Array[(Any, Any)], docs: Array[(Any, String)],
+      shingleN: Int, threshold: Double): Array[(Any, Any, Double)] = {
+    val sets = new java.util.HashMap[Any, List[java.util.Set[String]]](docs.length * 2)
+    docs.foreach { case (id, text) =>
+      if (text != null)
+        sets.put(id, TextFunctions.shingleSet(text, shingleN) :: sets.getOrDefault(id, Nil))
+    }
+    for {
+      (a, b) <- pairs
+      sa <- sets.getOrDefault(a, Nil)
+      sb <- sets.getOrDefault(b, Nil)
+      j = TextFunctions.jaccard(sa, sb)
+      if j != null && j >= threshold
+    } yield (a, b, j.doubleValue)
+  }
+
+  /** The distributed verify: `docs` (id, __text) shingled once and
+    * materialized (both pair-side joins read them), joined to both pair
+    * sides and filtered at `threshold`; `big` pins both joins to
+    * shuffle. */
+  private def distributedVerify(
+      spark: SparkSession, pairs: DataFrame, docs: DataFrame,
+      shingleN: Int, threshold: Double, big: Boolean): DataFrame = {
+    val sh = described(spark, "dedup.minhash.verify")(Materialize(docs.select(
+      col("id"), TextFunctions.wordShingles(col("__text"), shingleN).as("sh"))))
+    noStaticBroadcast(noStaticBroadcast(pairs, big)
+      .join(sh.select(col("id").as("a_id"), col("sh").as("a_sh")), Seq("a_id")), big)
+      .join(sh.select(col("id").as("b_id"), col("sh").as("b_sh")), Seq("b_id"))
       .withColumn("jaccard", TextFunctions.setJaccard(col("a_sh"), col("b_sh")))
       .filter(col("jaccard") >= threshold)
       .select("a_id", "b_id", "jaccard")
-    (verified, if (small) Some(nCand) else None)
   }
 
   /** Runs `body`'s Spark jobs under the job description `what` (the
@@ -298,7 +395,8 @@ object Dedup {
   def editPairsFromCandidates(
       candidates: DataFrame, df: DataFrame, idCol: String, textCol: String,
       maxEdits: Int): DataFrame = {
-    val (pairs, nPairs) = Materialize.withCount(candidates)
+    val (pairs, nPairs) = described(df.sparkSession, "dedup.edit.candidates")(
+      Materialize.withCount(candidates))
     val big = nPairs > BroadcastSafeRows
     val texts = df.select(col(idCol).as("id"), col(textCol).as("__t"))
     noStaticBroadcast(noStaticBroadcast(pairs, big)
@@ -325,6 +423,7 @@ object Dedup {
       reference: DataFrame, refId: String, refText: String,
       shingleN: Int = 3, numHashes: Int = 64, bandRows: Int = 2,
       threshold: Double = 0.8, maxBucketSize: Int = 1000): DataFrame = {
+    val spark = corpus.sparkSession
     def bands(df: DataFrame, id: String, text: String): DataFrame =
       df.select(col(id).as("id"),
         explode(TextFunctions.minhashBands(
@@ -346,26 +445,28 @@ object Dedup {
     // (one cheap checkpoint-block pass) sizes every downstream
     // broadcast decision — the static estimate under the explode is
     // bogus-small
-    val (candidates, nCand) = Materialize.withCount(ga.join(gb, "bucket")
-      .select(TextFunctions.idPairs(col("a_ids"), col("b_ids")))
-      .dropDuplicates("a_id", "b_id"))
+    val (candidates, nCand) = described(spark, "dedup.cross.candidates")(
+      Materialize.withCount(ga.join(gb, "bucket")
+        .select(TextFunctions.idPairs(col("a_ids"), col("b_ids")))
+        .dropDuplicates("a_id", "b_id")))
     val big = nCand > BroadcastSafeRows
 
     def shingleSide(df: DataFrame, id: String, text: String,
-                    keyCol: String, shCol: String): DataFrame = {
-      val ids = sizedIdSet(candidates.select(col(keyCol).as("id")).distinct(), big)
-      val side = df
-        .join(ids, df(id) === ids("id"), "left_semi")
-        .select(col(id).as(keyCol), col(text).as("__text"))
-      // spread the shingle compute only when the verify set is big
-      // enough for the exchange to pay for itself (see minhashPairs)
-      val spread =
-        if (nCand > RepartitionVerifyRows) side.repartition(col(keyCol))
-        else side
-      Materialize(spread
-        .select(col(keyCol),
-          TextFunctions.wordShingles(col("__text"), shingleN).as(shCol)))
-    }
+                    keyCol: String, shCol: String): DataFrame =
+      described(spark, "dedup.cross.verify") {
+        val ids = sizedIdSet(candidates.select(col(keyCol).as("id")).distinct(), big)
+        val side = df
+          .join(ids, df(id) === ids("id"), "left_semi")
+          .select(col(id).as(keyCol), col(text).as("__text"))
+        // spread the shingle compute only when the verify set is big
+        // enough for the exchange to pay for itself (see minhashPairs)
+        val spread =
+          if (nCand > RepartitionVerifyRows) side.repartition(col(keyCol))
+          else side
+        Materialize(spread
+          .select(col(keyCol),
+            TextFunctions.wordShingles(col("__text"), shingleN).as(shCol)))
+      }
     noStaticBroadcast(noStaticBroadcast(candidates, big)
       .join(shingleSide(corpus, corpusId, corpusText, "a_id", "a_sh"), Seq("a_id")), big)
       .join(shingleSide(reference, refId, refText, "b_id", "b_sh"), Seq("b_id"))
@@ -622,15 +723,17 @@ object Dedup {
       newDocs: DataFrame, idCol: String, textCol: String,
       threshold: Double = 0.8): DataFrame = {
     import st.{shingleN, numHashes, bandRows, maxBucketSize}
+    val spark = newDocs.sparkSession
 
-    val (probeGrouped, nProbe) = Materialize.withCount(newDocs
-      .select(col(idCol).cast("long").as("id"),
-        explode(TextFunctions.minhashBands(
-          col(textCol), shingleN, numHashes, bandRows)).as("bucket"))
-      .groupBy("bucket")
-      .agg(graft.functions.BoundedCollect
-        .bounded_long_list(col("id"), maxBucketSize).as("a_ids"))
-      .filter(col("a_ids").isNotNull))
+    val (probeGrouped, nProbe) = described(spark, "dedup.index.candidates")(
+      Materialize.withCount(newDocs
+        .select(col(idCol).cast("long").as("id"),
+          explode(TextFunctions.minhashBands(
+            col(textCol), shingleN, numHashes, bandRows)).as("bucket"))
+        .groupBy("bucket")
+        .agg(graft.functions.BoundedCollect
+          .bounded_long_list(col("id"), maxBucketSize).as("a_ids"))
+        .filter(col("a_ids").isNotNull)))
     val probeSmall = nProbe <= BroadcastSafeRows
     val pg = if (probeSmall) broadcast(probeGrouped)
              else probeGrouped.hint("merge")
@@ -647,27 +750,30 @@ object Dedup {
           .bounded_long_list(col("id"), maxBucketSize).as("ids"))
         .filter(col("ids").isNotNull))
     }
-    val (candidates, nCand) = Materialize.withCount(pg
-      .join(bandsIdx.withColumnRenamed("ids", "b_ids"), "bucket")
-      .select(TextFunctions.idPairs(col("a_ids"), col("b_ids")))
-      .dropDuplicates("a_id", "b_id"))
+    val (candidates, nCand) = described(spark, "dedup.index.candidates")(
+      Materialize.withCount(pg
+        .join(bandsIdx.withColumnRenamed("ids", "b_ids"), "bucket")
+        .select(TextFunctions.idPairs(col("a_ids"), col("b_ids")))
+        .dropDuplicates("a_id", "b_id")))
     val big = nCand > BroadcastSafeRows
 
     // probe-side shingles: computed, for candidate probe docs only —
     // spread across cores only when the verify set is big enough for
     // the exchange to pay for itself (see minhashPairs)
-    val aIds = sizedIdSet(candidates.select(col("a_id").as("id")).distinct(), big)
+    val aIds = described(spark, "dedup.index.verify")(
+      sizedIdSet(candidates.select(col("a_id").as("id")).distinct(), big))
     val probeSide = newDocs
       .join(aIds, newDocs(idCol).cast("long") === aIds("id"), "left_semi")
       .select(col(idCol).cast("long").as("a_id"), col(textCol).as("__text"))
     val probeSpread =
       if (nCand > RepartitionVerifyRows) probeSide.repartition(col("a_id"))
       else probeSide
-    val probeSh = Materialize(probeSpread
+    val probeSh = described(spark, "dedup.index.verify")(Materialize(probeSpread
       .select(col("a_id"),
-        TextFunctions.shingleHashes(col("__text"), shingleN).as("a_sh")))
+        TextFunctions.shingleHashes(col("__text"), shingleN).as("a_sh"))))
     // reference-side shingles: READ from the index, never recomputed
-    val bIds = sizedIdSet(candidates.select(col("b_id").as("id")).distinct(), big)
+    val bIds = described(spark, "dedup.index.verify")(
+      sizedIdSet(candidates.select(col("b_id").as("id")).distinct(), big))
     val refSh = st.shingles
       .join(bIds, Seq("id"), "left_semi")
       .select(col("id").as("b_id"), col("sh").as("b_sh"))
@@ -688,20 +794,24 @@ object Dedup {
                threshold: Double = 0.8, maxIter: Int = 20): DataFrame =
     minhashClusters(df, idCol, textCol, threshold, maxIter)
 
-  /** [[clusters]] with the small-candidate path's real candidate count
-    * handed to the components stage, so a candidate set that already
-    * fits `driverEdgeLimit` goes straight to the driver union-find.
-    * `budget` and `driverEdgeLimit` are the test hooks that force the
-    * over-budget pairs and the star rounds. */
+  /** [[clusters]] with the small path's pairs handed to the components
+    * stage: pairs verified on the driver (long ids) go straight into the
+    * driver union-find, with no local relation and no collect; otherwise
+    * the real candidate count sends a set that fits `driverEdgeLimit`
+    * to the union-find. `budget` and `driverEdgeLimit` are the test
+    * hooks that force the over-budget pairs and the star rounds. */
   private[graft] def minhashClusters(
       df: DataFrame, idCol: String, textCol: String,
       threshold: Double, maxIter: Int = 20, carry: Seq[String] = Nil,
       budget: Long = RepartitionVerifyRows,
-      driverEdgeLimit: Long = DriverEdgeLimit): DataFrame = {
-    val (pairs, bound) = minhashPairsCounted(df, idCol, textCol,
-      threshold = threshold, budget = budget)
-    clustersFromBoundedPairs(df, idCol, pairs, bound, maxIter, driverEdgeLimit, carry)
-  }
+      driverEdgeLimit: Long = DriverEdgeLimit): DataFrame =
+    minhashVerified(df, idCol, textCol, threshold = threshold, budget = budget) match {
+      case OnDriver(spark, pairs, LongType, _) if pairs.length <= driverEdgeLimit =>
+        labelled(df, idCol, unionFindLabels(spark, idCol, pairs.iterator.map(p =>
+          (p._1.asInstanceOf[Long], p._2.asInstanceOf[Long]))), carry)
+      case v => clustersFromBoundedPairs(df, idCol, v.frame, v.bound, maxIter,
+        driverEdgeLimit, carry)
+    }
 
   /** Canonical-document selection per near-dup cluster: within each
     * [[clusters]] component, keep the member maximizing
@@ -796,9 +906,6 @@ object Dedup {
   private def clustersFromBoundedPairs(
       df: DataFrame, idCol: String, pairsDf: DataFrame, pairsBound: Option[Long],
       maxIter: Int, driverEdgeLimit: Long, carry: Seq[String]): DataFrame = {
-    require(!carry.contains("cluster_id") && !carry.contains(idCol),
-      s"carry columns collide with reserved output columns " +
-        s"('cluster_id', '$idCol'): ${carry.mkString(", ")}")
     // (count, order-independent hash xor) of the DISTINCT edge set —
     // equal fingerprints across a round ⇒ fixed point reached (xor is
     // overflow-free; edges are deduped, so no cancellation ambiguity)
@@ -814,22 +921,12 @@ object Dedup {
     // withCount idiom, Materialize.withCount, extended to two metrics).
     // Fallback on a dropped listener event: the explicit aggregate.
     def materializeFp(d: DataFrame): (DataFrame, (Long, Long)) = {
-      val obs = org.apache.spark.sql.Observation()
+      val obs = Observation()
       val m = Materialize(d.observe(obs,
         count(lit(1)).as("n"),
         coalesce(bit_xor(xxhash64(col("src"), col("dst"))), lit(0L)).as("x")))
-      val fp = try {
-        val r = scala.concurrent.Await
-          .result(obs.future, scala.concurrent.duration.Duration(10, "s"))
-        (r.getLong(0), r.getLong(1))
-      } catch {
-        case _: java.util.concurrent.TimeoutException =>
-          org.apache.log4j.Logger.getLogger(getClass).warn(
-            "clustersFromPairs: observation metrics did not arrive " +
-              "within 10s (listener bus dropped the event?) — falling " +
-              "back to an explicit fingerprint pass")
-          fingerprint(m)
-      }
+      val fp = Materialize.observed(obs, "clustersFromPairs fingerprint")
+        .map(r => (r.getLong(0), r.getLong(1))).getOrElse(fingerprint(m))
       (m, fp)
     }
 
@@ -868,43 +965,22 @@ object Dedup {
     // run unchanged, so the operator never depends on the edges
     // fitting anywhere.
     val spark = df.sparkSession
-    val idIsLong = df.schema(idCol).dataType ==
-      org.apache.spark.sql.types.LongType
+    val idIsLong = df.schema(idCol).dataType == LongType
     // duplicate edges and self-loops are no-ops for the union-find, so
     // it takes raw pairs as well as the deduped edge set
-    def unionFindLabels(edges: DataFrame): DataFrame = {
-      val parent = new java.util.HashMap[Long, Long]()
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrDefault(r, r) != r) r = parent.getOrDefault(r, r)
-        var c = x // path compression
-        while (parent.getOrDefault(c, c) != r) {
-          val next = parent.getOrDefault(c, c); parent.put(c, r); c = next
-        }
-        r
-      }
-      described(spark, "dedup.cc.unionFind")(edges.collect()).foreach { row =>
-        val (a, b) = (row.getLong(0), row.getLong(1))
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent.put(math.max(ra, rb), math.min(ra, rb))
-      }
-      // root chains collapse to the min id per component because
-      // unions always attach the larger root under the smaller
-      val out = new scala.collection.mutable.ArrayBuffer[(Long, Long)](parent.size)
-      parent.keySet().forEach { n => val r = find(n); if (n != r) out += ((n, r)) }
-      import spark.implicits._
-      broadcast(out.toSeq.toDF(idCol, "cluster_id"))
-    }
+    def collected(edges: DataFrame): DataFrame =
+      unionFindLabels(spark, idCol, described(spark, "dedup.cc.unionFind")(edges.collect())
+        .iterator.map(row => (row.getLong(0), row.getLong(1))))
 
     val labels: DataFrame =
       if (idIsLong && pairsBound.exists(_ <= driverEdgeLimit))
-        unionFindLabels(pairsDf.select(col("a_id"), col("b_id")))
+        collected(pairsDf.select(col("a_id"), col("b_id")))
       else {
         var (edges, fp) = described(spark, "dedup.cc.edges")(materializeFp(
           pairsDf.select(col("a_id").as("src"), col("b_id").as("dst"))
             .filter(col("src") =!= col("dst")).distinct()))
         if (fp._1 == 0L) edges.select(col("src").as(idCol), col("dst").as("cluster_id"))
-        else if (idIsLong && fp._1 <= driverEdgeLimit) unionFindLabels(edges)
+        else if (idIsLong && fp._1 <= driverEdgeLimit) collected(edges)
         else {
           var converged = false
           var i = 0
@@ -931,10 +1007,44 @@ object Dedup {
             fp._1 > BroadcastSafeRows)
         }
       }
+    labelled(df, idCol, labels, carry)
+  }
 
-    // roots and singletons label themselves via the left join; `carry`
-    // columns ride along so callers that need them (canonical pick's
-    // score) never pay a second corpus scan + id join
+  /** (id, cluster_id) labels of the components of `edges` from a driver
+    * union-find, broadcast: only non-root nodes get a row. */
+  private def unionFindLabels(spark: SparkSession, idCol: String,
+                              edges: Iterator[(Long, Long)]): DataFrame = {
+    val parent = new java.util.HashMap[Long, Long]()
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrDefault(r, r) != r) r = parent.getOrDefault(r, r)
+      var c = x // path compression
+      while (parent.getOrDefault(c, c) != r) {
+        val next = parent.getOrDefault(c, c); parent.put(c, r); c = next
+      }
+      r
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent.put(math.max(ra, rb), math.min(ra, rb))
+    }
+    // root chains collapse to the min id per component because
+    // unions always attach the larger root under the smaller
+    val out = new scala.collection.mutable.ArrayBuffer[(Long, Long)](parent.size)
+    parent.keySet().forEach { n => val r = find(n); if (n != r) out += ((n, r)) }
+    import spark.implicits._
+    broadcast(out.toSeq.toDF(idCol, "cluster_id"))
+  }
+
+  /** `df`'s ids with their component labels: roots and singletons label
+    * themselves via the left join; `carry` columns ride along so callers
+    * that need them (canonical pick's score) never pay a second corpus
+    * scan + id join. */
+  private def labelled(df: DataFrame, idCol: String, labels: DataFrame,
+                       carry: Seq[String]): DataFrame = {
+    require(!carry.contains("cluster_id") && !carry.contains(idCol),
+      s"carry columns collide with reserved output columns " +
+        s"('cluster_id', '$idCol'): ${carry.mkString(", ")}")
     df.select((idCol +: carry).map(col): _*)
       .join(labels, Seq(idCol), "left")
       .select(col(idCol) +: coalesce(col("cluster_id"), col(idCol)).as("cluster_id")
@@ -993,12 +1103,13 @@ object Dedup {
     // its candidate shingle sets. Repartitioned first so the compute
     // and the checkpoint write spread across the cluster instead of
     // pinning the corpus scan's input partitions.
-    val docs = Materialize(df
+    val docs = described(df.sparkSession, "dedup.simhash.signatures")(Materialize(df
       .select(col(idCol).as("id"), col(textCol).as("__text"))
       .repartition(col("id"))
       .select(col("id"),
-        TextFunctions.simhash64(split(col("__text"), " ")).as("sh")))
-    signaturePairs(docs, maxHamming, numChunks, maxBucketSize, verifyBroadcastRows)
+        TextFunctions.simhash64(split(col("__text"), " ")).as("sh"))))
+    signaturePairs(docs, maxHamming, numChunks, maxBucketSize, verifyBroadcastRows,
+      "dedup.simhash")
   }
 
   /** Hamming-radius pairs over a PRE-COMPUTED 64-bit signature column
@@ -1015,29 +1126,33 @@ object Dedup {
     require(numChunks > maxHamming,
       "chunk bucketing is lossless only when numChunks > maxHamming")
     require(numChunks <= 16, "more than 16 chunks of a 64-bit signature is pointless")
-    val docs = Materialize(df
+    val docs = described(df.sparkSession, "dedup.hamming.signatures")(Materialize(df
       .filter(col(hashCol).isNotNull)
       .select(col(idCol).cast("long").as("id"), col(hashCol).cast("long").as("sh"))
-      .repartition(col("id")))
-    signaturePairs(docs, maxHamming, numChunks, maxBucketSize, verifyBroadcastRows)
+      .repartition(col("id"))))
+    signaturePairs(docs, maxHamming, numChunks, maxBucketSize, verifyBroadcastRows,
+      "dedup.hamming")
   }
 
   /** (id, sh) → hamming ≤ maxHamming pairs (shared tail of
-    * [[simhashPairs]] / [[hammingPairs]]). */
+    * [[simhashPairs]] / [[hammingPairs]]); its jobs run under
+    * `$jobs.candidates` / `$jobs.verify`. */
   private def signaturePairs(docs: DataFrame, maxHamming: Int,
                              numChunks: Int, maxBucketSize: Int,
-                             verifyBroadcastRows: Long): DataFrame = {
+                             verifyBroadcastRows: Long, jobs: String): DataFrame = {
+    val spark = docs.sparkSession
     val chunks = docs.select(
       col("id"),
       explode(TextFunctions.simhashKeysFromHash(
         col("sh"), numChunks, maxHamming)).as("bucket"))
 
-    val (candidates, nCand) = bucketPairs(chunks, maxBucketSize)
+    val Candidates(candidates, nCand, _) =
+      described(spark, s"$jobs.candidates")(bucketPairs(chunks, maxBucketSize))
     val big = nCand > BroadcastSafeRows
     // (id, sh) rows are 16 bytes: the default 2M-row budget ≈ 128 MB
     // hashed — safe to broadcast, and docs is already materialized so
     // the count is free
-    val wrap = verifySideWrap(docs, big, verifyBroadcastRows)
+    val wrap = described(spark, s"$jobs.verify")(verifySideWrap(docs, big, verifyBroadcastRows))
     noStaticBroadcast(noStaticBroadcast(candidates, big)
       .join(wrap(docs.select(col("id").as("a_id"), col("sh").as("a_sh"))), Seq("a_id")), big)
       .join(wrap(docs.select(col("id").as("b_id"), col("sh").as("b_sh"))), Seq("b_id"))
@@ -1077,13 +1192,16 @@ object Dedup {
       explode(graft.functions.VectorFunctions.hyperplaneBuckets(
         col("v"), seed, numTables, numPlanes)).as("bucket"))
 
-    val (candidates, nCand) = bucketPairs(bands, maxBucketSize)
+    val spark = df.sparkSession
+    val Candidates(candidates, nCand, _) =
+      described(spark, "dedup.embedding.candidates")(bucketPairs(bands, maxBucketSize))
     val big = nCand > BroadcastSafeRows
 
     // ~0.5 KB/row at dim 64: the default 500k-row budget ≈ 300 MB
     // hashed relation — the count is one columnar scan, trivial next
     // to an over-budget verify
-    val wrap = verifySideWrap(vecs, big, verifyBroadcastRows)
+    val wrap = described(spark, "dedup.embedding.verify")(
+      verifySideWrap(vecs, big, verifyBroadcastRows))
     noStaticBroadcast(noStaticBroadcast(candidates, big)
       .join(wrap(vecs.select(col("id").as("a_id"), col("v").as("a_v"))), Seq("a_id")), big)
       .join(wrap(vecs.select(col("id").as("b_id"), col("v").as("b_v"))), Seq("b_id"))

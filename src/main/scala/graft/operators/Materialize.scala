@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
+import org.apache.spark.sql.{DataFrame, Observation, Row}
 import org.apache.spark.sql.{functions => F}
 
 /** Eager materialization with lineage truncation for multi-consumed
@@ -42,37 +42,27 @@ private[graft] object Materialize {
     * fallback is the previous behavior, identical result). `bounded`
     * frames materialize [[local]]ly. */
   def withCount(d: DataFrame, bounded: Boolean = false): (DataFrame, Long) = {
-    val (m, r) = withMetrics(d, bounded, F.count(F.lit(1)).as("n"))(m => Row(count(m)))
-    (m, r.getLong(0))
+    val obs = Observation()
+    val watched = d.observe(obs, F.count(F.lit(1)).as("n"))
+    val m = if (bounded) local(watched) else apply(watched)
+    (m, observed(obs, "withCount").map(_.getLong(0)).getOrElse(count(m)))
   }
 
-  /** Materialize `d` and evaluate the aggregate `metrics` over its rows
-    * in the SAME job (see [[withCount]]): the CollectMetrics node passes
-    * rows through unchanged, and the returned DataFrame is the plain
-    * checkpoint scan. `fallback` recomputes the metrics from the
-    * materialized frame if the checkpoint action did not surface them. */
-  def withMetrics(d: DataFrame, bounded: Boolean, metrics: Column*)(
-      fallback: DataFrame => Row): (DataFrame, Row) = {
-    val obs = Observation()
-    val observed = d.observe(obs, metrics.head, metrics.tail: _*)
-    val m = if (bounded) local(observed) else apply(observed)
-    // the metric promise completes on the (async) listener-bus event
-    // for the checkpoint action just run — normally already done or
-    // milliseconds away; the await cap only bounds the defensive case
-    val r = try {
-      scala.concurrent.Await
-        .result(obs.future, scala.concurrent.duration.Duration(10, "s"))
-    } catch {
+  /** The metrics of `obs` once the action that ran its observed frame
+    * has ended. The promise completes on the (async) listener-bus event
+    * for that action — normally already done or milliseconds away; the
+    * await cap only bounds the defensive case, which returns None and
+    * logs loudly, so a dropped SQLExecutionEnd event (AsyncEventQueue
+    * under load), which stalls a sizing decision 10 s before its caller
+    * falls back, is not silent. `what` names the caller in the log. */
+  def observed(obs: Observation, what: String): Option[Row] =
+    try Some(scala.concurrent.Await.result(obs.future,
+      scala.concurrent.duration.Duration(10, "s")))
+    catch {
       case _: java.util.concurrent.TimeoutException =>
-        // loud: a dropped SQLExecutionEnd event (AsyncEventQueue under
-        // load) would otherwise silently stall EVERY sizing decision
-        // 10s before falling back to recomputing the metrics
         org.apache.log4j.Logger.getLogger(getClass).warn(
-          "withMetrics: observation metric did not arrive within 10s " +
-            "(listener bus dropped the event?) — falling back to " +
-            "recomputing it from the materialized rows")
-        fallback(m)
+          s"$what: observation metrics did not arrive within 10s " +
+            "(listener bus dropped the event?) — falling back")
+        None
     }
-    (m, r)
-  }
 }

@@ -1,7 +1,9 @@
 package graft.functions
 
 import graft.SparkSpec
+import graft.operators.Dedup
 import org.apache.spark.sql.functions._
+import org.scalacheck.{Gen, Prop, Test => ScTest}
 
 class BoundedCollectSpec extends SparkSpec {
   import spark.implicits._
@@ -54,5 +56,48 @@ class BoundedCollectSpec extends SparkSpec {
       .collect().map(r => (r.getString(0).toLong, r.getString(1).toLong)).toSet
     assert(longPairs == Set((1L, 2L), (1L, 3L), (2L, 3L), (4L, 5L)))
     assert(stringPairs == longPairs)
+  }
+
+  test("pairsForTest: long and string ids give equal pairs, at and around the cap") {
+    val cap = 4
+    // buckets of cap-1, cap and cap+1 ids (repeats and nulls included),
+    // ids 0..12 so that string order ("10" < "9") differs from long order
+    val bucket = for {
+      n <- Gen.choose(cap - 1, cap + 1)
+      ids <- Gen.listOfN(n, Gen.frequency(6 -> Gen.choose(0L, 12L).map(Option(_)), 1 -> Gen.const(None)))
+    } yield ids
+    val params = ScTest.Parameters.default
+      .withMinSuccessfulTests(8).withInitialSeed(org.scalacheck.rng.Seed(0xB0CAL))
+    val res = ScTest.check(params, Prop.forAll(Gen.listOfN(6, bucket)) { buckets =>
+      val rows = buckets.zipWithIndex.flatMap { case (ids, b) => ids.map(i => (i, b.toLong)) }
+      val bands = rows.map { case (i, b) => (i.map(java.lang.Long.valueOf).orNull, b) }
+        .toDF("id", "bucket")
+      val model = buckets.map(_.flatten).filter(l => l.size >= 2 && l.size <= cap)
+        .flatMap(l => TextFunctions.runPairs(l.sorted.toIndexedSeq)).toSet
+      val longPairs = Dedup.pairsForTest(bands, cap)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val stringPairs = Dedup.pairsForTest(
+          bands.select(col("id").cast("string").as("id"), col("bucket")), cap)
+        .collect().map { r =>
+          val (a, b) = (r.getString(0).toLong, r.getString(1).toLong)
+          (math.min(a, b), math.max(a, b))
+        }.toSet
+      longPairs == model && stringPairs == model
+    })
+    assert(res.passed, res.status.toString)
+  }
+
+  test("a planted hot bucket is counted when the run grouping drops it") {
+    // 5 identical docs share all 32 MinHash band buckets: over a cap of
+    // 3 every one of them is dropped; the two other docs share nothing
+    val text = "the same words in the same order every time"
+    val docs = (Seq.tabulate(5)(i => (i.toLong, text)) ++
+      Seq((10L, "one unrelated document of its own"), (11L, "and another unrelated text")))
+      .toDF("id", "text")
+    val bands = docs.select(col("id"),
+      explode(TextFunctions.minhashBands(col("text"), 3, 64, 2)).as("bucket"))
+    assert(Dedup.hotBucketsForTest(bands, 3) == 32)
+    assert(Dedup.pairsForTest(bands, 3).count() == 0, "the hot buckets' pairs are dropped")
+    assert(Dedup.hotBucketsForTest(bands, 5) == 0, "at the cap nothing is dropped")
   }
 }

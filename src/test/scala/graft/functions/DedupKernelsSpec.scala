@@ -5,10 +5,11 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => ScTest}
 
-/** The two fused MinHash-dedup kernels against the composed Spark
+/** The fused MinHash-dedup kernels against the composed Spark
   * expressions they replace, on fixed-seed generated inputs:
-  * [[SetJaccard]] vs `size(array_intersect)/size(array_union)` and
-  * [[IdPairs]] vs the `explode(flatten(transform(…)))` pair lambdas. */
+  * [[SetJaccard]] vs `size(array_intersect)/size(array_union)`, and
+  * [[TextFunctions.runPairs]] (in-list pairs) and [[IdPairs]] (cross
+  * pairs) vs the `explode(flatten(transform(…)))` pair lambdas. */
 class DedupKernelsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -68,9 +69,10 @@ class DedupKernelsSpec extends SparkSpec {
     val ids = Gen.choose(0, 9).flatMap(n => Gen.listOfN(n, Gen.choose(0L, 6L)))
       .map(l => Option(l.sorted))
     val maybeIds = Gen.frequency(8 -> ids, 1 -> Gen.const(None))
+    def counts(pairs: Seq[(Long, Long)]): Map[(Long, Long), Int] =
+      pairs.groupBy(identity).map { case (k, v) => k -> v.size }
     def rows(df: DataFrame): Map[(Long, Long), Int] =
-      df.collect().toSeq.map(r => (r.getLong(0), r.getLong(1)))
-        .groupBy(identity).map { case (k, v) => k -> v.size }
+      counts(df.collect().toSeq.map(r => (r.getLong(0), r.getLong(1))))
     check(Prop.forAll(Gen.listOfN(30, Gen.zip(maybeIds, maybeIds))) { cases =>
       val df = cases.zipWithIndex.map { case ((a, b), i) => (i, a, b) }.toDF("k", "a", "b")
       val selfOld = df.select(explode(expr(
@@ -82,15 +84,23 @@ class DedupKernelsSpec extends SparkSpec {
         """flatten(transform(a, x ->
           |  transform(b, y -> struct(x AS a_id, y AS b_id))))""".stripMargin)).as("p"))
         .select("p.a_id", "p.b_id")
-      rows(df.select(TextFunctions.idPairs(col("a")))) == rows(selfOld) &&
+      // in-list pairs come from one sorted run per bucket (runPairs)
+      val selfNew = cases.flatMap(_._1).flatMap(l => TextFunctions.runPairs(l.toIndexedSeq))
+      counts(selfNew) == rows(selfOld) &&
         rows(df.select(TextFunctions.idPairs(col("a"), col("b")))) == rows(crossOld)
     })
   }
 
   test("pair kernel names its columns a_id, b_id and keeps string ids") {
-    val out = Seq(Seq("p", "q", "r")).toDF("ids").select(TextFunctions.idPairs(col("ids")))
+    val bands = Seq("p", "q", "r").map((_, 1L)).toDF("id", "bucket")
+    val out = graft.operators.Dedup.pairsForTest(bands, 10)
     assert(out.columns.toSeq == Seq("a_id", "b_id"))
-    assert(out.collect().map(r => (r.getString(0), r.getString(1))).toSeq ==
+    assert(out.collect().map(r => (r.getString(0), r.getString(1))).toSeq.sorted ==
       Seq(("p", "q"), ("p", "r"), ("q", "r")))
+    val cross = Seq((Seq("p"), Seq("q", "r"))).toDF("a", "b")
+      .select(TextFunctions.idPairs(col("a"), col("b")))
+    assert(cross.columns.toSeq == Seq("a_id", "b_id"))
+    assert(cross.collect().map(r => (r.getString(0), r.getString(1))).toSeq ==
+      Seq(("p", "q"), ("p", "r")))
   }
 }

@@ -10,10 +10,11 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** MinHash dedup's small-candidate path — candidates collected into a
-  * local relation, shingles broadcast once, verified pairs handed
-  * straight to the driver union-find — against the over-budget path
-  * and the distributed star rounds, plus the jobs it runs. */
+/** MinHash dedup's small-candidate path — candidates read back from
+  * their checkpoint, verified on the driver when their shingles fit
+  * `autoBroadcastJoinThreshold`, verified pairs handed straight to the
+  * driver union-find — against the over-budget path and the
+  * distributed star rounds, plus the jobs it runs. */
 class DedupSmallCandidateSpec extends SparkSpec {
   private lazy val s2 = spark
   import s2.implicits._
@@ -67,20 +68,25 @@ class DedupSmallCandidateSpec extends SparkSpec {
     "BroadcastExchange".r.findAllMatchIn(d.queryExecution.executedPlan.toString).size
   }
 
-  test("the candidate docs' shingles broadcast only under autoBroadcastJoinThreshold") {
-    val want = pairRows(Dedup.minhashPairs(corpus, "doc_id", "text"))
-    assert(broadcastsIn(Dedup.minhashPairs(corpus, "doc_id", "text")) > 0,
-      "a few small docs broadcast their shingles")
+  test("under the shingle bound the small path verifies on the driver; past it the distributed verify runs") {
+    val onDriver = Dedup.minhashPairs(corpus, "doc_id", "text")
+    val want = pairRows(onDriver)
+    val plan = onDriver.queryExecution.executedPlan
+    assert(plan.collect { case s: org.apache.spark.sql.execution.LocalTableScanExec => s }.nonEmpty &&
+      !plan.toString.contains("Join"), s"verified on the driver: a local relation\n$plan")
     val key = "spark.sql.autoBroadcastJoinThreshold"
     val prev = spark.conf.get(key)
     try {
       // broadcasts off (-1), or shingles over the threshold (1 byte —
-      // the long-document case): the small path hints no broadcast,
-      // and the pairs are the same
+      // the long-document case): the distributed verify runs with its
+      // joins pinned to shuffle, nothing is broadcast, and the pairs
+      // are the same
       for (threshold <- Seq("-1", "1")) {
         spark.conf.set(key, threshold)
         val off = Dedup.minhashPairs(corpus, "doc_id", "text")
         assert(broadcastsIn(off) == 0, off.queryExecution.executedPlan)
+        assert(off.queryExecution.executedPlan.toString.contains("SortMergeJoin"),
+          off.queryExecution.executedPlan)
         assert(pairRows(off) == want)
       }
     } finally spark.conf.set(key, prev)
@@ -123,6 +129,30 @@ class DedupSmallCandidateSpec extends SparkSpec {
     assert(forced.contains("dedup.cc.starRound") && forced.contains("dedup.cc.edges"), forced)
   }
 
+  test("every job the other Dedup entry points start carries a dedup.* description") {
+    val docs = Tables.documents(spark, sf()).select("doc_id", "text")
+    val ref = docs.filter(col("doc_id") % 2 === 1)
+    val batch = docs.filter(col("doc_id") % 2 === 0)
+    val idx = new java.io.File(sys.props("java.io.tmpdir"),
+      s"graft_dedup_jobs_spec_${java.util.UUID.randomUUID}").getAbsolutePath
+    Dedup.writeMinhashIndex(ref, "doc_id", "text", idx)
+    val st = Dedup.loadMinhashIndex(spark, idx)
+    val vecs = Tables.embeddings(spark, sf())
+    val calls = Seq[(String, () => DataFrame)](
+      "minhashPairsAgainst" -> (() => Dedup.minhashPairsAgainst(
+        batch, "doc_id", "text", ref, "doc_id", "text")),
+      "probeMinhashIndexWith" -> (() => Dedup.probeMinhashIndexWith(st, batch, "doc_id", "text")),
+      "simhashPairs" -> (() => Dedup.simhashPairs(docs, "doc_id", "text")),
+      "hammingPairs" -> (() => Dedup.hammingPairs(
+        docs.select(col("doc_id"), xxhash64(col("text")).as("h")), "doc_id", "h")),
+      "embeddingPairs" -> (() => Dedup.embeddingPairs(vecs, "vec_id", "embedding")),
+      "editPairs" -> (() => Dedup.editPairs(docs, "doc_id", "text", maxEdits = 5)))
+    for ((name, call) <- calls) {
+      val (_, descs) = jobsOf(call())
+      assert(descs.nonEmpty && descs.forall(_.startsWith("dedup.")), s"$name: $descs")
+    }
+  }
+
   test("Dedup.clusters on the sf0.001 corpus runs a pinned number of jobs") {
     val docs = Tables.documents(spark, sf()).select("doc_id", "text")
     Dedup.clusters(docs, "doc_id", "text").collect() // warm: plans and file listing cached
@@ -131,8 +161,8 @@ class DedupSmallCandidateSpec extends SparkSpec {
   }
 
   // 3 for the candidate checkpoint (two shuffle stages + the result), 1
-  // to collect the candidates, 1 to materialize and measure the candidate
-  // docs' shingles, 1 to broadcast them and 1 to collect the verified
-  // pairs into the union-find
-  private val PinnedJobs = 7
+  // to read the candidates back from the checkpoint and 1 to collect the
+  // candidate docs' (id, text) for the driver verify; the verified pairs
+  // go into the union-find without a job
+  private val PinnedJobs = 5
 }
