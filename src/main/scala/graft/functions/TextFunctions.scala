@@ -167,8 +167,7 @@ object TextFunctions {
   /** The distinct word n-gram shingles of `text` in first-occurrence
     * order: split on single spaces (Spark `split` semantics — trailing
     * empty tokens kept), n-grams joined with ' '; empty when the text
-    * has fewer than `n` tokens. The one shingle identity of
-    * [[WordShingles]] and of the MinHash dedup's driver verify. */
+    * has fewer than `n` tokens: [[WordShingles]]' shingle identity. */
   private[graft] def shingleSet(text: String, n: Int): java.util.LinkedHashSet[String] = {
     val toks = text.split(" ", -1)
     val cnt = toks.length - n + 1
@@ -187,6 +186,15 @@ object TextFunctions {
       i += 1
     }
     seen
+  }
+
+  /** The distinct elements of `xs` as Catalyst values: the one element
+    * set of [[SetJaccard]] and of the MinHash dedup's driver verify. */
+  private[graft] def elementSet(xs: ArrayData, elementType: DataType): java.util.Set[Any] = {
+    val set = new java.util.HashSet[Any](xs.numElements() * 2)
+    var i = 0
+    while (i < xs.numElements()) { set.add(xs.get(i, elementType)); i += 1 }
+    set
   }
 
   /** |A ∩ B| / |A ∪ B| of two sets, NULL when both are empty: the one
@@ -446,16 +454,9 @@ case class SetJaccard(left: Expression, right: Expression)
 
   private lazy val elementType = left.dataType.asInstanceOf[ArrayType].elementType
 
-  private def elements(arr: Any): java.util.HashSet[Any] = {
-    val xs = arr.asInstanceOf[ArrayData]
-    val set = new java.util.HashSet[Any](xs.numElements() * 2)
-    var i = 0
-    while (i < xs.numElements()) { set.add(xs.get(i, elementType)); i += 1 }
-    set
-  }
-
   override protected def nullSafeEval(a: Any, b: Any): Any =
-    TextFunctions.jaccard(elements(a), elements(b))
+    TextFunctions.jaccard(TextFunctions.elementSet(a.asInstanceOf[ArrayData], elementType),
+      TextFunctions.elementSet(b.asInstanceOf[ArrayData], elementType))
 
   override protected def withNewChildrenInternal(
       l: Expression, r: Expression): SetJaccard = copy(left = l, right = r)

@@ -1,14 +1,13 @@
 package graft.operators
 
-import scala.jdk.CollectionConverters._
-
 import graft.functions.TextFunctions
-import org.apache.spark.sql.{DataFrame, Encoders, Observation, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Observation, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.InSet
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, InSet}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.{toColumn, toExpr}
-import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StructField, StructType}
 
 /** Deduplication operators for large-scale document pipelines.
   *
@@ -98,9 +97,44 @@ object Dedup {
       if (n <= BroadcastSafeRows) broadcast(m) else m.hint("merge")
     }
 
-  /** One banding's materialized candidate pairs (a_id < b_id, distinct),
-    * their real count, and the buckets dropped over the size cap. */
+  /** One banding's materialized candidate pairs (distinct; a_id < b_id
+    * within one corpus), their real count, and the buckets dropped over
+    * the size cap. */
   private final case class Candidates(pairs: DataFrame, count: Long, hotBuckets: Long)
+
+  /** [[Candidates]] from a materialized pair table and its real count,
+    * with one WARN for the buckets dropped over `cap` (their pairs are a
+    * silent recall loss otherwise) and one for a count past the
+    * broadcast-safe budget. */
+  private def candidates(pairs: DataFrame, count: Long, hotBuckets: Long, cap: Int): Candidates = {
+    val log = org.apache.log4j.Logger.getLogger(getClass)
+    if (hotBuckets > 0)
+      log.warn(s"dedup: $hotBuckets bucket(s) over maxBucketSize ($cap) dropped — " +
+        "pairs found only there are lost (run exact dedup first, or raise the cap)")
+    if (count > BroadcastSafeRows)
+      log.warn(s"dedup: $count candidate pairs exceed the broadcast-safe budget " +
+        s"($BroadcastSafeRows) — downstream joins pinned to shuffle (crowded buckets; " +
+        "consider more planes/bands or a prior exact-dedup pass if this is unexpected)")
+    Candidates(pairs, count, hotBuckets)
+  }
+
+  /** (bucket, `out`) id lists of `bands` (id, bucket) for a bipartite
+    * bucket join, capped at `maxBucketSize` (long ids in an O(cap)
+    * buffer); the dropped buckets are counted into `hot` in the same
+    * pass (an Observation would read an empty row when AQE replaces the
+    * stage of an empty candidate set — the all-dropped case). */
+  private def bucketLists(bands: DataFrame, out: String, maxBucketSize: Int,
+                          hot: org.apache.spark.util.LongAccumulator): DataFrame = {
+    val lists =
+      if (bands.schema("id").dataType == LongType)
+        bands.groupBy("bucket")
+          .agg(graft.functions.BoundedCollect.bounded_long_list(col("id"), maxBucketSize).as(out))
+      else
+        bands.groupBy("bucket").agg(collect_list(col("id")).as("__ids"))
+          .select(col("bucket"), when(size(col("__ids")) <= maxBucketSize, col("__ids")).as(out))
+    val kept = udf { (dropped: Boolean) => if (dropped) hot.add(1); !dropped }
+    lists.filter(kept.asNondeterministic()(col(out).isNull))
+  }
 
   /** Candidate pairs from (id, bucket) rows, for every id type: ONE hash
     * exchange of the raw rows, each bucket's ids arriving sorted by
@@ -141,18 +175,7 @@ object Dedup {
     // the true cardinality rides the checkpoint job (withCount); every
     // consumer keys its broadcast-vs-shuffle choice on it
     val (m, n) = Materialize.withCount(grouped.toDF().dropDuplicates("a_id", "b_id"))
-    val log = org.apache.log4j.Logger.getLogger(getClass)
-    val dropped = hot.value.longValue
-    if (dropped > 0)
-      log.warn(s"bucketPairs: $dropped bucket(s) over maxBucketSize ($cap) dropped — " +
-        "pairs found only there are lost (run exact dedup first, or raise the cap)")
-    if (n > BroadcastSafeRows)
-      log.warn(
-        s"bucketPairs: $n candidate pairs exceed the broadcast-safe " +
-          s"budget ($BroadcastSafeRows) — downstream joins pinned to " +
-          "shuffle (crowded buckets; consider more planes/bands or a " +
-          "prior exact-dedup pass if this is unexpected)")
-    Candidates(m, n, dropped)
+    candidates(m, n, hot.value.longValue, cap)
   }
 
   /** MinHash+LSH near-duplicate pairs, exact-verified.
@@ -169,173 +192,193 @@ object Dedup {
       shingleN: Int = 3, numHashes: Int = 64, bandRows: Int = 2,
       threshold: Double = 0.8, maxBucketSize: Int = 1000): DataFrame =
     minhashPairsCounted(df, idCol, textCol, shingleN, numHashes, bandRows,
-      threshold, maxBucketSize)._1
+      threshold, maxBucketSize).frame
 
-  /** [[minhashPairs]] plus, on the small path (at most `budget` REAL
-    * candidate pairs), that count: it bounds the verified rows (each is
-    * one distinct candidate). `None` over budget; tests pass a negative
-    * budget to force the over-budget path. Driver-verified pairs come
-    * back as a local relation. */
+  /** [[minhashPairs]] as its [[Verified]] pairs; tests pass a negative
+    * `budget` to force the over-budget path. Only (id, bucket) flows
+    * through the bucket shuffle; shingles are built per candidate doc
+    * AFTER pair dedup, so the wide payload never crosses it. */
   private[graft] def minhashPairsCounted(
       df: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, numHashes: Int = 64, bandRows: Int = 2,
       threshold: Double = 0.8, maxBucketSize: Int = 1000,
-      budget: Long = RepartitionVerifyRows): (DataFrame, Option[Long]) = {
-    val v = minhashVerified(df, idCol, textCol, shingleN, numHashes, bandRows,
-      threshold, maxBucketSize, budget)
-    (v.frame, v.bound)
-  }
-
-  /** The verified pairs of one MinHash run. */
-  private sealed trait Verified {
-    /** (a_id, b_id, jaccard). */
-    def frame: DataFrame
-    /** The small path's real candidate count, which bounds the pairs. */
-    def bound: Option[Long]
-  }
-
-  /** Pairs verified on the driver, ids as Catalyst values. */
-  private final case class OnDriver(
-      spark: SparkSession, pairs: Array[(Any, Any, Double)], idType: DataType,
-      candidates: Long) extends Verified {
-    def bound: Option[Long] = Some(candidates)
-    def frame: DataFrame = {
-      val toScala = CatalystTypeConverters.createToScalaConverter(idType)
-      val rows = pairs.map { case (a, b, j) => Row(toScala(a), toScala(b), j) }
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(Seq(
-        StructField("a_id", idType, nullable = false),
-        StructField("b_id", idType, nullable = false),
-        StructField("jaccard", DoubleType))))
-    }
-  }
-
-  private final case class InSpark(frame: DataFrame, bound: Option[Long]) extends Verified
-
-  /** The MinHash pipeline up to verified pairs. Only (id, bucket) flows
-    * through the bucket shuffle; shingles are built per candidate doc
-    * AFTER pair dedup, so the wide payload never crosses it.
-    *
-    * Small path (at most `budget` real candidate pairs — quality
-    * corpora have few near-dups): the pairs are read straight from the
-    * checkpoint's RDD as Catalyst values, and their ids filter the
-    * corpus through a driver-built `InSet` (no distinct, no broadcast).
-    * If an upper bound on the candidate docs' shingle bytes fits
-    * `autoBroadcastJoinThreshold` (-1: never), their (id, text) rows are
-    * collected once and every pair is verified on the driver
-    * ([[verifyOnDriver]]); the bound is `shingleN` × min(total text
-    * bytes, max text bytes × candidate docs), from metrics observed on
-    * the candidate job's own corpus scan, so it costs no job and driver
-    * memory stays proportional to it. Otherwise, and over budget, the
-    * distributed verify runs: candidate docs shingled once
-    * (materialized — both pair-side joins read them) and two id joins,
-    * pinned to shuffle when the bound did not fit or the pair table is
-    * over the broadcast-safe budget. */
-  private def minhashVerified(
-      df: DataFrame, idCol: String, textCol: String,
-      shingleN: Int = 3, numHashes: Int = 64, bandRows: Int = 2,
-      threshold: Double = 0.8, maxBucketSize: Int = 1000,
       budget: Long = RepartitionVerifyRows): Verified = {
-    val spark = df.sparkSession
-    val textBytes = Observation()
     // bucket keys from the FUSED text→bands expression: one signature
     // computation per row (MinHashBands documents the lambda-inlining
     // trap the fusion avoids)
-    val bands = df.select(col(idCol).as("id"), col(textCol).as("__text"))
-      .observe(textBytes, max(octet_length(col("__text"))), sum(octet_length(col("__text"))))
-      .select(col("id"), explode(TextFunctions.minhashBands(
-        col("__text"), shingleN, numHashes, bandRows)).as("bucket"))
-    val cands = described(spark, "dedup.minhash.candidates")(bucketPairs(bands, maxBucketSize))
-    val idType = cands.pairs.schema("a_id").dataType
-    def texts(d: DataFrame) = d.select(col(idCol).as("id"), col(textCol).as("__text"))
+    val (bands, side) = banded(df, col(idCol), col(textCol),
+      TextFunctions.wordShingles(_, shingleN), shingleN, numHashes, bandRows)
+    val cands = described(df.sparkSession, "dedup.minhash.candidates")(
+      bucketPairs(bands, maxBucketSize))
+    minhashVerify(cands, Seq(side), shingleN, threshold, "dedup.minhash", budget)
+  }
+
+  /** One MinHash run's verified (a_id, b_id, jaccard) pairs, the small
+    * path's real candidate count (which bounds them) and the buckets its
+    * candidate step dropped over `maxBucketSize`. */
+  private[graft] sealed trait Verified {
+    def frame: DataFrame
+    def bound: Option[Long]
+    def hotBuckets: Long
+  }
+
+  /** Pairs verified on the driver, ids as Catalyst values. */
+  private final case class OnDriver(pairs: Array[(Any, Any, Double)], cands: Candidates)
+      extends Verified {
+    def bound: Option[Long] = Some(cands.count)
+    def hotBuckets: Long = cands.hotBuckets
+    def frame: DataFrame = {
+      val ids = cands.pairs.schema.fields.take(2).map(_.copy(nullable = false))
+      val Array(toA, toB) = ids.map(f => CatalystTypeConverters.createToScalaConverter(f.dataType))
+      cands.pairs.sparkSession.createDataFrame(java.util.Arrays.asList(
+        pairs.map { case (a, b, j) => Row(toA(a), toB(b), j) }: _*),
+        StructType(ids :+ StructField("jaccard", DoubleType)))
+    }
+  }
+
+  private final case class InSpark(frame: DataFrame, bound: Option[Long], hotBuckets: Long)
+      extends Verified
+
+  /** One side of a MinHash verify: (id, v) rows, its own shingle column
+    * over `v`, and the max / total `octet_length(v)` observed on the
+    * candidate job's own scan (none for a stored side). */
+  private final case class Side(rows: DataFrame, shingles: Column => Column,
+                                textBytes: Option[Observation] = None) {
+    /** `shingleN` × min(total, max × `ids`): a shingle is at most shingleN
+      * words and their separators, so this bounds the bytes of `ids` docs'
+      * distinct shingles. None without both metrics. */
+    def shingleBytes(shingleN: Int, ids: Int): Option[Long] =
+      textBytes.flatMap(Materialize.observed(_, "minhash text bytes"))
+        .filter(_.length == 2).map { r =>
+          val maxBytes = if (r.isNullAt(0)) 0L else r.getInt(0).toLong
+          val total = if (r.isNullAt(1)) 0L else r.getLong(1)
+          shingleN.toLong * math.min(total, maxBytes * ids)
+        }
+  }
+
+  /** `df`'s (id, bucket) band rows, whose scan observes the text bytes,
+    * and the verify [[Side]] over the same (id, text). */
+  private def banded(df: DataFrame, id: Column, text: Column, shingles: Column => Column,
+                     shingleN: Int, numHashes: Int, bandRows: Int): (DataFrame, Side) = {
+    val rows = df.select(id.as("id"), text.as("v"))
+    val textBytes = Observation()
+    val bands = rows.observe(textBytes, max(octet_length(col("v"))), sum(octet_length(col("v"))))
+      .select(col("id"),
+        explode(TextFunctions.minhashBands(col("v"), shingleN, numHashes, bandRows)).as("bucket"))
+    (bands, Side(rows, shingles, Some(textBytes)))
+  }
+
+  /** The one MinHash verify, after any candidate step. `sides` is the
+    * one side of a self-join (both pair columns name its ids) or the a
+    * and b sides of a bipartite one; jobs run under `$jobs.candidates` /
+    * `$jobs.verify`.
+    *
+    * Small path (at most `budget` real candidate pairs — quality
+    * corpora have few near-dups): the pairs are read straight from the
+    * checkpoint's RDD as Catalyst values, and each side is filtered by a
+    * driver-built `InSet` of its ids (no distinct, no broadcast). If
+    * every side's shingle-byte bound is known and their sum fits
+    * `autoBroadcastJoinThreshold` (-1: never), each side's rows are
+    * collected once and every pair is scored on the driver with the
+    * side's own shingle kernel; the bounds come from metrics
+    * observed on the candidate job's own scans, so they cost no job and
+    * driver memory stays proportional to them. Otherwise, and over
+    * budget, one distributed verify runs ([[pairJoin]]), pinned to
+    * shuffle when the computed sides' bounds did not fit or the pair
+    * table is over the broadcast-safe budget (a stored side carries no
+    * bound: the planner sizes it from its files). */
+  private def minhashVerify(cands: Candidates, sides: Seq[Side], shingleN: Int,
+                            threshold: Double, jobs: String, budget: Long): Verified = {
+    val spark = cands.pairs.sparkSession
+    // the pair columns (a_id, b_id) each side's ids fill
+    val served = if (sides.size == 1) Seq(Seq(0, 1)) else Seq(Seq(0), Seq(1))
+    // a self-join's one side is read by both pair joins: shingled once
+    def shingled(side: Side, rows: DataFrame): DataFrame = {
+      val sh = rows.select(col("id"), side.shingles(col("v")).as("sh"))
+      if (sides.size == 1) described(spark, s"$jobs.verify")(Materialize(sh)) else sh
+    }
+    def joined(sh: Seq[DataFrame], big: Boolean): DataFrame =
+      pairJoin(cands.pairs, sh.head, sh.last, big)
+        .select(col("a_id"), col("b_id"),
+          TextFunctions.setJaccard(col("__a"), col("__b")).as("jaccard"))
+        .filter(col("jaccard") >= threshold)
 
     if (cands.count > budget) {
       // a big pair table (and hence the first join's output, whose
       // estimate inherits the bogus one) must never be a broadcast build
-      // side; the candidate id set is sized on the real count
+      // side; each side's candidate id set is sized on the real count
       val big = cands.count > BroadcastSafeRows
-      val candIds = described(spark, "dedup.minhash.verify")(sizedIdSet(
-        cands.pairs.select(col("a_id").as("id"))
-          .union(cands.pairs.select(col("b_id").as("id"))).distinct(), big))
-      // Repartitioned by id BEFORE the shingle projection when the
-      // candidate set is large: the semi-join inherits the corpus scan's
-      // few input partitions, so shingling + checkpointing there pins
-      // 1-2 threads while the rest idle (measured at sf1: tens of
-      // seconds serial vs ~1 s parallel)
-      val verifySide = texts(df.join(candIds, df(idCol) === candIds("id"), "left_semi"))
-      val spread =
-        if (cands.count > RepartitionVerifyRows) verifySide.repartition(col("id"))
-        else verifySide
-      InSpark(distributedVerify(spark, cands.pairs, spread, shingleN, threshold, big), None)
-    } else if (cands.count == 0) OnDriver(spark, Array.empty, idType, 0L)
-    else {
-      val pairs = described(spark, "dedup.minhash.candidates")(
-        cands.pairs.queryExecution.toRdd.map(r =>
-          (InternalRow.copyValue(r.get(0, idType)), InternalRow.copyValue(r.get(1, idType))))
-          .collect())
-      val ids = new java.util.HashSet[Any](pairs.length * 2)
-      pairs.foreach { case (a, b) => ids.add(a); ids.add(b) }
-      val candDocs = texts(df.filter(toColumn(InSet(toExpr(col(idCol)), ids.asScala.toSet))))
-      // each shingle is at most shingleN words of the text and their
-      // separators, so shingleN × the docs' text bytes bounds the bytes
-      // of their distinct shingles (ids name documents, one row each);
-      // a row without both metrics leaves the bound unknown
-      val limit = spark.sessionState.conf.autoBroadcastJoinThreshold
-      val metrics = Materialize.observed(textBytes, "minhash text bytes").filter(_.length == 2)
-      val fits = limit >= 0 && metrics.exists { r =>
-        val maxBytes = if (r.isNullAt(0)) 0L else r.getInt(0).toLong
-        val total = if (r.isNullAt(1)) 0L else r.getLong(1)
-        shingleN.toLong * math.min(total, maxBytes * ids.size) <= limit
+      val sh = sides.zip(served).map { case (side, cs) =>
+        val ids = described(spark, s"$jobs.verify")(sizedIdSet(
+          cs.map(c => cands.pairs.select(col(cands.pairs.columns(c)).as("id"))).reduce(_ union _)
+            .distinct(), big))
+        val rows = side.rows.join(ids, side.rows("id") === ids("id"), "left_semi")
+        // repartitioned by id BEFORE the shingle projection when the
+        // candidate set is large: the semi-join inherits the corpus
+        // scan's few input partitions, so shingling there pins 1-2
+        // threads while the rest idle (measured at sf1: tens of seconds
+        // serial vs ~1 s parallel)
+        shingled(side,
+          if (cands.count > RepartitionVerifyRows) rows.repartition(col("id")) else rows)
       }
-      if (fits) {
-        val docs = described(spark, "dedup.minhash.verify")(
-          candDocs.queryExecution.toRdd.map(r => (InternalRow.copyValue(r.get(0, idType)),
-            if (r.isNullAt(1)) null else r.getUTF8String(1).toString)).collect())
-        OnDriver(spark, verifyOnDriver(pairs, docs, shingleN, threshold), idType, cands.count)
+      InSpark(joined(sh, big), None, cands.hotBuckets)
+    } else if (cands.count == 0) OnDriver(Array.empty, cands)
+    else {
+      val types = cands.pairs.schema.fields.map(_.dataType)
+      val pairs = described(spark, s"$jobs.candidates")(
+        cands.pairs.queryExecution.toRdd.map(r =>
+          (InternalRow.copyValue(r.get(0, types(0))), InternalRow.copyValue(r.get(1, types(1)))))
+          .collect())
+      val idSets = served.map(cs => pairs.flatMap(p => cs.map(p.productElement)).toSet)
+      val filtered = sides.zip(idSets).map { case (side, ids) =>
+        side.rows.filter(toColumn(InSet(toExpr(col("id")), ids)))
+      }
+      // the computed sides' shingle bytes, which the planner cannot see;
+      // a stored side's files' size it can
+      val limit = spark.sessionState.conf.autoBroadcastJoinThreshold
+      lazy val bytes = sides.zip(idSets).filter(_._1.textBytes.isDefined)
+        .foldLeft(Option(0L)) { case (sum, (side, ids)) =>
+          sum.flatMap(s => side.shingleBytes(shingleN, ids.size).map(s + _))
+        }
+      val fits = limit >= 0 && bytes.exists(_ <= limit)
+      if (fits && sides.forall(_.textBytes.isDefined)) {
+        // each side's (id, v) rows collected once, its own shingle kernel
+        // evaluated on each v, then SetJaccard's element sets and division:
+        // the distributed verify's pairs and doubles (NULL shingles match
+        // nothing; an id on several rows pairs once per row, as in a join)
+        val sets = sides.zip(filtered).map { case (side, rows) =>
+          val Seq(idType, vType) = rows.schema.map(_.dataType)
+          val kernel = toExpr(side.shingles(toColumn(BoundReference(0, vType, nullable = true))))
+          val elementType = kernel.dataType.asInstanceOf[ArrayType].elementType
+          described(spark, s"$jobs.verify")(rows.queryExecution.toRdd.map(r =>
+            (InternalRow.copyValue(r.get(0, idType)), InternalRow.copyValue(r.get(1, vType))))
+            .collect())
+            .flatMap { case (id, v) => Option(kernel.eval(InternalRow(v))).map(sh =>
+              id -> TextFunctions.elementSet(sh.asInstanceOf[ArrayData], elementType)) }
+            .groupMap(_._1)(_._2)
+        }
+        OnDriver(for {
+          (a, b) <- pairs
+          sa <- sets.head.getOrElse(a, Array.empty[java.util.Set[Any]])
+          sb <- sets.last.getOrElse(b, Array.empty[java.util.Set[Any]])
+          j = TextFunctions.jaccard(sa, sb)
+          if j != null && j >= threshold
+        } yield (a, b, j.doubleValue), cands)
       } else
-        InSpark(distributedVerify(spark, cands.pairs, candDocs, shingleN, threshold, big = true),
-          Some(cands.count))
+        InSpark(joined(sides.zip(filtered).map { case (s, r) => shingled(s, r) }, big = !fits),
+          Some(cands.count), cands.hotBuckets)
     }
   }
 
-  /** Each candidate doc shingled once ([[TextFunctions.shingleSet]]) and
-    * every pair's Jaccard from [[TextFunctions.jaccard]]: the shingle
-    * identity and the division the distributed verify evaluates, so the
-    * same pairs with the same doubles. A pair whose id matches several
-    * rows is checked once per row combination, as the joins do; a NULL
-    * text matches nothing (its shingles, and so its Jaccard, are NULL). */
-  private def verifyOnDriver(
-      pairs: Array[(Any, Any)], docs: Array[(Any, String)],
-      shingleN: Int, threshold: Double): Array[(Any, Any, Double)] = {
-    val sets = new java.util.HashMap[Any, List[java.util.Set[String]]](docs.length * 2)
-    docs.foreach { case (id, text) =>
-      if (text != null)
-        sets.put(id, TextFunctions.shingleSet(text, shingleN) :: sets.getOrDefault(id, Nil))
-    }
-    for {
-      (a, b) <- pairs
-      sa <- sets.getOrDefault(a, Nil)
-      sb <- sets.getOrDefault(b, Nil)
-      j = TextFunctions.jaccard(sa, sb)
-      if j != null && j >= threshold
-    } yield (a, b, j.doubleValue)
-  }
-
-  /** The distributed verify: `docs` (id, __text) shingled once and
-    * materialized (both pair-side joins read them), joined to both pair
-    * sides and filtered at `threshold`; `big` pins both joins to
-    * shuffle. */
-  private def distributedVerify(
-      spark: SparkSession, pairs: DataFrame, docs: DataFrame,
-      shingleN: Int, threshold: Double, big: Boolean): DataFrame = {
-    val sh = described(spark, "dedup.minhash.verify")(Materialize(docs.select(
-      col("id"), TextFunctions.wordShingles(col("__text"), shingleN).as("sh"))))
+  /** `pairs` (a_id, b_id, …) with each id's payload from `a` / `b`
+    * (id, payload) as `__a` / `__b`: the one pair join of every verify.
+    * `big` pins both joins to shuffle — a big pair table, and so the
+    * first join's output whose estimate inherits its bogus one, must
+    * never be a broadcast build side. */
+  private def pairJoin(pairs: DataFrame, a: DataFrame, b: DataFrame, big: Boolean): DataFrame =
     noStaticBroadcast(noStaticBroadcast(pairs, big)
-      .join(sh.select(col("id").as("a_id"), col("sh").as("a_sh")), Seq("a_id")), big)
-      .join(sh.select(col("id").as("b_id"), col("sh").as("b_sh")), Seq("b_id"))
-      .withColumn("jaccard", TextFunctions.setJaccard(col("a_sh"), col("b_sh")))
-      .filter(col("jaccard") >= threshold)
-      .select("a_id", "b_id", "jaccard")
-  }
+      .join(a.toDF("a_id", "__a"), Seq("a_id")), big)
+      .join(b.toDF("b_id", "__b"), Seq("b_id"))
 
   /** Runs `body`'s Spark jobs under the job description `what` (the
     * `dedup.*` names in the UI and in listener events), then restores
@@ -397,15 +440,11 @@ object Dedup {
       maxEdits: Int): DataFrame = {
     val (pairs, nPairs) = described(df.sparkSession, "dedup.edit.candidates")(
       Materialize.withCount(candidates))
-    val big = nPairs > BroadcastSafeRows
-    val texts = df.select(col(idCol).as("id"), col(textCol).as("__t"))
-    noStaticBroadcast(noStaticBroadcast(pairs, big)
-      .join(texts.select(col("id").as("a_id"), col("__t").as("__ta")), Seq("a_id")), big)
-      .join(texts.select(col("id").as("b_id"), col("__t").as("__tb")), Seq("b_id"))
-      .withColumn("edits", TextFunctions.editDistanceWithin(
-        col("__ta"), col("__tb"), maxEdits))
+    val texts = df.select(col(idCol), col(textCol))
+    pairJoin(pairs, texts, texts, nPairs > BroadcastSafeRows)
+      .withColumn("edits", TextFunctions.editDistanceWithin(col("__a"), col("__b"), maxEdits))
       .filter(col("edits") =!= -1)
-      .drop("__ta", "__tb")
+      .drop("__a", "__b")
   }
 
   /** CROSS-CORPUS MinHash dedup: near-duplicate pairs BETWEEN two
@@ -416,63 +455,42 @@ object Dedup {
     * id lists (O(cap) buffer under any skew, per side), buckets join
     * on the key, and only cross-side pairs are generated — never
     * in-corpus pairs, never an O(|corpus|×|ref|) product. Candidates
-    * are exact-Jaccard verified per side against their own source.
+    * are exact-Jaccard verified per side against their own source, by
+    * the same verify as [[minhashPairs]].
     * Output: (corpus_id, ref_id, jaccard) at jaccard ≥ threshold. */
   def minhashPairsAgainst(
       corpus: DataFrame, corpusId: String, corpusText: String,
       reference: DataFrame, refId: String, refText: String,
       shingleN: Int = 3, numHashes: Int = 64, bandRows: Int = 2,
-      threshold: Double = 0.8, maxBucketSize: Int = 1000): DataFrame = {
-    val spark = corpus.sparkSession
-    def bands(df: DataFrame, id: String, text: String): DataFrame =
-      df.select(col(id).as("id"),
-        explode(TextFunctions.minhashBands(
-          col(text), shingleN, numHashes, bandRows)).as("bucket"))
-    def bucketed(b: DataFrame, out: String): DataFrame = {
-      val idIsLong = b.schema("id").dataType == org.apache.spark.sql.types.LongType
-      if (idIsLong)
-        b.groupBy("bucket")
-          .agg(graft.functions.BoundedCollect.bounded_long_list(col("id"), maxBucketSize).as(out))
-          .filter(col(out).isNotNull)
-      else
-        b.groupBy("bucket").agg(collect_list(col("id")).as(out))
-          .filter(size(col(out)).between(1, maxBucketSize))
-    }
-    val ga = bucketed(bands(corpus, corpusId, corpusText), "a_ids")
-    val gb = bucketed(bands(reference, refId, refText), "b_ids")
-    // materialized: the candidate set is O(cross pairs) and is consumed
-    // by the semi-joins AND both verify joins below; its REAL count
-    // (one cheap checkpoint-block pass) sizes every downstream
-    // broadcast decision — the static estimate under the explode is
-    // bogus-small
-    val (candidates, nCand) = described(spark, "dedup.cross.candidates")(
-      Materialize.withCount(ga.join(gb, "bucket")
+      threshold: Double = 0.8, maxBucketSize: Int = 1000): DataFrame =
+    minhashPairsAgainstCounted(corpus, corpusId, corpusText, reference, refId, refText,
+      shingleN, numHashes, bandRows, threshold, maxBucketSize)
+      .frame.toDF("corpus_id", "ref_id", "jaccard")
+
+  /** [[minhashPairsAgainst]] as its [[Verified]] (a_id = corpus id,
+    * b_id = reference id) pairs; tests pass a negative `budget` to force
+    * the over-budget path. */
+  private[graft] def minhashPairsAgainstCounted(
+      corpus: DataFrame, corpusId: String, corpusText: String,
+      reference: DataFrame, refId: String, refText: String,
+      shingleN: Int = 3, numHashes: Int = 64, bandRows: Int = 2,
+      threshold: Double = 0.8, maxBucketSize: Int = 1000,
+      budget: Long = RepartitionVerifyRows): Verified = {
+    def sided(df: DataFrame, id: String, text: String) = banded(df, col(id), col(text),
+      TextFunctions.wordShingles(_, shingleN), shingleN, numHashes, bandRows)
+    val (bandsA, a) = sided(corpus, corpusId, corpusText)
+    val (bandsB, b) = sided(reference, refId, refText)
+    val hot = corpus.sparkSession.sparkContext.longAccumulator("dedup.hotBuckets")
+    // materialized: the candidate set is consumed by the verify; its
+    // REAL count sizes every downstream decision — the static estimate
+    // under the explode is bogus-small
+    val (pairs, n) = described(corpus.sparkSession, "dedup.cross.candidates")(
+      Materialize.withCount(bucketLists(bandsA, "a_ids", maxBucketSize, hot)
+        .join(bucketLists(bandsB, "b_ids", maxBucketSize, hot), "bucket")
         .select(TextFunctions.idPairs(col("a_ids"), col("b_ids")))
         .dropDuplicates("a_id", "b_id")))
-    val big = nCand > BroadcastSafeRows
-
-    def shingleSide(df: DataFrame, id: String, text: String,
-                    keyCol: String, shCol: String): DataFrame =
-      described(spark, "dedup.cross.verify") {
-        val ids = sizedIdSet(candidates.select(col(keyCol).as("id")).distinct(), big)
-        val side = df
-          .join(ids, df(id) === ids("id"), "left_semi")
-          .select(col(id).as(keyCol), col(text).as("__text"))
-        // spread the shingle compute only when the verify set is big
-        // enough for the exchange to pay for itself (see minhashPairs)
-        val spread =
-          if (nCand > RepartitionVerifyRows) side.repartition(col(keyCol))
-          else side
-        Materialize(spread
-          .select(col(keyCol),
-            TextFunctions.wordShingles(col("__text"), shingleN).as(shCol)))
-      }
-    noStaticBroadcast(noStaticBroadcast(candidates, big)
-      .join(shingleSide(corpus, corpusId, corpusText, "a_id", "a_sh"), Seq("a_id")), big)
-      .join(shingleSide(reference, refId, refText, "b_id", "b_sh"), Seq("b_id"))
-      .withColumn("jaccard", TextFunctions.setJaccard(col("a_sh"), col("b_sh")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("a_id").as("corpus_id"), col("b_id").as("ref_id"), col("jaccard"))
+    minhashVerify(candidates(pairs, n, hot.value.longValue, maxBucketSize),
+      Seq(a, b), shingleN, threshold, "dedup.cross", budget)
   }
 
   /** Build and PERSIST a MinHash dedup index over a reference corpus —
@@ -666,8 +684,8 @@ object Dedup {
     * streams map-side and the reference never shuffles (the
     * build-once promise kept at probe time); an over-budget probe
     * falls back to a shuffle join. Candidates are materialized and
-    * counted (the explode-estimate trap), the verify sides semi-join
-    * only candidate ids, and the stored shingle payload is read — not
+    * counted (the explode-estimate trap) and checked by the same verify
+    * as [[minhashPairs]], over the stored shingle payload — read, not
     * recomputed. Output: (corpus_id = probe id, ref_id, jaccard). */
   def probeMinhashIndex(
       spark: org.apache.spark.sql.SparkSession, path: String,
@@ -721,69 +739,46 @@ object Dedup {
   def probeMinhashIndexWith(
       st: MinhashIndexState,
       newDocs: DataFrame, idCol: String, textCol: String,
-      threshold: Double = 0.8): DataFrame = {
+      threshold: Double = 0.8): DataFrame =
+    probeMinhashIndexCounted(st, newDocs, idCol, textCol, threshold)
+      .frame.toDF("corpus_id", "ref_id", "jaccard")
+
+  /** [[probeMinhashIndexWith]] as its [[Verified]] (a_id = probe id,
+    * b_id = reference id) pairs; tests pass a negative `budget` to force
+    * the over-budget path. The stored side carries no byte bound, so a
+    * small candidate set takes the small path's `InSet` filters but not
+    * the driver verify. */
+  private[graft] def probeMinhashIndexCounted(
+      st: MinhashIndexState,
+      newDocs: DataFrame, idCol: String, textCol: String,
+      threshold: Double = 0.8, budget: Long = RepartitionVerifyRows): Verified = {
     import st.{shingleN, numHashes, bandRows, maxBucketSize}
     val spark = newDocs.sparkSession
-
+    // probe-side shingles are computed, as the index hashes them
+    val (bands, probe) = banded(newDocs, col(idCol).cast("long"), col(textCol),
+      TextFunctions.shingleHashes(_, shingleN), shingleN, numHashes, bandRows)
+    val hot = spark.sparkContext.longAccumulator("dedup.hotBuckets")
     val (probeGrouped, nProbe) = described(spark, "dedup.index.candidates")(
-      Materialize.withCount(newDocs
-        .select(col(idCol).cast("long").as("id"),
-          explode(TextFunctions.minhashBands(
-            col(textCol), shingleN, numHashes, bandRows)).as("bucket"))
-        .groupBy("bucket")
-        .agg(graft.functions.BoundedCollect
-          .bounded_long_list(col("id"), maxBucketSize).as("a_ids"))
-        .filter(col("a_ids").isNotNull)))
-    val probeSmall = nProbe <= BroadcastSafeRows
-    val pg = if (probeSmall) broadcast(probeGrouped)
+      Materialize.withCount(bucketLists(bands, "a_ids", maxBucketSize, hot)))
+    val pg = if (nProbe <= BroadcastSafeRows) broadcast(probeGrouped)
              else probeGrouped.hint("merge")
 
     // stored buckets ∪ the pending append rows grouped under the same
     // cap (increment-sized — bounded by rows appended since the last
     // compaction; a bucket present in both components joins the probe
     // twice and the pair-level dropDuplicates below unifies them)
-    val bandsIdx = st.pendingBandRows match {
-      case None => st.bands
-      case Some(pending) => st.bands.unionByName(pending
-        .groupBy("bucket")
-        .agg(graft.functions.BoundedCollect
-          .bounded_long_list(col("id"), maxBucketSize).as("ids"))
-        .filter(col("ids").isNotNull))
-    }
-    val (candidates, nCand) = described(spark, "dedup.index.candidates")(
+    val bandsIdx = st.pendingBandRows.fold(st.bands)(pending =>
+      st.bands.unionByName(bucketLists(pending, "ids", maxBucketSize, hot)))
+    val (pairs, nCand) = described(spark, "dedup.index.candidates")(
       Materialize.withCount(pg
         .join(bandsIdx.withColumnRenamed("ids", "b_ids"), "bucket")
         .select(TextFunctions.idPairs(col("a_ids"), col("b_ids")))
         .dropDuplicates("a_id", "b_id")))
-    val big = nCand > BroadcastSafeRows
-
-    // probe-side shingles: computed, for candidate probe docs only —
-    // spread across cores only when the verify set is big enough for
-    // the exchange to pay for itself (see minhashPairs)
-    val aIds = described(spark, "dedup.index.verify")(
-      sizedIdSet(candidates.select(col("a_id").as("id")).distinct(), big))
-    val probeSide = newDocs
-      .join(aIds, newDocs(idCol).cast("long") === aIds("id"), "left_semi")
-      .select(col(idCol).cast("long").as("a_id"), col(textCol).as("__text"))
-    val probeSpread =
-      if (nCand > RepartitionVerifyRows) probeSide.repartition(col("a_id"))
-      else probeSide
-    val probeSh = described(spark, "dedup.index.verify")(Materialize(probeSpread
-      .select(col("a_id"),
-        TextFunctions.shingleHashes(col("__text"), shingleN).as("a_sh"))))
     // reference-side shingles: READ from the index, never recomputed
-    val bIds = described(spark, "dedup.index.verify")(
-      sizedIdSet(candidates.select(col("b_id").as("id")).distinct(), big))
-    val refSh = st.shingles
-      .join(bIds, Seq("id"), "left_semi")
-      .select(col("id").as("b_id"), col("sh").as("b_sh"))
-
-    noStaticBroadcast(noStaticBroadcast(candidates, big)
-      .join(probeSh, Seq("a_id")), big)
-      .join(refSh, Seq("b_id"))
-      .withColumn("jaccard", TextFunctions.setJaccard(col("a_sh"), col("b_sh")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("a_id").as("corpus_id"), col("b_id").as("ref_id"), col("jaccard"))
+    val stored = Side(st.shingles.select(col("id"), col("sh").as("v")), identity)
+    minhashVerify(
+      candidates(pairs, nCand, hot.value.longValue, maxBucketSize),
+      Seq(probe, stored), shingleN, threshold, "dedup.index", budget)
   }
 
   /** Near-duplicate CLUSTERS: connected components over the LSH pair
@@ -805,9 +800,10 @@ object Dedup {
       threshold: Double, maxIter: Int = 20, carry: Seq[String] = Nil,
       budget: Long = RepartitionVerifyRows,
       driverEdgeLimit: Long = DriverEdgeLimit): DataFrame =
-    minhashVerified(df, idCol, textCol, threshold = threshold, budget = budget) match {
-      case OnDriver(spark, pairs, LongType, _) if pairs.length <= driverEdgeLimit =>
-        labelled(df, idCol, unionFindLabels(spark, idCol, pairs.iterator.map(p =>
+    minhashPairsCounted(df, idCol, textCol, threshold = threshold, budget = budget) match {
+      case OnDriver(pairs, _) if df.schema(idCol).dataType == LongType &&
+          pairs.length <= driverEdgeLimit =>
+        labelled(df, idCol, unionFindLabels(df.sparkSession, idCol, pairs.iterator.map(p =>
           (p._1.asInstanceOf[Long], p._2.asInstanceOf[Long]))), carry)
       case v => clustersFromBoundedPairs(df, idCol, v.frame, v.bound, maxIter,
         driverEdgeLimit, carry)
@@ -1088,8 +1084,7 @@ object Dedup {
   def simhashPairs(
       df: DataFrame, idCol: String, textCol: String,
       maxHamming: Int = 3, numChunks: Int = 6,
-      maxBucketSize: Int = 10000,
-      verifyBroadcastRows: Long = 2000000L): DataFrame = {
+      maxBucketSize: Int = 10000): DataFrame = {
     require(numChunks > maxHamming,
       "chunk bucketing is lossless only when numChunks > maxHamming")
     require(numChunks <= 16, "more than 16 chunks of a 64-bit signature is pointless")
@@ -1108,7 +1103,7 @@ object Dedup {
       .repartition(col("id"))
       .select(col("id"),
         TextFunctions.simhash64(split(col("__text"), " ")).as("sh"))))
-    signaturePairs(docs, maxHamming, numChunks, maxBucketSize, verifyBroadcastRows,
+    signaturePairs(docs, maxHamming, numChunks, maxBucketSize, SignatureBroadcastRows,
       "dedup.simhash")
   }
 
@@ -1121,8 +1116,7 @@ object Dedup {
     * signatures (undecodable blobs) drop out. */
   def hammingPairs(df: DataFrame, idCol: String, hashCol: String,
                    maxHamming: Int = 3, numChunks: Int = 6,
-                   maxBucketSize: Int = 10000,
-                   verifyBroadcastRows: Long = 2000000L): DataFrame = {
+                   maxBucketSize: Int = 10000): DataFrame = {
     require(numChunks > maxHamming,
       "chunk bucketing is lossless only when numChunks > maxHamming")
     require(numChunks <= 16, "more than 16 chunks of a 64-bit signature is pointless")
@@ -1130,16 +1124,22 @@ object Dedup {
       .filter(col(hashCol).isNotNull)
       .select(col(idCol).cast("long").as("id"), col(hashCol).cast("long").as("sh"))
       .repartition(col("id"))))
-    signaturePairs(docs, maxHamming, numChunks, maxBucketSize, verifyBroadcastRows,
+    signaturePairs(docs, maxHamming, numChunks, maxBucketSize, SignatureBroadcastRows,
       "dedup.hamming")
   }
 
+  /** Signature rows up to which an over-budget hamming verify
+    * broadcasts its (id, sh) payload: the rows are 16 bytes, so 2M ≈
+    * 128 MB hashed. */
+  private val SignatureBroadcastRows = 2000000L
+
   /** (id, sh) → hamming ≤ maxHamming pairs (shared tail of
     * [[simhashPairs]] / [[hammingPairs]]); its jobs run under
-    * `$jobs.candidates` / `$jobs.verify`. */
-  private def signaturePairs(docs: DataFrame, maxHamming: Int,
-                             numChunks: Int, maxBucketSize: Int,
-                             verifyBroadcastRows: Long, jobs: String): DataFrame = {
+    * `$jobs.candidates` / `$jobs.verify`. Tests pass a small
+    * `payloadRows` to force the pure shuffle joins. */
+  private[graft] def signaturePairs(docs: DataFrame, maxHamming: Int,
+                                    numChunks: Int, maxBucketSize: Int,
+                                    payloadRows: Long, jobs: String): DataFrame = {
     val spark = docs.sparkSession
     val chunks = docs.select(
       col("id"),
@@ -1149,14 +1149,10 @@ object Dedup {
     val Candidates(candidates, nCand, _) =
       described(spark, s"$jobs.candidates")(bucketPairs(chunks, maxBucketSize))
     val big = nCand > BroadcastSafeRows
-    // (id, sh) rows are 16 bytes: the default 2M-row budget ≈ 128 MB
-    // hashed — safe to broadcast, and docs is already materialized so
-    // the count is free
-    val wrap = described(spark, s"$jobs.verify")(verifySideWrap(docs, big, verifyBroadcastRows))
-    noStaticBroadcast(noStaticBroadcast(candidates, big)
-      .join(wrap(docs.select(col("id").as("a_id"), col("sh").as("a_sh"))), Seq("a_id")), big)
-      .join(wrap(docs.select(col("id").as("b_id"), col("sh").as("b_sh"))), Seq("b_id"))
-      .withColumn("hamming", bit_count(col("a_sh").bitwiseXOR(col("b_sh"))))
+    // docs is already materialized, so the payload count is free
+    val payload = described(spark, s"$jobs.verify")(verifySideWrap(docs, big, payloadRows))(docs)
+    pairJoin(candidates, payload, payload, big)
+      .withColumn("hamming", bit_count(col("__a").bitwiseXOR(col("__b"))))
       .filter(col("hamming") <= maxHamming)
       .select("a_id", "b_id", "hamming")
   }
@@ -1183,8 +1179,7 @@ object Dedup {
   def embeddingPairs(
       df: DataFrame, idCol: String, vecCol: String,
       minCosine: Double = 0.9, numPlanes: Int = 16, numTables: Int = 8,
-      maxBucketSize: Int = 10000, seed: Long = 42L,
-      verifyBroadcastRows: Long = 500000L): DataFrame = {
+      maxBucketSize: Int = 10000, seed: Long = 42L): DataFrame = {
     val vecs = df.select(col(idCol).as("id"),
       transform(col(vecCol), x => x.cast("double")).as("v"))
 
@@ -1197,16 +1192,18 @@ object Dedup {
       described(spark, "dedup.embedding.candidates")(bucketPairs(bands, maxBucketSize))
     val big = nCand > BroadcastSafeRows
 
-    // ~0.5 KB/row at dim 64: the default 500k-row budget ≈ 300 MB
-    // hashed relation — the count is one columnar scan, trivial next
-    // to an over-budget verify
-    val wrap = described(spark, "dedup.embedding.verify")(
-      verifySideWrap(vecs, big, verifyBroadcastRows))
-    noStaticBroadcast(noStaticBroadcast(candidates, big)
-      .join(wrap(vecs.select(col("id").as("a_id"), col("v").as("a_v"))), Seq("a_id")), big)
-      .join(wrap(vecs.select(col("id").as("b_id"), col("v").as("b_v"))), Seq("b_id"))
-      .withColumn("cosine", Similarity.cosine(col("a_v"), col("b_v")))
+    // the count is one columnar scan, trivial next to an over-budget
+    // verify
+    val payload = described(spark, "dedup.embedding.verify")(
+      verifySideWrap(vecs, big, VectorBroadcastRows))(vecs)
+    pairJoin(candidates, payload, payload, big)
+      .withColumn("cosine", Similarity.cosine(col("__a"), col("__b")))
       .filter(col("cosine") >= minCosine)
       .select("a_id", "b_id", "cosine")
   }
+
+  /** Vector rows up to which an over-budget embedding verify broadcasts
+    * its (id, v) payload: ~0.5 KB/row at dim 64, so 500k ≈ 300 MB
+    * hashed. */
+  private val VectorBroadcastRows = 500000L
 }

@@ -44,7 +44,9 @@ class DedupBroadcastGuardSpec extends SparkSpec {
 
   test("hammingPairs: over-budget pairs AND over-budget payload -> pure shuffle joins") {
     val docs = (0 until nMass).map(i => (i.toLong, Some(0L))).toDF("id", "sh")
-    val pairs = Dedup.hammingPairs(docs, "id", "sh", verifyBroadcastRows = 10L)
+    // hammingPairs' pairing stage with a 10-row payload broadcast budget
+    val pairs = Dedup.signaturePairs(docs, maxHamming = 3, numChunks = 6,
+      maxBucketSize = 10000, payloadRows = 10L, jobs = "dedup.hamming")
     val plan = pairs.queryExecution.executedPlan
     candidatesNeverBroadcast(plan)
     assert(!plan.toString.contains("BroadcastHashJoin"), plan.toString)

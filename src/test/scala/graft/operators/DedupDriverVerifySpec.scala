@@ -69,7 +69,7 @@ class DedupDriverVerifySpec extends SparkSpec {
     check(Prop.forAll(corpora) { case (families, t) =>
       val df = corpus(families)
       def pairs(budget: Long) =
-        Dedup.minhashPairsCounted(df, "id", "text", threshold = t, budget = budget)._1
+        Dedup.minhashPairsCounted(df, "id", "text", threshold = t, budget = budget).frame
       val local = pairs(Dedup.RepartitionVerifyRows)
       val onDriver = local.queryExecution.executedPlan
         .collect { case s: LocalTableScanExec => s }.nonEmpty

@@ -50,17 +50,36 @@ class DedupSmallCandidateSpec extends SparkSpec {
   private def pairRows(d: DataFrame) =
     d.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
 
+  /** A MinHash index over the odd-id half of `docs`, loaded. */
+  private def oddIndex(docs: DataFrame): Dedup.MinhashIndexState = {
+    val idx = new java.io.File(sys.props("java.io.tmpdir"),
+      s"graft_dedup_small_spec_${java.util.UUID.randomUUID}").getAbsolutePath
+    Dedup.writeMinhashIndex(docs.filter(col("doc_id") % 2 === 1), "doc_id", "text", idx)
+    Dedup.loadMinhashIndex(spark, idx)
+  }
+
   test("small-candidate pairs equal the over-budget path's, the 0.8 edge pair included") {
-    def pairs(budget: Long) = {
-      val (p, n) = Dedup.minhashPairsCounted(corpus, "doc_id", "text", 3, 64, 2, 0.8, 1000, budget)
-      (pairRows(p), n)
+    val even = corpus.filter(col("doc_id") % 2 === 0)
+    val odd = corpus.filter(col("doc_id") % 2 === 1)
+    val st = oddIndex(corpus)
+    // the three MinHash entry points, each at a budget (-1 forces the
+    // over-budget path), with the pair the 0.8 edge docs must give
+    val entryPoints = Seq[(String, Long => Dedup.Verified, (Long, Long, Double))](
+      ("minhashPairs", b => Dedup.minhashPairsCounted(
+        corpus, "doc_id", "text", 3, 64, 2, 0.8, 1000, b), (900001L, 900002L, 0.8)),
+      ("minhashPairsAgainst", b => Dedup.minhashPairsAgainstCounted(
+        even, "doc_id", "text", odd, "doc_id", "text", budget = b), (900002L, 900001L, 0.8)),
+      ("probeMinhashIndexWith", b => Dedup.probeMinhashIndexCounted(
+        st, even, "doc_id", "text", budget = b), (900002L, 900001L, 0.8)))
+    for ((name, run, edgePair) <- entryPoints) {
+      val small = run(Dedup.RepartitionVerifyRows)
+      val forced = run(-1L)
+      val smallRows = pairRows(small.frame)
+      assert(smallRows == pairRows(forced.frame), name)
+      assert(small.bound.isDefined && forced.bound.isEmpty, s"$name: only the small path reports its count")
+      assert(smallRows.contains(edgePair), s"$name: $smallRows")
+      assert(smallRows.size <= small.bound.get, s"$name: the candidate count bounds the verified pairs")
     }
-    val (small, nSmall) = pairs(Dedup.RepartitionVerifyRows)
-    val (forced, nForced) = pairs(-1L)
-    assert(small == forced)
-    assert(nSmall.isDefined && nForced.isEmpty, "only the small path reports its count")
-    assert(small.contains((900001L, 900002L, 0.8)))
-    assert(small.size <= nSmall.get, "the candidate count bounds the verified pairs")
   }
 
   private def broadcastsIn(d: DataFrame): Int = {
@@ -165,4 +184,31 @@ class DedupSmallCandidateSpec extends SparkSpec {
   // candidate docs' (id, text) for the driver verify; the verified pairs
   // go into the union-find without a job
   private val PinnedJobs = 5
+
+  test("cross-corpus and index probes on the sf0.001 corpus run a pinned number of jobs") {
+    val docs = Tables.documents(spark, sf()).select("doc_id", "text")
+    val ref = docs.filter(col("doc_id") % 2 === 1)
+    val batch = docs.filter(col("doc_id") % 2 === 0)
+    val st = oddIndex(docs)
+    val calls = Seq[(String, () => DataFrame, Int)](
+      ("minhashPairsAgainst",
+        () => Dedup.minhashPairsAgainst(batch, "doc_id", "text", ref, "doc_id", "text"),
+        PinnedCrossJobs),
+      ("probeMinhashIndexWith", () => Dedup.probeMinhashIndexWith(st, batch, "doc_id", "text"),
+        PinnedIndexJobs))
+    for ((name, call, pinned) <- calls) {
+      call().collect() // warm: plans and file listing cached
+      val (_, descs) = jobsOf(call().collect())
+      assert(descs.size == pinned, s"$name: $descs")
+    }
+  }
+
+  // Every job of the call and of collecting its pairs. Cross: the
+  // candidate checkpoint and its readback (6, dedup.cross.candidates)
+  // and one (id, text) collect per side for the driver verify (2).
+  // Index: the probe grouping's and the candidates' checkpoints and the
+  // readback (6, dedup.index.candidates); the stored side has no byte
+  // bound, so collecting the pairs runs the verify joins (3).
+  private val PinnedCrossJobs = 8
+  private val PinnedIndexJobs = 9
 }

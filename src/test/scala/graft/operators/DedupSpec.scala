@@ -64,14 +64,16 @@ class DedupSpec extends SparkSpec {
     // oversized buckets, so a cap of 50 must drop them all
     val left = (0L until 60L).map(i => (i * 2, "x y z x y z x y z")).toDF("doc_id", "text")
     val right = (0L until 60L).map(i => (i * 2 + 1, "x y z x y z x y z")).toDF("doc_id", "text")
-    val out = Dedup.minhashPairsAgainst(
+    val out = Dedup.minhashPairsAgainstCounted(
       left, "doc_id", "text", right, "doc_id", "text",
       threshold = 0.8, maxBucketSize = 50)
-    assert(out.count() == 0L)
-    val out2 = Dedup.minhashPairsAgainst(
+    assert(out.frame.count() == 0L)
+    assert(out.hotBuckets > 0, "the dropped buckets are counted")
+    val out2 = Dedup.minhashPairsAgainstCounted(
       left, "doc_id", "text", right, "doc_id", "text",
       threshold = 0.8, maxBucketSize = 100)
-    assert(out2.count() == 3600L, "under the cap all cross pairs emit")
+    assert(out2.frame.count() == 3600L, "under the cap all cross pairs emit")
+    assert(out2.hotBuckets == 0)
   }
 
   test("simhash pairs equal brute-force hamming pairs") {
